@@ -405,7 +405,7 @@ def _drain_groups(timings: dict[str, float]) -> dict[str, dict]:
     except Exception:
         return {}
     out: dict[str, dict] = {}
-    for tag, (_memo, entries, _cleanup) in sorted(SHARED_MEMOS.items()):
+    for tag, entries in sorted(SHARED_MEMOS.items()):
         present = [q for q in HEADLINE if q in entries and q in timings]
         if len(present) < 2:
             continue
@@ -754,9 +754,9 @@ def _clear_entry_memos(name: str) -> None:
     always re-paid a full drain instead of the documented checkpoint
     read). Run 1 keeps all memo state so the official full-bench mode
     still measures the intended cross-entry sharing. Delegates to
-    catalog.clear_shared_memos, which also runs each memo's cleanup
-    callback so pinned localCheckpoint blocks / sink tables are freed,
-    not just dereferenced (ADVICE r07).
+    catalog.clear_shared_memos, which releases the entry's own lifetime
+    tag and each shared tag it reads, so pinned checkpoint blocks, sink
+    views and dirs are freed, not just dereferenced (ADVICE r07).
     """
     try:
         from spark_states_spark.catalog import clear_shared_memos

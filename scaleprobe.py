@@ -45,6 +45,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from spark_states_spark import lifetime  # noqa: E402
 from spark_states_spark.catalog import QUERIES  # noqa: E402
 from spark_states_spark.session import build_session  # noqa: E402
 from spark_states_spark.sources.tables import TABLES, table_path  # noqa: E402
@@ -649,6 +650,9 @@ def probe(spark, sf_dir: str, entries) -> dict[str, dict]:
             "rows": n,
             "plan": plan_fingerprint(df),
         }
+        # Free what the entry pinned (its own lifetime tag; shared drains
+        # stay for their other readers) before the next replica.
+        lifetime.release(spark, name)
         print(f"  {name}: {out[name]['s']}s ({n} rows)", flush=True)
     return out
 

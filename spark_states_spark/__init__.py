@@ -18,6 +18,9 @@ Re-expresses the capabilities of chermenin/spark-states (a RocksDB-backed
                   simhash/ngram-jaccard/embedding), similarity search, text
                   analysis, multimodal column plumbing.
 - ``plans``     — plan-inspection helpers (pushdown / broadcast assertions).
+- ``lifetime``  — the one registry owning every pinned resource (checkpoint
+                  blocks, sink views, sink/checkpoint dirs) per
+                  (applicationId, tag) until an explicit release.
 """
 
 __version__ = "0.1.0"

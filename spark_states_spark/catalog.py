@@ -11,6 +11,7 @@ check (used for genuinely non-SQL-expressible stateful ops).
 from __future__ import annotations
 
 import ast
+import functools
 import glob
 import json
 import os
@@ -19,6 +20,8 @@ import subprocess
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from . import lifetime
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -30,36 +33,40 @@ MODULES: dict[str, str] = {}
 
 
 def register(name: str, oracle: str | None = None):
-    """Decorator: add a query (and its oracle SQL) to the catalog."""
+    """Decorator: add a query (and its oracle SQL) to the catalog. The
+    entry runs under ``lifetime.scope(name)``: what it pins lives until
+    ``lifetime.release(spark, name)`` (clear_shared_memos below)."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in QUERIES:
             raise ValueError(f"duplicate query name {name!r}")
-        QUERIES[name] = fn
+
+        @functools.wraps(fn)
+        def entry(*args, **kwargs):
+            with lifetime.scope(name):
+                return fn(*args, **kwargs)
+
+        QUERIES[name] = entry
         MODULES[name] = fn.__module__
         if oracle is not None:
             ORACLES[name] = oracle
-        return fn
+        return entry
 
     return deco
 
 
-# Shared-result memo registry: memo tag -> (memo dict, the entries that read
-# it, optional cleanup). Some catalog entries deliberately share one expensive
-# materialization (the funnel pair's single drain, the dual-binding wall-clock
-# drain, the CC-label reuse between clustering and keep-best) — a memo keyed
-# on (applicationId, fixture dir, fixture content identity) inside the owning
-# module. bench.py's best-of-N uses this registry to clear a memo on
-# RE-RUNS only of a PARTICIPATING entry, so a shared-result entry re-pays
-# its own materialization without other entries' re-runs wiping the share
-# (ADVICE r06). ``cleanup``, when given, releases the cluster-side resources
-# the memo values pin (localCheckpoint RDD blocks, memory-sink tables) and is
-# invoked by clear_shared_memos BEFORE the dict is emptied — without it,
-# best-of-N re-runs accumulate orphaned blocks for the session lifetime
-# (ADVICE r07). Modules register their memos at import time.
-SHARED_MEMOS: dict[str, tuple[dict, frozenset, Callable[[], None] | None]] = {}
+# Shared materializations: lifetime tag -> the entries that read it. Some
+# entries deliberately share one expensive materialization (the funnel
+# pair's single drain, the dual-binding wall-clock drain, the CC-label
+# reuse between clustering and keep-best), built once per (application,
+# fixture generation) through ``lifetime.shared``. Modules declare their
+# tags here at import time. bench.py's best-of-N re-runs release a tag
+# only for a PARTICIPATING entry, so a shared-result entry re-pays its own
+# materialization without other entries' re-runs wiping the share
+# (ADVICE r06).
+SHARED_MEMOS: dict[str, set[str]] = {}
 
-# Tags whose memo is deterministic INPUT STAGING (a pure function of
+# Tags whose value is deterministic INPUT STAGING (a pure function of
 # (session, fixture) whose product the entry then operates ON — e.g. the
 # restart entry's phase-1 checkpoint snapshot), as opposed to a shared
 # RESULT materialization (the funnel/KV drains, where the entry's own
@@ -72,38 +79,17 @@ SHARED_MEMOS: dict[str, tuple[dict, frozenset, Callable[[], None] | None]] = {}
 STAGING_MEMO_TAGS: set[str] = set()
 
 
-def register_shared_memo(
-    tag: str,
-    memo: dict,
-    entries: set[str],
-    cleanup: Callable[[], None] | None = None,
-    staging: bool = False,
-) -> None:
-    SHARED_MEMOS[tag] = (memo, frozenset(entries), cleanup)
-    if staging:
-        STAGING_MEMO_TAGS.add(tag)
-
-
 def clear_shared_memos(entry: str, include_staging: bool = False) -> None:
-    """Release and clear every shared memo ``entry`` participates in.
-
-    Cleanup runs first (best-effort — a failed block release must not turn
-    a timing re-run into an error) so the memoized DataFrames' pinned
-    resources are freed while the handles still exist; then the memo dict
-    is emptied so the next participating call re-materializes. Staging
-    memos (STAGING_MEMO_TAGS) are skipped unless ``include_staging`` —
-    see the registry note above.
-    """
-    for tag, (memo, entries, cleanup) in SHARED_MEMOS.items():
+    """Release ``entry``'s own lifetime tag, then each shared tag it
+    participates in, so the next call re-materializes. Staging tags
+    (STAGING_MEMO_TAGS) are skipped unless ``include_staging`` — see the
+    note above."""
+    lifetime.release(None, entry)
+    for tag, entries in SHARED_MEMOS.items():
         if entry in entries and (
             include_staging or tag not in STAGING_MEMO_TAGS
         ):
-            if cleanup is not None:
-                try:
-                    cleanup()
-                except Exception:
-                    pass
-            memo.clear()
+            lifetime.release(None, tag)
 
 
 # Import operator modules for their registration side effects.

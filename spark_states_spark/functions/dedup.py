@@ -28,8 +28,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..catalog import register
+from ..catalog import SHARED_MEMOS, register
+from ..lifetime import checkpoint, shared, unpin
 from ..sources import load_table, load_table_fanned
+from ..sources.tables import fixture_key
 from .hashes import (
     DUCK_TOKS,
     MINHASH_P,
@@ -170,42 +172,20 @@ def _duck_minhash_cte() -> str:
 # its pair graph by re-running this whole pipeline even though the pair
 # entry had just executed it — the same duplicate-pass shape the
 # cc_labels / funnel / interval_fo / embedding_pairs memos eliminate).
-# The memoized frame is the pair entry's OWN output (doc_a, doc_b,
-# est_jaccard), eagerly localCheckpoint-materialized; blocks are tagged on
-# the frame and released by the memo cleanup (same contract as
-# _CC_LABELS_MEMO below).
-_MINHASH_PAIRS_MEMO: dict = {}
+# The shared frame is the pair entry's OWN output (doc_a, doc_b,
+# est_jaccard), eagerly checkpoint-materialized under the "minhash_pairs"
+# lifetime tag.
 
 
 def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized (doc_a, doc_b, est_jaccard) candidate-pair stream — one
-    ingest serving the minhash entry and the CC label build. Key contract
-    identical to the other shared memos (applicationId + fixture dir +
-    fixture content identity)."""
-    import os as _os
-
-    from ..sources.tables import _source_identity, table_path
-
-    key = (
-        spark.sparkContext.applicationId,
-        _os.path.abspath(sf_dir),
-        _source_identity(table_path(sf_dir, "documents")),
+    """Shared (doc_a, doc_b, est_jaccard) candidate-pair stream — one
+    ingest serving the minhash entry and the CC label build."""
+    return shared(
+        spark,
+        "minhash_pairs",
+        fixture_key(sf_dir, "documents"),
+        lambda: checkpoint(_build_minhash_pairs(spark, sf_dir)),
     )
-    hit = _MINHASH_PAIRS_MEMO.get(key)
-    if hit is not None:
-        return hit
-    ids_pre = _persistent_rdd_ids(spark)
-    pairs = _build_minhash_pairs(spark, sf_dir).localCheckpoint(eager=True)
-    pairs._local_ckpt_rdd_ids = frozenset(_persistent_rdd_ids(spark) - ids_pre)
-    _MINHASH_PAIRS_MEMO[key] = pairs
-    return pairs
-
-
-def _minhash_pairs_cleanup() -> None:
-    for df in _MINHASH_PAIRS_MEMO.values():
-        ids = getattr(df, "_local_ckpt_rdd_ids", None)
-        if ids:
-            _unpersist_rdd_ids(df.sparkSession, ids)
 
 
 @register(
@@ -226,7 +206,7 @@ def _minhash_pairs_cleanup() -> None:
 )
 def dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH near-dup candidate pairs + signature-estimated Jaccard.
-    Returns the memoized, materialized pair stream (_minhash_pairs) — this
+    Returns the shared, materialized pair stream (_minhash_pairs) — this
     entry is the pipeline's carrier; the CC cluster family derives its
     pair graph from the same materialization."""
     return _minhash_pairs(spark, sf_dir)
@@ -491,133 +471,42 @@ _CC_MAX_ITERS = 20
 # dedup_cluster_keep_best is by design a composition over the clustering
 # kernel's labels, so recomputing the whole pairs chain + iterative loop per
 # entry duplicated ~4 s of identical work. connected_components returns an
-# EAGERLY localCheckpoint-materialized frame, so the memo hands the second
-# reader real materialized labels, not a lazy plan. Same key contract as
-# the streaming drain memos; registered in catalog.SHARED_MEMOS so bench
-# best-of-N re-runs of a participating entry re-pay the clustering.
-_CC_LABELS_MEMO: dict = {}
+# EAGERLY checkpoint-materialized frame, so the second reader gets real
+# materialized labels, not a lazy plan. Shared under the "cc_labels"
+# lifetime tag, so bench best-of-N re-runs of a participating entry re-pay
+# the clustering.
 
 
 def _cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os as _os
-
-    from ..sources.tables import _source_identity, table_path
-
-    key = (
-        spark.sparkContext.applicationId,
-        _os.path.abspath(sf_dir),
-        _source_identity(table_path(sf_dir, "documents")),
-    )
-    hit = _CC_LABELS_MEMO.get(key)
-    if hit is None:
-        sim = (
+    return shared(
+        spark,
+        "cc_labels",
+        fixture_key(sf_dir, "documents"),
+        lambda: connected_components(
             _minhash_pairs(spark, sf_dir)
             .filter(F.col("est_jaccard") >= _CC_EST_THRESHOLD)
             .select("doc_a", "doc_b")
-        )
-        hit = connected_components(sim)
-        _CC_LABELS_MEMO[key] = hit
-    return hit
+        ),
+    )
 
 
-def _cc_labels_cleanup() -> None:
-    """Free the localCheckpoint blocks behind every memoized label frame.
-
-    ADVICE r07: clearing the memo dict alone only drops the Python handle —
-    the checkpointed RDD blocks stay pinned in the block manager until the
-    JVM-side weak-reference cleaner gets around to them, so bench best-of-N
-    re-runs accumulated one orphaned label frame per re-run for the session
-    lifetime. connected_components tags its return frame with the ids it
-    checkpointed; releasing those here makes the clear deterministic.
-    """
-    for df in _CC_LABELS_MEMO.values():
-        ids = getattr(df, "_local_ckpt_rdd_ids", None)
-        if ids:
-            _unpersist_rdd_ids(df.sparkSession, ids)
-
-
-from ..catalog import register_shared_memo as _register_shared_memo  # noqa: E402
-
-_register_shared_memo(
-    "cc_labels",
-    _CC_LABELS_MEMO,
-    {"dedup_cluster_connected_components", "dedup_cluster_keep_best"},
-    cleanup=_cc_labels_cleanup,
-)
-
-# The CC entries participate so their re-runs (bench best-of-N / isolated
-# adjudication) re-pay the pair generation their label build depends on,
-# not just the label loop — first-touch means first-touch of the whole
-# dependency chain.
-_register_shared_memo(
-    "minhash_pairs",
-    _MINHASH_PAIRS_MEMO,
+# The CC entries also read "minhash_pairs" so their re-runs (bench
+# best-of-N / isolated adjudication) re-pay the pair generation their
+# label build depends on, not just the label loop — first-touch means
+# first-touch of the whole dependency chain.
+SHARED_MEMOS.update(
     {
-        "dedup_minhash_lsh_pairs",
-        "dedup_cluster_connected_components",
-        "dedup_cluster_keep_best",
-    },
-    cleanup=_minhash_pairs_cleanup,
+        "cc_labels": {
+            "dedup_cluster_connected_components",
+            "dedup_cluster_keep_best",
+        },
+        "minhash_pairs": {
+            "dedup_minhash_lsh_pairs",
+            "dedup_cluster_connected_components",
+            "dedup_cluster_keep_best",
+        },
+    }
 )
-
-
-def _persistent_rdd_ids(spark: SparkSession) -> set[int]:
-    """Ids of every RDD currently pinned in the block manager.
-
-    ``localCheckpoint`` persists MEMORY_AND_DISK under the hood, so the
-    checkpointed label frames show up here; diffing snapshots around a
-    checkpoint isolates exactly the blocks it pinned. Best-effort (the
-    JavaSparkContext map walk is public API but still a JVM round-trip):
-    an empty set degrades to the pre-r08 leave-it-to-GC behavior.
-    """
-    try:
-        out: set[int] = set()
-        it = spark.sparkContext._jsc.getPersistentRDDs().keySet().iterator()
-        while it.hasNext():
-            out.add(int(it.next()))
-        return out
-    except Exception:
-        return set()
-
-
-def _unpersist_rdd_ids(spark: SparkSession, ids) -> None:
-    """Non-blocking unpersist of the given pinned RDD ids (best-effort)."""
-    try:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for rid in ids:
-            jrdd = jmap.get(rid)
-            if jrdd is not None:
-                jrdd.unpersist(False)
-    except Exception:
-        pass
-
-
-# Per-query localCheckpoint hygiene (ADVICE r14): entries that materialize
-# an intermediate for ONE query execution (triangle_count's edge list,
-# pagerank's, the chi2 token counts) cannot release their blocks eagerly —
-# the returned lazy frame still reads them — and leaving release to the JVM
-# weak-ref cleaner piles up pinned copies across bench best-of-N reps and
-# scaleprobe replicas. One slot per call site: invocation N+1 releases
-# invocation N's blocks before pinning its own, so at most one generation
-# per site is ever pinned.
-_SCOPED_CKPT_SLOTS: dict[str, frozenset] = {}
-
-
-def scoped_local_checkpoint(df: DataFrame, slot: str) -> DataFrame:
-    """Eager localCheckpoint whose pinned blocks are released by the NEXT
-    invocation with the same ``slot`` (ids also tagged on the frame, the
-    shared-memo convention, for callers that release earlier)."""
-    spark = df.sparkSession
-    prev = _SCOPED_CKPT_SLOTS.pop(slot, None)
-    if prev:
-        _unpersist_rdd_ids(spark, prev)
-    ids_pre = _persistent_rdd_ids(spark)
-    out = df.localCheckpoint()
-    ids = frozenset(_persistent_rdd_ids(spark) - ids_pre)
-    if ids:
-        _SCOPED_CKPT_SLOTS[slot] = ids
-    out._local_ckpt_rdd_ids = ids
-    return out
 
 
 @register(
@@ -668,8 +557,8 @@ def dedup_cluster_connected_components(
     on path-shaped components, vs O(diameter) for plain propagation; the
     classic large-star/small-star map-reduce CC has the same bound and
     would be the drop-in at 100 TB if edge lists themselves were skewed.
-    Per-round lineage is truncated with localCheckpoint (a production run
-    uses a checkpoint dir for fault tolerance); the convergence probe is
+    Per-round lineage is truncated with a local checkpoint (a production
+    run uses a checkpoint dir for fault tolerance); the convergence probe is
     an EXISTS-style ``limit(1).count()``, not a full-table count.
     """
     labels = _cc_labels(spark, sf_dir)
@@ -687,6 +576,10 @@ def connected_components(pairs: DataFrame, max_iters: int = _CC_MAX_ITERS) -> Da
     dedup_cluster_connected_components; exposed separately so the kernel
     is testable on adversarial topologies (long paths) independent of the
     MinHash pair generator.
+
+    The returned frame is checkpoint-materialized: its blocks live until
+    ``lifetime.release`` of the scope it was called in, or until Spark's
+    ContextCleaner collects them when no scope is open.
 
     Two sizing decisions matter here:
     - Both edge directions come from ONE explode of the pair list (a
@@ -718,20 +611,16 @@ def connected_components(pairs: DataFrame, max_iters: int = _CC_MAX_ITERS) -> Da
     saved_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
     try:
-        # Each round's labels are localCheckpoint-materialized; the PREVIOUS
+        # Each round's labels are checkpoint-materialized; the PREVIOUS
         # round's blocks are dead the moment the new frame exists, so they
-        # are released eagerly (snapshot-diff of the pinned-RDD set around
-        # each checkpoint) instead of waiting on the JVM weak-ref cleaner —
-        # at 100 TB the superseded frames are corpus-label-sized and an
+        # are unpinned eagerly instead of waiting for their scope's release
+        # — at 100 TB the superseded frames are corpus-label-sized and an
         # O(rounds) pileup is real memory pressure (ADVICE r07).
-        ids_pre = _persistent_rdd_ids(spark)
-        labels = (
+        labels = checkpoint(
             edges.select(F.col("u").alias("doc_id"))
             .distinct()
             .withColumn("label", F.col("doc_id"))
-            .localCheckpoint(eager=True)
         )
-        live_ids = _persistent_rdd_ids(spark) - ids_pre
         # Labels only ever decrease (every update is a least()), so the
         # label sum strictly decreases each round until the fixpoint —
         # a one-aggregate convergence probe, no self-join needed.
@@ -743,16 +632,13 @@ def connected_components(pairs: DataFrame, max_iters: int = _CC_MAX_ITERS) -> Da
             # left-join + coalesce + least spelling (r14 A/B: row-identical
             # on the pair graph and a 400-node path), with one fewer join
             # per round.
-            ids_pre = _persistent_rdd_ids(spark)
-            stepped = (
+            stepped = checkpoint(
                 edges.join(labels, edges.v == labels.doc_id)
                 .select(F.col("u").alias("doc_id"), "label")
                 .unionByName(labels)
                 .groupBy("doc_id")
                 .agg(F.min("label").alias("label"))
-                .localCheckpoint(eager=True)
             )
-            stepped_ids = _persistent_rdd_ids(spark) - ids_pre
             # (b) Pointer jumping: label := label(label) where the label
             # node has its own (possibly lower) label. The jump reads the
             # MATERIALIZED stepped frame: before r14 the broadcast build of
@@ -765,35 +651,28 @@ def connected_components(pairs: DataFrame, max_iters: int = _CC_MAX_ITERS) -> Da
             lmap = stepped.select(
                 F.col("doc_id").alias("l_id"), F.col("label").alias("l_label")
             )
-            ids_pre = _persistent_rdd_ids(spark)
-            labels = (
-                stepped.join(lmap, stepped.label == lmap.l_id, "left")
-                .select(
+            superseded = labels
+            labels = checkpoint(
+                stepped.join(lmap, stepped.label == lmap.l_id, "left").select(
                     "doc_id",
                     F.least("label", F.coalesce("l_label", "label")).alias("label"),
                 )
-                .localCheckpoint(eager=True)
             )
-            new_ids = _persistent_rdd_ids(spark) - ids_pre
-            _unpersist_rdd_ids(spark, live_ids)  # superseded round's blocks
-            _unpersist_rdd_ids(spark, stepped_ids)  # intra-round scratch
-            live_ids = new_ids
+            unpin(superseded)  # superseded round's blocks
+            unpin(stepped)  # intra-round scratch
             new_sum = labels.agg(F.sum("label")).collect()[0][0]
             if new_sum == prev_sum:
                 break
             prev_sum = new_sum
         else:
             edges.unpersist()
-            _unpersist_rdd_ids(spark, live_ids)
+            unpin(labels)
             raise RuntimeError(
                 f"connected components did not converge in {max_iters} rounds"
             )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", saved_parts)
     edges.unpersist()
-    # Tag the frame with its pinned block ids so a memo cleanup (or any
-    # caller done with the labels) can release them deterministically.
-    labels._local_ckpt_rdd_ids = frozenset(live_ids)
     return labels
 
 

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import register
+from ..lifetime import checkpoint
 from ..sources import load_table, load_table_fanned
 from .hashes import (
     DUCK_TOKS,
@@ -706,7 +707,7 @@ def source_divergence_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     Single-pass restructure (r15, guide §1.2/§2.4 — A/B'd row-identical in
     r14, landed this round): everything derives from ONE token explode +
     ONE (source, token) aggregation, materialized per query execution
-    (scoped localCheckpoint, the triangle_count discipline). The corpus
+    (``lifetime.checkpoint``, the triangle_count discipline). The corpus
     vocabulary is the per-source counts re-aggregated by token (sum of
     per-source counts == corpus count), and the source list is the
     aggregate's own key set. The materialization is required for the
@@ -721,17 +722,14 @@ def source_divergence_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     |sources| × |distinct tokens per source| COUNT rows — the decision
     data, never the corpus (guide §8's lightweight-proxy rule).
     """
-    from .dedup import scoped_local_checkpoint
-
-    per_src = scoped_local_checkpoint(
+    per_src = checkpoint(
         load_table(spark, sf_dir, "documents")
         .select(
             "source",
             F.explode(F.expr(SPARK_TOKS.format(col="text"))).alias("token"),
         )
         .groupBy("source", "token")
-        .agg(F.count("*").alias("o")),
-        "chi2_per_src",
+        .agg(F.count("*").alias("o"))
     )
     vocab = (
         per_src.groupBy("token")

@@ -23,8 +23,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..catalog import register
+from ..catalog import SHARED_MEMOS, register
+from ..lifetime import checkpoint, shared
 from ..sources import load_table, load_table_fanned
+from ..sources.tables import fixture_key
 from .hashes import hyperplane_weights
 
 _N_QUERIES = 8  # vec_id < 8 are the query vectors
@@ -51,54 +53,20 @@ def _duck_norm(v: str) -> str:
 # recall@K evaluation (r14, guide §1.2: similarity_lsh_recall is a join
 # OVER the two entries' outputs verbatim — re-running both pipelines
 # inside it was pure duplicate work, the same shape the embedding-pair /
-# cc_labels memos eliminate). Each memoized frame is its carrier entry's
-# OWN output, eagerly localCheckpoint-materialized; blocks are tagged on
-# the frame and released by the memo cleanups (same contract as
-# _EMB_PAIRS_MEMO below).
-_EXACT_TOPK_MEMO: dict = {}
-_ANN_TOPK_MEMO: dict = {}
+# cc_labels memos eliminate). Each shared frame is its carrier entry's
+# OWN output, eagerly checkpoint-materialized under its lifetime tag
+# ("topk_exact" / "topk_ann").
 
 
-def _sim_memo(spark: SparkSession, sf_dir: str, memo: dict, build) -> DataFrame:
-    """Shared memo protocol over the embeddings fixture: key on
-    applicationId + fixture dir + fixture content identity, materialize
-    with an eager localCheckpoint, tag the pinned block ids for
-    deterministic release."""
-    import os as _os
-
-    from ..sources.tables import _source_identity, table_path
-    from .dedup import _persistent_rdd_ids
-
-    key = (
-        spark.sparkContext.applicationId,
-        _os.path.abspath(sf_dir),
-        _source_identity(table_path(sf_dir, "embeddings")),
+def _shared_over_embeddings(spark: SparkSession, sf_dir: str, tag: str, build):
+    """``build``'s frame, checkpointed once per (session, embeddings
+    fixture generation) under lifetime tag ``tag``."""
+    return shared(
+        spark,
+        tag,
+        fixture_key(sf_dir, "embeddings"),
+        lambda: checkpoint(build(spark, sf_dir)),
     )
-    hit = memo.get(key)
-    if hit is not None:
-        return hit
-    ids_pre = _persistent_rdd_ids(spark)
-    df = build(spark, sf_dir).localCheckpoint(eager=True)
-    df._local_ckpt_rdd_ids = frozenset(_persistent_rdd_ids(spark) - ids_pre)
-    memo[key] = df
-    return df
-
-
-def _release_memo_blocks(memo: dict) -> None:
-    from .dedup import _unpersist_rdd_ids
-
-    for df in memo.values():
-        ids = getattr(df, "_local_ckpt_rdd_ids", None)
-        if ids:
-            _unpersist_rdd_ids(df.sparkSession, ids)
-
-
-def _exact_topk_cleanup() -> None:
-    _release_memo_blocks(_EXACT_TOPK_MEMO)
-
-
-def _ann_topk_cleanup() -> None:
-    _release_memo_blocks(_ANN_TOPK_MEMO)
 
 
 @register(
@@ -121,17 +89,16 @@ def _ann_topk_cleanup() -> None:
 )
 def similarity_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k: broadcast queries × one corpus scan.
-    Returns the memoized, materialized top-k (_exact_topk) — this entry is
+    Returns the shared, materialized top-k (_exact_topk) — this entry is
     the exact side's carrier; similarity_lsh_recall reads the same
     materialization instead of re-running the brute-force scan."""
     return _exact_topk(spark, sf_dir)
 
 
 def _exact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized exact top-k frame (one brute-force pass serves the entry
-    and the recall evaluation — r14, guide §1.2; same memo contract as
-    the other shared drains)."""
-    return _sim_memo(spark, sf_dir, _EXACT_TOPK_MEMO, _build_exact_topk)
+    """Shared exact top-k frame (one brute-force pass serves the entry
+    and the recall evaluation — r14, guide §1.2)."""
+    return _shared_over_embeddings(spark, sf_dir, "topk_exact", _build_exact_topk)
 
 
 def _build_exact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -232,16 +199,16 @@ def _duck_buckets(vec: str) -> str:
 )
 def similarity_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN: multi-table hyperplane-LSH candidates + exact cosine re-rank.
-    Returns the memoized, materialized ANN top-k (_ann_topk) — this entry
+    Returns the shared, materialized ANN top-k (_ann_topk) — this entry
     is the ANN side's carrier; similarity_lsh_recall reads the same
     materialization instead of re-running the bucket join + re-rank."""
     return _ann_topk(spark, sf_dir)
 
 
 def _ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized ANN top-k frame (one LSH pass serves the entry and the
+    """Shared ANN top-k frame (one LSH pass serves the entry and the
     recall evaluation — r14, guide §1.2)."""
-    return _sim_memo(spark, sf_dir, _ANN_TOPK_MEMO, _build_ann_topk)
+    return _shared_over_embeddings(spark, sf_dir, "topk_ann", _build_ann_topk)
 
 
 def _build_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -292,21 +259,10 @@ _GEMM_BUCKET_CAP = 4096
 # §1.2: dedup_embedding_keep_first is a composition OVER the pair stream —
 # re-running the bucketing + GEMM-prefilter + exact-verify pipeline per
 # entry was pure duplicate work, the same shape the cc_labels /
-# funnel / interval_fo memos already eliminate). The memoized frame is the
+# funnel / interval_fo memos already eliminate). The shared frame is the
 # carrier entry's OWN output (vec_a, vec_b, cosine), eagerly
-# localCheckpoint-materialized so the second reader gets real rows, not a
-# lazy plan; blocks are tagged on the frame and released by the memo
-# cleanup (same contract as _CC_LABELS_MEMO).
-_EMB_PAIRS_MEMO: dict = {}
-
-
-def _embedding_pairs_cleanup() -> None:
-    from .dedup import _unpersist_rdd_ids
-
-    for df in _EMB_PAIRS_MEMO.values():
-        ids = getattr(df, "_local_ckpt_rdd_ids", None)
-        if ids:
-            _unpersist_rdd_ids(df.sparkSession, ids)
+# checkpoint-materialized under the "embedding_pairs" lifetime tag so the
+# second reader gets real rows, not a lazy plan.
 
 
 @register(
@@ -334,37 +290,19 @@ def _embedding_pairs_cleanup() -> None:
 )
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs: LSH candidates + exact verify.
-    Returns the memoized, materialized pair stream (_embedding_pairs) —
+    Returns the shared, materialized pair stream (_embedding_pairs) —
     this entry is the pair pipeline's carrier; dedup_embedding_keep_first
     derives from the same materialization."""
     return _embedding_pairs(spark, sf_dir)
 
 
 def _embedding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized (vec_a, vec_b, cosine) near-dup pair stream at the
+    """Shared (vec_a, vec_b, cosine) near-dup pair stream at the
     ``_NEARDUP_COS`` threshold — one ingest serving both embedding-dedup
-    entries. Key contract identical to the other shared memos
-    (applicationId + fixture dir + fixture content identity)."""
-    import os as _os
-
-    from ..sources.tables import _source_identity, table_path
-    from .dedup import _persistent_rdd_ids
-
-    key = (
-        spark.sparkContext.applicationId,
-        _os.path.abspath(sf_dir),
-        _source_identity(table_path(sf_dir, "embeddings")),
+    entries."""
+    return _shared_over_embeddings(
+        spark, sf_dir, "embedding_pairs", _build_embedding_pairs
     )
-    hit = _EMB_PAIRS_MEMO.get(key)
-    if hit is not None:
-        return hit
-    ids_pre = _persistent_rdd_ids(spark)
-    pairs = _build_embedding_pairs(spark, sf_dir).localCheckpoint(eager=True)
-    pairs._local_ckpt_rdd_ids = frozenset(
-        _persistent_rdd_ids(spark) - ids_pre
-    )
-    _EMB_PAIRS_MEMO[key] = pairs
-    return pairs
 
 
 def _build_embedding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -502,7 +440,7 @@ def dedup_embedding_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard first-order semantic dedup: each near-dup pair loses its
     later member, so at least one representative of every duplicate
     neighborhood survives. Scale shape: the pair generation dominates
-    and is SHARED with dedup_embedding_cosine via the _EMB_PAIRS_MEMO
+    and is SHARED with dedup_embedding_cosine via the embedding_pairs
     materialization (r14); the keep step is one left-anti join of the
     corpus against the (far smaller) dropped-id set.
     """
@@ -513,29 +451,15 @@ def dedup_embedding_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("vec_id", "label")
 
 
-from ..catalog import register_shared_memo as _register_shared_memo  # noqa: E402
-
-_register_shared_memo(
-    "embedding_pairs",
-    _EMB_PAIRS_MEMO,
-    {"dedup_embedding_cosine", "dedup_embedding_keep_first"},
-    cleanup=_embedding_pairs_cleanup,
-)
-
-# Recall participates in both top-k memos so its re-runs (isolated
+# Recall participates in both top-k tags so its re-runs (isolated
 # adjudication) re-pay both sides' pipelines — first-touch of the whole
 # dependency chain, same posture as the CC entries in minhash_pairs.
-_register_shared_memo(
-    "topk_exact",
-    _EXACT_TOPK_MEMO,
-    {"similarity_cosine_topk", "similarity_lsh_recall"},
-    cleanup=_exact_topk_cleanup,
-)
-_register_shared_memo(
-    "topk_ann",
-    _ANN_TOPK_MEMO,
-    {"similarity_lsh_ann", "similarity_lsh_recall"},
-    cleanup=_ann_topk_cleanup,
+SHARED_MEMOS.update(
+    {
+        "embedding_pairs": {"dedup_embedding_cosine", "dedup_embedding_keep_first"},
+        "topk_exact": {"similarity_cosine_topk", "similarity_lsh_recall"},
+        "topk_ann": {"similarity_lsh_ann", "similarity_lsh_recall"},
+    }
 )
 
 

@@ -16,8 +16,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..catalog import register
+from ..catalog import SHARED_MEMOS, register
+from ..lifetime import checkpoint, shared
 from ..sources import load_table
+from ..sources.tables import fixture_key
 
 _DAY_S = 86400
 
@@ -492,13 +494,13 @@ def assoc_event_type_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Pairs are generated IN-ROW from each user's sorted distinct-type set
     (the ``source_overlap_matrix`` pattern): ONE scan and one distinct
-    pass build the per-user type-set frame (materialized with
-    localCheckpoint — one row per user, memoized per (session, fixture)
-    with the checkpoint blocks registered for the shared-memo cleanup,
-    the ``_cc_labels`` convention), and the user count, per-type supports
-    (in-row explode), and bounded C(|types|, 2) pair expansion are all
-    derived from it — a user with a million events still contributes ≤
-    C(5,2) pair rows, so the shape survives any per-user volume. NULL
+    pass build the per-user type-set frame (checkpoint-materialized — one
+    row per user, shared per (session, fixture) under the
+    ``user_type_sets`` lifetime tag, the ``_cc_labels`` convention), and
+    the user count, per-type supports (in-row explode), and bounded
+    C(|types|, 2) pair expansion are all derived from it — a user with a
+    million events still contributes ≤ C(5,2) pair rows, so the shape
+    survives any per-user volume. NULL
     user ids are excluded on both sides (the SQL pair self-join would
     silently drop them while the supports kept them). Lift is one double
     division of exact BIGINT products (N, supports, and co-counts all
@@ -544,60 +546,25 @@ def assoc_event_type_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TYPE_SETS_MEMO: dict = {}
-
-
 def _user_type_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user sorted distinct event-type sets (NULL users excluded),
-    materialized once per (session, fixture) with localCheckpoint so the
-    three derivations (user count, supports, pair expansion) share one
-    events scan; checkpoint blocks are released via the shared-memo
-    cleanup like the CC label frames (functions/dedup.py)."""
-    import os as _os
-
-    from ..functions.dedup import _persistent_rdd_ids
-    from ..sources.tables import _source_identity, table_path
-
-    # Keyed on fixture CONTENT identity, not just the path: the driver
-    # regenerates testdata in place between rounds (sources/tables.py),
-    # so a path-only key would silently serve the previous generation's
-    # type sets within one long-lived application (ADVICE r10).
-    key = (
-        spark.sparkContext.applicationId,
-        _os.path.abspath(sf_dir),
-        _source_identity(table_path(sf_dir, "events")),
-    )
-    hit = _TYPE_SETS_MEMO.get(key)
-    if hit is None:
-        ids_pre = _persistent_rdd_ids(spark)
-        hit = (
+    checkpointed once per (session, fixture generation) so the three
+    derivations (user count, supports, pair expansion) share one events
+    scan. Keyed on fixture CONTENT identity, not just the path: the driver
+    regenerates testdata in place between rounds (ADVICE r10)."""
+    return shared(
+        spark,
+        "user_type_sets",
+        fixture_key(sf_dir, "events"),
+        lambda: checkpoint(
             load_table(spark, sf_dir, "events")
             .where(F.col("user_id").isNotNull())
             .select("user_id", "event_type")
             .distinct()
             .groupBy("user_id")
             .agg(F.sort_array(F.collect_set("event_type")).alias("types"))
-            .localCheckpoint()
-        )
-        hit._local_ckpt_rdd_ids = _persistent_rdd_ids(spark) - ids_pre
-        _TYPE_SETS_MEMO[key] = hit
-    return hit
+        ),
+    )
 
 
-def _type_sets_cleanup() -> None:
-    from ..functions.dedup import _unpersist_rdd_ids
-
-    for df in _TYPE_SETS_MEMO.values():
-        ids = getattr(df, "_local_ckpt_rdd_ids", None)
-        if ids:
-            _unpersist_rdd_ids(df.sparkSession, ids)
-
-
-from ..catalog import register_shared_memo as _register_shared_memo  # noqa: E402
-
-_register_shared_memo(
-    "user_type_sets",
-    _TYPE_SETS_MEMO,
-    {"assoc_event_type_lift"},
-    cleanup=_type_sets_cleanup,
-)
+SHARED_MEMOS["user_type_sets"] = {"assoc_event_type_lift"}

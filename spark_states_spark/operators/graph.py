@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import register
+from ..lifetime import checkpoint
 from ..functions.hashes import duck_h32, spark_h32
 from ..sources import load_table
 
@@ -115,18 +116,17 @@ def triangle_count(e: DataFrame) -> DataFrame:
     undirected edge list; returns 1 row (n_edges, n_triangles). Known
     graphs (cliques, paths, stars, bowties) pinned in tests/test_graph.py.
 
-    The edge list is materialized ONCE (localCheckpoint, same discipline
-    as pagerank_fixedpoint below): the plan references it five times
-    (degree count twice via unionAll, orientation, closing join, edge
-    count) and without the cut each reference re-ran the upstream edge
-    generator (r14, guide §1.2 — measured 1.00 → 0.77 s at sf0.1).
-    Scoped (ADVICE r14): each invocation releases the previous one's
-    pinned edge-list blocks, so bench best-of-N / scaleprobe replicas
-    don't accumulate copies until the JVM weak-ref cleaner fires.
+    The edge list is materialized ONCE (``lifetime.checkpoint``, same
+    discipline as pagerank_fixedpoint below): the plan references it five
+    times (degree count twice via unionAll, orientation, closing join,
+    edge count) and without the cut each reference re-ran the upstream
+    edge generator (r14, guide §1.2 — measured 1.00 → 0.77 s at sf0.1).
+    The pinned edge-list blocks live until ``lifetime.release`` of the
+    scope this is called in (the catalog entry's own tag), or until
+    Spark's ContextCleaner collects them when no scope is open — so
+    frames from earlier calls stay readable (ADVICE r15 #1).
     """
-    from ..functions.dedup import scoped_local_checkpoint
-
-    e = scoped_local_checkpoint(e, "graph_triangle_edges")
+    e = checkpoint(e)
     deg = (
         e.select(F.col("a").alias("v"))
         .unionAll(e.select(F.col("b").alias("v")))
@@ -227,11 +227,12 @@ def pagerank_fixedpoint(edges: DataFrame, iters: int = _PR_ITERS) -> DataFrame:
     returns (v, r) with r the BIGINT rank after ``iters`` iterations.
     Exposed separately so the integer-arithmetic kernel is testable on
     known graphs (paths, stars) independent of the fixture edge generator.
-    Scoped checkpoint: same block-release discipline as triangle_count.
+    The edge list is checkpointed with the same lifetime contract as
+    triangle_count: its blocks live until ``lifetime.release`` of the
+    enclosing scope, or until Spark's ContextCleaner runs when no scope
+    is open.
     """
-    from ..functions.dedup import scoped_local_checkpoint
-
-    e = scoped_local_checkpoint(edges, "graph_pagerank_edges")
+    e = checkpoint(edges)
     und = e.select(
         F.explode(
             F.array(

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import register
+from ..lifetime import checkpoint
 from ..sources import load_table
 
 _BINS = 1024
@@ -354,17 +355,14 @@ def agg_winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     and value sums go through DECIMAL(12,2) (clamp outputs are original
     data values, so the timeseries summation precedent applies).
 
-    r15: the 2-column projection is scoped-localCheckpoint-materialized
-    (same mechanism and rationale as anomaly_mad_outliers below; the
-    final clipped aggregation is a third reader of the same frame).
+    r15: the 2-column projection is checkpoint-materialized (same
+    mechanism and rationale as anomaly_mad_outliers below; the final
+    clipped aggregation is a third reader of the same frame).
     """
-    from ..functions.dedup import scoped_local_checkpoint
-
-    items = scoped_local_checkpoint(
+    items = checkpoint(
         load_table(spark, sf_dir, "events").select(
             F.col("event_type").alias("g"), F.col("value").alias("v")
-        ),
-        "winsorized_items",
+        )
     )
     ext = _group_extents(items)
     ranks = ext.select(
@@ -460,21 +458,18 @@ def anomaly_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     fence scan re-derived their input frames per stage — the EXECUTED
     plan ran **49 parquet scans** of events (12 ReusedExchange
     notwithstanding). The 2-column ``items`` projection and the 4-column
-    ``dev`` frame are now scoped-localCheckpoint-materialized (per-query
-    lifetime, previous generation's blocks released per call site), so
+    ``dev`` frame are now checkpoint-materialized (owned by the entry's
+    lifetime tag until its release), so
     every kernel stage reads the materialized narrow columns instead of
     re-scanning: 49 scans → 1, sf0.1 best 4.38 → 2.52 s, rows identical
     (differential-checked on all checkpoint combinations). At 100 TB
     this trades ~25 pruned corpus re-scans + re-joins for one
     materialization of each narrow frame (MEMORY_AND_DISK, spills).
     """
-    from ..functions.dedup import scoped_local_checkpoint
-
-    items = scoped_local_checkpoint(
+    items = checkpoint(
         load_table(spark, sf_dir, "events").select(
             F.col("event_type").alias("g"), F.col("value").alias("v")
-        ),
-        "mad_items",
+        )
     )
     ext = _group_extents(items)
     mid_ranks = lambda e: e.select(  # noqa: E731 — the two-middle rank frame
@@ -495,11 +490,10 @@ def anomaly_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         # clearCache() in the harnesses releases it between entries.
         .cache()
     )
-    dev = scoped_local_checkpoint(
+    dev = checkpoint(
         items.join(F.broadcast(med), "g").select(
             "g", "n", "med", F.abs(F.col("v") - F.col("med")).alias("v")
-        ),
-        "mad_dev",
+        )
     )
     ext2 = _group_extents(dev.select("g", "v"))
     mad = (

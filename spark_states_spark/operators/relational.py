@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import register
+from ..lifetime import temp_view
 from ..sources import load_table, load_table_fanned
 from .exact import davg, dec2, dsum, rate, sql_davg, sql_dec2, sql_dsum, sql_rate
 
@@ -414,7 +415,7 @@ def having_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def scalar_subquery_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scalar subquery in a predicate, via the SQL API on a temp view."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
+    temp_view(load_table(spark, sf_dir, "orders"), "orders")
     return spark.sql(
         """
         SELECT o_orderkey, o_totalprice AS totalprice
@@ -987,7 +988,7 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     priority) pair before the sets expand (the agg_cube_orders pattern,
     VERDICT r06 #3); decimal partial sums re-aggregate exactly."""
     o = load_table(spark, sf_dir, "orders")
-    o.createOrReplaceTempView("orders_gs")
+    temp_view(o, "orders_gs")
     return spark.sql(
         """
         WITH pre AS (
@@ -1238,11 +1239,11 @@ def q20_excess_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation/region IN is a bounded-dim semi join. Quantity sum is
     decimal-exact so the >300 boundary is bit-stable.
     """
-    load_table(spark, sf_dir, "supplier").createOrReplaceTempView("q20_supplier")
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("q20_lineitem")
-    load_table(spark, sf_dir, "part").createOrReplaceTempView("q20_part")
-    load_table(spark, sf_dir, "nation").createOrReplaceTempView("q20_nation")
-    load_table(spark, sf_dir, "region").createOrReplaceTempView("q20_region")
+    temp_view(load_table(spark, sf_dir, "supplier"), "q20_supplier")
+    temp_view(load_table(spark, sf_dir, "lineitem"), "q20_lineitem")
+    temp_view(load_table(spark, sf_dir, "part"), "q20_part")
+    temp_view(load_table(spark, sf_dir, "nation"), "q20_nation")
+    temp_view(load_table(spark, sf_dir, "region"), "q20_region")
     return spark.sql(
         """
         SELECT s.s_name, s.s_acctbal
@@ -1297,11 +1298,11 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     on l_orderkey, so the self-joins reuse one exchange instead of
     re-shuffling; supplier/nation/region prune the l1 side first.
     """
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("q21_lineitem")
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("q21_orders")
-    load_table(spark, sf_dir, "supplier").createOrReplaceTempView("q21_supplier")
-    load_table(spark, sf_dir, "nation").createOrReplaceTempView("q21_nation")
-    load_table(spark, sf_dir, "region").createOrReplaceTempView("q21_region")
+    temp_view(load_table(spark, sf_dir, "lineitem"), "q21_lineitem")
+    temp_view(load_table(spark, sf_dir, "orders"), "q21_orders")
+    temp_view(load_table(spark, sf_dir, "supplier"), "q21_supplier")
+    temp_view(load_table(spark, sf_dir, "nation"), "q21_nation")
+    temp_view(load_table(spark, sf_dir, "region"), "q21_region")
     return spark.sql(
         """
         SELECT s.s_name, count(*) AS numwait

@@ -54,17 +54,19 @@ _SHM_SF_MULTIPLE = 4.0
 
 
 def _dir_size_bytes(path: str) -> int:
-    """Total size of the regular files directly under ``path`` (the flat
-    fixture layout); 0 when unreadable — callers treat 0 as "unknown"."""
-    try:
-        total = 0
-        for f in os.listdir(path):
-            fp = os.path.join(path, f)
-            if os.path.isfile(fp):
-                total += os.path.getsize(fp)
-        return total
-    except OSError:
-        return 0
+    """Total size of the regular files anywhere under ``path``, walking
+    nested and hive-partitioned layouts like sources.tables._parquet_files
+    (ADVICE r15 #2); 0 when unreadable — callers treat 0 as "unknown"."""
+    total = 0
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            fp = os.path.join(root, f)
+            try:
+                if os.path.isfile(fp):
+                    total += os.path.getsize(fp)
+            except OSError:
+                pass
+    return total
 
 
 def shm_scratch_root() -> str | None:

@@ -19,6 +19,8 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..lifetime import temp_view
+
 TABLES = (
     "region",
     "nation",
@@ -184,7 +186,7 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every table as a temp view for the SQL API."""
     for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
+        temp_view(load_table(spark, sf_dir, name), name)
 
 
 def _stream_dir(path: str) -> str:
@@ -222,6 +224,14 @@ def _source_identity(path: str) -> str:
         return ";".join(stamps)
     st = os.stat(path)
     return f"{st.st_mtime_ns}:{st.st_size}"
+
+
+def fixture_key(sf_dir: str, name: str) -> tuple[str, str]:
+    """Memo key for a value derived from fixture table ``name``: the
+    fixture dir plus the table's content identity, so a fixture
+    regenerated in place between rounds misses instead of serving the
+    previous generation (ADVICE r10)."""
+    return os.path.abspath(sf_dir), _source_identity(table_path(sf_dir, name))
 
 
 def staged_chunks(

@@ -16,9 +16,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import register
+from ..catalog import SHARED_MEMOS, STAGING_MEMO_TAGS, register
 from ..functions.hashes import DUCK_TOKS, SPARK_TOKS, duck_minhash_cte
+from ..lifetime import own_dir, release, shared
 from ..sources import load_table, read_stream
+from ..sources.tables import fixture_key
 from .runner import run_stream_to_table
 from .windows import streaming_hourly_agg
 
@@ -323,22 +325,6 @@ def streaming_late_arrival_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Phase-1 snapshot memo for the restart entry: key -> run_dir whose
-# ``snap_ckpt``/``snap_sink`` hold the post-stop state of the first
-# lifecycle (see the entry docstring). Registered below as a STAGING
-# memo (catalog.STAGING_MEMO_TAGS) — bench re-runs keep it, explicit
-# clear_shared_memos(..., include_staging=True) re-pays phase 1; the
-# cleanup removes the run dirs.
-_RESTART_SNAP_MEMO: dict = {}
-
-
-def _drop_restart_run_dirs() -> None:
-    import shutil as _shutil
-
-    for d in list(_RESTART_SNAP_MEMO.values()):
-        _shutil.rmtree(d, ignore_errors=True)
-
-
 @register(
     "streaming_restart_recovery",
     # The oracle is the batch GROUP BY restricted to the final-watermark
@@ -401,30 +387,28 @@ def streaming_restart_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     not move) and pay only the part the entry exists to measure: the
     restart — offset-log replay, RocksDB version reload, watermark
     restore — plus the 2 new chunks, all genuinely re-executed every
-    run. Registered as a STAGING memo (tag ``restart_phase1``): like
-    ``staged_chunks``, it is deterministic input staging, so bench
-    best-of-N re-runs do NOT clear it — every timed run measures a full
-    recovery lifecycle, never a memo read (the result is the phase-2
-    sink, which is never memoized). Re-invoking the entry invalidates a
-    previously returned (uncollected) frame — the same contract as
-    before the memo, when each invocation wiped the prior run dir.
+    run. Shared as STAGING (lifetime tag ``restart_phase1``, listed in
+    catalog.STAGING_MEMO_TAGS): like ``staged_chunks``, it is
+    deterministic input staging, so bench best-of-N re-runs do NOT
+    release it — every timed run measures a full recovery lifecycle,
+    never a memo read (the result is the phase-2 sink, which is never
+    shared). The run dir lives until that tag's release. Re-invoking the
+    entry invalidates a previously returned (uncollected) frame — the
+    same contract as before the share, when each invocation wiped the
+    prior run dir.
     """
     import os as _os
     import shutil as _shutil
     import tempfile as _tempfile
 
     from ..sources import staged_chunks
-    from ..sources.tables import _source_identity, _stream_from_chunk_dir, table_path
+    from ..sources.tables import _stream_from_chunk_dir
+    from .runner import ephemeral_root, sweep_stale_dirs
     from .windows import windowed_counts
 
     chunks = staged_chunks(sf_dir, "events", n_chunks=4)
     parts = sorted(
         f for f in _os.listdir(chunks) if f.endswith(".parquet")
-    )
-    memo_key = (
-        spark.sparkContext.applicationId,
-        _os.path.abspath(sf_dir),
-        _source_identity(table_path(sf_dir, "events")),
     )
 
     def run(src: str, ckpt: str, sink: str) -> None:
@@ -439,61 +423,24 @@ def streaming_restart_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         query.awaitTermination()
 
-    hit = _RESTART_SNAP_MEMO.get(memo_key)
-    if hit is not None and not (
-        _os.path.isdir(_os.path.join(hit, "snap_ckpt"))
-        and _os.path.isdir(_os.path.join(hit, "snap_sink"))
-    ):
-        # The memoized dir vanished (explicit staging clear raced us, or
-        # an external /tmp sweep) — treat as a miss rather than restoring
-        # into a ghost path. Both snapshots are checked (ADVICE r13): a
-        # partial sweep that took snap_sink but left snap_ckpt would
-        # otherwise pass the hit check and raise inside the restore
-        # copytree instead of degrading to a miss like this path.
-        _RESTART_SNAP_MEMO.pop(memo_key, None)
-        hit = None
-    if hit is None:
-        # All run dirs live under one parent; stale runs are swept with the
-        # shared PID-keyed policy (runner.sweep_stale_dirs): a prior run of
-        # THIS process or a dead process is reclaimed, but a concurrent
-        # invocation (pytest -n worker, bench racing the driver's sampler)
-        # keeps its live src/ckpt/sink — the old wipe-all-siblings sweep
-        # would delete it mid-run and fail nondeterministically. Dirs still
-        # referenced by LIVE memo entries (another fixture's snapshot in
-        # this same process) are likewise excluded, or an sf0.01→sf0.001→
-        # sf0.01 alternation would restore into a deleted path.
-        from .runner import ephemeral_root, sweep_stale_dirs
+    staged = []
 
-        # Throwaway same-process run dirs (src/ckpt/sink + staging
-        # snapshots): RAM-backed when available, same contract and
-        # rationale as runner.ephemeral_root (r14).
+    def stage() -> str:
+        # Run dirs live under one parent, owned by the "restart_phase1"
+        # lifetime tag until its release; dirs of dead processes are swept
+        # with the shared PID-keyed policy (runner.sweep_stale_dirs), so a
+        # concurrent invocation (pytest -n worker, bench racing the
+        # driver's sampler) keeps its live src/ckpt/sink. RAM-backed when
+        # available, same contract and rationale as runner.ephemeral_root.
         parent = _os.path.join(ephemeral_root(), "sss_restart_runs")
         _os.makedirs(parent, exist_ok=True)
-        pid_mine = f"run_pid{_os.getpid()}_"
-        # Evict memo entries from DEAD sessions of this process (ADVICE
-        # r13): the memo key includes applicationId, so after an
-        # in-process Spark restart the old session's run dir would stay
-        # pinned in the live set for the process lifetime — bounded but
-        # unreclaimed. Evicting here (the miss path) frees the old dirs
-        # before the live-set exclusion below is computed.
-        app_id = spark.sparkContext.applicationId
-        for stale_key in [
-            k for k in _RESTART_SNAP_MEMO if k[0] != app_id
-        ]:
-            _shutil.rmtree(
-                _RESTART_SNAP_MEMO.pop(stale_key), ignore_errors=True
-            )
-        live = {
-            _os.path.basename(d) for d in _RESTART_SNAP_MEMO.values()
-        }
-        for old in _os.listdir(parent):
-            if old.startswith(pid_mine) and old not in live:
-                _shutil.rmtree(_os.path.join(parent, old), ignore_errors=True)
         sweep_stale_dirs(parent)
-        run_dir = _tempfile.mkdtemp(prefix=pid_mine, dir=parent)
-        src = _os.path.join(run_dir, "src")
-        ckpt = _os.path.join(run_dir, "ckpt")
-        sink = _os.path.join(run_dir, "sink")
+        run_dir = own_dir(
+            _tempfile.mkdtemp(prefix=f"run_pid{_os.getpid()}_", dir=parent)
+        )
+        src, ckpt, sink = (
+            _os.path.join(run_dir, tag) for tag in ("src", "ckpt", "sink")
+        )
         for d in (src, ckpt, sink):
             _os.makedirs(d)
         # copy2 preserves mtimes, keeping delivery order identical to the
@@ -508,12 +455,24 @@ def streaming_restart_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
                 _os.path.join(run_dir, tag),
                 _os.path.join(run_dir, "snap_" + tag),
             )
-        _RESTART_SNAP_MEMO[memo_key] = run_dir
-    else:
-        run_dir = hit
-        src = _os.path.join(run_dir, "src")
-        ckpt = _os.path.join(run_dir, "ckpt")
-        sink = _os.path.join(run_dir, "sink")
+        staged.append(run_dir)
+        return run_dir
+
+    key = fixture_key(sf_dir, "events")
+    run_dir = shared(spark, "restart_phase1", key, stage)
+    if not staged and not all(
+        _os.path.isdir(_os.path.join(run_dir, "snap_" + tag))
+        for tag in ("ckpt", "sink")
+    ):
+        # The staged dir vanished (an external /tmp sweep; ADVICE r13: a
+        # partial sweep may take one snapshot and leave the other) —
+        # re-stage rather than restore into a ghost path.
+        release(spark, "restart_phase1")
+        run_dir = shared(spark, "restart_phase1", key, stage)
+    src, ckpt, sink = (
+        _os.path.join(run_dir, tag) for tag in ("src", "ckpt", "sink")
+    )
+    if not staged:
         # Restore the post-phase-1 state in place: the live ckpt/sink are
         # post-phase-2 from the previous invocation, so recovery against
         # them would drain nothing (and time nothing).
@@ -966,26 +925,13 @@ def _interval_join_run(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The INNER entry stays a genuine solo drain: it is the production-shape
 # flagship carrying the state-partition sizing contract, and keeping it
 # solo keeps the buffered-both-sides inner operator in the measured path.
-# Memo contract identical to _FUNNEL_DRAIN_MEMO.
-_IJ_FO_DRAIN_MEMO: dict = {}
+# Shared under the "interval_fo" lifetime tag, like the funnel drain.
 
 
 def _interval_join_fo_drained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drain the full-outer interval join once per (session, fixture
     generation); the derivable shapes filter its sink (see the block
     comment above)."""
-    import os as _os
-
-    from ..sources.tables import _source_identity, table_path
-
-    key = (
-        spark.sparkContext.applicationId,
-        _os.path.abspath(sf_dir),
-        _source_identity(table_path(sf_dir, "events")),
-    )
-    hit = _IJ_FO_DRAIN_MEMO.get(key)
-    if hit is not None:
-        return hit
 
     def run() -> DataFrame:
         p, x, cond = _interval_join_sides(spark, sf_dir)
@@ -998,9 +944,12 @@ def _interval_join_fo_drained(spark: SparkSession, sf_dir: str) -> DataFrame:
             joined, output_mode="append", sink=_ij_sink(sf_dir)
         )
 
-    out = _with_state_parts(spark, _ij_state_parts(spark, sf_dir), run)
-    _IJ_FO_DRAIN_MEMO[key] = out
-    return out
+    return shared(
+        spark,
+        "interval_fo",
+        fixture_key(sf_dir, "events"),
+        lambda: _with_state_parts(spark, _ij_state_parts(spark, sf_dir), run),
+    )
 
 
 def _interval_join_solo(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
@@ -1052,10 +1001,16 @@ def _fixture_state_parts(spark: SparkSession, tuned: int) -> int:
     resp. >=4-core session byte-identical. r15 matrix re-measurement
     (4/8/16 parts at 8 and 32 cores) is in OPTIMIZATION_r15.md.
     ``SPARK_GRAFT_FIXTURE_STATE_PARTS`` overrides for deployment tuning
-    and for the matrix measurements themselves."""
+    and for the matrix measurements themselves: an unparsable value fails
+    fast, a value below 1 is clamped to 1 (ADVICE r15 #3)."""
     forced = os.environ.get("SPARK_GRAFT_FIXTURE_STATE_PARTS")
     if forced:
-        return int(forced)
+        try:
+            return max(1, int(forced))
+        except ValueError:
+            raise ValueError(
+                f"SPARK_GRAFT_FIXTURE_STATE_PARTS={forced!r} is not an integer"
+            ) from None
     return max(1, min(tuned, int(spark.sparkContext.defaultParallelism)))
 
 
@@ -1167,8 +1122,8 @@ def streaming_interval_join_left_outer(spark: SparkSession, sf_dir: str) -> Data
     driver verifies Spark's eviction frontier, not just the matches.
 
     Since r14 this is the purchase-side slice of the shared full-outer
-    drain (``_IJ_FO_DRAIN_MEMO`` — equivalence argument and differential
-    pin on the block comment there): FO rows with a non-null purchase side
+    drain (``interval_fo`` — equivalence argument and differential pin on
+    the block comment there): FO rows with a non-null purchase side
     are exactly the matched pairs plus the watermark-closed unmatched
     purchases a solo leftOuter drain emits.
     """
@@ -1216,9 +1171,9 @@ def streaming_interval_join_full_outer(spark: SparkSession, sf_dir: str) -> Data
     frontiers from the data, so the driver verifies eviction on BOTH
     state buffers, not just the match set.
 
-    Since r14 this drain is SHARED (``_IJ_FO_DRAIN_MEMO``): the outer and
-    semi shapes are exact slices of the full-outer output, so one drain
-    serves all of them (block comment on the memo).
+    Since r14 this drain is SHARED (``interval_fo``): the outer and semi
+    shapes are exact slices of the full-outer output, so one drain serves
+    all of them (block comment on _interval_join_fo_drained).
     """
     return _interval_join_fo_drained(spark, sf_dir)
 
@@ -1252,8 +1207,8 @@ def streaming_interval_join_right_outer(spark: SparkSession, sf_dir: str) -> Dat
     driver verifies the right buffer's eviction independently of the left.
 
     Since r14 the error-side slice of the shared full-outer drain
-    (``_IJ_FO_DRAIN_MEMO``): FO rows with a non-null error side are the
-    matched pairs plus the watermark-closed unmatched errors.
+    (``interval_fo``): FO rows with a non-null error side are the matched
+    pairs plus the watermark-closed unmatched errors.
     """
     return _interval_join_fo_drained(spark, sf_dir).filter(
         F.col("error_id").isNotNull()
@@ -1282,8 +1237,8 @@ def streaming_interval_join_left_semi(spark: SparkSession, sf_dir: str) -> DataF
     equals the batch semi join.
 
     Since r14 the distinct matched purchases of the shared full-outer
-    drain (``_IJ_FO_DRAIN_MEMO``): purchase_id is unique (event_id), so
-    the distinct matched (purchase_id, user_id) pairs are exactly the
+    drain (``interval_fo``): purchase_id is unique (event_id), so the
+    distinct matched (purchase_id, user_id) pairs are exactly the
     at-most-once-per-left-row semi output.
     """
     return (
@@ -1529,8 +1484,7 @@ _PER_QUERY_TTLS = {"kv_fast": 3600, "kv_slow": 86400}
 #   get of that key has now' >= chunk-end >= last_access + ttl and would
 #   miss (and strict-drop) anyway. Same argument as the strict oracle being
 #   a pure fold over (ts_s, seq) with no batching term.
-# Memo contract identical to _WALLCLOCK_DRAIN_MEMO.
-_VIRTUAL_DRAIN_MEMO: dict = {}
+# Shared under the "virtual_kv" lifetime tag, like the wall-clock drain.
 _VIRTUAL_LAZY_BINDING = "lazy"
 
 
@@ -1557,14 +1511,8 @@ def _virtual_ttl_bindings() -> dict:
 def _virtual_kv_drained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drain all virtual-clock TTL bindings once per (session, fixture
     generation); returns the combined sink with binding-prefixed keys."""
-    import os as _os
-
     from ..sources import chunked_stream
-    from ..sources.tables import (
-        _source_identity,
-        parquet_row_count,
-        table_path,
-    )
+    from ..sources.tables import parquet_row_count, table_path
     from .ttl import (
         OUTPUT_SCHEMA,
         GroupStateTimeout,
@@ -1572,46 +1520,42 @@ def _virtual_kv_drained(spark: SparkSession, sf_dir: str) -> DataFrame:
         make_composite_virtual_kernel,
     )
 
-    key = (
-        spark.sparkContext.applicationId,
-        _os.path.abspath(sf_dir),
-        _source_identity(table_path(sf_dir, "events")),
-    )
-    hit = _VIRTUAL_DRAIN_MEMO.get(key)
-    if hit is not None:
-        return hit
-    bindings = _virtual_ttl_bindings()
+    def drain() -> DataFrame:
+        bindings = _virtual_ttl_bindings()
 
-    # The chunked replay leans on the fixture's (ts, event_id) ordering
-    # contract — assert it once, like the solo lazy entry did.
-    _assert_event_id_ts_monotone(spark, sf_dir)
-    ops = _kv_op_select(
-        chunked_stream(spark, sf_dir, "events", n_chunks=_LAZY_BOUNDS_CHUNKS)
-    )
-    # Composite kernel (r14, guide §4 — see the block comment above): one
-    # group per BARE key, every binding's fold per call; replaces the
-    # binding explode that tripled shuffle rows and Python group calls.
-    stream = ops.groupBy("key").applyInPandasWithState(
-        make_composite_virtual_kernel(bindings),
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=composite_state_schema(len(bindings)),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    # Footer-metadata count (ADVICE r09): the knobs only need the input
-    # size; a full Spark count() scan per memo-miss was pure overhead.
-    n_rows = parquet_row_count(table_path(sf_dir, "events"))
-    out = _with_state_parts(
-        spark,
-        _kv_state_parts(spark, n_rows),
-        # Sink scales with input (see _kv_sink): past fixture scale the
-        # drain's per-get output must not collect to the driver.
-        lambda: run_stream_to_table(
-            stream, output_mode="append", sink=_kv_sink(n_rows)
-        ),
-    )
-    _VIRTUAL_DRAIN_MEMO[key] = out
-    return out
+        # The chunked replay leans on the fixture's (ts, event_id) ordering
+        # contract — assert it once, like the solo lazy entry did.
+        _assert_event_id_ts_monotone(spark, sf_dir)
+        ops = _kv_op_select(
+            chunked_stream(
+                spark, sf_dir, "events", n_chunks=_LAZY_BOUNDS_CHUNKS
+            )
+        )
+        # Composite kernel (r14, guide §4 — see the block comment above):
+        # one group per BARE key, every binding's fold per call; replaces
+        # the binding explode that tripled shuffle rows and Python group
+        # calls.
+        stream = ops.groupBy("key").applyInPandasWithState(
+            make_composite_virtual_kernel(bindings),
+            outputStructType=OUTPUT_SCHEMA,
+            stateStructType=composite_state_schema(len(bindings)),
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+        # Footer-metadata count (ADVICE r09): the knobs only need the input
+        # size; a full Spark count() scan per memo-miss was pure overhead.
+        n_rows = parquet_row_count(table_path(sf_dir, "events"))
+        return _with_state_parts(
+            spark,
+            _kv_state_parts(spark, n_rows),
+            # Sink scales with input (see _kv_sink): past fixture scale the
+            # drain's per-get output must not collect to the driver.
+            lambda: run_stream_to_table(
+                stream, output_mode="append", sink=_kv_sink(n_rows)
+            ),
+        )
+
+    return shared(spark, "virtual_kv", fixture_key(sf_dir, "events"), drain)
 
 
 def _virtual_binding_outcomes(
@@ -1647,8 +1591,8 @@ def keyed_state_ttl_per_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     both get-outcome summaries, tagged by query name.
 
     Both bindings execute on the shared virtual-clock drain (VERDICT r07
-    #4 — see the soundness note on ``_VIRTUAL_DRAIN_MEMO``): the composite
-    kernel runs the unchanged strict production fold (``replay_virtual``)
+    #4 — see the soundness note on ``_virtual_kv_drained``): the
+    composite kernel runs the unchanged strict production fold (``replay_virtual``)
     once per binding per key group, each with its own resolved TTL; only
     the micro-batch infrastructure and the group-call boundary are shared.
     """
@@ -1777,23 +1721,16 @@ def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 # composite state row: 2× fewer shuffled rows and Python group calls, the
 # same binding-prefixed sink rows, per-binding fold order / timeout arming
 # / strict read-side expiry preserved (see the kernel's contract note;
-# differential-pinned by test_funnel_drain_share's wallclock test). Memo
-# contract identical to _FUNNEL_DRAIN_MEMO.
-_WALLCLOCK_DRAIN_MEMO: dict = {}
+# differential-pinned by test_funnel_drain_share's wallclock test). Shared
+# under the "wallclock_kv" lifetime tag, like the funnel drain.
 
 
 def _wallclock_kv_drained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drain both wall-clock TTL bindings once per (session, fixture
     generation); returns the combined sink with 'inf|'/'fin|'-prefixed keys.
     """
-    import os as _os
-
     from ..config import resolve_ttl
-    from ..sources.tables import (
-        _source_identity,
-        parquet_row_count,
-        table_path,
-    )
+    from ..sources.tables import parquet_row_count, table_path
     from .runner import run_stream_drain_wallclock
     from .ttl import (
         WALL_OUTPUT_SCHEMA,
@@ -1802,62 +1739,57 @@ def _wallclock_kv_drained(spark: SparkSession, sf_dir: str) -> DataFrame:
         make_composite_wallclock_kernel,
     )
 
-    key = (
-        spark.sparkContext.applicationId,
-        _os.path.abspath(sf_dir),
-        _source_identity(table_path(sf_dir, "events")),
-    )
-    hit = _WALLCLOCK_DRAIN_MEMO.get(key)
-    if hit is not None:
-        return hit
-    ttls = {
-        "inf": resolve_ttl({}, "events_kv_wall_inf"),  # default -1
-        "fin": resolve_ttl(
-            {
-                "spark.sql.streaming.stateStore.stateExpirySecs": str(
-                    _WALL_FINITE_TTL_SECS
-                ),
-                "spark.sql.streaming.stateStore.strictExpire": "true",
-            },
-            "events_kv_wall_finite",
-        ),
-    }
-    # Composite kernel (r14, guide §4 — same move as the virtual drain):
-    # one group per BARE key running both bindings' replay_wallclock folds
-    # against one composite state row, instead of exploding every op row
-    # into binding-tagged copies. Sink contents keep the same
-    # binding-prefixed keys; the engine timeout arms for the finite
-    # binding exactly as its solo kernel did (see
-    # ttl.make_composite_wallclock_kernel's contract note).
-    ops = _event_kv_ops(spark, sf_dir)
-    stream = ops.groupBy("key").applyInPandasWithState(
-        make_composite_wallclock_kernel(ttls),
-        outputStructType=WALL_OUTPUT_SCHEMA,
-        stateStructType=composite_state_schema(len(ttls)),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )
-    # numInputRows is a SOURCE metric — the raw events row count (footer
-    # metadata, not a scan — see _virtual_kv_drained).
-    n_rows = parquet_row_count(table_path(sf_dir, "events"))
-    # The drain deadline is a STALL detector, not a size cap: scale it
-    # with the input so a healthy 10-100x run (observed kernel throughput
-    # ~10^5 rows/s) never trips it — the floor rate here is ~2K rows/s,
-    # ~50x slower than healthy, so a genuine stall still fails fast
-    # relative to the workload size (r08; the 100x probe needs this).
-    timeout_s = max(180.0, n_rows / 2000.0)
-    out = _with_state_parts(
-        spark,
-        _kv_state_parts(spark, n_rows),
-        # Sink scales with input (see _kv_sink): past fixture scale the
-        # drain's per-get output must not collect to the driver.
-        lambda: run_stream_drain_wallclock(
-            stream, n_input_rows=n_rows, output_mode="append",
-            timeout_s=timeout_s, sink=_kv_sink(n_rows),
-        ),
-    )
-    _WALLCLOCK_DRAIN_MEMO[key] = out
-    return out
+    def drain() -> DataFrame:
+        ttls = {
+            "inf": resolve_ttl({}, "events_kv_wall_inf"),  # default -1
+            "fin": resolve_ttl(
+                {
+                    "spark.sql.streaming.stateStore.stateExpirySecs": str(
+                        _WALL_FINITE_TTL_SECS
+                    ),
+                    "spark.sql.streaming.stateStore.strictExpire": "true",
+                },
+                "events_kv_wall_finite",
+            ),
+        }
+        # Composite kernel (r14, guide §4 — same move as the virtual
+        # drain): one group per BARE key running both bindings'
+        # replay_wallclock folds against one composite state row, instead
+        # of exploding every op row into binding-tagged copies. Sink
+        # contents keep the same
+        # binding-prefixed keys; the engine timeout arms for the finite
+        # binding exactly as its solo kernel did (see
+        # ttl.make_composite_wallclock_kernel's contract note).
+        ops = _event_kv_ops(spark, sf_dir)
+        stream = ops.groupBy("key").applyInPandasWithState(
+            make_composite_wallclock_kernel(ttls),
+            outputStructType=WALL_OUTPUT_SCHEMA,
+            stateStructType=composite_state_schema(len(ttls)),
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+        )
+        # numInputRows is a SOURCE metric — the raw events row count
+        # (footer metadata, not a scan — see _virtual_kv_drained).
+        n_rows = parquet_row_count(table_path(sf_dir, "events"))
+        # The drain deadline is a STALL detector, not a size cap: scale it
+        # with the input so a healthy 10-100x run (observed kernel
+        # throughput ~10^5 rows/s) never trips it — the floor rate here is
+        # ~2K rows/s, ~50x slower than healthy, so a genuine stall still
+        # fails fast relative to the workload size (r08; the 100x probe
+        # needs this).
+        timeout_s = max(180.0, n_rows / 2000.0)
+        return _with_state_parts(
+            spark,
+            _kv_state_parts(spark, n_rows),
+            # Sink scales with input (see _kv_sink): past fixture scale the
+            # drain's per-get output must not collect to the driver.
+            lambda: run_stream_drain_wallclock(
+                stream, n_input_rows=n_rows, output_mode="append",
+                timeout_s=timeout_s, sink=_kv_sink(n_rows),
+            ),
+        )
+
+    return shared(spark, "wallclock_kv", fixture_key(sf_dir, "events"), drain)
 
 
 def _wallclock_binding_outcomes(
@@ -2020,7 +1952,7 @@ def keyed_state_ttl_lazy_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     still-alive key is not.
 
     The lazy fold executes on the shared virtual-clock drain (VERDICT
-    r07 #4, ``_VIRTUAL_DRAIN_MEMO``) with the SAME chunked replay
+    r07 #4, ``_virtual_kv_drained``) with the SAME chunked replay
     (``_LAZY_BOUNDS_CHUNKS`` time-ordered micro-batches) and state
     partitioning the solo drain used — its per-(batch, key) fold inputs,
     including the real between-batch sweeps the bounds sandwich needs
@@ -2492,118 +2424,57 @@ def _funnel_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 # stream is a MATERIALIZED VIEW — `streaming_funnel_stages` consumes its sink
 # and `funnel_state_scan` its RocksDB checkpoint, and both describe the same
 # pipeline by construction (_funnel_transitions), so re-ingesting the stream
-# per entry was pure duplicate micro-batch infrastructure. Keyed by (Spark
-# context, fixture dir, fixture content identity) so a new session or a
-# regenerated fixture re-drains; the memory sink and checkpoint both live
-# for the session.
-_FUNNEL_DRAIN_MEMO: dict = {}
+# per entry was pure duplicate micro-batch infrastructure. Shared under the
+# "funnel" lifetime tag per (application, fixture dir, fixture content
+# identity), so a new session or a regenerated fixture re-drains; the
+# memory sink and checkpoint both live until the tag's release.
 
 
 def _funnel_drained(spark: SparkSession, sf_dir: str):
     """Drain the funnel once per (session, fixture generation); returns
     ``(sink_df, checkpoint_dir)``."""
-    import os as _os
-
-    from ..sources.tables import _source_identity, table_path
     from .runner import auto_checkpoint_dir
 
-    # applicationId, not id(sparkContext): CPython recycles object ids
-    # after GC, so a new session could get a false hit and receive a dead
-    # session's sink DataFrame; applicationId is unique per context.
-    key = (
-        spark.sparkContext.applicationId,
-        _os.path.abspath(sf_dir),
-        _source_identity(table_path(sf_dir, "events")),
-    )
-    hit = _FUNNEL_DRAIN_MEMO.get(key)
-    if hit is not None:
-        return hit
-    ckpt = auto_checkpoint_dir("funnel_drain")
+    def drain():
+        ckpt = auto_checkpoint_dir("funnel_drain")
 
-    def run() -> DataFrame:
-        return run_stream_to_table(
-            _funnel_transitions(spark, sf_dir),
-            output_mode="append",
-            checkpoint_location=ckpt,
+        def run() -> DataFrame:
+            return run_stream_to_table(
+                _funnel_transitions(spark, sf_dir),
+                output_mode="append",
+                checkpoint_location=ckpt,
+            )
+
+        # 16 state partitions at fixture scale, one per core past the KV
+        # size gate (r10 100x profile: with the int-stage kernel, 32 parts
+        # cut the entry 25.9 s -> 18.0 s; with the old string kernel more
+        # partitions only added setup cost).
+        sink = _with_state_parts(
+            spark, _ij_state_parts(spark, sf_dir, fixture_parts=16), run
         )
+        return sink, ckpt
 
-    # 16 state partitions at fixture scale, one per core past the KV size
-    # gate (r10 100x profile: with the int-stage kernel, 32 parts cut the
-    # entry 25.9 s -> 18.0 s; with the old string kernel more partitions
-    # only added setup cost).
-    sink = _with_state_parts(
-        spark, _ij_state_parts(spark, sf_dir, fixture_parts=16), run
-    )
-    _FUNNEL_DRAIN_MEMO[key] = (sink, ckpt)
-    return sink, ckpt
+    return shared(spark, "funnel", fixture_key(sf_dir, "events"), drain)
 
 
-# Shared-drain memos live in the catalog-level registry (catalog.py::
-# SHARED_MEMOS — see the rationale there and ADVICE r06); the alias keeps
-# this module's historical name pointing at the same object.
-from ..catalog import SHARED_MEMOS as SHARED_DRAIN_MEMOS  # noqa: E402
-from ..catalog import register_shared_memo as _register_shared_memo  # noqa: E402
-
-def _drop_memo_sink_tables(memo: dict) -> None:
-    """Release the sink a drain memo's DataFrames read — drop the
-    memory-sink temp view (so the driver-side MemorySink buffer can be
-    collected instead of living for the session, ADVICE r07) or remove the
-    parquet-sink dir (r09 — the KV drains sink to files).
-    """
-    import shutil as _shutil
-
-    for v in list(memo.values()):
-        for item in v if isinstance(v, tuple) else (v,):
-            name = getattr(item, "_sss_sink_table", None)
-            if name is not None:
-                try:
-                    item.sparkSession.catalog.dropTempView(name)
-                except Exception:
-                    pass
-            d = getattr(item, "_sss_sink_dir", None)
-            if d is not None:
-                _shutil.rmtree(d, ignore_errors=True)
-
-
-_register_shared_memo(
-    "funnel",
-    _FUNNEL_DRAIN_MEMO,
-    {"streaming_funnel_stages", "funnel_state_scan"},
-    cleanup=lambda: _drop_memo_sink_tables(_FUNNEL_DRAIN_MEMO),
-)
-_register_shared_memo(
-    "wallclock_kv",
-    _WALLCLOCK_DRAIN_MEMO,
+SHARED_MEMOS.update(
     {
-        "keyed_state_wallclock_infinite",
-        "keyed_state_wallclock_finite_bounds",
-    },
-    cleanup=lambda: _drop_memo_sink_tables(_WALLCLOCK_DRAIN_MEMO),
+        "funnel": {"streaming_funnel_stages", "funnel_state_scan"},
+        "wallclock_kv": {
+            "keyed_state_wallclock_infinite",
+            "keyed_state_wallclock_finite_bounds",
+        },
+        "virtual_kv": {"keyed_state_ttl_per_query", "keyed_state_ttl_lazy_bounds"},
+        "interval_fo": {
+            "streaming_interval_join_full_outer",
+            "streaming_interval_join_left_outer",
+            "streaming_interval_join_right_outer",
+            "streaming_interval_join_left_semi",
+        },
+        "restart_phase1": {"streaming_restart_recovery"},
+    }
 )
-_register_shared_memo(
-    "virtual_kv",
-    _VIRTUAL_DRAIN_MEMO,
-    {"keyed_state_ttl_per_query", "keyed_state_ttl_lazy_bounds"},
-    cleanup=lambda: _drop_memo_sink_tables(_VIRTUAL_DRAIN_MEMO),
-)
-_register_shared_memo(
-    "interval_fo",
-    _IJ_FO_DRAIN_MEMO,
-    {
-        "streaming_interval_join_full_outer",
-        "streaming_interval_join_left_outer",
-        "streaming_interval_join_right_outer",
-        "streaming_interval_join_left_semi",
-    },
-    cleanup=lambda: _drop_memo_sink_tables(_IJ_FO_DRAIN_MEMO),
-)
-_register_shared_memo(
-    "restart_phase1",
-    _RESTART_SNAP_MEMO,
-    {"streaming_restart_recovery"},
-    cleanup=_drop_restart_run_dirs,
-    staging=True,
-)
+STAGING_MEMO_TAGS.add("restart_phase1")
 
 
 _SEQ_ORDER_CHECKED: set = set()

@@ -21,6 +21,8 @@ import uuid
 
 from pyspark.sql import DataFrame
 
+from ..lifetime import own_dir, own_view
+
 # Auto-created checkpoint dirs (callers that pass checkpoint_location manage
 # their own): grouped under one parent, registered for atexit removal, with
 # a stale sweep on first use — otherwise every catalog entry invocation
@@ -29,8 +31,9 @@ from pyspark.sql import DataFrame
 # driver/scalecheck session crossing the old 6 h mtime cutoff would have had
 # its RocksDB checkpoint deleted mid-query): dirs whose owner is dead are
 # removed immediately, dirs with an unparseable owner only past the mtime
-# cutoff. In-process dirs are kept until exit: offline state scans read
-# their checkpoint after the query stops.
+# cutoff. In-process dirs are kept until exit — offline state scans read
+# their checkpoint after the query stops — unless the active lifetime
+# scope that received them is released first.
 
 
 def ephemeral_root() -> str:
@@ -169,7 +172,8 @@ def sweep_stale_dirs(
 
 
 def auto_checkpoint_dir(name: str) -> str:
-    """A throwaway checkpoint dir, removed at interpreter exit."""
+    """A throwaway checkpoint dir, owned by the active lifetime scope and
+    removed at its release, or at interpreter exit."""
     os.makedirs(_AUTO_CKPT_PARENT, exist_ok=True)
     if not _auto_ckpts:
         sweep_stale_dirs(_AUTO_CKPT_PARENT)
@@ -179,7 +183,7 @@ def auto_checkpoint_dir(name: str) -> str:
         prefix=f"ckpt_{name}_pid{os.getpid()}_", dir=_AUTO_CKPT_PARENT
     )
     _auto_ckpts.append(d)
-    return d
+    return own_dir(d)
 
 
 @atexit.register
@@ -190,13 +194,14 @@ def _cleanup_auto_ckpts() -> None:
 
 def auto_sink_dir(name: str) -> str:
     """A throwaway file-sink output dir with the same lifecycle management
-    as auto checkpoints (PID-owned stale sweep + atexit removal)."""
+    as auto checkpoints (lifetime scope, PID-owned stale sweep + atexit
+    removal)."""
     os.makedirs(_AUTO_CKPT_PARENT, exist_ok=True)
     d = tempfile.mkdtemp(
         prefix=f"sink_{name}_pid{os.getpid()}_", dir=_AUTO_CKPT_PARENT
     )
     _auto_ckpts.append(d)
-    return d
+    return own_dir(d)
 
 
 def run_stream_to_table(
@@ -215,12 +220,12 @@ def run_stream_to_table(
     the PySpark face of ``StateStore.metrics`` (Provider.scala:282-283).
 
     ``sink="memory"`` (default) collects output to a driver-side temp view —
-    fine for bounded results. Known bounded cost: each call registers a
-    fresh memory-sink table that lives for the session (the returned
-    DataFrame reads it lazily, and some entries union two sinks, so eager
-    dropping would be unsound). At fixture scale that is <= ~100 K rows per
-    streaming entry; a service embedding this harness long-term should drop
-    the temp views after consuming results.
+    fine for bounded results. The returned DataFrame reads the sink lazily,
+    so the view, the sink dir and an auto-created checkpoint dir live until
+    ``lifetime.release`` of the scope active at this call (a catalog
+    entry's own tag, or a shared drain's); with no scope open they live for
+    the session (dirs until interpreter exit), and a caller embedding the
+    runner long-term drops the view once it has consumed the results.
 
     ``sink="parquet"`` (append mode only — the file sink's contract) writes
     output distributed to an exactly-once parquet dir and reads it back —
@@ -250,7 +255,6 @@ def run_stream_to_table(
         # raise AnalysisException where the memory sink returned an empty,
         # correctly-typed frame — the runner API must not differ by sink.
         out = spark.read.schema(stream_df.schema).parquet(out_dir)
-        out._sss_sink_dir = out_dir
         if with_progress:
             return out, list(query.recentProgress)
         return out
@@ -262,12 +266,9 @@ def run_stream_to_table(
         .trigger(availableNow=True)
         .start()
     )
+    own_view(spark, name)
     query.awaitTermination()
     out = spark.table(name)
-    # Tag the sink's temp-view name so a holder that outlives its use (the
-    # shared-drain memos) can drop the view and release the driver-side
-    # MemorySink buffer on cleanup (ADVICE r07).
-    out._sss_sink_table = name
     if with_progress:
         return out, list(query.recentProgress)
     return out
@@ -317,6 +318,8 @@ def run_stream_drain_wallclock(
         .trigger(processingTime="100 milliseconds")
         .start()
     )
+    if out_dir is None:
+        own_view(spark, name)
     try:
         deadline = _time.time() + timeout_s
         # Accumulate rows per batchId across polls: recentProgress is a
@@ -354,9 +357,5 @@ def run_stream_drain_wallclock(
     if out_dir is not None:
         # Explicit schema: zero-output drains must return an empty typed
         # frame, not an inference AnalysisException (see run_stream_to_table).
-        out = spark.read.schema(stream_df.schema).parquet(out_dir)
-        out._sss_sink_dir = out_dir
-        return out
-    out = spark.table(name)
-    out._sss_sink_table = name  # see run_stream_to_table's tag note
-    return out
+        return spark.read.schema(stream_df.schema).parquet(out_dir)
+    return spark.table(name)

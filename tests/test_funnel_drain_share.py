@@ -4,16 +4,24 @@ session + same fixture generation reuse the drain; a regenerated fixture
 (different content identity) re-drains — and that both entries read
 consistent views of the same pipeline."""
 
+import os
+
 import pytest
 
+from spark_states_spark import lifetime
+from spark_states_spark.catalog import SHARED_MEMOS
 from spark_states_spark.streaming import queries as sq
 
 
 @pytest.fixture(autouse=True)
-def _clear_memo():
-    sq._FUNNEL_DRAIN_MEMO.clear()
+def _clear_memo(spark):
+    lifetime.release(spark, "funnel")
     yield
-    sq._FUNNEL_DRAIN_MEMO.clear()
+    lifetime.release(spark, "funnel")
+
+
+def _memo(spark, tag="funnel"):
+    return lifetime.owned(spark, tag).memo
 
 
 def test_drain_memoized_within_session(spark, sf_dir_small):
@@ -21,7 +29,7 @@ def test_drain_memoized_within_session(spark, sf_dir_small):
     sink2, ckpt2 = sq._funnel_drained(spark, sf_dir_small)
     assert ckpt1 == ckpt2
     assert sink1 is sink2
-    assert len(sq._FUNNEL_DRAIN_MEMO) == 1
+    assert len(_memo(spark)) == 1
 
 
 def test_memo_key_carries_fixture_content_identity(spark, sf_dir_small):
@@ -29,13 +37,13 @@ def test_memo_key_carries_fixture_content_identity(spark, sf_dir_small):
     memo would serve the previous generation's drain. The key must change
     when the source content identity changes."""
     sq._funnel_drained(spark, sf_dir_small)
-    (key,) = sq._FUNNEL_DRAIN_MEMO
+    (key,) = _memo(spark)
     from spark_states_spark.sources.tables import _source_identity, table_path
 
-    assert key[2] == _source_identity(table_path(sf_dir_small, "events"))
+    assert key[1] == _source_identity(table_path(sf_dir_small, "events"))
 
 
-def test_bench_memo_clear_scoped_to_participating_entries():
+def test_bench_memo_clear_scoped_to_participating_entries(spark):
     """ADVICE r06: bench best-of-N re-runs must clear a shared-drain memo
     only for entries that READ it — an intervening entry's re-runs wiping
     the funnel memo made the pair's series order-dependent (the second
@@ -43,32 +51,33 @@ def test_bench_memo_clear_scoped_to_participating_entries():
     read)."""
     import bench
 
-    sq._FUNNEL_DRAIN_MEMO["sentinel"] = ("sink", "ckpt")
+    lifetime.shared(spark, "funnel", "sentinel", lambda: ("sink", "ckpt"))
     bench._clear_entry_memos("q1_pricing_summary")  # non-participant
-    assert sq._FUNNEL_DRAIN_MEMO, "non-participant re-run wiped the memo"
+    assert _memo(spark), "non-participant re-run wiped the memo"
     bench._clear_entry_memos("funnel_state_scan")  # participant
-    assert not sq._FUNNEL_DRAIN_MEMO
+    assert not _memo(spark)
 
 
 def test_registry_lists_both_funnel_entries():
-    memo, entries, cleanup = sq.SHARED_DRAIN_MEMOS["funnel"]
-    assert memo is sq._FUNNEL_DRAIN_MEMO
-    assert {"streaming_funnel_stages", "funnel_state_scan"} <= set(entries)
-    assert callable(cleanup)
+    assert {"streaming_funnel_stages", "funnel_state_scan"} <= SHARED_MEMOS[
+        "funnel"
+    ]
 
 
 def test_memo_cleanup_drops_sink_views(spark, sf_dir_small):
     """ADVICE r07: clearing a drain memo must also drop the memory-sink
-    temp view so the driver-side buffer is collectable, and the cleanup
-    must run BEFORE the dict is emptied (clear_shared_memos contract)."""
+    temp view so the driver-side buffer is collectable, and remove the
+    drain's checkpoint dir — both owned by the "funnel" lifetime tag."""
     from spark_states_spark.catalog import clear_shared_memos
 
-    sink, _ckpt = sq._funnel_drained(spark, sf_dir_small)
-    name = sink._sss_sink_table
+    _sink, ckpt = sq._funnel_drained(spark, sf_dir_small)
+    (name,) = lifetime.owned(spark, "funnel").views
     assert any(t.name == name for t in spark.catalog.listTables())
+    assert ckpt in lifetime.owned(spark, "funnel").dirs
     clear_shared_memos("funnel_state_scan")
-    assert not sq._FUNNEL_DRAIN_MEMO
+    assert not _memo(spark)
     assert not any(t.name == name for t in spark.catalog.listTables())
+    assert not os.path.exists(ckpt)
 
 
 def test_wallclock_entries_share_one_drain(spark, sf_dir_small):
@@ -76,13 +85,15 @@ def test_wallclock_entries_share_one_drain(spark, sf_dir_small):
     binding drain; each binding's production kernel is unchanged, so with
     ttl >> drain wall time both bindings' per-key outcomes equal the
     infinite fold — and each other."""
-    sq._WALLCLOCK_DRAIN_MEMO.clear()
+    lifetime.release(spark, "wallclock_kv")
     try:
         fin = sq.keyed_state_wallclock_finite_bounds(
             spark, sf_dir_small
         ).collect()
         sq.keyed_state_wallclock_infinite(spark, sf_dir_small).collect()
-        assert len(sq._WALLCLOCK_DRAIN_MEMO) == 1, "entries must share a drain"
+        assert len(_memo(spark, "wallclock_kv")) == 1, (
+            "entries must share a drain"
+        )
         assert fin[0]["n_violation_keys"] == 0
         # collected compare (exceptAll on two filters of the same memory
         # sink view trips a Spark self-reference analyzer conflict)
@@ -95,14 +106,12 @@ def test_wallclock_entries_share_one_drain(spark, sf_dir_small):
                 spark, sf_dir_small, "fin").collect())
         )
         assert a == b and a, "bindings must agree (ttl >> drain wall time)"
-        (memo, entries, _cleanup) = sq.SHARED_DRAIN_MEMOS["wallclock_kv"]
-        assert memo is sq._WALLCLOCK_DRAIN_MEMO
-        assert entries == {
+        assert SHARED_MEMOS["wallclock_kv"] == {
             "keyed_state_wallclock_infinite",
             "keyed_state_wallclock_finite_bounds",
         }
     finally:
-        sq._WALLCLOCK_DRAIN_MEMO.clear()
+        lifetime.release(spark, "wallclock_kv")
 
 
 def test_virtual_drain_bindings_equal_solo_drains(spark, sf_dir_small):
@@ -111,7 +120,7 @@ def test_virtual_drain_bindings_equal_solo_drains(spark, sf_dir_small):
     kernels despite the chunked replay (the documented invariance argument)
     and the lazy kernel's whole bounds row. Solo references run the same
     production kernels through the pre-share _run_ttl_summary path."""
-    sq._VIRTUAL_DRAIN_MEMO.clear()
+    lifetime.release(spark, "virtual_kv")
     try:
         # Shared-drain outcomes, per strict binding.
         shared = {
@@ -125,7 +134,9 @@ def test_virtual_drain_bindings_equal_solo_drains(spark, sf_dir_small):
             )
             for name in sq._PER_QUERY_TTLS
         }
-        assert len(sq._VIRTUAL_DRAIN_MEMO) == 1, "bindings must share a drain"
+        assert len(_memo(spark, "virtual_kv")) == 1, (
+            "bindings must share a drain"
+        )
         # Solo single-batch drains with the same resolved TTLs.
         for name, ttl_s in sq._PER_QUERY_TTLS.items():
             conf = {
@@ -139,14 +150,12 @@ def test_virtual_drain_bindings_equal_solo_drains(spark, sf_dir_small):
         # The lazy binding's bounds sandwich must hold on the shared drain.
         row = sq.keyed_state_ttl_lazy_bounds(spark, sf_dir_small).collect()[0]
         assert row["n_violation_keys"] == 0
-        (memo, entries, _cleanup) = sq.SHARED_DRAIN_MEMOS["virtual_kv"]
-        assert memo is sq._VIRTUAL_DRAIN_MEMO
-        assert entries == {
+        assert SHARED_MEMOS["virtual_kv"] == {
             "keyed_state_ttl_per_query",
             "keyed_state_ttl_lazy_bounds",
         }
     finally:
-        sq._VIRTUAL_DRAIN_MEMO.clear()
+        lifetime.release(spark, "virtual_kv")
 
 
 def test_both_entries_describe_one_pipeline(spark, sf_dir_small):
@@ -157,7 +166,7 @@ def test_both_entries_describe_one_pipeline(spark, sf_dir_small):
         for r in sq.streaming_funnel_stages(spark, sf_dir_small).collect()
     }
     st = sq.funnel_state_scan(spark, sf_dir_small).collect()
-    assert len(sq._FUNNEL_DRAIN_MEMO) == 1, "entries must share one drain"
+    assert len(_memo(spark)) == 1, "entries must share one drain"
     assert stages[1] == sum(1 for r in st if r["k1"] is not None)
     assert stages[2] == sum(1 for r in st if r["k2"] is not None)
     assert stages[3] == sum(1 for r in st if r["k3"] is not None)

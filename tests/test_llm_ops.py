@@ -400,8 +400,9 @@ def test_prefix_filter_set_guard_fires_loudly(spark):
 
 def test_embedding_pairs_memo_equals_unmemoized(spark, sf_dir):
     """r14: dedup_embedding_cosine / dedup_embedding_keep_first share one
-    materialized pair stream (_EMB_PAIRS_MEMO). The memoized frame must be
-    row-identical to a fresh, un-memoized run of the pipeline, and the
+    materialized pair stream (lifetime tag embedding_pairs). The memoized
+    frame must be row-identical to a fresh, un-memoized run of the
+    pipeline, and the
     keep_first derivation over the memo must equal the corpus minus the
     dropped ids computed from that same fresh stream."""
     from pyspark.sql import functions as F
@@ -443,7 +444,7 @@ def test_embedding_pairs_memo_equals_unmemoized(spark, sf_dir):
 
 def test_minhash_pairs_memo_equals_unmemoized(spark, sf_dir):
     """r14: dedup_minhash_lsh_pairs / the CC cluster family share one
-    materialized pair stream (_MINHASH_PAIRS_MEMO). The memoized frame
+    materialized pair stream (lifetime tag minhash_pairs). The memoized frame
     must be row-identical to a fresh, un-memoized run of the pipeline,
     and the CC labels derived over the memo must equal labels computed
     from that same fresh stream."""
@@ -489,7 +490,7 @@ def test_minhash_pairs_memo_equals_unmemoized(spark, sf_dir):
 
 def test_topk_memos_equal_unmemoized(spark, sf_dir):
     """r14: similarity_cosine_topk / similarity_lsh_ann each materialize
-    their output once (_EXACT_TOPK_MEMO / _ANN_TOPK_MEMO) and
+    their output once (lifetime tags topk_exact / topk_ann) and
     similarity_lsh_recall derives from both. Memoized frames must be
     row-identical to fresh runs, and recall over the memos must equal
     recall computed from the fresh frames."""

@@ -5,7 +5,9 @@ import os
 
 import pytest
 
-from spark_states_spark.catalog import ORACLES, QUERIES
+from spark_states_spark import lifetime
+from spark_states_spark.catalog import ORACLES, QUERIES, clear_shared_memos
+from spark_states_spark.streaming.runner import _AUTO_CKPT_PARENT, ephemeral_root
 
 from .oracle_utils import compare, duckdb_con
 
@@ -15,6 +17,44 @@ def con(sf_dir):
     c = duckdb_con(sf_dir)
     yield c
     c.close()
+
+
+def _own_dirs() -> set[str]:
+    """This process's sink/checkpoint/run dirs under the parents the
+    runner and the restart entry hand out."""
+    mine = f"_pid{os.getpid()}_"
+    out = set()
+    restart_runs = os.path.join(ephemeral_root(), "sss_restart_runs")
+    for parent in (_AUTO_CKPT_PARENT, restart_runs):
+        if os.path.isdir(parent):
+            out |= {
+                os.path.join(parent, d) for d in os.listdir(parent) if mine in d
+            }
+    return out
+
+
+def _resources(spark) -> dict:
+    return {
+        "persistent RDDs": lifetime.pinned_rdd_ids(spark),
+        "temp views": {t.name for t in spark.catalog.listTables() if t.isTemporary},
+        "dirs": _own_dirs(),
+    }
+
+
+@pytest.fixture(scope="module", autouse=True)
+def leak_check(spark):
+    """Teardown of the sweep: releasing every entry's lifetime tags (its
+    own and every shared one, staging included) and clearing the cache
+    must bring persistent RDDs, temp views and the registry's dirs back
+    to their pre-sweep baseline."""
+    before = _resources(spark)
+    yield
+    for name in QUERIES:
+        clear_shared_memos(name, include_staging=True)
+    spark.catalog.clearCache()
+    after = _resources(spark)
+    leaks = {k: sorted(after[k] - before[k]) for k in after if after[k] - before[k]}
+    assert not leaks, f"resources left after releasing the catalog: {leaks}"
 
 
 @pytest.mark.parametrize("name", sorted(ORACLES))

@@ -35,33 +35,32 @@ def test_connected_components_on_path_graph(spark):
 
 
 def test_connected_components_releases_superseded_checkpoints(spark):
-    """ADVICE r07: each pointer-jumping round localCheckpoints a new label
+    """ADVICE r07: each pointer-jumping round checkpoints a new label
     frame; superseded rounds' blocks must be released eagerly (not left to
-    the JVM weak-ref cleaner), and the RETURNED frame's blocks — tagged on
-    the frame — must be released by the cc_labels memo cleanup path."""
-    from spark_states_spark.functions.dedup import (
-        _persistent_rdd_ids,
-        _unpersist_rdd_ids,
-    )
+    the JVM weak-ref cleaner), and the RETURNED frame's blocks — owned by
+    the lifetime scope it was built in — must be released with that
+    scope's tag."""
+    from spark_states_spark import lifetime
 
-    before = _persistent_rdd_ids(spark)
+    before = lifetime.pinned_rdd_ids(spark)
     n = 64
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long"
     )
-    labels = connected_components(pairs)
+    with lifetime.scope("test_cc_release"):
+        labels = connected_components(pairs)
     labels.count()
-    live = _persistent_rdd_ids(spark) - before
-    tagged = set(labels._local_ckpt_rdd_ids)
-    assert tagged, "returned frame must carry its checkpoint block ids"
+    live = lifetime.pinned_rdd_ids(spark) - before
+    owned = set(lifetime.owned(spark, "test_cc_release").rdd_ids)
+    assert owned, "the scope must own the returned frame's checkpoint"
     # Only the FINAL frame's blocks may remain pinned: a 64-node path takes
     # several pointer-jumping rounds, each of which checkpointed a frame.
-    assert live <= tagged, f"superseded checkpoint blocks leaked: {live - tagged}"
-    _unpersist_rdd_ids(spark, tagged)
-    assert not (_persistent_rdd_ids(spark) - before)
+    assert live <= owned, f"superseded checkpoint blocks leaked: {live - owned}"
+    lifetime.release(spark, "test_cc_release")
+    assert not (lifetime.pinned_rdd_ids(spark) - before)
     # NOTE: the frame is NOT readable after this (localCheckpoint truncates
-    # lineage) — which is exactly why cleanup only runs when a memo is
-    # being discarded.
+    # lineage) — which is exactly why release only runs when the tag's
+    # frames are being discarded.
 
 
 def test_connected_components_disjoint_cliques(spark):

@@ -419,30 +419,34 @@ def test_restart_recovery_phase1_staging_memo(spark, sf_dir_small):
     produce identical results; bench's per-entry memo clearing must leave
     the staging memo alone, while an explicit include_staging clear
     removes the run dirs and re-pays phase 1."""
+    from spark_states_spark import lifetime
     from spark_states_spark.catalog import clear_shared_memos
     from spark_states_spark.streaming import queries as sq
 
+    def memo():
+        return lifetime.owned(spark, "restart_phase1").memo
+
     clear_shared_memos("streaming_restart_recovery", include_staging=True)
-    assert not sq._RESTART_SNAP_MEMO
+    assert not memo()
     first = sq.streaming_restart_recovery(spark, sf_dir_small)
     rows1 = sorted(map(tuple, first.collect()))
-    assert sq._RESTART_SNAP_MEMO, "phase-1 snapshot not memoized"
-    run_dir = next(iter(sq._RESTART_SNAP_MEMO.values()))
+    assert memo(), "phase-1 snapshot not memoized"
+    run_dir = next(iter(memo().values()))
     snap = os.path.join(run_dir, "snap_ckpt")
     assert os.path.isdir(snap)
 
     # bench-style per-entry clear (re-run path): staging memo survives
     clear_shared_memos("streaming_restart_recovery")
-    assert sq._RESTART_SNAP_MEMO, "staging memo wrongly cleared"
+    assert memo(), "staging memo wrongly cleared"
 
     second = sq.streaming_restart_recovery(spark, sf_dir_small)
     rows2 = sorted(map(tuple, second.collect()))
     assert rows1 == rows2, "memo-hit recovery diverged from cold run"
-    assert next(iter(sq._RESTART_SNAP_MEMO.values())) == run_dir
+    assert next(iter(memo().values())) == run_dir
 
     # explicit staging clear releases the run dir and forces re-pay
     clear_shared_memos("streaming_restart_recovery", include_staging=True)
-    assert not sq._RESTART_SNAP_MEMO
+    assert not memo()
     assert not os.path.exists(run_dir), "cleanup left the run dir behind"
 
 
@@ -453,6 +457,7 @@ def test_restart_recovery_memo_survives_fixture_alternation(
     still-memoized run dir (the own-PID sweep predates the memo); the
     A -> B -> A alternation then hits A's snapshot instead of restoring
     into a deleted path."""
+    from spark_states_spark import lifetime
     from spark_states_spark.catalog import clear_shared_memos
     from spark_states_spark.streaming import queries as sq
 
@@ -460,7 +465,7 @@ def test_restart_recovery_memo_survives_fixture_alternation(
     rows_a1 = sorted(
         map(tuple, sq.streaming_restart_recovery(spark, sf_dir_small).collect())
     )
-    dir_a = next(iter(sq._RESTART_SNAP_MEMO.values()))
+    dir_a = next(iter(lifetime.owned(spark, "restart_phase1").memo.values()))
     sq.streaming_restart_recovery(spark, sf_dir).collect()  # miss for B
     assert os.path.isdir(os.path.join(dir_a, "snap_ckpt")), (
         "fixture B's miss wiped fixture A's live snapshot dir"

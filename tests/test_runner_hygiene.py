@@ -131,3 +131,36 @@ def test_owner_pid_parsing():
     assert runner.owner_pid("ckpt_q_pid1234_xyz") == 1234
     assert runner.owner_pid("run_pid77_aaaa") == 77
     assert runner.owner_pid("legacy_dir") is None
+
+
+def test_dir_size_bytes_walks_nested_layouts(tmp_path):
+    """ADVICE r15 #2: the /dev/shm headroom gate sizes the fixture dir;
+    a hive-partitioned or nested layout must count every file, not only
+    the top level, and an unreadable path stays 0 ("unknown")."""
+    from spark_states_spark.session import _dir_size_bytes
+
+    (tmp_path / "top.parquet").write_bytes(b"x" * 10)
+    nested = tmp_path / "events" / "day=1" / "hour=0"
+    nested.mkdir(parents=True)
+    (nested / "part-0.parquet").write_bytes(b"y" * 100)
+    (tmp_path / "events" / "day=1" / "part-1.parquet").write_bytes(b"z" * 1000)
+    assert _dir_size_bytes(str(tmp_path)) == 1110
+    assert _dir_size_bytes(str(tmp_path / "missing")) == 0
+
+
+def test_fixture_state_parts_env_validated(spark, monkeypatch):
+    """ADVICE r15 #3: a junk override fails fast naming the variable; a
+    value below 1 is clamped to 1 instead of reaching Spark as a zero or
+    negative shuffle-partition count."""
+    import pytest
+
+    from spark_states_spark.streaming.queries import _fixture_state_parts
+
+    monkeypatch.setenv("SPARK_GRAFT_FIXTURE_STATE_PARTS", "four")
+    with pytest.raises(ValueError, match="SPARK_GRAFT_FIXTURE_STATE_PARTS"):
+        _fixture_state_parts(spark, 16)
+    for v in ("0", "-3"):
+        monkeypatch.setenv("SPARK_GRAFT_FIXTURE_STATE_PARTS", v)
+        assert _fixture_state_parts(spark, 16) == 1
+    monkeypatch.setenv("SPARK_GRAFT_FIXTURE_STATE_PARTS", "6")
+    assert _fixture_state_parts(spark, 16) == 6

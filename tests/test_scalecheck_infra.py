@@ -131,7 +131,7 @@ def test_forced_sink_entry_is_a_kv_drain_oracle():
 
     entry = scalecheck.FORCED_SINK_ENTRY
     assert entry in ORACLES
-    assert any(entry in members for _, members, _ in SHARED_MEMOS.values())
+    assert any(entry in members for members in SHARED_MEMOS.values())
 
 
 def test_kv_sink_env_override(monkeypatch):

@@ -276,8 +276,9 @@ def test_parquet_sink_matches_memory_sink(spark, sf_dir_small):
 def test_interval_join_derived_shapes_equal_solo(spark, sf_dir):
     """r14 shared full-outer interval-join drain: the derived left-outer /
     right-outer / semi entries must equal their solo-operator drains
-    row-for-row (the equivalence argument on ``_IJ_FO_DRAIN_MEMO`` as an
-    executable claim, same discipline as the TTL composite kernels)."""
+    row-for-row (the equivalence argument on ``_interval_join_fo_drained``
+    as an executable claim, same discipline as the TTL composite
+    kernels)."""
     from collections import Counter
 
     from spark_states_spark.streaming import queries as q
