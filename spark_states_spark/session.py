@@ -16,6 +16,7 @@ namespace.
 from __future__ import annotations
 
 import os
+import site
 
 from pyspark.sql import SparkSession
 
@@ -96,6 +97,29 @@ def shm_scratch_root() -> str | None:
     return shm if free >= min_free else None
 
 
+WORKER_DAEMON_MODULE = "spark_states_spark.worker_daemon"
+
+
+def _worker_daemon_conf() -> dict[str, str]:
+    """``spark.python.daemon.module`` = the engine's worker daemon when the
+    Python workers can import this package, else nothing (Spark's default
+    daemon). Workers start as ``python -m`` in the JVM's cwd, which is this
+    process's cwd at JVM launch, with the JVM's ``$PYTHONPATH``; so the
+    package's parent dir must be a site-packages dir, a ``$PYTHONPATH``
+    entry or the cwd. The engine's kernels are cloudpickled by reference to
+    ``spark_states_spark.*``, so they need the same."""
+    root = os.path.dirname(os.path.dirname(os.path.realpath(__file__)))
+    importable = [
+        os.getcwd(),
+        *os.environ.get("PYTHONPATH", "").split(os.pathsep),
+        *site.getsitepackages(),
+        site.getusersitepackages(),
+    ]
+    if any(p and os.path.realpath(p) == root for p in importable):
+        return {"spark.python.daemon.module": WORKER_DAEMON_MODULE}
+    return {}
+
+
 def use_rocksdb_state_store(builder: SparkSession.Builder) -> SparkSession.Builder:
     """Configure a builder to use the RocksDB state store provider.
 
@@ -171,7 +195,9 @@ def build_session(
         builder = builder.config("spark.local.dir", local_dir)
     if rocksdb_state:
         builder = use_rocksdb_state_store(builder)
-    for k, v in (extra_conf or {}).items():
+    # Python workers forked from the engine's daemon skip the per-task
+    # re-read of pyspark.zip's directory (see worker_daemon).
+    for k, v in {**_worker_daemon_conf(), **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -97,9 +97,15 @@ def replay_virtual(
     batch-end sweep, the per-commit stand-in for RocksDB compaction-time
     expiry (``RocksDbStateStoreProvider.scala:80-85``).
 
-    Hot path: one kernel invocation per (key group, micro-batch), so the
-    per-call fixed cost IS the 100 TB cost model (VERDICT r08 #3 — the
-    100× probe measured this family at 32× wall growth). The replay runs
+    Hot path: one kernel invocation per (key group, micro-batch). Measured
+    per ``kv_ttl`` drain (perfbench; 16 tasks, 1,502 groups; 4-core
+    2.1 GHz Xeon VM, CPython 3.11), the Python-worker CPU splits into
+    ~2.8 ms of PySpark framework per group (Arrow slice, serializer,
+    state round trip, per-task set-up) and ~0.2 ms of this kernel per
+    group; a further ~270 ms per task of ``pyspark.zip`` directory
+    re-reads is gone under the engine's worker daemon
+    (``spark_states_spark/worker_daemon.py``). So the kernel is under a
+    tenth of the per-group cost. The replay runs
     on raw numpy column arrays (lexsort + scalar loop) instead of pandas
     ``sort_values``/``itertuples``: identical control flow and outcomes,
     ~5× less per-group overhead (measured 1.6 ms → ~0.3 ms on a 66-row
