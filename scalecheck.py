@@ -10,9 +10,10 @@ Same compare as tests/test_oracle.py::test_oracle_differential_sf01 — this
 script exists so the gate leaves a per-round artifact instead of only a
 transient pytest pass. Two side artifacts (VERDICT r06 #5-6):
 
-- the per-entry ``entry_spark_s`` series is diffed against the previous
-  round's artifact and >2× regressions are WARNED (never failed — wall
-  seconds on a shared box are advisory; correctness rows are the gate);
+- the per-entry ``entry_spark_s`` series is adjudicated against the
+  previous round's artifact (harness.adjudicate: >2x growth is re-run
+  isolated) and WARNED — never failed: wall seconds on a shared box are
+  advisory; correctness rows are the gate;
 - PARITY.md's scale-up paragraph is regenerated from the artifact at write
   time, between PARITY_MARK markers, so the doc cannot cite a stale round
   (two consecutive rounds of that staleness class — VERDICT r05 #5/r06 #1).
@@ -21,21 +22,18 @@ transient pytest pass. Two side artifacts (VERDICT r06 #5-6):
 from __future__ import annotations
 
 import datetime
-import glob
 import json
 import os
-import re
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+import harness  # noqa: E402
 from spark_states_spark.catalog import ORACLES, QUERIES  # noqa: E402
-from spark_states_spark.session import build_session  # noqa: E402
 from tests.oracle_utils import compare, duckdb_con  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SCALECHECK_DIR", "/root/testdata/sf0.1")
-_ROOT = os.path.dirname(os.path.abspath(__file__))
 # Forced production-sink verification (VERDICT r09 #3): the KV drains'
 # size-gated sink means every sf0.01/sf0.1 gate run exercises the memory
 # sink, leaving the parquet path — the shape BASELINE.md calls production —
@@ -44,85 +42,6 @@ _ROOT = os.path.dirname(os.path.abspath(__file__))
 # (memo cleared both sides) and hash-verifies it at sf0.1.
 FORCED_SINK_ENTRY = "keyed_state_ttl_lazy_bounds"
 PARITY_MARK = ("<!-- scalecheck:begin -->", "<!-- scalecheck:end -->")
-# Per-entry regression floor: below this many Spark seconds, a 2× swing is
-# scheduler noise, not a plan change.
-_REGRESSION_FLOOR_S = 0.5
-_REGRESSION_RATIO = 2.0
-
-
-def previous_artifact(rnd: int, root: str = _ROOT) -> dict | None:
-    """The newest SCALECHECK_r{M}.json with M < rnd (None if none)."""
-    best: tuple[int, str] | None = None
-    for p in glob.glob(os.path.join(root, "SCALECHECK_r*.json")):
-        m = re.search(r"SCALECHECK_r(\d+)\.json$", p)
-        if m and (rnd <= 0 or int(m.group(1)) < rnd):
-            if best is None or int(m.group(1)) > best[0]:
-                best = (int(m.group(1)), p)
-    if best is None:
-        return None
-    try:
-        with open(best[1]) as fh:
-            data = json.load(fh)
-        data["_round"] = best[0]
-        return data
-    except (OSError, ValueError):
-        return None
-
-
-def spark_regressions(
-    current: dict[str, float], prev: dict | None
-) -> list[dict]:
-    """Entries whose Spark share grew >2× vs the previous artifact.
-
-    The ratio's denominator is floored at ``_REGRESSION_FLOOR_S`` so a
-    near-zero previous measurement (scheduler noise rounded to 0.01 s)
-    can't manufacture a spurious 60× headline, while a real 0.3 s → 5 s
-    plan regression still flags (5 / max(0.3, 0.5) = 10×). The current
-    side must clear the floor outright — sub-half-second swings are noise
-    whatever the ratio."""
-    if not prev:
-        return []
-    prev_s = prev.get("entry_spark_s", {})
-    out = []
-    for name, cur in sorted(current.items()):
-        old = prev_s.get(name)
-        if old is None or cur < _REGRESSION_FLOOR_S:
-            continue
-        ratio = cur / max(old, _REGRESSION_FLOOR_S)
-        if ratio > _REGRESSION_RATIO:
-            out.append(
-                {"entry": name, "prev_s": old, "now_s": cur,
-                 "ratio": round(ratio, 2)}
-            )
-    return sorted(out, key=lambda r: -r["ratio"])
-
-
-def isolated_spark_s(spark, name: str, sf_dir: str, n_runs: int = 3) -> float:
-    """Best-of-N isolated re-measurement of one entry's Spark share
-    (build + collect — the same composition as the sweep's series).
-
-    VERDICT r07 #2/#3: when the sweep's tripwire flags an entry, the
-    adjudication (is it plan regression or session-tail noise?) must land
-    in the artifact, not a commit message. Memo contract (ADVICE r08):
-    this re-run is explicitly ISOLATED, so the entry's shared-drain memos
-    are cleared before EVERY run including the first — at the end of the
-    sweep all memos are warm, and keeping run 1's state would let a drain
-    carrier's best-of-N degenerate to timing a memo read, mislabeling a
-    genuine carrier regression as session noise."""
-    import time as _time
-
-    from bench import _clear_entry_memos, _unload_state_providers
-
-    best = float("inf")
-    for _ in range(n_runs):
-        spark.catalog.clearCache()
-        _unload_state_providers(spark)
-        _clear_entry_memos(name)
-        t0 = _time.perf_counter()
-        df = QUERIES[name](spark, sf_dir)
-        df.collect()
-        best = min(best, _time.perf_counter() - t0)
-    return best
 
 
 def parity_paragraph(result: dict, rnd: int) -> str:
@@ -138,13 +57,13 @@ def parity_paragraph(result: dict, rnd: int) -> str:
         "entry plus the rows-only stateful\nlifecycles) was "
         "value-hash-verified against DuckDB at **sf0.1** — 10× the\n"
         f"correctness scale — {status} (`SCALECHECK_r{rnd:02d}.json`, "
-        f"{today}, {result['elapsed_s']:,.0f} s\non local[32]); repeatable "
+        f"{today}, {result['elapsed_s']:,.0f} s\non local[{result['cpus']}]); repeatable "
         "via `python scalecheck.py` or\n"
         "`SPARK_GRAFT_SF01_DIFF=1 python -m pytest tests/test_oracle.py -k sf01`."
     )
 
 
-def refresh_parity_note(result: dict, rnd: int, root: str = _ROOT) -> bool:
+def refresh_parity_note(result: dict, rnd: int, root: str = harness.ROOT) -> bool:
     """Rewrite PARITY.md's marker-delimited scale-up paragraph in place.
 
     Returns True if the file was updated; False (best-effort, never raises)
@@ -170,15 +89,7 @@ def refresh_parity_note(result: dict, rnd: int, root: str = _ROOT) -> bool:
 
 def main() -> int:
     rnd = int(sys.argv[1]) if len(sys.argv) > 1 else 0
-    spark = build_session()
-    spark.sparkContext.setLogLevel("ERROR")
-    # Engine-path throughput default (r14 Change 2 / ADVICE r14 scoping):
-    # tracking off for the gate's timed drains; library sessions keep
-    # Spark's default metric semantics (session.py note).
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows",
-        "false",
-    )
+    spark = harness.engine_session()
     con = duckdb_con(SF_DIR)
     # Content-keyed DuckDB-result cache (VERDICT r10 #5): the oracle side
     # was ~1/3 of the 309 s gate and grows with the catalog; the cache key
@@ -193,55 +104,47 @@ def main() -> int:
     if not os.environ.get("SPARK_GRAFT_NO_ORACLE_CACHE"):
         try:
             oracle_cache = (
-                os.path.join(_ROOT, ".oracle_cache"),
+                os.path.join(harness.ROOT, ".oracle_cache"),
                 fixture_identity(SF_DIR),
             )
         except OSError as exc:
             print(f"WARN: oracle cache disabled ({exc})")
-    cache_hits = cache_misses = 0
+    # Every COMPLETED compare, forced-sink re-run included (an entry whose
+    # compare raised counts neither): the reader of elapsed_s needs to know
+    # whether the DuckDB side was recomputed or served from the cache.
+    cache = {"hits": 0, "misses": 0}
     failures: dict[str, str] = {}
     t0 = time.time()
-    from bench import _unload_state_providers, warm_up
+    # Without the warm-up, session/codegen start-up lands on whichever
+    # entry sorts FIRST, corrupting the per-entry series.
+    harness.warm_up(spark, SF_DIR)
 
-    # Without the warm-up, session/codegen startup lands on whichever
-    # entry sorts FIRST, corrupting the per-entry regression series this
-    # gate exists to produce (see bench.warm_up).
-    warm_up(spark, SF_DIR)
+    def verify(name: str, tm: dict) -> list[str]:
+        # Build timed separately from compare's collect, which compare()
+        # ADDS to spark_s: iterative entries (connected components' pointer
+        # jumping) execute eagerly inside the build via localCheckpoint.
+        te = time.perf_counter()
+        df = QUERIES[name](spark, SF_DIR)
+        tm["spark_s"] = time.perf_counter() - te
+        problems = compare(df, con, ORACLES[name], timings=tm,
+                           oracle_cache=oracle_cache, overlap=True)
+        cache["hits" if tm.get("oracle_cached") else "misses"] += 1
+        return problems
 
     entry_s: dict[str, float] = {}
     entry_spark_s: dict[str, float] = {}
     for i, name in enumerate(sorted(ORACLES), 1):
-        # Same provider hygiene as bench.py: without it the ~40 streaming
-        # entries leave hundreds of RocksDB maintenance threads competing
-        # with the rest of the sweep.
-        _unload_state_providers(spark)
+        harness.unload_state_providers(spark)
         te = time.perf_counter()
-        tm: dict[str, float] = {}
+        tm: dict = {}
         try:
-            # Build timed separately from compare's collect: iterative
-            # entries (connected components' pointer jumping) execute
-            # EAGERLY inside the build call via localCheckpoint, so the
-            # Spark share must include it, not just the final collect.
-            df = QUERIES[name](spark, SF_DIR)
-            tm["spark_s"] = time.perf_counter() - te
-            # compare() ACCUMULATES its collect time into spark_s.
-            problems = compare(
-                df, con, ORACLES[name], timings=tm,
-                oracle_cache=oracle_cache, overlap=True,
-            )
-            if tm.get("oracle_cached"):
-                cache_hits += 1
-            else:
-                cache_misses += 1
-            if problems:
+            if problems := verify(name, tm):
                 failures[name] = "; ".join(problems)
         except Exception as exc:  # noqa: BLE001 — record, keep sweeping
             failures[name] = f"error: {exc}"
-        # Coarse per-entry wall seconds (VERDICT r05 #7): total includes the
-        # DuckDB oracle; spark_s isolates the plan-build + collect side —
-        # the engine's own regression series for the ~70 catalog entries
-        # outside the bench headline set. NOT comparable to bench.py's
-        # best-of-N noop-sink numbers.
+        # Coarse per-entry wall seconds incl. the DuckDB oracle; spark_s is
+        # the engine's own series for the entries outside the bench
+        # headline. NOT comparable to bench.py's best-of-N noop-sink numbers.
         entry_s[name] = round(time.perf_counter() - te, 2)
         if "spark_s" in tm:
             entry_spark_s[name] = round(tm["spark_s"], 2)
@@ -249,159 +152,68 @@ def main() -> int:
         print(f"[{i}/{len(ORACLES)}] {name}: {status} {entry_s[name]}s", flush=True)
     forced_sink = None
     if FORCED_SINK_ENTRY in ORACLES:
-        from bench import _clear_entry_memos
-
+        forced_sink = {"entry": FORCED_SINK_ENTRY, "sink": "parquet"}
         os.environ["SPARK_GRAFT_KV_SINK"] = "parquet"
+        tm = {}
         try:
-            _clear_entry_memos(FORCED_SINK_ENTRY)  # re-drain, forced sink
-            _unload_state_providers(spark)
-            tf = time.perf_counter()
-            tm = {}
-            df = QUERIES[FORCED_SINK_ENTRY](spark, SF_DIR)
-            tm["spark_s"] = time.perf_counter() - tf
-            problems = compare(
-                df, con, ORACLES[FORCED_SINK_ENTRY], timings=tm,
-                oracle_cache=oracle_cache, overlap=True,
-            )
-            # The artifact's {hits, misses} counts every compare() this
-            # run executed — including this re-run (its oracle is the
-            # same SQL as the main-sweep entry, so warm runs hit).
-            if tm.get("oracle_cached"):
-                cache_hits += 1
-            else:
-                cache_misses += 1
-            forced_sink = {
-                "entry": FORCED_SINK_ENTRY,
-                "sink": "parquet",
-                "pass": not problems,
-                "spark_s": round(tm["spark_s"], 2),
-            }
-            if problems:
-                forced_sink["problems"] = "; ".join(problems)
-                failures[f"forced_sink:{FORCED_SINK_ENTRY}"] = "; ".join(
-                    problems
-                )
+            harness.clear_entry_memos(FORCED_SINK_ENTRY)  # re-drain, forced sink
+            harness.unload_state_providers(spark)
+            problems = verify(FORCED_SINK_ENTRY, tm)
         except Exception as exc:  # noqa: BLE001 — record, don't crash
-            forced_sink = {
-                "entry": FORCED_SINK_ENTRY, "sink": "parquet",
-                "pass": False, "problems": f"error: {exc}",
-            }
-            failures[f"forced_sink:{FORCED_SINK_ENTRY}"] = f"error: {exc}"
+            problems = [f"error: {exc}"]
         finally:
             os.environ.pop("SPARK_GRAFT_KV_SINK", None)
             # Don't leave a forced-sink drain memoized for later readers.
-            _clear_entry_memos(FORCED_SINK_ENTRY)
-        status = "ok" if forced_sink.get("pass") else "FAIL"
-        print(
-            f"[forced-sink] {FORCED_SINK_ENTRY} (parquet): {status} "
-            f"{forced_sink.get('spark_s', '?')}s",
-            flush=True,
-        )
-    prev = previous_artifact(rnd)
-    regressions = spark_regressions(entry_spark_s, prev)
-    # Ambient-noise deflator (VERDICT r09 #2) — same contract as bench.py:
-    # the median per-entry Spark-seconds ratio vs the previous artifact, so
-    # a +26% series total on a hot box carries its own explanation.
-    from bench import _ambient_ratio
-
-    ambient = _ambient_ratio(
-        entry_spark_s, prev.get("entry_spark_s", {}) if prev else {}
-    )
-    # Auto-adjudicate tripwire hits (VERDICT r07 #3 / r08 #1): re-run each
-    # flagged entry isolated best-of-3 at the sweep's end and record both
-    # numbers in the regression row. Past bench._SYSTEMIC_FLAGS, a bounded
-    # probe (worst 3 + the q1 canary) stamps a systemic_contention verdict
-    # instead of skipping adjudication outright — the r08 skip shipped the
-    # one run that needed it unadjudicated.
-    from bench import _adjudicate_tripwires
-
-    def _rerun(name: str) -> float:
-        return round(isolated_spark_s(spark, name, SF_DIR), 2)
-
-    contention = None
-    try:
-        contention = _adjudicate_tripwires(
-            regressions, _rerun,
-            prev_queries=prev.get("entry_spark_s", {}) if prev else {},
-            canary="q1_pricing_summary" if "q1_pricing_summary" in ORACLES
-            else None,
-        )
-    except Exception as exc:  # noqa: BLE001 — adjudication is advisory
-        print(f"WARN: tripwire adjudication failed: {exc}")
+            harness.clear_entry_memos(FORCED_SINK_ENTRY)
+        forced_sink["pass"] = not problems
+        if "spark_s" in tm:
+            forced_sink["spark_s"] = round(tm["spark_s"], 2)
+        if problems:
+            forced_sink["problems"] = "; ".join(problems)
+            failures[f"forced_sink:{FORCED_SINK_ENTRY}"] = forced_sink["problems"]
+        print(f"[forced-sink] {FORCED_SINK_ENTRY} (parquet): "
+              f"{'ok' if not problems else 'FAIL'} {forced_sink.get('spark_s', '?')}s",
+              flush=True)
+    found = harness.newest_artifact("SCALECHECK", rnd)
+    prev_s = found[1].get("entry_spark_s", {}) if found else {}
+    rows = harness.adjudicate(entry_spark_s, prev_s, lambda q: {
+        "isolated_s": round(harness.best_of(spark, q, SF_DIR, "collect")[0], 2)})
+    # Key order is priority order for the printed line (see fit_line).
     result = {
-        "sf_dir": SF_DIR,
         "n_entries": len(ORACLES),
         "n_pass": len(ORACLES) - len(failures),
-        "failures": failures,
+        "n_flagged": len(rows),
+        "n_adjudicated": sum(1 for r in rows if "note" not in r),
+        "ambient_ratio": harness.median_ratio(entry_spark_s, prev_s),
+        "cpus": harness.cpus(spark),
+        "forced_sink": forced_sink,
+        "oracle_cache": cache,
+        "prev_round": found[0] if found else None,
         "elapsed_s": round(time.time() - t0, 1),
+        "sf_dir": SF_DIR,
+        "failures": failures,
         "entry_wall_s_incl_oracle": dict(sorted(entry_s.items())),
         "entry_spark_s": dict(sorted(entry_spark_s.items())),
-        # Round-over-round Spark-seconds tripwire (VERDICT r06 #6): >2×
-        # per-entry growth vs the previous artifact, WARN-only.
-        "spark_regressions_vs_prev": regressions,
-        "ambient_ratio": ambient,
-        "forced_sink": forced_sink,
-        # Warm/cold state of the content-keyed oracle cache for THIS run
-        # (every COMPLETED compare incl. the forced-sink re-run; an entry
-        # whose compare raised counts neither) — the reader of elapsed_s
-        # needs to know whether the DuckDB side was recomputed (misses)
-        # or served from a prior bit-identical run.
-        "oracle_cache": {"hits": cache_hits, "misses": cache_misses},
-        "prev_round": prev.get("_round") if prev else None,
+        "adjudication": rows,
     }
-    if contention is not None:
-        result["contention"] = contention
     out = os.path.join(
-        _ROOT, f"SCALECHECK_r{rnd:02d}.json" if rnd else "SCALECHECK.json"
+        harness.ROOT, f"SCALECHECK_r{rnd:02d}.json" if rnd else "SCALECHECK.json"
     )
     with open(out, "w") as fh:
         json.dump(result, fh, indent=1)
     con.close()
     spark.stop()
-    if regressions:
-        print(f"WARN: {len(regressions)} entries regressed >2x vs "
-              f"r{prev['_round']:02d} (spark seconds):")
-        print(f"{'entry':45s} {'prev_s':>8s} {'now_s':>8s} {'ratio':>6s} "
-              f"{'isolated_s':>10s}")
-        for r in regressions:
-            iso = r.get("isolated_s")
-            iso_s = f"{iso:10.2f}" if iso is not None else f"{'n/a':>10s}"
-            print(f"{r['entry']:45s} {r['prev_s']:8.2f} {r['now_s']:8.2f} "
-                  f"{r['ratio']:6.2f} {iso_s}")
+    if rows:
+        print(f"WARN: {len(rows)} entries regressed >2x vs r{found[0]:02d} "
+              "(spark seconds; isolated re-run or note):")
+        for r in rows:
+            print(f"  {r['entry']:45s} {r['prev']:8.2f} -> {r['swept']:8.2f} "
+                  f"{r.get('isolated_s', r.get('note'))}")
     if rnd and refresh_parity_note(result, rnd):
         print("refreshed PARITY.md scale-up note")
-    # Final machine-readable line stays BOUNDED (<1 KB) — the driver keeps
-    # only a ~2.4 KB stdout tail, and an unbounded regression list in a
-    # systemic-slowdown round would truncate the line mid-JSON (the exact
-    # failure class that ate BENCH_r04/r05). The full list is in the
-    # artifact; the line carries its count. Oversize is COMPACTED, never
-    # asserted (ADVICE r07: a bare assert here crashed an otherwise green
-    # run AFTER the artifact was written — e.g. a long sf_dir path): drop
-    # the free-text keys until it fits, down to a minimal core no plausible
-    # path length can push past 1 KB.
     print(f"wrote {out}; failures: {sorted(failures)}")
-    summary = {
-        k: (len(v) if k == "spark_regressions_vs_prev" else v)
-        for k, v in result.items()
-        if k not in ("failures", "entry_wall_s_incl_oracle", "entry_spark_s")
-    }
-    if contention is not None:
-        # The verdict bool rides the line; the probe detail stays in the
-        # artifact (the full dict could push the line past the tail cap).
-        summary["contention"] = contention["systemic_contention"]
-    line = json.dumps(summary)
-    for drop in ("sf_dir", "prev_round", "elapsed_s"):
-        if len(line) < 1000:
-            break
-        summary.pop(drop, None)
-        line = json.dumps(summary)
-    if len(line) >= 1000:
-        # Bounded-by-construction core (ADVICE r08: the drop list alone had
-        # no final guarantee against a pathological key combination).
-        minimal_keys = ("n_entries", "n_pass", "spark_regressions_vs_prev",
-                        "ambient_ratio", "contention")
-        line = json.dumps({k: summary[k] for k in minimal_keys if k in summary})
-    print(line)
+    print(harness.fit_line({k: v for k, v in result.items() if k not in (
+        "failures", "entry_wall_s_incl_oracle", "entry_spark_s", "adjudication")}))
     return 1 if failures else 0
 
 

@@ -45,19 +45,17 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+import harness  # noqa: E402
 from spark_states_spark import lifetime  # noqa: E402
-from spark_states_spark.catalog import QUERIES  # noqa: E402
-from spark_states_spark.session import build_session  # noqa: E402
 from spark_states_spark.sources.tables import TABLES, table_path  # noqa: E402
 
-_ROOT = os.path.dirname(os.path.abspath(__file__))
 BASE_DIR = os.environ.get("SPARK_GRAFT_SCALEPROBE_BASE", "/root/testdata/sf0.1")
 FACTOR = int(os.environ.get("SPARK_GRAFT_SCALEPROBE_FACTOR", "10"))
 # Linearity slack: fixed per-query overhead (session, drain polling, Python
 # worker spin-up) inflates small-denominator ratios, and best-of-1 timings
 # on a shared box are noisy — a 10x data ratio is "linear enough" anywhere
-# under 2x that. Anything past it is flagged superlinear.
-SLACK = 2.0
+# under harness.RATIO (2x) that. Anything past it is flagged superlinear.
+SLACK = harness.RATIO
 
 SCALED_TABLES = ("events", "documents", "lineitem", "embeddings")
 # Spot probes at extreme factors (e.g. 1000x on the events-driven
@@ -393,263 +391,19 @@ def plan_delta_kind(base: str, scaled: str, entry: str | None = None) -> str:
     return "join_strategy" if differing <= _STRATEGY_NODES else "structural"
 
 
-def previous_probe_entries(
-    rnd: int, factor: int, root: str = _ROOT
-) -> dict[str, dict]:
-    """This factor's per-entry rows from the newest prior-round artifact
-    (empty when none). Feeds base_sanity (1x bases) and the per-entry
-    ratio-spread adjudication (VERDICT r10 #2)."""
-    import glob
-
-    tag = "" if factor == 10 else f"{factor}x"
-    best: tuple[int, str] | None = None
-    for p in glob.glob(os.path.join(root, f"SCALEPROBE{tag}_r*.json")):
-        m = re.search(rf"SCALEPROBE{tag}_r(\d+)\.json$", p)
-        if m and (rnd <= 0 or int(m.group(1)) < rnd):
-            if best is None or int(m.group(1)) > best[0]:
-                best = (int(m.group(1)), p)
-    if best is None:
-        return {}
-    try:
-        with open(best[1]) as fh:
-            prev = json.load(fh)
-        return {
-            k: v
-            for k, v in prev.get("entries", {}).items()
-            if isinstance(v, dict)
-        }
-    except (OSError, ValueError):
-        return {}
-
-
-def previous_probe_bases(
-    rnd: int, factor: int, root: str = _ROOT
-) -> dict[str, float]:
-    """This factor's 1x base timings from the newest prior-round artifact
-    (empty when none). Used by base_sanity below."""
-    return {
-        k: v["base_s"]
-        for k, v in previous_probe_entries(rnd, factor, root).items()
-        if isinstance(v.get("base_s"), (int, float))
-    }
-
-
-def base_sanity(
-    bases: dict[str, float],
-    prev_bases: dict[str, float],
-    floor_s: float = 0.5,
-    min_common: int = 5,
-    threshold: float = 2.0,
-) -> dict | None:
-    """Contaminated-run detector (r10 lesson, codified): a probe whose 1x
-    pass ran during heavy ambient IO (fixture writeback, a previous scaled
-    dir's rmtree) inflates every base 2-5x, which UNDERSTATES all the
-    ratios the probe exists to measure — the dangerous direction, since it
-    makes a superlinear entry look sublinear. The r10 first 100x run hit
-    exactly this (median base ratio ~3x vs r09; q1 0.63 s vs 0.94, but
-    gap_median_builtin 3.36 s vs 0.57) and was discarded by hand; this
-    stamps the adjudication into the artifact instead. Median ratio of
-    this run's 1x bases vs the previous round's recorded bases over the
-    common entries (both sides >= floor); ``contaminated`` past the
-    threshold — normal cross-round box noise is <= ~1.3x. None when too
-    few comparable entries exist."""
-    import statistics
-
-    ratios = [
-        cur / old
-        for name, cur in bases.items()
-        if (old := prev_bases.get(name)) is not None
-        and cur >= floor_s
-        and old >= floor_s
-    ]
-    if len(ratios) < min_common:
-        return None
-    med = round(statistics.median(ratios), 2)
-    return {
-        "median_base_ratio_vs_prev": med,
-        "n_common": len(ratios),
-        "contaminated": med > threshold,
-    }
-
-
-# Per-entry ratio-spread tripwire (VERDICT r10 #2): the 100x wall-clock TTL
-# entry recorded 6.07x and 17.94x on the SAME head — nothing in the artifact
-# adjudicated the spread the way bench's tripwire->isolated_s does. When an
-# entry's ratio moves more than _SPREAD_RATIO in either direction vs the
-# previous round's same-factor artifact, re-run BOTH sides isolated
-# best-of-2 and stamp isolated_ratio into the row. Bounded: at most
-# _MAX_SPREAD_ADJUDICATIONS entries (worst drift first); entries whose
-# scaled side exceeds _ADJUDICATE_MAX_SCALED_S fall through to the
-# once-per-run single-pass exemption below instead of best-of-2 (a
-# best-of-2 re-run of a 10-minute 1000x drain would double the probe's
-# wall for a number the three-decade series already brackets).
-_SPREAD_RATIO = 2.0
-_MAX_SPREAD_ADJUDICATIONS = 3
-_ADJUDICATE_MAX_SCALED_S = 120.0
-# Over-budget drifts used to skip adjudication entirely, leaving the
-# artifact's own mechanism blind exactly on its slowest entries (r11: the
-# 1000x session-append drift 43.3x -> 87.6x went unadjudicated because its
-# 333.7 s scaled side exceeded the 120 s best-of-2 budget — VERDICT r11
-# #3). The worst over-budget drift per run now gets a SINGLE isolated run
-# per side (not best-of-2) under a hard ceiling, so one slow entry costs
-# one extra scaled-side pass, never two, and an hour-long pathological
-# entry still can't eat the probe.
-_MAX_OVERBUDGET_ADJUDICATIONS = 1
-_OVERBUDGET_CEILING_S = 420.0
-
-
-def isolated_probe_s(spark, name: str, sf_dir: str, n_runs: int = 2) -> float:
-    """Best-of-N isolated re-measurement of one probe entry (build +
-    count — the same composition as the sweep). Memo contract follows
-    scalecheck.isolated_spark_s: the entry's shared-drain memos are
-    cleared before EVERY run including the first, so a drain carrier is
-    measured as first-touch each time rather than as a memo read."""
-    from bench import _clear_entry_memos, _unload_state_providers
-
-    best = float("inf")
-    for _ in range(n_runs):
-        spark.catalog.clearCache()
-        _unload_state_providers(spark)
-        _clear_entry_memos(name)
-        t0 = time.perf_counter()
-        df = QUERIES[name](spark, sf_dir)
-        df.count()
-        best = min(best, time.perf_counter() - t0)
-    return best
-
-
-def adjudicate_spread(
-    spark, rows: dict[str, dict], prev: dict[str, dict],
-    base_dir: str, scaled_dir: str,
-) -> int:
-    """Stamp isolated best-of-2 re-measurements into rows whose ratio
-    drifted >_SPREAD_RATIO vs the previous same-factor artifact. Returns
-    the number adjudicated. Mutates ``rows`` in place; never raises (the
-    sweep's numbers are already recorded — adjudication is advisory)."""
-    drifted: list[tuple[float, str]] = []
-    overbudget: list[tuple[float, str]] = []
-    for name, r in rows.items():
-        # Compare against the previous round's ADJUDICATED number when one
-        # exists: once a spread is resolved by an isolated re-run, that —
-        # not the noisy sweep ratio it corrected — is the baseline, else
-        # the motivating case re-triggers adjudication every round and a
-        # real drift vs the adjudicated value can hide near the old noise.
-        prev_row = prev.get(name, {})
-        pr = prev_row.get("isolated_ratio")
-        if not isinstance(pr, (int, float)):
-            pr = prev_row.get("ratio")
-        # scaled_s guard FIRST: a memo-served sweep entry can round its
-        # ratio to 0.0, and dividing by it below would crash the probe
-        # after hours of work (this function must never raise).
-        if (
-            r["scaled_s"] < 1.0
-            or r["ratio"] <= 0
-            or not isinstance(pr, (int, float))
-            or pr <= 0
-        ):
-            continue
-        drift = max(r["ratio"] / pr, pr / r["ratio"])
-        if drift <= _SPREAD_RATIO:
-            continue
-        r["prev_ratio"] = pr
-        if r["scaled_s"] > _ADJUDICATE_MAX_SCALED_S:
-            if r["scaled_s"] <= _OVERBUDGET_CEILING_S:
-                overbudget.append((drift, name))
-            else:
-                r["spread_note"] = (
-                    f"ratio drifted {drift:.1f}x vs prev round but scaled "
-                    f"side ({r['scaled_s']}s) exceeds even the "
-                    f"{_OVERBUDGET_CEILING_S:.0f}s single-run ceiling — "
-                    "unadjudicated, read against the other decades"
-                )
-            continue
-        drifted.append((drift, name))
-    ranked = sorted(drifted, reverse=True)
-    for drift, name in ranked[_MAX_SPREAD_ADJUDICATIONS:]:
-        rows[name]["spread_note"] = (
-            f"ratio drifted {drift:.1f}x vs prev round but "
-            f"{_MAX_SPREAD_ADJUDICATIONS} worse drifts took the re-run "
-            "slots this run — unadjudicated"
-        )
-    n = 0
-    for drift, name in ranked[:_MAX_SPREAD_ADJUDICATIONS]:
-        try:
-            ib = isolated_probe_s(spark, name, base_dir)
-            isc = isolated_probe_s(spark, name, scaled_dir)
-        except Exception as exc:  # noqa: BLE001 — advisory
-            rows[name]["spread_note"] = f"isolated re-run failed: {exc}"
-            continue
-        rows[name]["isolated_base_s"] = round(ib, 2)
-        rows[name]["isolated_scaled_s"] = round(isc, 2)
-        rows[name]["isolated_ratio"] = round(isc / max(ib, 0.05), 2)
-        rows[name]["spread_note"] = (
-            f"sweep ratio drifted {drift:.1f}x vs prev round's "
-            f"{rows[name]['prev_ratio']}x; isolated best-of-2 re-run "
-            "(memos cleared, both sides) is the adjudicated number"
-        )
-        print(
-            f"  [spread] {name}: sweep {rows[name]['ratio']}x vs prev "
-            f"{rows[name]['prev_ratio']}x -> isolated "
-            f"{rows[name]['isolated_ratio']}x", flush=True,
-        )
-        n += 1
-    # Over-budget exemption (VERDICT r11 #3): the worst drift whose scaled
-    # side sits between the best-of-2 budget and the single-run ceiling
-    # gets ONE isolated pass per side — an adjudicated number with
-    # single-run noise, explicitly labeled, instead of a blind spot.
-    ranked_ob = sorted(overbudget, reverse=True)
-    for drift, name in ranked_ob[_MAX_OVERBUDGET_ADJUDICATIONS:]:
-        rows[name]["spread_note"] = (
-            f"ratio drifted {drift:.1f}x vs prev round; scaled side "
-            f"({rows[name]['scaled_s']}s) exceeds the "
-            f"{_ADJUDICATE_MAX_SCALED_S:.0f}s re-run budget and "
-            f"{_MAX_OVERBUDGET_ADJUDICATIONS} worse over-budget drift(s) "
-            "took the single-run exemption — unadjudicated"
-        )
-    for drift, name in ranked_ob[:_MAX_OVERBUDGET_ADJUDICATIONS]:
-        try:
-            ib = isolated_probe_s(spark, name, base_dir, n_runs=1)
-            isc = isolated_probe_s(spark, name, scaled_dir, n_runs=1)
-        except Exception as exc:  # noqa: BLE001 — advisory
-            rows[name]["spread_note"] = f"isolated re-run failed: {exc}"
-            continue
-        rows[name]["isolated_base_s"] = round(ib, 2)
-        rows[name]["isolated_scaled_s"] = round(isc, 2)
-        rows[name]["isolated_ratio"] = round(isc / max(ib, 0.05), 2)
-        rows[name]["spread_note"] = (
-            f"sweep ratio drifted {drift:.1f}x vs prev round's "
-            f"{rows[name]['prev_ratio']}x; scaled side "
-            f"({rows[name]['scaled_s']}s) exceeds the "
-            f"{_ADJUDICATE_MAX_SCALED_S:.0f}s best-of-2 budget, so the "
-            "once-per-run over-budget exemption ran a SINGLE isolated "
-            "pass per side (memos cleared) — adjudicated, read with "
-            "single-run noise in mind"
-        )
-        print(
-            f"  [spread/over-budget] {name}: sweep {rows[name]['ratio']}x "
-            f"vs prev {rows[name]['prev_ratio']}x -> single-run isolated "
-            f"{rows[name]['isolated_ratio']}x", flush=True,
-        )
-        n += 1
-    return n
+def _ratio(scaled_s: float, base_s: float) -> float:
+    return round(scaled_s / max(base_s, 0.05), 2)
 
 
 def probe(spark, sf_dir: str, entries) -> dict[str, dict]:
+    """One timed build + count per entry (memo state kept, as in a sweep),
+    with the row count and plan fingerprint."""
+    harness.warm_up(spark, sf_dir)
     out: dict[str, dict] = {}
-    from bench import _unload_state_providers, warm_up
-
-    warm_up(spark, sf_dir)
     for name in entries:
-        spark.catalog.clearCache()
-        _unload_state_providers(spark)
-        t0 = time.perf_counter()
-        df = QUERIES[name](spark, sf_dir)
-        n = df.count()
-        out[name] = {
-            "s": round(time.perf_counter() - t0, 2),
-            "rows": n,
-            "plan": plan_fingerprint(df),
-        }
+        s, df, n = harness.best_of(
+            spark, name, sf_dir, "count", runs=1, keep_first_memos=True)
+        out[name] = {"s": round(s, 2), "rows": n, "plan": plan_fingerprint(df)}
         # Free what the entry pinned (its own lifetime tag; shared drains
         # stay for their other readers) before the next replica.
         lifetime.release(spark, name)
@@ -657,21 +411,75 @@ def probe(spark, sf_dir: str, entries) -> dict[str, dict]:
     return out
 
 
+def previous_probe_entries(
+    rnd: int, factor: int, root: str = harness.ROOT
+) -> dict[str, dict]:
+    """This factor's per-entry rows from the newest prior-round artifact
+    (empty when none)."""
+    found = harness.newest_artifact(
+        "SCALEPROBE" if factor == 10 else f"SCALEPROBE{factor}x", rnd, root)
+    entries = found[1].get("entries") if found else None
+    return {k: v for k, v in (entries or {}).items() if isinstance(v, dict)}
+
+
+def base_sanity(bases: dict, prev_bases: dict) -> dict | None:
+    """Contaminated-run detector (r10): a 1x pass run during heavy ambient
+    IO (fixture writeback, a previous replica's rmtree) inflates every base
+    2-5x, which UNDERSTATES every ratio — the dangerous direction, since it
+    makes a superlinear entry look sublinear. The median 1x-base ratio vs
+    the previous round's bases; normal cross-round noise is <= ~1.3x."""
+    med = harness.median_ratio(bases, prev_bases)
+    if med is None:
+        return None
+    return {"median_base_ratio_vs_prev": med, "contaminated": med > harness.RATIO}
+
+
+def adjudicate_spread(
+    spark, rows: dict[str, dict], prev: dict[str, dict],
+    base_dir: str, scaled_dir: str,
+) -> list[dict]:
+    """Re-run both sides isolated for rows whose ratio drifted more than
+    harness.RATIO either way vs the previous same-factor artifact (the 100x
+    wall-clock TTL entry once recorded 6.07x and 17.94x on the same code),
+    and stamp ``prev_ratio``, ``isolated_*`` or ``note``
+    into the row. The baseline is the previous ADJUDICATED ratio when there
+    is one: else the motivating case re-triggers every round, and a real
+    drift vs the adjudicated value can hide near the old noise."""
+
+    def rerun(name: str) -> dict:
+        ib = harness.best_of(spark, name, base_dir, "count")[0]
+        isc = harness.best_of(spark, name, scaled_dir, "count")[0]
+        return {"isolated_base_s": round(ib, 2),
+                "isolated_scaled_s": round(isc, 2),
+                "isolated_ratio": _ratio(isc, ib)}
+
+    prev_ratio = {
+        k: v["isolated_ratio"] if isinstance(v.get("isolated_ratio"), (int, float))
+        else v.get("ratio")
+        for k, v in prev.items()
+    }
+    adj = harness.adjudicate(
+        {k: r["ratio"] for k, r in rows.items()}, prev_ratio, rerun,
+        swept={k: r["scaled_s"] for k, r in rows.items()}, two_sided=True,
+    )
+    for a in adj:
+        row = rows[a["entry"]]
+        row["prev_ratio"] = a["prev"]
+        row.update({k: v for k, v in a.items() if k.startswith("isolated") or k == "note"})
+        print(f"  [spread] {a['entry']}: sweep {row['ratio']}x vs prev "
+              f"{a['prev']}x -> {row.get('isolated_ratio', row.get('note'))}",
+              flush=True)
+    return adj
+
+
 def main() -> int:
     rnd = int(sys.argv[1]) if len(sys.argv) > 1 else 0
     # 10x the data needs more than the harness default heap (local mode =
-    # one JVM for all 32 tasks); the box has 128 GiB.
+    # one JVM for all tasks).
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
-    spark = build_session()
-    spark.sparkContext.setLogLevel("ERROR")
-    # Engine-path throughput default (r14 Change 2 / ADVICE r14 scoping):
-    # see session.py's note on rocksdb.trackTotalNumberOfRows.
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows",
-        "false",
-    )
+    spark = harness.engine_session()
+    n_cpus = harness.cpus(spark)
     scaled_dir = tempfile.mkdtemp(prefix="scaleprobe_")
-    n_adjudicated = 0
     prev_entries = previous_probe_entries(rnd, FACTOR)
     try:
         # 1x bases come FIRST (VERDICT r10 #3): the replica build is the
@@ -687,21 +495,15 @@ def main() -> int:
         build_scaled_dir(spark, BASE_DIR, scaled_dir, FACTOR)
         build_s = round(time.time() - t0, 1)
         print(f"built {FACTOR}x fixtures in {build_s}s at {scaled_dir}", flush=True)
-        # Same writeback discipline for the SCALED pass: with the bases
-        # moved ahead of the build, the scaled probe now starts in the
-        # build's flush shadow — which would OVERSTATE ratios (the safe
-        # direction, but still wrong numbers and false tripwires at the
-        # 1000x decade where the build writes tens of GB).
+        # Same writeback discipline for the SCALED pass, which now starts in
+        # the build's flush shadow — that would OVERSTATE ratios.
         os.sync()
         time.sleep(2)
         print(f"probing {FACTOR}x", flush=True)
         scaled = probe(spark, scaled_dir, PROBE_ENTRIES)
         rows = _assemble_rows(base, scaled)
-        # Ratio-spread adjudication needs the scaled dir alive — run it
-        # before the rmtree.
-        n_adjudicated = adjudicate_spread(
-            spark, rows, prev_entries, BASE_DIR, scaled_dir
-        )
+        # Needs the scaled dir alive — run it before the rmtree.
+        adj = adjudicate_spread(spark, rows, prev_entries, BASE_DIR, scaled_dir)
     finally:
         shutil.rmtree(scaled_dir, ignore_errors=True)
         spark.stop()
@@ -719,14 +521,58 @@ def main() -> int:
                 print(f"purged {n_purged} dead staged-chunk cache entries")
         except Exception as exc:  # noqa: BLE001 — cleanup is best-effort
             print(f"staged-chunk purge skipped: {exc}")
-    return _write_artifact(rnd, rows, build_s, prev_entries, n_adjudicated)
+    sanity = base_sanity(
+        {k: v["base_s"] for k, v in rows.items()},
+        {k: v.get("base_s") for k, v in prev_entries.items()},
+    )
+    counts = {
+        "n_superlinear": sum(1 for r in rows.values() if not r["linear_ok"]),
+        # join_strategy deltas are AQE re-picking broadcast vs sort-merge
+        # as the scaled side outgrows the threshold — the DESIRED adaptive
+        # behavior; only structural deltas indicate a scale problem.
+        "n_join_strategy_flips": sum(
+            1 for r in rows.values() if r["plan_delta"] == "join_strategy"),
+        "n_structural_plan_changes": sum(
+            1 for r in rows.values() if r["plan_delta"] == "structural"),
+        "n_flagged": len(adj),
+        "n_adjudicated": sum(1 for a in adj if "note" not in a),
+    }
+    result = {
+        "base_dir": BASE_DIR, "factor": FACTOR, "slack": SLACK, "cpus": n_cpus,
+        "build_s": build_s, "entries": rows, "base_sanity": sanity, **counts,
+    }
+    # The canonical per-round artifact is the 10x run; other decades get a
+    # factor-suffixed name so they never clobber it.
+    tag = "" if FACTOR == 10 else f"{FACTOR}x"
+    out = os.path.join(
+        harness.ROOT,
+        f"SCALEPROBE{tag}_r{rnd:02d}.json" if rnd else f"SCALEPROBE{tag}.json",
+    )
+    with open(out, "w") as fh:
+        json.dump(result, fh, indent=1)
+    print(f"wrote {out}")
+    if sanity and sanity["contaminated"]:
+        print(
+            f"WARN: this run's 1x bases are {sanity['median_base_ratio_vs_prev']}x "
+            "the previous round's — the "
+            "1x pass likely ran on a contaminated box, UNDERSTATING every "
+            "ratio. Re-run on a quiet box (sync; wait for load < 1) instead "
+            "of recording this artifact."
+        )
+    compact = {"metric": "scaleprobe", "factor": FACTOR, "cpus": n_cpus,
+               "n_entries": len(rows), **counts,
+               "worst_ratio": max(r["ratio"] for r in rows.values())}
+    if sanity is not None:
+        compact["base_contaminated"] = sanity["contaminated"]
+    print(harness.fit_line(compact))
+    return 1 if (counts["n_superlinear"] or counts["n_structural_plan_changes"]) else 0
 
 
 def _assemble_rows(base: dict, scaled: dict) -> dict[str, dict]:
     rows: dict[str, dict] = {}
     for name in PROBE_ENTRIES:
         b, s = base[name], scaled[name]
-        ratio = round(s["s"] / max(b["s"], 0.05), 2)
+        ratio = _ratio(s["s"], b["s"])
         basis = float(FACTOR)
         if name in SEMANTIC_OUTPUT_ENTRIES:
             basis = max(basis, s["rows"] / max(b["rows"], 1))
@@ -753,77 +599,6 @@ def _assemble_rows(base: dict, scaled: dict) -> dict[str, dict]:
             rows[name]["base_plan"] = b["plan"]
             rows[name]["scaled_plan"] = s["plan"]
     return rows
-
-
-def _write_artifact(
-    rnd: int, rows: dict[str, dict], build_s: float,
-    prev_entries: dict[str, dict], n_adjudicated: int,
-) -> int:
-    n_super = sum(1 for r in rows.values() if not r["linear_ok"])
-    n_structural = sum(
-        1 for r in rows.values() if r["plan_delta"] == "structural"
-    )
-    n_flips = sum(
-        1 for r in rows.values() if r["plan_delta"] == "join_strategy"
-    )
-    sanity = base_sanity(
-        {k: v["base_s"] for k, v in rows.items()},
-        {
-            k: v["base_s"]
-            for k, v in prev_entries.items()
-            if isinstance(v.get("base_s"), (int, float))
-        },
-    )
-    result = {
-        "base_dir": BASE_DIR,
-        "factor": FACTOR,
-        "slack": SLACK,
-        "build_s": build_s,
-        "entries": rows,
-        "base_sanity": sanity,
-        "n_superlinear": n_super,
-        # join_strategy deltas are AQE re-picking broadcast vs sort-merge
-        # as the 10x side outgrows the threshold — the DESIRED adaptive
-        # behavior; only structural deltas indicate a scale problem.
-        "n_join_strategy_flips": n_flips,
-        "n_structural_plan_changes": n_structural,
-        # >2x round-over-round ratio drifts re-run isolated best-of-2
-        # (VERDICT r10 #2) — per-entry detail rides in the rows
-        # (prev_ratio / isolated_ratio / spread_note).
-        "n_spread_adjudicated": n_adjudicated,
-    }
-    # The canonical per-round artifact is the 10x run; other decades get a
-    # factor-suffixed name so they never clobber it.
-    tag = "" if FACTOR == 10 else f"{FACTOR}x"
-    out = os.path.join(
-        _ROOT,
-        f"SCALEPROBE{tag}_r{rnd:02d}.json" if rnd else f"SCALEPROBE{tag}.json",
-    )
-    with open(out, "w") as fh:
-        json.dump(result, fh, indent=1)
-    print(f"wrote {out}")
-    if sanity and sanity["contaminated"]:
-        print(
-            "WARN: this run's 1x bases are "
-            f"{sanity['median_base_ratio_vs_prev']}x the previous round's "
-            "— the 1x pass likely ran on a contaminated box, UNDERSTATING "
-            "every ratio. Re-run on a quiet box (sync; wait for load < 1) "
-            "instead of recording this artifact."
-        )
-    compact = {
-        "metric": "scaleprobe",
-        "factor": FACTOR,
-        "n_entries": len(rows),
-        "n_superlinear": n_super,
-        "n_join_strategy_flips": n_flips,
-        "n_structural_plan_changes": n_structural,
-        "worst_ratio": max(r["ratio"] for r in rows.values()),
-        "n_spread_adjudicated": n_adjudicated,
-    }
-    if sanity is not None:
-        compact["base_contaminated"] = sanity["contaminated"]
-    print(json.dumps(compact))
-    return 1 if (n_super or n_structural) else 0
 
 
 if __name__ == "__main__":

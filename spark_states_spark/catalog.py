@@ -60,17 +60,18 @@ def register(name: str, oracle: str | None = None):
 # pair's single drain, the dual-binding wall-clock drain, the CC-label
 # reuse between clustering and keep-best), built once per (application,
 # fixture generation) through ``lifetime.shared``. Modules declare their
-# tags here at import time. bench.py's best-of-N re-runs release a tag
-# only for a PARTICIPATING entry, so a shared-result entry re-pays its own
-# materialization without other entries' re-runs wiping the share
-# (ADVICE r06).
+# tags here at import time. The harness's best-of-N re-runs
+# (harness.best_of, used by bench.py, scalecheck.py and scaleprobe.py)
+# release a tag only for a PARTICIPATING entry, so a shared-result entry
+# re-pays its own materialization without other entries' re-runs wiping
+# the share.
 SHARED_MEMOS: dict[str, set[str]] = {}
 
 # Tags whose value is deterministic INPUT STAGING (a pure function of
 # (session, fixture) whose product the entry then operates ON — e.g. the
 # restart entry's phase-1 checkpoint snapshot), as opposed to a shared
 # RESULT materialization (the funnel/KV drains, where the entry's own
-# output reads the memo). bench.py's best-of-N re-run clearing exists to
+# output reads the memo). The harness's best-of-N re-run clearing exists to
 # stop result memos from degenerating a re-run into timing a memo read;
 # staging memos have the opposite contract — the measured operation
 # re-executes in full against the staged input every run, exactly like

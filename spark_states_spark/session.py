@@ -148,7 +148,7 @@ def use_rocksdb_state_store(builder: SparkSession.Builder) -> SparkSession.Build
         # surface that streaming/metrics.py documents as the parity answer
         # to the reference's StateStore.metrics. The throughput default now
         # lives only in the ENGINE's own entry paths (__spark_entry__
-        # _ensure_conf, bench.py, scalecheck.py, scaleprobe.py — the conf
+        # _ensure_conf, harness.engine_session for the scripts — the conf
         # is runtime-settable and read at query start), so library
         # sessions keep Spark's documented metric semantics.
     )

@@ -8,7 +8,8 @@ modern Spark actually reports: ``StreamingQuery.lastProgress
 RocksDB provider.
 
 Note (r14, re-scoped r15 per ADVICE r14): the ENGINE's own entry paths
-(__spark_entry__, bench.py, scalecheck.py, scaleprobe.py) disable RocksDB
+(__spark_entry__, and harness.engine_session for bench.py, scalecheck.py
+and scaleprobe.py) disable RocksDB
 row-count tracking for commit speed — with it off, ``numRowsTotal`` reads
 -1. Library sessions built via ``session.build_session`` keep Spark's
 default (tracking ON), so this façade reports real counters there; a

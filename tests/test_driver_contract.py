@@ -12,6 +12,10 @@ import subprocess
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+import bench  # noqa: E402
+import harness  # noqa: E402
 
 
 def _load_entry():
@@ -36,8 +40,6 @@ def test_bench_headline_is_well_formed():
     """Every headline entry must resolve in the catalog (a renamed entry
     would crash the official bench run), no duplicates, and the CORE
     best-of-3 tier must stay the historical comparable prefix."""
-    sys.path.insert(0, REPO)
-    import bench
     from spark_states_spark.catalog import QUERIES
 
     missing = [q for q in bench.HEADLINE if q not in QUERIES]
@@ -56,9 +58,6 @@ def test_bench_drain_groups_mark_carrier_and_sum():
     """VERDICT r07 #1/#2: the artifact must say which entry carried a
     shared drain and what the group sum is — with every participant
     present, the carrier is the first in run order."""
-    sys.path.insert(0, REPO)
-    import bench
-
     timings = {q: 1.0 for q in bench.HEADLINE}
     groups = bench._drain_groups(timings)
     assert set(groups) == {
@@ -97,268 +96,106 @@ def test_bench_drain_groups_mark_carrier_and_sum():
 
 
 def test_bench_regression_tripwire_floors_and_ratio():
-    sys.path.insert(0, REPO)
-    import bench
-
     prev = {"a": 1.0, "b": 0.01, "c": 3.0, "d": 1.0}
     now = {"a": 2.5, "b": 0.4, "c": 3.2, "d": 1.9, "e": 9.9}
-    rows = bench._regressions_vs_prev(now, prev)
+    rows = harness.adjudicate(now, prev, lambda n: {"isolated_s": 1.0})
     # a: 2.5/1.0 = 2.5x -> flagged; b: below the 0.5s floor now-side;
     # c: 1.07x; d: 1.9x < 2x; e: no previous measurement.
     assert [r["entry"] for r in rows] == ["a"]
-    assert rows[0]["ratio"] == 2.5
+    assert rows[0]["over"] == 1.25  # 2.5x against the 2x threshold
 
 
 def test_bench_ambient_ratio_is_robust_median():
     """VERDICT r09 #2: the artifact's box-noise deflator is the MEDIAN
     per-entry ratio vs the previous full map — robust to a handful of
     genuinely-regressed tails and blind to sub-floor noise entries."""
-    sys.path.insert(0, REPO)
-    import bench
-
     prev = {f"e{i}": 1.0 for i in range(10)}
     now = {f"e{i}": 1.27 for i in range(10)}
     now["e0"] = 5.0  # one real regression must not move the ambient median
     prev["tiny"], now["tiny"] = 0.05, 0.19  # both sides below the floor
     now["new_entry"] = 2.0  # no previous measurement -> not comparable
-    assert bench._ambient_ratio(now, prev) == 1.27
+    assert harness.median_ratio(now, prev) == 1.27
 
 
 def test_bench_ambient_ratio_needs_enough_common_entries():
     """A median over a handful of entries measures those entries, not the
     box: bootstrap rounds and tiny subset runs get None, and the deflated
     throughput key is simply absent."""
-    sys.path.insert(0, REPO)
-    import bench
-
-    prev = {f"e{i}": 1.0 for i in range(7)}
+    prev = {f"e{i}": 1.0 for i in range(harness.RERUN_CAP - 1)}
     now = dict(prev)
-    assert bench._ambient_ratio(now, prev) is None
-    assert bench._ambient_ratio({}, {}) is None
+    assert harness.median_ratio(now, prev) is None
+    assert harness.median_ratio({}, {}) is None
 
 
-def _synthetic_flags(n, prev_s=1.0, now_s=3.0):
-    return [
-        {"entry": f"e{i}", "prev_s": prev_s, "now_s": now_s, "ratio": 3.0}
-        for i in range(n)
-    ]
+def _rerun_log(value):
+    reran = []
+    return reran, lambda n: (reran.append(n), {"isolated_s": value})[1]
 
 
 def test_bench_adjudication_rerulls_all_rows_when_few_flag():
-    """<= _SYSTEMIC_FLAGS: every flagged row gets isolated_s, no verdict
-    block (the per-row numbers ARE the adjudication)."""
-    sys.path.insert(0, REPO)
-    import bench
-
-    rows = _synthetic_flags(3)
-    reran = []
-    out = bench._adjudicate_tripwires(
-        rows, rerun=lambda n: (reran.append(n), 1.1)[1],
-        prev_queries={}, canary=None,
-    )
-    assert out is None
+    """Within the cap every flagged row gets isolated_s."""
+    now = {f"e{i}": 3.0 for i in range(3)}
+    reran, rerun = _rerun_log(1.1)
+    rows = harness.adjudicate(now, {k: 1.0 for k in now}, rerun)
     assert reran == ["e0", "e1", "e2"]
-    assert all(r["isolated_s"] == 1.1 for r in rows)
-
-
-def test_bench_adjudication_systemic_when_probe_clears():
-    """VERDICT r08 #1 (the synthetic slow-run case): 9+ flags no longer
-    skip adjudication — the worst 3 + canary are probed and the artifact
-    carries systemic_contention=true when they land at previous levels."""
-    sys.path.insert(0, REPO)
-    import bench
-
-    rows = _synthetic_flags(9)
-    reran = []
-
-    def rerun(n):
-        reran.append(n)
-        return 0.3 if n == "q1_pricing_summary" else 1.1
-
-    out = bench._adjudicate_tripwires(
-        rows, rerun=rerun, prev_queries={"q1_pricing_summary": 0.3},
-    )
-    # Bounded: exactly worst-3 + the canary, not all nine.
-    assert reran == ["e0", "e1", "e2", "q1_pricing_summary"]
-    assert out["systemic_contention"] is True
-    assert out["flagged_cleared"] is True and out["canary_slow"] is False
-    assert out["probe"]["e0"]["isolated_ratio"] == 1.1
-    assert out["probe"]["q1_pricing_summary"]["role"] == "canary"
-    # Probed rows also carry isolated_s in the regression list itself.
-    assert rows[0]["isolated_s"] == 1.1 and "isolated_s" not in rows[3]
-
-
-def test_bench_adjudication_real_regression_when_probe_stays_slow():
-    sys.path.insert(0, REPO)
-    import bench
-
-    rows = _synthetic_flags(9)
-    # Flagged entries stay 3x slow isolated; the sub-second canary stays
-    # fast — the box is quiet, so the regressions are real.
-    out = bench._adjudicate_tripwires(
-        rows, rerun=lambda n: 0.3 if n == "q1_pricing_summary" else 3.0,
-        prev_queries={"q1_pricing_summary": 0.3},
-    )
-    assert out["systemic_contention"] is False
-    assert out["flagged_cleared"] is False and out["canary_slow"] is False
-
-
-def test_bench_adjudication_canary_slow_means_still_contended():
-    """Flagged entries still slow AND the canary slow => the box is still
-    contended at probe time; nothing can be concluded against the engine."""
-    sys.path.insert(0, REPO)
-    import bench
-
-    rows = _synthetic_flags(9)
-    out = bench._adjudicate_tripwires(
-        rows, rerun=lambda n: 3.0, prev_queries={"q1_pricing_summary": 0.3},
-    )
-    assert out["canary_slow"] is True
-    assert out["systemic_contention"] is True
-    assert out["flagged_cleared"] is False
+    assert all(r["isolated_s"] == 1.1 and "note" not in r for r in rows)
 
 
 def test_bench_budget_breach_adjudication():
     """VERDICT r11 #1: entries swept over the ~5 s budget get an isolated
-    best-of-3 re-run stamped even UNDER the 2× tripwire; entries the
-    tripwire already adjudicated reuse that isolated_s (no double re-run);
-    drain-group membership is annotated; rows come worst-swept-first."""
-    sys.path.insert(0, REPO)
-    import bench
-
-    timings = {
-        "fast": 1.2,
-        "drain_a": 6.5,   # over budget, not tripwired
-        "drain_b": 5.5,   # over budget, tripwired (already has isolated_s)
-        "solo": 5.1,      # over budget, no drain group
-        "band": 5.05,     # over budget swept; isolated lands inside the
-                          # 5% verdict noise band (VERDICT r12 #3)
-    }
-    regressions = [
-        {"entry": "drain_b", "prev_s": 2.0, "now_s": 5.5, "ratio": 2.75,
-         "isolated_s": 2.1},
-    ]
-    groups = {"kv": {"entries": ["drain_a", "drain_b"], "carrier": "drain_a",
-                     "sum_s": 12.0}}
+    re-run even UNDER the 2x ratio, worst first; the published timing is
+    min(swept, isolated) and the swept one stays in the row."""
+    timings = {"fast": 1.2, "drain_a": 6.5, "drain_b": 5.5, "solo": 5.1,
+               "band": 5.05}
+    iso = {"drain_a": 4.1, "drain_b": 2.1, "solo": 5.3, "band": 5.2}
     reran = []
-
-    def rerun(name):
-        reran.append(name)
-        return {"drain_a": 4.1, "solo": 5.3, "band": 5.2}[name]
-
-    rows = bench._adjudicate_budget_breaches(
-        timings, regressions, rerun, groups
+    rows = harness.adjudicate(
+        timings, {"drain_b": 2.0},
+        lambda n: (reran.append(n), {"isolated_s": iso[n]})[1],
+        budget=harness.BUDGET_S,
     )
-    assert reran == ["drain_a", "solo", "band"]  # drain_b reused, fast skipped
-    assert [r["entry"] for r in rows] == ["drain_a", "drain_b", "solo", "band"]
+    # drain_b is also 2.75x its previous value, the worst row.
+    assert reran == ["drain_b", "drain_a", "solo", "band"]  # fast skipped
     by = {r["entry"]: r for r in rows}
-    assert by["drain_a"]["isolated_s"] == 4.1
-    assert by["drain_a"]["isolated_over_budget"] is False
-    assert by["drain_a"]["drain_group"] == "kv"
-    assert by["drain_b"]["isolated_s"] == 2.1  # reused from the tripwire
-    # 5.3 > 5.0 * _BUDGET_VERDICT_BAND (5.25): a real breach even with the
-    # noise band; 5.2 sits inside the band — raw isolated_s still stamped,
-    # only the verdict boolean tolerates the jitter floor.
-    assert by["solo"]["isolated_over_budget"] is True
-    assert "drain_group" not in by["solo"]
-    assert by["band"]["isolated_s"] == 5.2
-    assert by["band"]["isolated_over_budget"] is False
-    # nothing over budget -> empty, no re-runs
-    assert bench._adjudicate_budget_breaches(
-        {"fast": 1.0}, [], rerun, {}
-    ) == []
+    assert by["drain_a"]["swept"] == 6.5 and by["drain_a"]["isolated_s"] == 4.1
+    published = bench._published(timings, rows)
+    assert published == {"fast": 1.2, "drain_a": 4.1, "drain_b": 2.1,
+                         "solo": 5.1, "band": 5.05}
+    assert harness.adjudicate({"fast": 1.0}, {}, None, budget=5.0) == []
 
 
 def test_bench_budget_breach_adjudication_is_bounded():
-    """The budget adjudicator is capped like every other adjudicator:
-    at most _MAX_BUDGET_ADJUDICATIONS fresh best-of-3 re-runs
-    (worst-swept first; the rest carry a lost-the-slot note), and a
-    systemic-contention verdict from the tripwire path suppresses fresh
-    re-runs entirely (a re-run on the contended box proves nothing)
-    while tripwire-stamped isolated_s values are still reused."""
-    sys.path.insert(0, REPO)
-    import bench
-
+    """At most RERUN_CAP isolated re-runs, worst first; the rest carry a
+    lost-the-slot note and no isolated_s."""
     timings = {f"e{i}": 10.0 - i * 0.5 for i in range(8)}  # all over budget
-    reran = []
-    rows = bench._adjudicate_budget_breaches(
-        timings, [], lambda n: (reran.append(n), 4.0)[1], {}
-    )
-    assert len(reran) == bench._MAX_BUDGET_ADJUDICATIONS
-    assert reran == [f"e{i}" for i in range(bench._MAX_BUDGET_ADJUDICATIONS)]
+    reran, rerun = _rerun_log(4.0)
+    rows = harness.adjudicate(timings, {}, rerun, budget=harness.BUDGET_S)
+    assert reran == [f"e{i}" for i in range(harness.RERUN_CAP)]
     noted = [r for r in rows if "note" in r]
-    assert len(noted) == len(timings) - bench._MAX_BUDGET_ADJUDICATIONS
+    assert len(noted) == len(timings) - harness.RERUN_CAP
     assert all("re-run slots" in r["note"] for r in noted)
     assert all("isolated_s" not in r for r in noted)
-    # systemic: no fresh re-runs at all; tripwire isolated_s still reused
-    reran = []
-    rows = bench._adjudicate_budget_breaches(
-        {"a": 9.0, "b": 8.0},
-        [{"entry": "b", "isolated_s": 3.0}],
-        lambda n: (reran.append(n), 4.0)[1],
-        {},
-        systemic=True,
-    )
-    assert reran == []
-    by = {r["entry"]: r for r in rows}
-    assert "systemic" in by["a"]["note"] and "isolated_s" not in by["a"]
-    assert by["b"]["isolated_s"] == 3.0
 
 
 def test_bench_compact_counts_survive_note_only_rows():
-    """ADVICE r12: note-only breach rows (slot-capped or systemic-
-    suppressed) carry no isolated_over_budget key; the compact-line
-    counting must use .get() (the r12 artifact dodged a KeyError only by
-    luck) and report them as unadjudicated rather than silently counting
-    them under-budget."""
-    sys.path.insert(0, REPO)
-    import bench
-
+    """Note-only rows (past the cap, or a failed re-run) carry
+    no isolated_s; they count as flagged but not adjudicated, and their
+    swept timing is published unchanged."""
     timings = {f"e{i}": 10.0 - i * 0.5 for i in range(8)}
-    rows = bench._adjudicate_budget_breaches(
-        timings, [], lambda n: 6.0, {}
-    )
-    # the exact expressions main() feeds the compact line
-    n_over = sum(1 for r in rows if r.get("isolated_over_budget"))
-    n_unadj = sum(1 for r in rows if "isolated_over_budget" not in r)
-    assert n_over == bench._MAX_BUDGET_ADJUDICATIONS  # rerun stub says 6.0
-    assert n_unadj == len(timings) - bench._MAX_BUDGET_ADJUDICATIONS
-    assert n_over + n_unadj == len(rows)
-
-
-def test_bench_systemic_gate_requires_systemic_verdict():
-    """ADVICE r12: a tripwire probe that ran but stamped
-    systemic_contention=False (regressions reproduced isolated — engine
-    implicated, box healthy) must NOT suppress fresh budget re-runs;
-    main() now passes bool(contention and contention['systemic_
-    contention']), so verify both verdict polarities end-to-end against
-    the adjudicator."""
-    sys.path.insert(0, REPO)
-    import bench
-
-    for verdict, expect_fresh in ((False, True), (True, False)):
-        contention = {"systemic_contention": verdict}
-        reran = []
-        rows = bench._adjudicate_budget_breaches(
-            {"a": 9.0},
-            [],
-            lambda n: (reran.append(n), 4.0)[1],
-            {},
-            systemic=bool(contention and contention["systemic_contention"]),
-        )
-        assert (len(reran) > 0) is expect_fresh
-        if expect_fresh:
-            assert rows[0]["isolated_over_budget"] is False
-        else:
-            assert "note" in rows[0]
+    rows = harness.adjudicate(
+        timings, {}, lambda n: {"isolated_s": 6.0}, budget=harness.BUDGET_S)
+    # the exact expressions main() stamps
+    n_flagged = len(rows)
+    n_adjudicated = sum(1 for r in rows if "note" not in r)
+    assert n_adjudicated == harness.RERUN_CAP
+    assert n_flagged - n_adjudicated == len(timings) - harness.RERUN_CAP
+    published = bench._published(timings, rows)
+    assert published["e7"] == timings["e7"] and published["e0"] == 6.0
 
 
 def test_bench_prev_baseline_reads_round_artifacts():
     """_prev_bench must pick up the newest BENCH_r{N}.json round number and
     fall back to bench_result.json for totals the compact line predates."""
-    sys.path.insert(0, REPO)
-    import bench
-
     prev = bench._prev_bench()
     assert prev["round"] is not None and prev["round"] >= 7
     # The repo carries a committed full map, so totals must resolve.
@@ -370,9 +207,6 @@ def test_bench_prev_baseline_prefers_round_artifact_totals(tmp_path):
     """Once the compact line carries totals (r08+), the per-round artifact
     outranks the re-run-overwritable full map; a full-coverage local map
     still supplies the per-entry queries for the tripwire."""
-    sys.path.insert(0, REPO)
-    import bench
-
     full_map = {name: 1.0 for name in bench.HEADLINE}
     (tmp_path / "bench_result.json").write_text(json.dumps({
         "queries": full_map
@@ -397,9 +231,6 @@ def test_bench_prev_baseline_rejects_dev_subset_leftover(tmp_path):
     NOT become the baseline (r14: a 4-entry A/B leftover silently disabled
     the ambient deflator and the tripwire for the next full run) — the
     per-round artifact's slowest-8 takes over as the partial baseline."""
-    sys.path.insert(0, REPO)
-    import bench
-
     (tmp_path / "bench_result.json").write_text(json.dumps({
         "queries": {"q1_pricing_summary": 1.0, "keyed_state_ttl_strict": 2.0}
     }))
@@ -422,9 +253,6 @@ def test_bench_prev_baseline_reads_driver_wrapper(tmp_path):
     which wraps the compact line under "parsed" (bench_result.json is
     gitignored) — the baseline must resolve totals from the wrapper and use
     its slowest-8 queries map as a PARTIAL tripwire baseline."""
-    sys.path.insert(0, REPO)
-    import bench
-
     (tmp_path / "BENCH_r08.json").write_text(json.dumps({
         "n": 8, "rc": 0, "tail": "...",
         "parsed": {
@@ -444,9 +272,6 @@ def test_bench_prev_baseline_reads_committed_full_artifact(tmp_path):
     committed BENCH_FULL_r{N}.json supplies the full per-entry baseline —
     the ambient deflator and the tripwire must not be starved down to the
     compact line's packed map on a fresh checkout."""
-    sys.path.insert(0, REPO)
-    import bench
-
     full_map = {name: 1.0 for name in bench.HEADLINE}
     (tmp_path / "BENCH_FULL_r14.json").write_text(json.dumps({
         "queries": full_map
@@ -472,18 +297,14 @@ def test_bench_prev_baseline_reads_committed_full_artifact(tmp_path):
 
 
 def test_bench_compact_query_packer_keeps_prev_names_and_budget():
-    """r15 (VERDICT r14 #1): the packed map must (a) carry every entry the
+    """The packed map must (a) carry every entry the
     previous compact line had, (b) then fill slowest-first, (c) never
     exceed the line budget."""
-    sys.path.insert(0, REPO)
-    import bench
-
     timings = {f"entry_{i:03d}": float(i) for i in range(120)}
-    compact = {"metric": "headline_total", "value": 1.0, "queries": {}}
+    compact = {"metric": "headline_total", "value": 1.0}
     prev_names = ["entry_001", "entry_002", "missing_entry"]
-    bench._pack_compact_queries(compact, timings, prev_names, budget=400)
-    line = json.dumps(compact)
-    assert len(line) <= 400
+    line = harness.fit_line(compact, timings, prev_names, budget=400)
+    assert len(line) <= 400 and json.loads(line) == compact
     # Guaranteed names (that were timed) are present despite being fast.
     assert "entry_001" in compact["queries"]
     assert "entry_002" in compact["queries"]
@@ -491,52 +312,6 @@ def test_bench_compact_query_packer_keeps_prev_names_and_budget():
     # The rest of the space went to the slowest entries.
     assert "entry_119" in compact["queries"]
     assert len(compact["queries"]) > 3
-
-
-def test_bench_core_drift_adjudicator():
-    """r15 (VERDICT r13 #2 via r14 #1): core-total drift on a quiet box
-    triggers bounded isolated re-runs and a residual verdict; a contended
-    box (ambient > 1.0) or an under-threshold total does not."""
-    sys.path.insert(0, REPO)
-    import bench
-
-    core = [f"c{i}" for i in range(8)]
-    prev_q = {q: 1.0 for q in core}
-    # Broad +30% drift, each entry under the 2x per-entry tripwire.
-    timings = {q: 1.3 for q in core}
-    reruns = []
-
-    def rerun(name):
-        reruns.append(name)
-        return 1.0  # isolated numbers land back at baseline
-
-    block = bench._adjudicate_core_drift(
-        10.4, 8.0, 0.95, timings, prev_q, rerun, core
-    )
-    assert block["triggered"] is True
-    assert len(reruns) == bench._MAX_CORE_DRIFT_RERUNS
-    assert len(block["rows"]) == bench._MAX_CORE_DRIFT_RERUNS
-    # 5 of 8 entries re-measured at 1.0 explains 1.5s: residual 8.9 ≤ 8.8
-    # fails... residual = 10.4 - 5*0.3 = 8.9 > 8.0*1.10 = 8.8 → still real.
-    assert block["residual_core_total"] == 8.9
-    assert block["drift_real"] is True
-    # Quiet box, small drift: no trigger, ratio still stamped.
-    block = bench._adjudicate_core_drift(
-        8.2, 8.0, 0.95, timings, prev_q, lambda n: 1.0, core
-    )
-    assert block["triggered"] is False and block["ratio"] == 1.025
-    # Contended box: the ambient ratio already explains the drift.
-    block = bench._adjudicate_core_drift(
-        10.4, 8.0, 1.3, timings, prev_q, lambda n: 1.0, core
-    )
-    assert block["triggered"] is False
-    # No baseline, or a subset run that didn't time the core set: None.
-    assert bench._adjudicate_core_drift(
-        10.4, None, 0.95, timings, prev_q, lambda n: 1.0, core
-    ) is None
-    assert bench._adjudicate_core_drift(
-        10.4, 8.0, 0.95, {"c0": 1.3}, prev_q, lambda n: 1.0, core
-    ) is None
 
 
 def test_entry_returns_rows(spark, sf_dir_small):
@@ -569,10 +344,9 @@ def test_bench_emits_json_line(tmp_path):
     assert out.returncode == 0, out.stderr[-2000:]
     line = out.stdout.strip().splitlines()[-1]
     # The printed line is the driver's bounded-tail capture target (a
-    # measured 2000-char tail; _LINE_BUDGET leaves slack for trailing
-    # shutdown noise — see bench.py's module docstring).
-    import bench
-    assert len(line) <= bench._LINE_BUDGET
+    # measured 2000-char tail; harness.LINE_BUDGET leaves slack for trailing
+    # shutdown noise).
+    assert len(line) <= harness.LINE_BUDGET
     payload = json.loads(line)
     assert payload["metric"] == "headline_total"
     assert payload["unit"] == "sec"
@@ -582,12 +356,14 @@ def test_bench_emits_json_line(tmp_path):
     # Self-adjudication keys (VERDICT r07 #1/#2) ride the compact line so
     # the driver-recorded BENCH artifact carries them.
     for key in ("core_total", "prefix_total", "prev_core_total",
-                "prev_prefix_total", "drain_sums", "n_regressions"):
+                "prev_prefix_total", "drain_sums", "n_regressions",
+                "n_flagged", "n_adjudicated"):
         assert key in payload, f"compact line lost {key}"
+    assert payload["cpus"] == 4
     # The FULL per-query map lands in the file.
     full = json.loads(bench_out.read_text())
     assert set(full["queries"]) == {"q6_forecast_revenue", "dedup_exact_keep_first"}
-    assert full["value"] == payload["value"]
+    assert full["value"] == payload["value"] and full["cpus"] == 4
     # And the official artifact is bit-identical to before the run.
     after = open(official, "rb").read() if os.path.exists(official) else None
     assert after == before, "bench run clobbered the official bench_result.json"

@@ -44,17 +44,17 @@ def test_memo_key_carries_fixture_content_identity(spark, sf_dir_small):
 
 
 def test_bench_memo_clear_scoped_to_participating_entries(spark):
-    """ADVICE r06: bench best-of-N re-runs must clear a shared-drain memo
+    """Harness best-of-N re-runs must clear a shared-drain memo
     only for entries that READ it — an intervening entry's re-runs wiping
     the funnel memo made the pair's series order-dependent (the second
     reader re-paid a full drain instead of the documented checkpoint
     read)."""
-    import bench
+    import harness
 
     lifetime.shared(spark, "funnel", "sentinel", lambda: ("sink", "ckpt"))
-    bench._clear_entry_memos("q1_pricing_summary")  # non-participant
+    harness.clear_entry_memos("q1_pricing_summary")  # non-participant
     assert _memo(spark), "non-participant re-run wiped the memo"
-    bench._clear_entry_memos("funnel_state_scan")  # participant
+    harness.clear_entry_memos("funnel_state_scan")  # participant
     assert not _memo(spark)
 
 

@@ -1,11 +1,13 @@
 """scalecheck.py side-machinery (VERDICT r06 #5-6): the round-over-round
-Spark-seconds regression tripwire and the self-refreshing PARITY.md
+Spark-seconds regression tripwire (harness.adjudicate over the previous
+SCALECHECK artifact) and the self-refreshing PARITY.md
 scale-up note (two consecutive rounds saw that paragraph cite a stale
 artifact — it is now generated at artifact-write time and pinned here)."""
 
 import json
 import os
 
+import harness
 import scalecheck
 
 
@@ -27,26 +29,25 @@ def test_previous_artifact_picks_newest_below_round(tmp_path):
     root = str(tmp_path)
     _write_artifact(root, 5, {"a": 1.0})
     _write_artifact(root, 6, {"a": 2.0})
-    prev = scalecheck.previous_artifact(7, root=root)
-    assert prev["_round"] == 6
+    assert harness.newest_artifact("SCALECHECK", 7, root)[0] == 6
     # never reads the round being written (a crashed re-run would self-diff)
-    prev = scalecheck.previous_artifact(6, root=root)
-    assert prev["_round"] == 5
-    assert scalecheck.previous_artifact(5, root=root) is None
+    rnd, prev = harness.newest_artifact("SCALECHECK", 6, root)
+    assert rnd == 5 and prev["entry_spark_s"] == {"a": 1.0}
+    assert harness.newest_artifact("SCALECHECK", 5, root) is None
 
 
 def test_previous_artifact_none_cases(tmp_path):
-    assert scalecheck.previous_artifact(7, root=str(tmp_path)) is None
+    assert harness.newest_artifact("SCALECHECK", 7, str(tmp_path)) is None
     bad = tmp_path / "SCALECHECK_r03.json"
     bad.write_text("{not json")
-    assert scalecheck.previous_artifact(7, root=str(tmp_path)) is None
+    assert harness.newest_artifact("SCALECHECK", 7, str(tmp_path)) is None
 
 
 def test_spark_regressions_flags_only_real_growth():
-    prev = {"entry_spark_s": {
+    prev = {
         "fast": 0.1, "slow": 2.0, "gone": 1.0, "tiny_prev": 0.01,
         "real_jump": 0.3,
-    }}
+    }
     cur = {
         "fast": 0.4,       # 4x but under the 0.5 s floor -> noise
         "slow": 5.0,       # 2.5x above floor -> flagged
@@ -54,20 +55,20 @@ def test_spark_regressions_flags_only_real_growth():
         "tiny_prev": 0.9,  # 90x raw, but 1.8x vs the floored denominator
         "real_jump": 5.0,  # 16.7x raw, 10x floored -> flagged
     }
-    out = scalecheck.spark_regressions(cur, prev)
+    out = harness.adjudicate(cur, prev, lambda n: {"isolated_s": 1.0})
     assert [r["entry"] for r in out] == ["real_jump", "slow"]
-    assert out[1]["ratio"] == 2.5
-    assert out[0]["ratio"] == 10.0
-    assert scalecheck.spark_regressions(cur, None) == []
+    assert out[1]["over"] == 1.25  # 2.5x against the 2x threshold
+    assert out[0]["over"] == 5.0   # 10x
+    assert harness.adjudicate(cur, {}, None) == []
 
 
 def test_isolated_spark_s_measures_build_plus_collect(spark, sf_dir_small):
-    """VERDICT r07 #3: the auto-adjudication path must produce a sane
-    best-of-N (build + collect) number for any catalog entry, with the
-    bench memo contract (run 1 keeps memo state, later runs clear the
-    entry's own memos) — pinned on a cheap batch entry."""
-    s = scalecheck.isolated_spark_s(spark, "q6_forecast_revenue", sf_dir_small, 2)
-    assert 0.0 < s < 60.0
+    """The isolated re-run (memos cleared before every run)
+    must produce a sane best-of-N build + collect number for any catalog
+    entry — pinned on a cheap batch entry."""
+    s, _df, rows = harness.best_of(
+        spark, "q6_forecast_revenue", sf_dir_small, "collect", 2)
+    assert 0.0 < s < 60.0 and rows
 
 
 def test_refresh_parity_note_rewrites_marker_block(tmp_path):
@@ -76,50 +77,49 @@ def test_refresh_parity_note_rewrites_marker_block(tmp_path):
         "# head\n\n<!-- scalecheck:begin -->\nstale text r05\n"
         "<!-- scalecheck:end -->\n\ntail\n"
     )
-    result = {"n_entries": 168, "failures": {}, "elapsed_s": 321.5}
+    result = {"n_entries": 168, "failures": {}, "elapsed_s": 321.5, "cpus": 4}
     assert scalecheck.refresh_parity_note(result, 7, root=root)
     text = (tmp_path / "PARITY.md").read_text()
     assert "SCALECHECK_r07.json" in text
     assert "stale text" not in text
     assert "all green" in text
+    # The parallelism cited is the run's stamped cpus, whatever the box.
+    assert "on local[4])" in text
     assert text.startswith("# head")
     assert text.rstrip().endswith("tail")
 
 
 def test_refresh_parity_note_best_effort_without_markers(tmp_path):
     (tmp_path / "PARITY.md").write_text("no markers here\n")
-    result = {"n_entries": 1, "failures": {}, "elapsed_s": 1.0}
+    result = {"n_entries": 1, "failures": {}, "elapsed_s": 1.0, "cpus": 4}
     assert not scalecheck.refresh_parity_note(result, 7, root=str(tmp_path))
     assert (tmp_path / "PARITY.md").read_text() == "no markers here\n"
     assert not scalecheck.refresh_parity_note(result, 7, root=str(tmp_path / "x"))
 
 
 def test_parity_paragraph_reports_failures_loudly():
-    bad = {"n_entries": 168, "failures": {"q": "boom"}, "elapsed_s": 10.0}
+    bad = {"n_entries": 168, "failures": {"q": "boom"}, "elapsed_s": 10.0,
+           "cpus": 8}
     assert "1 FAILURES" in scalecheck.parity_paragraph(bad, 7)
+    assert "local[8]" in scalecheck.parity_paragraph(bad, 7)
 
 
 def test_repo_parity_note_cites_newest_artifact_on_disk():
     """Doc/artifact agreement (VERDICT r06 #1 wants this impossible to
     drift): the round number cited inside PARITY.md's marker block must be
     the newest SCALECHECK artifact present in the repo."""
-    import glob
     import re
 
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    arts = [
-        int(re.search(r"SCALECHECK_r(\d+)\.json$", p).group(1))
-        for p in glob.glob(os.path.join(root, "SCALECHECK_r*.json"))
-    ]
-    if not arts:
+    newest = harness.newest_artifact("SCALECHECK")
+    if newest is None:
         return
-    with open(os.path.join(root, "PARITY.md")) as fh:
+    with open(os.path.join(harness.ROOT, "PARITY.md")) as fh:
         text = fh.read()
     begin, end = scalecheck.PARITY_MARK
     block = text.split(begin, 1)[1].split(end, 1)[0]
     cited = re.search(r"SCALECHECK_r(\d+)\.json", block)
     assert cited, "PARITY scale-up note lost its artifact citation"
-    assert int(cited.group(1)) == max(arts)
+    assert int(cited.group(1)) == newest[0]
 
 
 def test_forced_sink_entry_is_a_kv_drain_oracle():

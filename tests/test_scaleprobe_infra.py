@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+import harness  # noqa: E402
 import scaleprobe  # noqa: E402
 
 
@@ -126,16 +127,11 @@ def test_probe_base_sanity_flags_contaminated_runs():
     """r10 lesson codified: a 1x pass that ran during heavy ambient IO
     inflates every base and UNDERSTATES ratios — the probe must adjudicate
     its own bases against the previous round's."""
-    import scaleprobe
-
     prev = {f"e{i}": 1.0 for i in range(6)}
     clean = {f"e{i}": 1.1 for i in range(6)}
     dirty = {f"e{i}": 3.2 for i in range(6)}
     s = scaleprobe.base_sanity(clean, prev)
-    assert s == {
-        "median_base_ratio_vs_prev": 1.1, "n_common": 6,
-        "contaminated": False,
-    }
+    assert s == {"median_base_ratio_vs_prev": 1.1, "contaminated": False}
     assert scaleprobe.base_sanity(dirty, prev)["contaminated"] is True
     # one genuinely-slowed entry must not flag a clean run (median)
     mixed = dict(clean, e0=9.0)
@@ -151,48 +147,45 @@ def test_probe_base_sanity_flags_contaminated_runs():
 def test_previous_probe_bases_reads_factor_tagged_artifacts(tmp_path):
     import json
 
-    import scaleprobe
-
     root = str(tmp_path)
-    art = {"entries": {"a": {"base_s": 1.5}, "b": {"base_s": 2.0}}}
+    art = {"entries": {"a": {"base_s": 1.5}, "b": {"base_s": 2.0}, "c": 3}}
     with open(tmp_path / "SCALEPROBE100x_r09.json", "w") as fh:
         json.dump(art, fh)
     with open(tmp_path / "SCALEPROBE_r09.json", "w") as fh:
         json.dump({"entries": {"a": {"base_s": 9.9}}}, fh)
-    assert scaleprobe.previous_probe_bases(10, 100, root=root) == {
-        "a": 1.5, "b": 2.0,
-    }
-    assert scaleprobe.previous_probe_bases(10, 10, root=root) == {"a": 9.9}
+
+    def bases(rnd, factor):
+        rows = scaleprobe.previous_probe_entries(rnd, factor, root=root)
+        return {k: v["base_s"] for k, v in rows.items()}
+
+    assert bases(10, 100) == {"a": 1.5, "b": 2.0}
+    assert bases(10, 10) == {"a": 9.9}
     # never reads the round being written
-    assert scaleprobe.previous_probe_bases(9, 100, root=root) == {}
+    assert bases(9, 100) == {}
+
+
+def _fake_best_of(monkeypatch, calls=None, scaled=1.0, base=1.0):
+    def fake(spark, name, sf_dir, action="noop", runs=harness.RUNS, **kw):
+        if calls is not None:
+            calls.append((name, sf_dir, runs))
+        return (scaled if sf_dir == "SCALED" else base), None, 0
+
+    monkeypatch.setattr(harness, "best_of", fake)
 
 
 def test_adjudicate_spread_reruns_only_bounded_drifts(monkeypatch):
-    """VERDICT r10 #2 + r11 #3: a >2x round-over-round ratio drift gets an
-    isolated best-of-2 re-run stamped into the row; stable entries and
-    entries with no prior ratio don't. An over-budget drift (scaled side
-    past the 120 s best-of-2 budget but under the single-run ceiling) gets
-    the once-per-run SINGLE-pass exemption; past the ceiling stays
-    unadjudicated."""
-    import scaleprobe
-
+    """A >2x round-over-round ratio drift either way gets
+    isolated best-of-N re-runs of both sides stamped into the row; stable
+    entries and entries with no prior ratio don't."""
     calls = []
-
-    def fake_isolated(spark, name, sf_dir, n_runs=2):
-        calls.append((name, sf_dir, n_runs))
-        return 2.0 if sf_dir == "SCALED" else 0.5
-
-    monkeypatch.setattr(scaleprobe, "isolated_probe_s", fake_isolated)
+    _fake_best_of(monkeypatch, calls, scaled=2.0, base=0.5)
     rows = {
         # drifted 3x up vs prev -> adjudicated
         "drifted": {"ratio": 18.0, "scaled_s": 30.0, "base_s": 1.0},
         # stable -> untouched
         "stable": {"ratio": 6.0, "scaled_s": 30.0, "base_s": 1.0},
-        # the r11 session-append case: over the best-of-2 budget, under
-        # the single-run ceiling -> SINGLE isolated pass per side
+        # a slow scaled side is re-run like any other
         "heavy": {"ratio": 90.0, "scaled_s": 400.0, "base_s": 1.0},
-        # past even the single-run ceiling -> noted, never re-run
-        "immense": {"ratio": 95.0, "scaled_s": 900.0, "base_s": 1.0},
         # no prior ratio -> untouched
         "fresh": {"ratio": 50.0, "scaled_s": 30.0, "base_s": 1.0},
         # drifted DOWN 3x -> adjudicated (spread cuts both directions)
@@ -202,68 +195,33 @@ def test_adjudicate_spread_reruns_only_bounded_drifts(monkeypatch):
         "drifted": {"ratio": 6.0},
         "stable": {"ratio": 6.07},
         "heavy": {"ratio": 17.0},
-        "immense": {"ratio": 17.0},
         "sunk": {"ratio": 6.5},
     }
-    n = scaleprobe.adjudicate_spread(None, rows, prev, "BASE", "SCALED")
-    assert n == 3
+    adj = scaleprobe.adjudicate_spread(None, rows, prev, "BASE", "SCALED")
+    assert [a["entry"] for a in adj] == ["heavy", "sunk", "drifted"]
     assert {c[0] for c in calls} == {"drifted", "sunk", "heavy"}
     assert {c[1] for c in calls} == {"BASE", "SCALED"}
+    assert all(c[2] == harness.RUNS for c in calls)
     assert rows["drifted"]["isolated_ratio"] == 4.0
     assert rows["drifted"]["prev_ratio"] == 6.0
-    assert "spread_note" in rows["drifted"]
     assert "isolated_ratio" not in rows["stable"]
     assert "isolated_ratio" not in rows["fresh"]
-    # over-budget exemption: single run (n_runs=1) per side, labeled
-    assert rows["heavy"]["isolated_ratio"] == 4.0
-    assert "SINGLE isolated pass" in rows["heavy"]["spread_note"]
-    assert all(c[2] == 1 for c in calls if c[0] == "heavy")
-    assert all(c[2] == 2 for c in calls if c[0] != "heavy")
-    # past the ceiling: unadjudicated with the ceiling note
-    assert "isolated_ratio" not in rows["immense"]
-    assert "single-run ceiling" in rows["immense"]["spread_note"]
-    assert rows["immense"]["prev_ratio"] == 17.0
-
-
-def test_adjudicate_spread_overbudget_exemption_is_once_per_run(monkeypatch):
-    """Two over-budget drifts: only the WORST gets the single-run slot;
-    the other carries the lost-the-slot note."""
-    import scaleprobe
-
-    calls = []
-    monkeypatch.setattr(
-        scaleprobe, "isolated_probe_s",
-        lambda spark, name, sf_dir, n_runs=2: (calls.append(name), 1.0)[1],
-    )
-    rows = {
-        "worse": {"ratio": 50.0, "scaled_s": 200.0, "base_s": 1.0},
-        "bad": {"ratio": 20.0, "scaled_s": 200.0, "base_s": 1.0},
-    }
-    prev = {"worse": {"ratio": 5.0}, "bad": {"ratio": 5.0}}
-    n = scaleprobe.adjudicate_spread(None, rows, prev, "B", "S")
-    assert n == 1
-    assert set(calls) == {"worse"}
-    assert "isolated_ratio" in rows["worse"]
-    assert "isolated_ratio" not in rows["bad"]
-    assert "took the single-run exemption" in rows["bad"]["spread_note"]
 
 
 def test_adjudicate_spread_bounds_rerun_count(monkeypatch):
-    import scaleprobe
-
-    monkeypatch.setattr(
-        scaleprobe, "isolated_probe_s", lambda *a, **k: 1.0
-    )
+    _fake_best_of(monkeypatch)
+    n = harness.RERUN_CAP + 1
     rows = {
         f"e{i}": {"ratio": 10.0 * (i + 3), "scaled_s": 5.0, "base_s": 1.0}
-        for i in range(6)
+        for i in range(n)
     }
-    prev = {f"e{i}": {"ratio": 1.0} for i in range(6)}
-    n = scaleprobe.adjudicate_spread(None, rows, prev, "B", "S")
-    assert n == scaleprobe._MAX_SPREAD_ADJUDICATIONS
-    # the WORST drifts were the ones adjudicated
+    prev = {f"e{i}": {"ratio": 1.0} for i in range(n)}
+    adj = scaleprobe.adjudicate_spread(None, rows, prev, "B", "S")
+    assert sum(1 for a in adj if "note" not in a) == harness.RERUN_CAP
+    # the WORST drifts were the ones adjudicated; the other carries a note
     adjudicated = {k for k, r in rows.items() if "isolated_ratio" in r}
-    assert adjudicated == {"e3", "e4", "e5"}
+    assert adjudicated == {f"e{i}" for i in range(1, n)}
+    assert "re-run slots" in rows["e0"]["note"]
 
 
 def test_adjudicate_spread_prefers_adjudicated_baseline(monkeypatch):
@@ -272,11 +230,7 @@ def test_adjudicate_spread_prefers_adjudicated_baseline(monkeypatch):
     re-trigger adjudication against the old noisy sweep ratio, and a real
     drift vs the adjudicated value must flag even if it lands near the
     old noise."""
-    import scaleprobe
-
-    monkeypatch.setattr(
-        scaleprobe, "isolated_probe_s", lambda *a, **k: 1.0
-    )
+    _fake_best_of(monkeypatch)
     rows = {
         # r10 case: noisy sweep 17.94 was adjudicated to 8.0; this round's
         # clean 7.0 sweep is within 2x of 8.0 -> NO re-adjudication
@@ -289,8 +243,8 @@ def test_adjudicate_spread_prefers_adjudicated_baseline(monkeypatch):
         "healthy": {"ratio": 17.94, "isolated_ratio": 8.0},
         "regressed": {"ratio": 18.0, "isolated_ratio": 8.0},
     }
-    n = scaleprobe.adjudicate_spread(None, rows, prev, "B", "S")
-    assert n == 1
+    adj = scaleprobe.adjudicate_spread(None, rows, prev, "B", "S")
+    assert [a["entry"] for a in adj] == ["regressed"]
     assert "isolated_ratio" not in rows["healthy"]
     assert rows["regressed"]["prev_ratio"] == 8.0
     assert "isolated_ratio" in rows["regressed"]
@@ -298,23 +252,25 @@ def test_adjudicate_spread_prefers_adjudicated_baseline(monkeypatch):
 
 def test_adjudicate_spread_never_raises_on_degenerate_rows(monkeypatch):
     """'Never raises' includes a sweep ratio that rounded to 0.0 (a
-    memo-served read) and prev rows with junk values — hours of 1000x
-    probe work sit behind this function's return."""
-    import scaleprobe
+    memo-served read), prev rows with junk values and a re-run that
+    raises — hours of 1000x probe work sit behind this function's return."""
+    def boom(*a, **k):
+        raise RuntimeError("rerun boom")
 
-    monkeypatch.setattr(
-        scaleprobe, "isolated_probe_s", lambda *a, **k: 1.0
-    )
+    monkeypatch.setattr(harness, "best_of", boom)
     rows = {
         "zero_ratio": {"ratio": 0.0, "scaled_s": 30.0, "base_s": 30.0},
         "junk_prev": {"ratio": 5.0, "scaled_s": 30.0, "base_s": 1.0},
         "zero_prev": {"ratio": 5.0, "scaled_s": 30.0, "base_s": 1.0},
+        "raises": {"ratio": 30.0, "scaled_s": 30.0, "base_s": 1.0},
     }
     prev = {
         "zero_ratio": {"ratio": 6.0},
         "junk_prev": {"ratio": "n/a"},
         "zero_prev": {"ratio": 0.0},
+        "raises": {"ratio": 5.0},
     }
-    n = scaleprobe.adjudicate_spread(None, rows, prev, "B", "S")
-    assert n == 0
+    adj = scaleprobe.adjudicate_spread(None, rows, prev, "B", "S")
+    assert [a["entry"] for a in adj] == ["raises"]
+    assert "rerun boom" in rows["raises"]["note"]
     assert all("isolated_ratio" not in r for r in rows.values())

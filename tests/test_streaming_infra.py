@@ -101,15 +101,15 @@ def test_unnamed_query_fallback(spark, sf_dir_small, tmp_path):
 
 
 def test_state_provider_unload_between_drains(spark, sf_dir_small, tmp_path):
-    """bench.py / scalecheck.py reset each measurement to a clean provider
-    slate via Spark's session-shutdown hook (StateStore.stop). Pin two
-    things: (a) the internal JVM path the helper depends on — the helper
+    """harness.py resets each bench/scalecheck/scaleprobe measurement to a
+    clean provider slate via Spark's session-shutdown hook
+    (StateStore.stop). Pin two things: (a) the internal JVM path the helper depends on — the helper
     itself swallows errors by design, so a Spark upgrade that moves the
     class would silently degrade the harness back to accumulate-mode; this
     call fails loudly instead — and (b) behavior-neutrality: a stateful
     drain AFTER an unload re-loads providers lazily and produces the same
     result as the drain before it."""
-    from bench import _unload_state_providers
+    from harness import unload_state_providers
 
     def drain(ckpt: str) -> dict:
         events = read_stream(spark, sf_dir_small, "events")
@@ -131,7 +131,7 @@ def test_state_provider_unload_between_drains(spark, sf_dir_small, tmp_path):
     assert before, "first drain produced no rows"
     # (a) the exact JVM path, NOT the swallowing helper:
     spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-    _unload_state_providers(spark)  # helper itself also runs clean
+    unload_state_providers(spark)  # helper itself also runs clean
     # (b) providers re-load on demand; results identical:
     assert drain(str(tmp_path / "ckpt2")) == before
 
