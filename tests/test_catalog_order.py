@@ -1,8 +1,11 @@
-"""Computed verification order (catalog.py, VERDICT r04 #7): the driver
-samples a prefix of ``queries()``, so the ordering logic is contract surface.
-These tests pin the priority rules against synthetic verdict histories."""
+"""Verification order (catalog.py): the driver samples a prefix of
+``queries()``, so the ordering rule is contract surface. These tests pin it
+against synthetic verdict histories."""
 
+import importlib.util
 import json
+import os
+import subprocess
 
 from spark_states_spark import catalog
 
@@ -57,345 +60,43 @@ def test_never_verified_entries_lead_the_order():
     assert set(order[: len(never)]) == never
 
 
-def test_touched_entries_best_effort_on_bad_root(tmp_path):
-    assert catalog.touched_entries(str(tmp_path)) == set()
-
-
-def test_touched_entries_subset_of_registry():
-    assert catalog.touched_entries() <= set(catalog.QUERIES)
-
-
-def test_toplevel_spans_cover_decorators_assigns_and_defs():
-    import ast
-
-    src = (
-        "X = 1\n"
-        "\n"
-        "@deco(\n"
-        "    'arg',\n"
-        ")\n"
-        "def f():\n"
-        "    return X\n"
-        "\n"
-        "def g():\n"
-        "    return 2\n"
-    )
-    spans = catalog._toplevel_spans(ast.parse(src))
-    assert spans["X"] == (1, 1)
-    assert spans["f"] == (3, 7)  # decorator line starts the span
-    assert spans["g"] == (9, 10)
-
-
-def test_changed_toplevel_names_propagates_references(tmp_path):
-    """A hunk on a module-level helper touches the defs that reference it,
-    transitively, and nothing else."""
-    import subprocess
-
-    def git(*a):
-        subprocess.run(["git", *a], cwd=tmp_path, check=True, capture_output=True)
-
-    git("init", "-q")
-    git("config", "user.email", "t@t")
-    git("config", "user.name", "t")
-    mod = tmp_path / "m.py"
-    mod.write_text("K = 1\n\ndef uses_k():\n    return K\n\ndef chain():\n    return uses_k()\n\ndef other():\n    return 2\n")
-    git("add", "m.py")
-    git("commit", "-q", "-m", "round 0: base")
-    # change only the helper constant
-    mod.write_text("K = 2\n\ndef uses_k():\n    return K\n\ndef chain():\n    return uses_k()\n\ndef other():\n    return 2\n")
-    base = subprocess.run(
-        ["git", "log", "--grep", "^round [0-9]*:", "-n", "1", "--format=%H"],
-        cwd=tmp_path, capture_output=True, text=True,
-    ).stdout.strip()
-    changed = catalog._changed_toplevel_names(str(tmp_path), base, "m.py")
-    assert changed == {"K", "uses_k", "chain"}
-
-
-def test_changed_toplevel_names_none_on_unparseable(tmp_path):
-    assert (
-        catalog._changed_toplevel_names(str(tmp_path), "HEAD", "missing.py") is None
-    )
-
-
 def test_freshness_table_mentions_every_entry():
     table = catalog.freshness_table()
     for name in catalog.QUERIES:
         assert f"| {name} |" in table
 
 
-def test_every_query_has_a_module():
-    assert set(catalog.MODULES) == set(catalog.QUERIES)
-
-def test_import_graph_resolves_relative_and_absolute_imports():
-    g = catalog._internal_import_graph()
-    sq = "spark_states_spark.streaming.queries"
-    # from .runner import ... (level-1 relative in a submodule)
-    assert "spark_states_spark.streaming.runner" in g[sq]
-    # from ..sources import staged_chunks (level-2, name is an attribute)
-    assert "spark_states_spark.sources" in g[sq]
-    # the registry node must not act as a dependency hub: it imports every
-    # registering module for side effects, which would otherwise connect
-    # everything to everything
-    assert g["spark_states_spark.catalog"] == set()
-
-
-def test_infra_change_propagates_to_importing_modules_entries():
-    """ADVICE r05 (medium): a changed module that registers no entries
-    (runner.py & co.) must mark the entries of registering modules that
-    transitively import it — otherwise the driver's sampling window can
-    skip entries whose behavior actually changed."""
-    g = catalog._internal_import_graph()
-    runner = "spark_states_spark.streaming.runner"
-    sq = "spark_states_spark.streaming.queries"
-    assert catalog._reaches(g, sq, {runner})
-    # relational must NOT reach runner except through the pruned registry hub
-    rel = "spark_states_spark.operators.relational"
-    assert not catalog._reaches(g, rel, {runner})
-
-
-def test_staleness_outranks_touched_within_order(monkeypatch):
-    """The external verdict age is primary; code-touched only tie-breaks
-    within a round — an infra edit marking 50+ fresh-green entries must not
-    crowd the stale tail out of the driver's 50-entry sample."""
-    greens = {"stale_old": 1, "touched_new": 5, "plain_new": 5}
+def test_verification_order_is_never_green_then_oldest_green(monkeypatch):
     monkeypatch.setattr(catalog, "QUERIES", {
-        "plain_new": None, "touched_new": None, "stale_old": None, "never": None,
+        "fresh": None, "tie_a": None, "never": None, "stale": None, "tie_b": None,
     })
-    order = catalog.verification_order(
-        greens=greens, touched={"touched_new"}
+    # "gone" is a history name without a registry entry: ignored
+    greens = {"fresh": 9, "tie_a": 4, "stale": 2, "tie_b": 4, "gone": 1}
+    order = catalog.verification_order(greens)
+    assert order == ["never", "stale", "tie_a", "tie_b", "fresh"]
+
+
+def test_verification_order_without_history_is_registration_order():
+    assert catalog.verification_order({}) == list(catalog.QUERIES)
+
+
+def test_driver_contract_needs_no_git(monkeypatch):
+    """queries() must not shell out: the driver's sandbox may have no git."""
+    calls = []
+
+    def boom(*args, **kwargs):
+        calls.append(args)
+        raise OSError("no subprocess in the driver sandbox")
+
+    monkeypatch.setattr(subprocess, "run", boom)
+    monkeypatch.setattr(subprocess, "Popen", boom)
+    assert set(catalog.ordered_queries()) == set(catalog.QUERIES)
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location(
+        "__spark_entry__", os.path.join(root, "__spark_entry__.py")
     )
-    assert order == ["never", "stale_old", "touched_new", "plain_new"]
-
-
-def test_touched_quota_promotes_into_window_tail(monkeypatch):
-    """ADVICE r06: code-touched entries that staleness alone would leave
-    outside the driver window get the bounded reserved tail slots —
-    NEWEST green round first (those wait longest for an external look);
-    displaced fresh rows slide to just past the window."""
-    monkeypatch.setattr(catalog, "_DRIVER_WINDOW", 4)
-    monkeypatch.setattr(catalog, "_TOUCHED_QUOTA", 2)
-    # 6 green entries: rounds 1..6; touched = the two freshest (rounds 5, 6),
-    # which staleness-first would rank LAST (outside the 4-slot window).
-    greens = {f"e{r}": r for r in range(1, 7)}
-    monkeypatch.setattr(
-        catalog, "QUERIES", {f"e{r}": None for r in range(1, 7)}
-    )
-    order = catalog.verification_order(
-        greens=greens, touched={"e5", "e6"}
-    )
-    # Window: two most-stale keep their slots, then the promoted touched
-    # pair newest-first; displaced e3/e4 lead the remainder.
-    assert order == ["e1", "e2", "e6", "e5", "e3", "e4"]
-
-
-def test_touched_quota_is_bounded(monkeypatch):
-    """An infra-wide touch marking every fresh entry must displace at most
-    _TOUCHED_QUOTA rows from the window."""
-    monkeypatch.setattr(catalog, "_DRIVER_WINDOW", 4)
-    monkeypatch.setattr(catalog, "_TOUCHED_QUOTA", 1)
-    greens = {f"e{r}": r for r in range(1, 9)}
-    monkeypatch.setattr(
-        catalog, "QUERIES", {f"e{r}": None for r in range(1, 9)}
-    )
-    order = catalog.verification_order(
-        greens=greens, touched={"e5", "e6", "e7", "e8"}
-    )
-    # Only ONE slot is ceded, to the NEWEST-green touched outsider (e8);
-    # the rest of the stale tail holds and displaced e4 leads the rest.
-    assert order[:4] == ["e1", "e2", "e3", "e8"]
-    assert order[4] == "e4"
-
-
-def test_touched_quota_never_displaces_tier0_rows(monkeypatch):
-    """Never-externally-green entries keep their window slots
-    unconditionally — victims come only from GREEN window rows
-    (judge-review r07 finding)."""
-    monkeypatch.setattr(catalog, "_DRIVER_WINDOW", 3)
-    monkeypatch.setattr(catalog, "_TOUCHED_QUOTA", 2)
-    # window = [never1, never2, stale_green]; outsiders: two touched plus
-    # enough untouched greens that the touched signal stays below the
-    # saturation guard (2 of 5 greens).
-    greens = {"stale_green": 2, "touched_a": 4, "touched_b": 5,
-              "plain_a": 6, "plain_b": 6}
-    monkeypatch.setattr(catalog, "QUERIES", {
-        "never1": None, "never2": None,
-        "stale_green": None, "touched_a": None, "touched_b": None,
-        "plain_a": None, "plain_b": None,
-    })
-    order = catalog.verification_order(
-        greens=greens, touched={"touched_a", "touched_b"}
-    )
-    # Only ONE green row is displaceable, so only one promotion fires
-    # (the newest-green touched); both tier-0 rows keep their slots.
-    assert order[:3] == ["never1", "never2", "touched_b"]
-    assert order[3] == "stale_green"
-
-
-def test_verification_order_quota_invariants_hold_on_random_histories(
-    monkeypatch,
-):
-    """Property check over random green/touched histories: the order is
-    always a permutation, never-verified entries always occupy the
-    leading slots they'd have without the quota, at most _TOUCHED_QUOTA
-    rows differ from the pure staleness order inside the window, and
-    every promoted row is green + touched."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    W, Q = 6, 2
-    monkeypatch.setattr(catalog, "_DRIVER_WINDOW", W)
-    monkeypatch.setattr(catalog, "_TOUCHED_QUOTA", Q)
-    names = [f"e{i}" for i in range(12)]
-
-    @settings(max_examples=200, deadline=None)
-    @given(
-        greens=st.dictionaries(
-            st.sampled_from(names), st.integers(1, 6), max_size=12
-        ),
-        touched=st.sets(st.sampled_from(names), max_size=12),
-    )
-    def prop(greens, touched):
-        monkeypatch.setattr(catalog, "QUERIES", {n: None for n in names})
-        order = catalog.verification_order(greens=greens, touched=touched)
-        assert sorted(order) == sorted(names)  # permutation
-        never = [n for n in names if n not in greens]
-        # tier-0 rows always keep their window slots
-        window = order[:W]
-        assert set(never[: min(len(never), W)]) <= set(window)
-        # rows that entered the window versus the pure staleness order
-        # are bounded by the quota and are all green + touched
-        pure = [
-            n
-            for _, n in sorted(
-                enumerate({n: None for n in names}),
-                key=lambda it: (
-                    (0, 0, 0, it[0])
-                    if it[1] not in greens
-                    else (1, greens[it[1]], 0 if it[1] in touched else 1, it[0])
-                ),
-            )
-        ]
-        entered = [n for n in window if n not in pure[:W]]
-        assert len(entered) <= Q
-        assert all(n in greens and n in touched for n in entered)
-
-    prop()
-
-
-def test_infra_change_marks_dependent_entries_touched_end_to_end(tmp_path):
-    """ADVICE r05 end-to-end: in a synthetic repo, editing a module that
-    registers nothing (infra) marks touched the entries of the registering
-    module that imports it — and leaves unrelated modules alone."""
-    import subprocess
-
-    def git(*a):
-        subprocess.run(["git", *a], cwd=tmp_path, check=True, capture_output=True)
-
-    pkg = tmp_path / "spark_states_spark"
-    pkg.mkdir()
-    (pkg / "__init__.py").write_text("")
-    (pkg / "infra.py").write_text("def helper():\n    return 1\n")
-    (pkg / "ops.py").write_text(
-        "from .infra import helper\n\ndef q_uses_infra():\n    return helper()\n"
-    )
-    (pkg / "other.py").write_text("def q_other():\n    return 2\n")
-    git("init", "-q")
-    git("config", "user.email", "t@t")
-    git("config", "user.name", "t")
-    git("add", "-A")
-    git("commit", "-q", "-m", "round 0: base")
-    (pkg / "infra.py").write_text("def helper():\n    return 99\n")
-    modules = {
-        "e_infra_dep": "spark_states_spark.ops",
-        "e_unrelated": "spark_states_spark.other",
-    }
-    touched = catalog.touched_entries(str(tmp_path), modules=modules)
-    assert touched == {"e_infra_dep"}
-
-
-def test_package_init_edit_propagates_like_infra(tmp_path):
-    """A package __init__ re-export hub registers nothing but is imported
-    by registering modules ('from .sub import x' via the package): editing
-    it must mark importers' entries touched — the module name needs
-    __init__-normalization to match the import graph's package keys."""
-    import subprocess
-
-    def git(*a):
-        subprocess.run(["git", *a], cwd=tmp_path, check=True, capture_output=True)
-
-    pkg = tmp_path / "spark_states_spark"
-    sub = pkg / "sub"
-    sub.mkdir(parents=True)
-    (pkg / "__init__.py").write_text("")
-    (sub / "__init__.py").write_text("from .impl import helper\n")
-    (sub / "impl.py").write_text("def helper():\n    return 1\n")
-    (pkg / "ops.py").write_text(
-        "from .sub import helper\n\ndef q():\n    return helper()\n"
-    )
-    git("init", "-q")
-    git("config", "user.email", "t@t")
-    git("config", "user.name", "t")
-    git("add", "-A")
-    git("commit", "-q", "-m", "round 0: base")
-    (sub / "__init__.py").write_text(
-        "from .impl import helper as _h\n\ndef helper():\n    return _h() + 1\n"
-    )
-    modules = {"e_dep": "spark_states_spark.ops"}
-    assert catalog.touched_entries(str(tmp_path), modules=modules) == {"e_dep"}
-
-
-def test_touched_quota_skips_on_saturated_signal(monkeypatch):
-    """r12: an infra-module edit (tables.py) propagated 'touched' to the
-    entire catalog, and the quota promoted 5 arbitrary newest-green
-    entries — displacing 2 of the round's stale-rotation targets. When
-    the touched signal saturates (> _TOUCHED_SATURATION of green
-    entries), it carries no per-entry information and promotion must be
-    skipped: pure staleness order wins every slot."""
-    monkeypatch.setattr(catalog, "_DRIVER_WINDOW", 4)
-    monkeypatch.setattr(catalog, "_TOUCHED_QUOTA", 2)
-    greens = {f"e{r}": r for r in range(1, 9)}
-    monkeypatch.setattr(
-        catalog, "QUERIES", {f"e{r}": None for r in range(1, 9)}
-    )
-    # 5 of 8 greens touched (> 0.5 saturation) -> NO promotion at all
-    order = catalog.verification_order(
-        greens=greens, touched={"e4", "e5", "e6", "e7", "e8"}
-    )
-    assert order == [f"e{r}" for r in range(1, 9)]  # pure staleness
-    # exactly at the 0.5 boundary (4 of 8): quota still applies
-    order = catalog.verification_order(
-        greens=greens, touched={"e5", "e6", "e7", "e8"}
-    )
-    assert order[:4] == ["e1", "e2", "e8", "e7"]
-
-
-def test_touched_saturation_is_fraction_of_catalog_not_greens(monkeypatch):
-    """ADVICE r12: the saturation guard denominates over the WHOLE catalog,
-    not the green set — early in a round (tiny green set) a genuinely
-    targeted edit touching 2 of 3 greens is a per-entry signal, not an
-    infra-wide sweep, and promotion must still fire."""
-    monkeypatch.setattr(catalog, "_TOUCHED_QUOTA", 1)
-    # 8-entry catalog, only 3 externally green, 2 of those touched by a
-    # targeted module edit: 2 > 0.5*3 (old green-denominated guard would
-    # skip) but 2 <= 0.5*8 (catalog-denominated guard keeps the quota).
-    monkeypatch.setattr(
-        catalog, "QUERIES", {f"e{r}": None for r in range(1, 9)}
-    )
-    greens = {"e1": 1, "e2": 2, "e3": 3}
-    monkeypatch.setattr(catalog, "_DRIVER_WINDOW", 7)
-    order = catalog.verification_order(greens=greens, touched={"e2", "e3"})
-    # window (7) = 5 tier-0 + 2 greens; pure staleness puts e1, e2 in; the
-    # quota promotes the newest-green touched outsider e3 over freshest
-    # green window row e2.
-    assert "e3" in order[:7]
-    # The numerator counts touched CATALOG entries, green or not (review
-    # r13): an infra-wide touch of all 8 entries must trip the skip even
-    # though touched∩greens (3) never exceeds half the catalog — under
-    # the old touched∩green numerator this skip was unreachable whenever
-    # greens <= half the catalog.
-    order = catalog.verification_order(
-        greens=greens, touched={f"e{r}" for r in range(1, 9)}
-    )
-    tier0 = [n for n in order[:7] if n not in greens]
-    assert len(tier0) == 5  # pure staleness: all tier-0 keep their slots
-    assert order[5:8] == ["e1", "e2", "e3"]  # no promotion reordering
+    entry = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(entry)
+    assert set(entry.queries()) == set(catalog.QUERIES)
+    assert len(catalog.QUERIES) >= 192
+    assert calls == []

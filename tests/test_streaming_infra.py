@@ -136,10 +136,11 @@ def test_state_provider_unload_between_drains(spark, sf_dir_small, tmp_path):
     assert drain(str(tmp_path / "ckpt2")) == before
 
 
-def test_kv_scale_knobs_thresholds(spark):
+def test_kv_scale_knobs_thresholds(spark, monkeypatch):
     """The TTL drains' deployment knobs switch together at _KV_SCALE_ROWS
-    (r09, VERDICT r08 #3): fixture scale keeps the measured optimum
-    (16 parts, memory sink); past it, one state partition per core and the
+    (r09, VERDICT r08 #3): at or below it, the fixture tier's 16 state
+    partitions capped at the core count (r15, _fixture_state_parts) and the
+    memory sink; past it, at least one state partition per core and the
     distributed parquet sink."""
     from spark_states_spark.streaming.queries import (
         _KV_SCALE_ROWS,
@@ -147,11 +148,10 @@ def test_kv_scale_knobs_thresholds(spark):
         _kv_state_parts,
     )
 
-    assert _kv_state_parts(spark, 100_000) == 16
-    assert _kv_sink(100_000) == "memory"
-    assert _kv_state_parts(spark, _KV_SCALE_ROWS) == 16
-    assert _kv_sink(_KV_SCALE_ROWS) == "memory"
-    big = _kv_state_parts(spark, _KV_SCALE_ROWS + 1)
-    assert big >= 16
-    assert big == max(16, spark.sparkContext.defaultParallelism)
+    monkeypatch.delenv("SPARK_GRAFT_FIXTURE_STATE_PARTS", raising=False)
+    cores = spark.sparkContext.defaultParallelism
+    for n_rows in (100_000, _KV_SCALE_ROWS):
+        assert _kv_state_parts(spark, n_rows) == min(16, cores)
+        assert _kv_sink(n_rows) == "memory"
+    assert _kv_state_parts(spark, _KV_SCALE_ROWS + 1) == max(16, cores)
     assert _kv_sink(_KV_SCALE_ROWS + 1) == "parquet"
