@@ -343,27 +343,28 @@ ADAPTIVE_PLAN_ENTRIES = {
     "dedup_cluster_connected_components": _FANOUT_TIER_NOTE,
     "similarity_cosine_topk": _FANOUT_TIER_NOTE,
     "similarity_lsh_ann": _FANOUT_TIER_NOTE,
-    # (the non-probed drain siblings keyed_state_ttl_per_query /
-    # keyed_state_wallclock_infinite share the same tier via the shared
-    # drains; only probed entries are listed here — test_scaleprobe_infra
-    # pins ADAPTIVE_PLAN_ENTRIES ⊆ PROBE_ENTRIES)
+    # (the non-probed drain siblings — keyed_state_ttl_per_query, _strict,
+    # _infinite, _stateless and keyed_state_wallclock_infinite — share the
+    # same tier via the shared drains; only probed entries are listed
+    # here — test_scaleprobe_infra pins ADAPTIVE_PLAN_ENTRIES ⊆
+    # PROBE_ENTRIES)
     "keyed_state_ttl_lazy_bounds": _KV_SINK_TIER_NOTE,
     "keyed_state_wallclock_finite_bounds": _KV_SINK_TIER_NOTE,
     "streaming_interval_join_full_outer": (
-        "size-gated join sink (streaming/queries.py::_ij_sink, r10): the "
+        "size-gated join sink (streaming/queries.py::_kv_sink, r10): the "
         "interval joins' output is O(input rows), so past _KV_SCALE_ROWS "
         "the drain sinks to a distributed exactly-once parquet dir instead "
-        "of a driver-side memory view (the same tier as _kv_sink, same "
+        "of a driver-side memory view (the same tier as the KV drains, same "
         "LocalTableScan -> FileScan flip in the post-drain read); state "
-        "partitions scale with input via _ij_state_parts"
+        "partitions scale with input via _kv_state_parts"
     ),
     "streaming_session_window_append": (
         "size-gated sink (one row per closed session = O(input); same "
-        "_ij_sink tier and FileScan flip as the interval joins, r10)"
+        "_kv_sink tier and FileScan flip as the interval joins, r10)"
     ),
     "streaming_dedup_within_watermark": (
         "size-gated sink (pre-aggregation output is one row per distinct "
-        "(type, user, day) = grows with input; same _ij_sink tier, r10)"
+        "(type, user, day) = grows with input; same _kv_sink tier, r10)"
     ),
     "dedup_embedding_cosine": (
         "triangle-block salting (functions/skew.py::with_triangle_blocks): "

@@ -11,17 +11,20 @@ rows-only checks.
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import SHARED_MEMOS, STAGING_MEMO_TAGS, register
+from ..config import STATE_EXPIRY_SECS, STATE_STRICT_EXPIRE, resolve_ttl
 from ..functions.hashes import DUCK_TOKS, SPARK_TOKS, duck_minhash_cte
 from ..lifetime import own_dir, release, shared
 from ..sources import load_table, read_stream
-from ..sources.tables import fixture_key
+from ..sources.tables import fixture_key, parquet_row_count, table_path
 from .runner import run_stream_to_table
+from .ttl import ttl_kv_ops, ttl_kv_ops_wallclock
 from .windows import streaming_hourly_agg
 
 
@@ -569,7 +572,9 @@ def streaming_chained_agg_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stays at every scale; state parallelism scales with input like the
     # joins' (two stateful operators' buffered windows grow with the
     # fixture's time span).
-    return _with_state_parts(spark, _ij_state_parts(spark, sf_dir), run)
+    return _with_state_parts(
+        spark, _kv_state_parts(spark, _event_rows(sf_dir), STATE_PARTS), run
+    )
 
 
 @register(
@@ -693,15 +698,17 @@ def streaming_session_window_append(spark: SparkSession, sf_dir: str) -> DataFra
         )
         # Output is one row per CLOSED session — O(input/session length),
         # so past the KV size gate it must not collect to the driver
-        # (same tier as _ij_sink; r10).
+        # (same tier as the interval joins; r10).
         return run_stream_to_table(
-            sess, output_mode="append", sink=_ij_sink(sf_dir)
+            sess, output_mode="append", sink=_kv_sink(_event_rows(sf_dir))
         )
 
     # STATE_PARTS state partitions at fixture scale (see
     # streaming_hourly_agg_update: per-batch per-partition store commits
     # dominate chunked replays there), one per core past the size gate.
-    return _with_state_parts(spark, _ij_state_parts(spark, sf_dir), run)
+    return _with_state_parts(
+        spark, _kv_state_parts(spark, _event_rows(sf_dir), STATE_PARTS), run
+    )
 
 
 @register(
@@ -743,11 +750,13 @@ def streaming_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFr
         # — grows with input (the replicas scale users AND the time span),
         # so the sink follows the KV size gate (r10).
         return run_stream_to_table(
-            dd, output_mode="append", sink=_ij_sink(sf_dir)
+            dd, output_mode="append", sink=_kv_sink(_event_rows(sf_dir))
         )
 
     # STATE_PARTS at fixture scale, one per core past the size gate.
-    out = _with_state_parts(spark, _ij_state_parts(spark, sf_dir), run)
+    out = _with_state_parts(
+        spark, _kv_state_parts(spark, _event_rows(sf_dir), STATE_PARTS), run
+    )
     return out.groupBy("event_type").agg(F.count("*").alias("n_user_days"))
 
 
@@ -826,7 +835,7 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     return _with_state_parts(
         spark,
-        _ij_state_parts(spark, sf_dir, fixture_parts=8),
+        _kv_state_parts(spark, _event_rows(sf_dir), 8),
         lambda: _interval_join_run(spark, sf_dir),
     )
 
@@ -863,45 +872,13 @@ def _interval_join_sides(spark: SparkSession, sf_dir: str):
     return p, x, cond
 
 
-def _ij_sink(sf_dir: str) -> str:
-    """Sink for the stream-stream interval joins — the same size gate as
-    the KV drains (see ``_kv_sink``): join output is O(input rows)
-    (matches + null-extended unmatched sides), so past fixture scale the
-    memory sink's driver-side synchronized append would dominate the
-    entry time exactly as it did for the TTL drains at the 100× decade
-    (r09, BASELINE.md). Below the gate the memory sink stays (bounded
-    output, cheaper than a file round trip)."""
-    from ..sources.tables import parquet_row_count, table_path
-
-    return _kv_sink(parquet_row_count(table_path(sf_dir, "events")))
-
-
-def _ij_state_parts(
-    spark: SparkSession, sf_dir: str, fixture_parts: int | None = None
-) -> int:
-    """State partitions for the interval joins and other chunked-replay
-    stateful entries whose state scales with input: the fixture-tuned
-    count (per-batch store open/commit cost dominates at 8-batch replay
-    fixture scale) below the KV size gate, one per core above it —
-    buffered-both-sides join state at a decade needs the parallelism more
-    than it needs the low fixed cost."""
-    from ..sources.tables import parquet_row_count, table_path
-
-    base = STATE_PARTS if fixture_parts is None else fixture_parts
-    n_rows = parquet_row_count(table_path(sf_dir, "events"))
-    if n_rows <= _KV_SCALE_ROWS:
-        # Fixture tier: capped at the core count (r15, _fixture_state_parts).
-        return _fixture_state_parts(spark, base)
-    return max(base, int(spark.sparkContext.defaultParallelism))
-
-
 def _interval_join_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     p, x, cond = _interval_join_sides(spark, sf_dir)
     joined = p.join(x, cond).select(
         "purchase_id", "error_id", F.col("p_user").alias("user_id")
     )
     return run_stream_to_table(
-        joined, output_mode="append", sink=_ij_sink(sf_dir)
+        joined, output_mode="append", sink=_kv_sink(_event_rows(sf_dir))
     )
 
 
@@ -941,14 +918,16 @@ def _interval_join_fo_drained(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce(F.col("p_user"), F.col("x_user")).alias("user_id"),
         )
         return run_stream_to_table(
-            joined, output_mode="append", sink=_ij_sink(sf_dir)
+            joined, output_mode="append", sink=_kv_sink(_event_rows(sf_dir))
         )
 
     return shared(
         spark,
         "interval_fo",
         fixture_key(sf_dir, "events"),
-        lambda: _with_state_parts(spark, _ij_state_parts(spark, sf_dir), run),
+        lambda: _with_state_parts(
+            spark, _kv_state_parts(spark, _event_rows(sf_dir), STATE_PARTS), run
+        ),
     )
 
 
@@ -971,10 +950,12 @@ def _interval_join_solo(spark: SparkSession, sf_dir: str, how: str) -> DataFrame
                 "purchase_id", "error_id", F.col(user_side).alias("user_id")
             )
         return run_stream_to_table(
-            joined, output_mode="append", sink=_ij_sink(sf_dir)
+            joined, output_mode="append", sink=_kv_sink(_event_rows(sf_dir))
         )
 
-    return _with_state_parts(spark, _ij_state_parts(spark, sf_dir), run)
+    return _with_state_parts(
+        spark, _kv_state_parts(spark, _event_rows(sf_dir), STATE_PARTS), run
+    )
 
 
 # Pinned state-partition count for every chunked-replay entry — the
@@ -1028,27 +1009,39 @@ def _with_state_parts(spark: SparkSession, n: int, fn):
 _KV_SCALE_ROWS = 400_000
 
 
-def _kv_state_parts(spark: SparkSession, n_rows: int) -> int:
-    """State-partition count for the keyed-state TTL drains, scaled with
-    input size (VERDICT r08 #3): the drains' cost is per-(binding, key)
-    Python kernel invocations, not bytes. At fixture scale (sf0.1 = 100K
-    events, 1.5K keys/binding) 16 parts beat both 4 (group-skew
+def _event_rows(sf_dir: str) -> int:
+    """The events table's row count — footer metadata, not a scan."""
+    return parquet_row_count(table_path(sf_dir, "events"))
+
+
+def _kv_state_parts(spark: SparkSession, n_rows: int, tuned: int = 16) -> int:
+    """State-partition count for a stateful drain whose state scales with
+    its ``n_rows`` input rows: the fixture-tuned count ``tuned`` at or below
+    the size gate, one per core (at least ``tuned``) above it.
+
+    ``tuned`` defaults to the keyed-state TTL drains' 16 (VERDICT r08 #3):
+    their cost is per-key Python kernel invocations, not bytes. At fixture
+    scale (sf0.1 = 100K events, 1.5K keys) 16 parts beat both 4 (group-skew
     serialization) and 32 (per-batch partition setup overhead — VERDICT
     r05 #4); past ~4× that, kernel calls dominate setup and every core
     should host a state partition (measured at the 100× decade, r09:
-    see BASELINE.md). On a real cluster this knob is
-    ``spark.sql.shuffle.partitions`` sized to executor cores, exactly as
-    here. The fixture tier is additionally capped at the core count
-    (r15, see :func:`_fixture_state_parts`)."""
+    see BASELINE.md). The interval joins and other chunked replays pass
+    their own fixture count (per-batch store open/commit cost dominates an
+    8-batch replay at fixture scale; buffered-both-sides join state at a
+    decade needs the parallelism more than the low fixed cost). On a real
+    cluster this knob is ``spark.sql.shuffle.partitions`` sized to executor
+    cores, exactly as here. The fixture tier is additionally capped at the
+    core count (r15, see :func:`_fixture_state_parts`)."""
     if n_rows <= _KV_SCALE_ROWS:
-        return _fixture_state_parts(spark, 16)
-    return max(16, int(spark.sparkContext.defaultParallelism))
+        return _fixture_state_parts(spark, tuned)
+    return max(tuned, int(spark.sparkContext.defaultParallelism))
 
 
 def _kv_sink(n_rows: int) -> str:
-    """Sink choice for the keyed-state TTL drains, same threshold as
-    :func:`_kv_state_parts` (r09, VERDICT r08 #3): these drains emit one
-    row per get op, so output scales with input. At fixture scale the
+    """Sink choice for a drain whose output scales with its ``n_rows``
+    input rows, same threshold as :func:`_kv_state_parts` (r09, VERDICT
+    r08 #3): the keyed-state TTL drains emit one row per get op, the
+    interval joins one per match or null-extended side. At fixture scale the
     memory sink's driver-side buffer is bounded (≤ ~180 K rows across
     bindings) and ~0.7 s cheaper than a file-sink round trip; past the
     threshold the memory sink collects tens of millions of rows to the
@@ -1062,9 +1055,14 @@ def _kv_sink(n_rows: int) -> str:
     ``SPARK_GRAFT_KV_SINK`` overrides the size gate (VERDICT r09 #3: every
     sf0.01/sf0.1 gate run sits below the threshold, so the production
     parquet path was continuously UNverified at the scales the driver
-    grades — scalecheck now forces one TTL oracle through it per round)."""
+    grades — scalecheck now forces one TTL oracle through it per round);
+    any other non-empty value fails fast."""
     forced = os.environ.get("SPARK_GRAFT_KV_SINK")
-    if forced in ("memory", "parquet"):
+    if forced:
+        if forced not in ("memory", "parquet"):
+            raise ValueError(
+                f"SPARK_GRAFT_KV_SINK={forced!r} is not 'memory' or 'parquet'"
+            )
         return forced
     return "memory" if n_rows <= _KV_SCALE_ROWS else "parquet"
 
@@ -1337,11 +1335,11 @@ def _infinite_fold_oracle(order_by: str) -> str:
     oracle=_infinite_fold_oracle("ts_s, seq"),
 )
 def keyed_state_ttl_infinite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Infinite-TTL keyed state (``ttl = -1``, the reference default): the
-    same applyInPandasWithState kernel as ``keyed_state_ttl``, with state
-    that never expires — a get succeeds iff a put for the key precedes it
-    with no intervening remove."""
-    return _run_ttl_summary(spark, sf_dir, {}, "events_kv_inf")
+    """Infinite-TTL keyed state (``ttl = -1``, the reference default):
+    state never expires — a get succeeds iff a put for the key precedes it
+    with no intervening remove. The 'inf' binding of the shared
+    virtual-clock drain (``_virtual_kv_drained``)."""
+    return _virtual_summary(spark, sf_dir, "inf")
 
 
 # NOTE: through round 4 a rows-only `keyed_state_ttl` entry exercised the
@@ -1400,15 +1398,18 @@ def _strict_ttl_oracle(ttl_s: int) -> str:
     """
 
 
-def _run_ttl_summary(spark: SparkSession, sf_dir: str, conf: dict, name: str) -> DataFrame:
-    """Run the TTL kernel over the events op stream with ``conf`` resolved
-    for query ``name``; return the per-key get-outcome summary."""
-    from ..config import resolve_ttl
-    from .ttl import ttl_kv_ops
-
-    ttl = resolve_ttl(conf, name)
+def _run_ttl_summary(
+    spark: SparkSession, sf_dir: str, conf: dict, name: str, kv_ops
+) -> DataFrame:
+    """One solo drain of the TTL stage builder ``kv_ops`` (``ttl_kv_ops``,
+    or ``ttl_kv_ops_tws`` of streaming/ttl_tws.py) over the events op
+    stream, with ``conf`` resolved for query ``name``; returns the per-key
+    get-outcome summary. Serves the transformWithStateInPandas entries, and
+    is the solo reference the shared virtual drain is differential-tested
+    against."""
     out = run_stream_to_table(
-        ttl_kv_ops(_event_kv_ops(spark, sf_dir), ttl), output_mode="append"
+        kv_ops(_event_kv_ops(spark, sf_dir), resolve_ttl(conf, name)),
+        output_mode="append",
     )
     return _get_outcome_summary(out)
 
@@ -1424,13 +1425,10 @@ def keyed_state_ttl_strict(spark: SparkSession, sf_dir: str) -> DataFrame:
     don't extend; a strict miss drops the key on read,
     ``RocksDbStateStoreProvider.scala:139-146``). Virtual clock = event
     time, so the fold is deterministic and the gap-sessionization oracle
-    (see ``_strict_ttl_oracle``) replays it exactly.
+    (see ``_strict_ttl_oracle``) replays it exactly. The 'strict' binding
+    of the shared virtual-clock drain (``_virtual_kv_drained``).
     """
-    conf = {
-        "spark.sql.streaming.stateStore.stateExpirySecs": str(_STRICT_TTL_SECS),
-        "spark.sql.streaming.stateStore.strictExpire": "true",
-    }
-    return _run_ttl_summary(spark, sf_dir, conf, "events_kv_strict")
+    return _virtual_summary(spark, sf_dir, "strict")
 
 
 @register(
@@ -1453,31 +1451,28 @@ def keyed_state_ttl_strict(spark: SparkSession, sf_dir: str) -> DataFrame:
 def keyed_state_ttl_stateless(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stateless mode (``ttl = 0``): the kernel runs, state is never
     retained, every get misses — the reference's third headline TTL
-    behavior (``RocksDbStateTimeoutSuite.scala:83-102``)."""
-    conf = {"spark.sql.streaming.stateStore.stateExpirySecs": "0"}
-    return _run_ttl_summary(spark, sf_dir, conf, "events_kv_stateless")
+    behavior (``RocksDbStateTimeoutSuite.scala:83-102``). The 'stateless'
+    binding of the shared virtual-clock drain (``_virtual_kv_drained``)."""
+    return _virtual_summary(spark, sf_dir, "stateless")
 
 
 _PER_QUERY_TTLS = {"kv_fast": 3600, "kv_slow": 86400}
 
-# One virtual-clock drain serving the per-query-TTL pair AND the lazy-bounds
-# entry (VERDICT r07 #4, the wall-clock dual-drain pattern at r06 #7): all
-# three bindings ride event-time kernels over the SAME op stream, so running
-# three full chunked drains duplicated pure micro-batch infrastructure.
-# Through r13 each op row was exploded into binding-tagged copies
-# ('kv_fast|'/'kv_slow|'/'lazy|' key prefixes) dispatching each (binding,
-# key) group to its binding's solo kernel; since r14 a COMPOSITE kernel
-# (ttl.make_composite_virtual_kernel, guide §4) processes each bare key
-# once per batch and runs every binding's UNCHANGED production fold
-# (replay_virtual, the single source of truth) against one composite state
-# row — 3× fewer shuffled rows and per-group Python calls, sink contents
-# identical row-for-row (binding-prefixed keys; differential-pinned by
+# One virtual-clock drain serves every virtual-clock TTL entry (VERDICT r07
+# #4, the wall-clock dual-drain pattern at r06 #7): the infinite, strict and
+# stateless entries, the per-query-TTL pair and the lazy-bounds entry are
+# six bindings of ONE ttl_kv_ops stage over the same op stream — one group
+# per bare key and batch, each binding's unchanged fold against its own
+# state slot (streaming/ttl.py) — so the sink holds '<binding>|'-prefixed
+# rows (differential-pinned against solo drains by
 # tests/test_funnel_drain_share.py::test_virtual_drain_bindings_equal_solo_drains).
 #
 # Soundness of sharing one 2-chunk replay across the bindings:
 # - the lazy binding ran 2-chunk solo (_LAZY_BOUNDS_CHUNKS) — identical here;
-# - the STRICT bindings (kv_fast/kv_slow) ran single-batch solo, but strict
-#   outcomes are replay-chunking-INVARIANT: strict expiry is enforced on
+# - infinite never expires and stateless never stores, so neither has a
+#   chunking term;
+# - the STRICT bindings (strict, kv_fast, kv_slow) ran single-batch solo, but
+#   strict outcomes are replay-chunking-INVARIANT: strict expiry is enforced on
 #   read (now - last_access >= ttl misses and drops), and the only chunking
 #   effect — the batch-end sweep dropping a key at a chunk boundary — is
 #   unobservable, because chunks are contiguous in (ts, seq) so any later
@@ -1485,90 +1480,75 @@ _PER_QUERY_TTLS = {"kv_fast": 3600, "kv_slow": 86400}
 #   miss (and strict-drop) anyway. Same argument as the strict oracle being
 #   a pure fold over (ts_s, seq) with no batching term.
 # Shared under the "virtual_kv" lifetime tag, like the wall-clock drain.
-_VIRTUAL_LAZY_BINDING = "lazy"
 
 
-def _virtual_ttl_bindings() -> dict:
-    """Binding name -> resolved TtlConfig, from ONE conf registry spelling
-    per family: the per-query names resolve through stateExpirySecs.<name>
-    (Provider.scala:738-742 semantics), the lazy binding through the plain
-    key — exactly the confs the solo entries used."""
-    from ..config import resolve_ttl
-
-    per_q_conf = {"spark.sql.streaming.stateStore.strictExpire": "true"}
-    for name, ttl in _PER_QUERY_TTLS.items():
-        per_q_conf[f"spark.sql.streaming.stateStore.stateExpirySecs.{name}"] = str(ttl)
-    lazy_conf = {
-        "spark.sql.streaming.stateStore.stateExpirySecs": str(
-            _LAZY_BOUNDS_TTL_SECS
-        )
+def _virtual_ttl_confs() -> dict[str, tuple[dict, str]]:
+    """Binding name -> (conf, query name) of the shared virtual drain —
+    exactly what each entry's solo drain resolved: the per-query names
+    through stateExpirySecs.<name> (Provider.scala:738-742 semantics), the
+    others through the plain key."""
+    strict = {STATE_STRICT_EXPIRE: "true", STATE_EXPIRY_SECS: str(_STRICT_TTL_SECS)}
+    per_q = {
+        STATE_STRICT_EXPIRE: "true",
+        **{f"{STATE_EXPIRY_SECS}.{n}": str(t) for n, t in _PER_QUERY_TTLS.items()},
     }
-    out = {name: resolve_ttl(per_q_conf, name) for name in _PER_QUERY_TTLS}
-    out[_VIRTUAL_LAZY_BINDING] = resolve_ttl(lazy_conf, "events_kv_lazy_bounds")
-    return out
+    return {
+        "inf": ({}, "events_kv_inf"),
+        "strict": (strict, "events_kv_strict"),
+        "stateless": ({STATE_EXPIRY_SECS: "0"}, "events_kv_stateless"),
+        "lazy": (
+            {STATE_EXPIRY_SECS: str(_LAZY_BOUNDS_TTL_SECS)},
+            "events_kv_lazy_bounds",
+        ),
+        **{n: (per_q, n) for n in _PER_QUERY_TTLS},
+    }
 
 
 def _virtual_kv_drained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drain all virtual-clock TTL bindings once per (session, fixture
     generation); returns the combined sink with binding-prefixed keys."""
     from ..sources import chunked_stream
-    from ..sources.tables import parquet_row_count, table_path
-    from .ttl import (
-        OUTPUT_SCHEMA,
-        GroupStateTimeout,
-        composite_state_schema,
-        make_composite_virtual_kernel,
-    )
 
     def drain() -> DataFrame:
-        bindings = _virtual_ttl_bindings()
-
+        bindings = {
+            b: resolve_ttl(conf, q) for b, (conf, q) in _virtual_ttl_confs().items()
+        }
         # The chunked replay leans on the fixture's (ts, event_id) ordering
-        # contract — assert it once, like the solo lazy entry did.
+        # contract — assert it once per drain.
         _assert_event_id_ts_monotone(spark, sf_dir)
         ops = _kv_op_select(
             chunked_stream(
                 spark, sf_dir, "events", n_chunks=_LAZY_BOUNDS_CHUNKS
             )
         )
-        # Composite kernel (r14, guide §4 — see the block comment above):
-        # one group per BARE key, every binding's fold per call; replaces
-        # the binding explode that tripled shuffle rows and Python group
-        # calls.
-        stream = ops.groupBy("key").applyInPandasWithState(
-            make_composite_virtual_kernel(bindings),
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=composite_state_schema(len(bindings)),
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-        # Footer-metadata count (ADVICE r09): the knobs only need the input
-        # size; a full Spark count() scan per memo-miss was pure overhead.
-        n_rows = parquet_row_count(table_path(sf_dir, "events"))
+        n_rows = _event_rows(sf_dir)
         return _with_state_parts(
             spark,
             _kv_state_parts(spark, n_rows),
             # Sink scales with input (see _kv_sink): past fixture scale the
             # drain's per-get output must not collect to the driver.
             lambda: run_stream_to_table(
-                stream, output_mode="append", sink=_kv_sink(n_rows)
+                ttl_kv_ops(ops, bindings),
+                output_mode="append",
+                sink=_kv_sink(n_rows),
             ),
         )
 
     return shared(spark, "virtual_kv", fixture_key(sf_dir, "events"), drain)
 
 
-def _virtual_binding_outcomes(
-    spark: SparkSession, sf_dir: str, binding: str
-) -> DataFrame:
-    """One binding's get outcomes from the shared drain, prefix stripped."""
-    out = _virtual_kv_drained(spark, sf_dir)
+def _binding_outcomes(drained: DataFrame, binding: str) -> DataFrame:
+    """One binding's get outcomes from a shared drain, prefix stripped."""
     prefix = binding + "|"
-    return out.filter(F.col("key").startswith(prefix)).select(
-        F.expr(f"substring(key, {len(prefix) + 1})").alias("key"),
-        "ts_s",
-        "found",
-        "value",
+    return drained.filter(F.col("key").startswith(prefix)).withColumn(
+        "key", F.expr(f"substring(key, {len(prefix) + 1})")
+    )
+
+
+def _virtual_summary(spark: SparkSession, sf_dir: str, binding: str) -> DataFrame:
+    """One virtual-clock binding's per-key get-outcome summary."""
+    return _get_outcome_summary(
+        _binding_outcomes(_virtual_kv_drained(spark, sf_dir), binding)
     )
 
 
@@ -1591,39 +1571,21 @@ def keyed_state_ttl_per_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     both get-outcome summaries, tagged by query name.
 
     Both bindings execute on the shared virtual-clock drain (VERDICT r07
-    #4 — see the soundness note on ``_virtual_kv_drained``): the
-    composite kernel runs the unchanged strict production fold (``replay_virtual``)
-    once per binding per key group, each with its own resolved TTL; only
-    the micro-batch infrastructure and the group-call boundary are shared.
+    #4 — see the soundness note on ``_virtual_kv_drained``): the unchanged
+    strict production fold (``replay_virtual``) runs once per binding per
+    key group, each with its own resolved TTL; only the micro-batch
+    infrastructure and the group-call boundary are shared.
     """
     parts = [
-        _get_outcome_summary(
-            _virtual_binding_outcomes(spark, sf_dir, name)
-        ).select(F.lit(name).alias("query_name"), "*")
+        _virtual_summary(spark, sf_dir, name).select(
+            F.lit(name).alias("query_name"), "*"
+        )
         for name in sorted(_PER_QUERY_TTLS)
     ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return functools.reduce(DataFrame.unionByName, parts)
 
 
-def _run_ttl_summary_tws(
-    spark: SparkSession, sf_dir: str, conf: dict, name: str
-) -> DataFrame:
-    """As ``_run_ttl_summary``, but through the transformWithStateInPandas
-    binding (streaming/ttl_tws.py)."""
-    from ..config import resolve_ttl
-    from .ttl_tws import ttl_kv_ops_tws
-
-    ttl = resolve_ttl(conf, name)
-    out = run_stream_to_table(
-        ttl_kv_ops_tws(_event_kv_ops(spark, sf_dir), ttl), output_mode="append"
-    )
-    return _get_outcome_summary(out)
-
-
-from .ttl_tws import TWS_AVAILABLE as _TWS_AVAILABLE  # noqa: E402
+from .ttl_tws import TWS_AVAILABLE as _TWS_AVAILABLE, ttl_kv_ops_tws  # noqa: E402
 
 if _TWS_AVAILABLE:
     # Registered only where the transformWithState driver worker can run
@@ -1639,7 +1601,9 @@ if _TWS_AVAILABLE:
     def keyed_state_ttl_tws_infinite(spark: SparkSession, sf_dir: str) -> DataFrame:
         """``keyed_state_ttl_infinite`` on Spark 4's native arbitrary-state
         API (transformWithStateInPandas, timeMode=none)."""
-        return _run_ttl_summary_tws(spark, sf_dir, {}, "events_kv_tws_inf")
+        return _run_ttl_summary(
+            spark, sf_dir, {}, "events_kv_tws_inf", ttl_kv_ops_tws
+        )
 
     @register(
         "keyed_state_ttl_tws_strict", oracle=_strict_ttl_oracle(_STRICT_TTL_SECS)
@@ -1649,10 +1613,12 @@ if _TWS_AVAILABLE:
         reference's marquee expire-after-access contract on the modern
         API."""
         conf = {
-            "spark.sql.streaming.stateStore.stateExpirySecs": str(_STRICT_TTL_SECS),
-            "spark.sql.streaming.stateStore.strictExpire": "true",
+            STATE_EXPIRY_SECS: str(_STRICT_TTL_SECS),
+            STATE_STRICT_EXPIRE: "true",
         }
-        return _run_ttl_summary_tws(spark, sf_dir, conf, "events_kv_tws_strict")
+        return _run_ttl_summary(
+            spark, sf_dir, conf, "events_kv_tws_strict", ttl_kv_ops_tws
+        )
 
 
 @register(
@@ -1706,71 +1672,38 @@ def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# One wall-clock drain serving both wallclock TTL entries (VERDICT r06 #7,
-# the funnel-pair pattern): the two entries drive the SAME production kernel
-# family (_make_wallclock_kernel) at different TTL bindings — infinite
-# (never arms a timeout) and finite-strict (arms ProcessingTimeTimeout at
-# 1 day) — over the same op stream, so running two full
-# processing-time-trigger drains duplicated pure micro-batch infrastructure
-# (query start/stop, trailing-empty-batch wait, poll latency). Through r13
-# the shared drain EXPLODED each op row into two binding-tagged copies
-# ('inf|'/'fin|' key prefixes) dispatching each key group to its binding's
-# solo kernel; since r14 a COMPOSITE kernel
-# (ttl.make_composite_wallclock_kernel, guide §4 — same move as the
-# virtual drain) folds both bindings per bare-key group against one
-# composite state row: 2× fewer shuffled rows and Python group calls, the
-# same binding-prefixed sink rows, per-binding fold order / timeout arming
-# / strict read-side expiry preserved (see the kernel's contract note;
-# differential-pinned by test_funnel_drain_share's wallclock test). Shared
-# under the "wallclock_kv" lifetime tag, like the funnel drain.
+# One wall-clock drain serves both wallclock TTL entries (VERDICT r06 #7,
+# the funnel-pair pattern): infinite (never arms a timeout) and
+# finite-strict (arms ProcessingTimeTimeout at 1 day) are two bindings of
+# ONE ttl_kv_ops_wallclock stage over the same op stream, so a second
+# processing-time-trigger drain would duplicate pure micro-batch
+# infrastructure (query start/stop, trailing-empty-batch wait, poll
+# latency). Each binding keeps its own fold order, timeout arming and strict
+# read-side expiry (streaming/ttl.py; differential-pinned by
+# test_funnel_drain_share's wallclock test). Shared under the
+# "wallclock_kv" lifetime tag, like the funnel drain.
 
 
 def _wallclock_kv_drained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drain both wall-clock TTL bindings once per (session, fixture
     generation); returns the combined sink with 'inf|'/'fin|'-prefixed keys.
     """
-    from ..config import resolve_ttl
-    from ..sources.tables import parquet_row_count, table_path
     from .runner import run_stream_drain_wallclock
-    from .ttl import (
-        WALL_OUTPUT_SCHEMA,
-        GroupStateTimeout,
-        composite_state_schema,
-        make_composite_wallclock_kernel,
-    )
 
     def drain() -> DataFrame:
         ttls = {
             "inf": resolve_ttl({}, "events_kv_wall_inf"),  # default -1
             "fin": resolve_ttl(
                 {
-                    "spark.sql.streaming.stateStore.stateExpirySecs": str(
-                        _WALL_FINITE_TTL_SECS
-                    ),
-                    "spark.sql.streaming.stateStore.strictExpire": "true",
+                    STATE_EXPIRY_SECS: str(_WALL_FINITE_TTL_SECS),
+                    STATE_STRICT_EXPIRE: "true",
                 },
                 "events_kv_wall_finite",
             ),
         }
-        # Composite kernel (r14, guide §4 — same move as the virtual
-        # drain): one group per BARE key running both bindings'
-        # replay_wallclock folds against one composite state row, instead
-        # of exploding every op row into binding-tagged copies. Sink
-        # contents keep the same
-        # binding-prefixed keys; the engine timeout arms for the finite
-        # binding exactly as its solo kernel did (see
-        # ttl.make_composite_wallclock_kernel's contract note).
-        ops = _event_kv_ops(spark, sf_dir)
-        stream = ops.groupBy("key").applyInPandasWithState(
-            make_composite_wallclock_kernel(ttls),
-            outputStructType=WALL_OUTPUT_SCHEMA,
-            stateStructType=composite_state_schema(len(ttls)),
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-        )
-        # numInputRows is a SOURCE metric — the raw events row count
-        # (footer metadata, not a scan — see _virtual_kv_drained).
-        n_rows = parquet_row_count(table_path(sf_dir, "events"))
+        stream = ttl_kv_ops_wallclock(_event_kv_ops(spark, sf_dir), ttls)
+        # numInputRows is a SOURCE metric — the raw events row count.
+        n_rows = _event_rows(sf_dir)
         # The drain deadline is a STALL detector, not a size cap: scale it
         # with the input so a healthy 10-100x run (observed kernel
         # throughput ~10^5 rows/s) never trips it — the floor rate here is
@@ -1792,19 +1725,6 @@ def _wallclock_kv_drained(spark: SparkSession, sf_dir: str) -> DataFrame:
     return shared(spark, "wallclock_kv", fixture_key(sf_dir, "events"), drain)
 
 
-def _wallclock_binding_outcomes(
-    spark: SparkSession, sf_dir: str, binding: str
-) -> DataFrame:
-    """One binding's get outcomes from the shared drain, prefix stripped."""
-    out = _wallclock_kv_drained(spark, sf_dir)
-    prefix = binding + "|"
-    return out.filter(F.col("key").startswith(prefix)).select(
-        F.expr(f"substring(key, {len(prefix) + 1})").alias("key"),
-        "found",
-        "value",
-    )
-
-
 @register(
     "keyed_state_wallclock_infinite",
     # The PRODUCTION clock binding (ProcessingTimeTimeout kernel) gets a
@@ -1823,12 +1743,12 @@ def keyed_state_wallclock_infinite(spark: SparkSession, sf_dir: str) -> DataFram
     tests (tests/test_ttl.py), where elapsed real time is observable.
 
     Runs on the shared dual-binding drain (``_wallclock_kv_drained``): the
-    'inf' key groups execute the UNCHANGED infinite-TTL production kernel
-    (never arms a timeout), batch-for-batch what a solo drain runs.
+    'inf' binding runs the UNCHANGED infinite-TTL production fold (never
+    arms a timeout), batch-for-batch what a solo drain runs.
     """
     _assert_event_id_ts_monotone(spark, sf_dir, scope="global")
     return _get_outcome_summary(
-        _wallclock_binding_outcomes(spark, sf_dir, "inf")
+        _binding_outcomes(_wallclock_kv_drained(spark, sf_dir), "inf")
     )
 
 
@@ -1960,7 +1880,7 @@ def keyed_state_ttl_lazy_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     a removed solo-state row would), are unchanged.
     """
     lazy = _get_outcome_summary(
-        _virtual_binding_outcomes(spark, sf_dir, _VIRTUAL_LAZY_BINDING)
+        _binding_outcomes(_virtual_kv_drained(spark, sf_dir), "lazy")
     )
     bounds = _batch_kv_fold_bounds(
         spark, sf_dir, _LAZY_BOUNDS_TTL_SECS, ["ts_s", "seq"]
@@ -2028,7 +1948,7 @@ def keyed_state_wallclock_finite_bounds(
     finite wall-clock path from slow local test to driver-pinned.
 
     Runs on the shared dual-binding drain (``_wallclock_kv_drained``): the
-    'fin' key groups execute the UNCHANGED finite-strict production kernel
+    'fin' binding runs the UNCHANGED finite-strict production fold
     — ``setTimeoutDuration`` armed at 1 day on every access, strict
     read-side elapsed check, ``ProcessingTimeTimeout`` conf — exactly the
     lifecycle a solo drain runs; only the drain's fixed micro-batch
@@ -2039,7 +1959,7 @@ def keyed_state_wallclock_finite_bounds(
     """
     _assert_event_id_ts_monotone(spark, sf_dir, scope="global")
     wall = _get_outcome_summary(
-        _wallclock_binding_outcomes(spark, sf_dir, "fin")
+        _binding_outcomes(_wallclock_kv_drained(spark, sf_dir), "fin")
     )
     fold = _batch_kv_fold_bounds(spark, sf_dir, _WALL_FINITE_TTL_SECS, ["seq"])
     j = wall.join(fold, "key", "full_outer")
@@ -2450,7 +2370,7 @@ def _funnel_drained(spark: SparkSession, sf_dir: str):
         # cut the entry 25.9 s -> 18.0 s; with the old string kernel more
         # partitions only added setup cost).
         sink = _with_state_parts(
-            spark, _ij_state_parts(spark, sf_dir, fixture_parts=16), run
+            spark, _kv_state_parts(spark, _event_rows(sf_dir)), run
         )
         return sink, ckpt
 
@@ -2464,7 +2384,13 @@ SHARED_MEMOS.update(
             "keyed_state_wallclock_infinite",
             "keyed_state_wallclock_finite_bounds",
         },
-        "virtual_kv": {"keyed_state_ttl_per_query", "keyed_state_ttl_lazy_bounds"},
+        "virtual_kv": {
+            "keyed_state_ttl_infinite",
+            "keyed_state_ttl_strict",
+            "keyed_state_ttl_stateless",
+            "keyed_state_ttl_per_query",
+            "keyed_state_ttl_lazy_bounds",
+        },
         "interval_fo": {
             "streaming_interval_join_full_outer",
             "streaming_interval_join_left_outer",

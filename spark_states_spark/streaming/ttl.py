@@ -30,6 +30,9 @@ in TWO clock bindings:
   104-121``). This is the production binding, wired through
   ``state_timeout`` (writer.py) and the conf registry (config.py).
 
+Either stage takes one ``TtlConfig`` or a ``{name: TtlConfig}`` mapping of
+several bindings folded over the same op stream (see :func:`state_schema`).
+
 Scale shape: state lives in the configured RocksDB state store, keyed and
 partitioned by the group key — the Arrow batches stream per key-group, so
 memory is O(active keys per partition), not O(stream).
@@ -38,7 +41,7 @@ memory is O(active keys per partition), not O(stream).
 from __future__ import annotations
 
 import time
-from collections.abc import Iterator
+from collections.abc import Iterator, Mapping
 from typing import Any
 
 import numpy as np
@@ -72,12 +75,24 @@ OUTPUT_SCHEMA = T.StructType(
     ]
 )
 
+WALL_OUTPUT_SCHEMA = T.StructType(
+    [
+        T.StructField("key", T.StringType()),
+        T.StructField("found", T.BooleanType()),
+        T.StructField("value", T.LongType()),
+    ]
+)
+
+# One binding's (value, last_access) — the ValueState row of the
+# transformWithStateInPandas binding (ttl_tws.py).
 STATE_SCHEMA = T.StructType(
     [
         T.StructField("value", T.LongType()),
         T.StructField("last_access", T.LongType()),
     ]
 )
+
+Bindings = TtlConfig | Mapping[str, TtlConfig]
 
 
 def replay_virtual(
@@ -196,126 +211,6 @@ def outcomes_frame(out: list[tuple[str, int, bool, int | None]]) -> pd.DataFrame
     )
 
 
-def _make_kernel(ttl: TtlConfig):
-    """Build the per-key state function for applyInPandasWithState."""
-
-    def kernel(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            value, last_access = state.get
-            have = True
-        else:
-            value, last_access, have = None, None, False
-
-        frames = list(pdfs)
-        rows = frames[0] if len(frames) == 1 else pd.concat(frames)
-        out, survived = replay_virtual(rows, ttl, value, last_access, have)
-        if survived is not None:
-            state.update(survived)
-        else:
-            state.remove()
-        if out:
-            yield outcomes_frame(out)
-
-    return kernel
-
-
-def ttl_kv_ops(ops_stream: DataFrame, ttl: TtlConfig) -> DataFrame:
-    """Apply the TTL keyed-state kernel to a (key, op, value, ts_s, seq)
-    stream; emits one row per ``get`` with its outcome.
-
-    Virtual-clock binding (``NoTimeout``): expiry is evaluated against the
-    rows' ``ts_s`` when ops arrive or at batch-end sweep — deterministic
-    and replayable, but an idle key in a live stream is only dropped once
-    something touches its group. For the reference's progress-independent
-    expiry use :func:`ttl_kv_ops_wallclock`.
-    """
-    return ops_stream.groupBy("key").applyInPandasWithState(
-        _make_kernel(ttl),
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-# --- wall-clock (processing-time) binding -------------------------------
-
-WALL_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("value", T.LongType()),
-        T.StructField("last_access_ms", T.LongType()),
-    ]
-)
-
-WALL_OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("key", T.StringType()),
-        T.StructField("found", T.BooleanType()),
-        T.StructField("value", T.LongType()),
-    ]
-)
-
-
-def _make_wallclock_kernel(ttl: TtlConfig):
-    """Per-key state function bound to the engine's processing-time clock.
-
-    Expire-after-access on wall time (the reference's Guava
-    ``expireAfterAccess`` cache, Provider.scala:711-726): every batch that
-    touches the key re-arms the timeout; a key with no traffic is
-    invoked with ``hasTimedOut`` once ``ttl_secs`` of wall time pass and
-    is physically dropped — **independently of query progress for that
-    key** (README.md:42-47).
-
-    Strict mode additionally stores the last-access wall time in state and
-    checks ``elapsed >= ttl`` on every get before serving: the engine's
-    ``ProcessingTimeTimeout`` only fires for a batch with no data for the
-    key, so when data beats the timeout into a batch, the timeout alone
-    would serve a stale value — strict "expire exactly on read"
-    (Provider.scala:139-146) needs the row-side check; the engine timeout
-    remains the physical cleanup path for idle keys. Non-strict keeps pure
-    engine-timeout expiry: present keys are served (keys live "≥ ttl",
-    the TtlDB compaction analogue).
-    """
-
-    def kernel(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            # ttl elapsed with zero ops for this key: fires on the
-            # engine's clock alone — the "is not eventual" semantics.
-            state.remove()
-            return
-
-        if state.exists:
-            value, last_access_ms = state.get
-            have = True
-        else:
-            value, last_access_ms, have = None, None, False
-
-        frames = list(pdfs)
-        rows = frames[0] if len(frames) == 1 else pd.concat(frames)
-        out, survived = replay_wallclock(rows, ttl, value, last_access_ms, have)
-
-        if survived is not None:
-            state.update(survived)
-            if not ttl.is_infinite:
-                # re-arm on every access: expireAfterAccess semantics.
-                state.setTimeoutDuration(ttl.ttl_secs * 1000)
-        elif state.exists:
-            state.remove()
-
-        if out:
-            yield wall_outcomes_frame(out)
-
-    return kernel
-
-
 def replay_wallclock(
     rows: pd.DataFrame,
     ttl: TtlConfig,
@@ -327,10 +222,10 @@ def replay_wallclock(
     wall-clock TTL contract; return (get outcomes, surviving state).
 
     The wall-clock twin of :func:`replay_virtual` — the single source of
-    truth for the kernel semantics, shared by the solo kernel builder and
-    the composite multi-binding kernel so they cannot drift. ``now`` is
-    read from this module's ``time`` per op (tests monkeypatch it).
-    Surviving state is None when the key should be dropped."""
+    truth for the kernel semantics, run once per binding by the wall-clock
+    kernel builder. ``now`` is read from this module's ``time`` per op
+    (tests monkeypatch it). Surviving state is None when the key should be
+    dropped."""
     ttl_ms = ttl.ttl_secs * 1000 if ttl.ttl_secs and ttl.ttl_secs > 0 else None
 
     def alive(now_ms: int) -> bool:
@@ -391,7 +286,182 @@ def wall_outcomes_frame(
     )
 
 
-def ttl_kv_ops_wallclock(ops_stream: DataFrame, ttl: TtlConfig) -> DataFrame:
+# --- the keyed-TTL stage: one kernel builder per clock --------------------
+#
+# Each bare key is one group per micro-batch; every binding's unchanged
+# replay fold (replay_virtual / replay_wallclock) runs over the same rows
+# against its own (value, last_access, have) slot of one state row. A bare
+# TtlConfig is the one-binding case with bare output keys; a mapping emits
+# '<name>|<key>' rows, in sorted name order.
+#
+# Sweep equivalence: a binding whose fold drops its key is recorded as
+# have=False (value slots null); its next replay starts from have=False
+# exactly as a removed store row would, and the state row itself is removed
+# once EVERY binding is dead — so each binding's fold inputs, and therefore
+# its outcomes, equal that binding run alone, for any chunking.
+
+
+def state_schema(n: int) -> T.StructType:
+    """State schema of an ``n``-binding stage: per binding a (value,
+    last_access, have) slot. ``last_access`` is virtual seconds for the
+    virtual-clock kernel and wall ms for the wall-clock kernel."""
+    fields = []
+    for i in range(n):
+        fields += [
+            T.StructField(f"v{i}", T.LongType()),
+            T.StructField(f"a{i}", T.LongType()),
+            T.StructField(f"h{i}", T.BooleanType()),
+        ]
+    return T.StructType(fields)
+
+
+_DEAD = (None, None, False)
+
+
+def _split(bindings: Bindings) -> tuple[list[str], list[TtlConfig]]:
+    """Output-key prefixes and TtlConfigs, in slot order."""
+    if isinstance(bindings, TtlConfig):
+        return [""], [bindings]
+    names = sorted(bindings)
+    return [b + "|" for b in names], [bindings[b] for b in names]
+
+
+def _slots(state: GroupState, n: int) -> list[tuple]:
+    """Decode the state row into ``n`` (value, last_access, have) slots. A
+    row of any other width — e.g. the 2-field (value, last_access) row of
+    an older checkpoint — raises instead of being misread."""
+    if not state.exists:
+        return [_DEAD] * n
+    st = state.get
+    if len(st) != 3 * n:
+        raise ValueError(
+            f"TTL state row has {len(st)} fields, expected {3 * n} (value, "
+            f"last_access, have) x {n}: checkpoint from another state layout"
+        )
+    return [
+        (st[i], st[i + 1], True) if st[i + 2] else _DEAD
+        for i in range(0, 3 * n, 3)
+    ]
+
+
+def _store(state: GroupState, slots: list[tuple]) -> bool:
+    """Write the slots back, or remove the row once every binding is dead;
+    returns whether it survives."""
+    if any(have for _, _, have in slots):
+        state.update(tuple(x for slot in slots for x in slot))
+        return True
+    if state.exists:
+        state.remove()
+    return False
+
+
+def _rows(pdfs: Iterator[pd.DataFrame]) -> pd.DataFrame:
+    frames = list(pdfs)
+    return frames[0] if len(frames) == 1 else pd.concat(frames)
+
+
+def _virtual_kernel(bindings: Bindings):
+    """The applyInPandasWithState kernel of :func:`ttl_kv_ops`."""
+    prefixes, ttls = _split(bindings)
+
+    def kernel(
+        key: tuple[Any, ...],
+        pdfs: Iterator[pd.DataFrame],
+        state: GroupState,
+    ) -> Iterator[pd.DataFrame]:
+        slots = _slots(state, len(ttls))
+        rows = _rows(pdfs)
+        merged: list[tuple[str, int, bool, int | None]] = []
+        new = []
+        for p, ttl, (value, last, have) in zip(prefixes, ttls, slots):
+            out, survived = replay_virtual(rows, ttl, value, last, have)
+            merged += [(p + k, t, f, v) for k, t, f, v in out] if p else out
+            new.append(_DEAD if survived is None else (*survived, True))
+        _store(state, new)
+        if merged:
+            yield outcomes_frame(merged)
+
+    return kernel
+
+
+def ttl_kv_ops(ops_stream: DataFrame, ttl: Bindings) -> DataFrame:
+    """Apply the TTL keyed-state kernel to a (key, op, value, ts_s, seq)
+    stream; emits one row per ``get`` (and binding) with its outcome.
+
+    Virtual-clock binding (``NoTimeout``): expiry is evaluated against the
+    rows' ``ts_s`` when ops arrive or at batch-end sweep — deterministic
+    and replayable, but an idle key in a live stream is only dropped once
+    something touches its group. For the reference's progress-independent
+    expiry use :func:`ttl_kv_ops_wallclock`.
+    """
+    return ops_stream.groupBy("key").applyInPandasWithState(
+        _virtual_kernel(ttl),
+        outputStructType=OUTPUT_SCHEMA,
+        stateStructType=state_schema(len(_split(ttl)[1])),
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
+def _wallclock_kernel(bindings: Bindings):
+    """The applyInPandasWithState kernel of :func:`ttl_kv_ops_wallclock`.
+
+    Expire-after-access on wall time (the reference's Guava
+    ``expireAfterAccess`` cache, Provider.scala:711-726):
+
+    - data path: every binding replays via :func:`replay_wallclock`. Strict
+      mode checks ``elapsed >= ttl`` on every get before serving, because
+      ``ProcessingTimeTimeout`` only fires for a batch with no data for the
+      key; non-strict serves present keys (keys live "≥ ttl").
+    - re-arm: while any FINITE binding survives, the timeout is armed with
+      the least remaining time over those bindings.
+    - timeout path (no ops for the key for the armed duration — fires on
+      the engine's clock alone, **independently of query progress for
+      that key**, README.md:42-47): each finite binding whose own elapsed
+      time reached its ttl is dropped; the others are kept and the timeout
+      re-arms. Infinite bindings never arm a timeout and never expire.
+    """
+    prefixes, ttls = _split(bindings)
+    ttl_ms = [t.ttl_secs * 1000 if t.ttl_secs > 0 else None for t in ttls]
+
+    def kernel(
+        key: tuple[Any, ...],
+        pdfs: Iterator[pd.DataFrame],
+        state: GroupState,
+    ) -> Iterator[pd.DataFrame]:
+        slots = _slots(state, len(ttls))
+        merged: list[tuple[str, bool, int | None]] = []
+        if state.hasTimedOut:
+            now_ms = int(time.time() * 1000)
+            slots = [
+                _DEAD if have and ms is not None and now_ms - last >= ms
+                else (value, last, have)
+                for (value, last, have), ms in zip(slots, ttl_ms)
+            ]
+        else:
+            rows = _rows(pdfs)
+            new = []
+            for p, ttl, (value, last, have) in zip(prefixes, ttls, slots):
+                out, survived = replay_wallclock(rows, ttl, value, last, have)
+                merged += [(p + k, f, v) for k, f, v in out] if p else out
+                new.append(_DEAD if survived is None else (*survived, True))
+            slots = new
+        if _store(state, slots):
+            now_ms = int(time.time() * 1000)
+            remaining = [
+                ms - (now_ms - last)
+                for (_, last, have), ms in zip(slots, ttl_ms)
+                if have and ms is not None
+            ]
+            if remaining:
+                state.setTimeoutDuration(max(1, min(remaining)))
+        if merged:
+            yield wall_outcomes_frame(merged)
+
+    return kernel
+
+
+def ttl_kv_ops_wallclock(ops_stream: DataFrame, ttl: Bindings) -> DataFrame:
     """Production TTL binding: keyed state whose expiry fires on the
     engine's processing-time clock via ``ProcessingTimeTimeout``.
 
@@ -402,190 +472,9 @@ def ttl_kv_ops_wallclock(ops_stream: DataFrame, ttl: TtlConfig) -> DataFrame:
     ignored; ``seq`` still orders ops within a batch.
     """
     return ops_stream.groupBy("key").applyInPandasWithState(
-        _make_wallclock_kernel(ttl),
+        _wallclock_kernel(ttl),
         outputStructType=WALL_OUTPUT_SCHEMA,
-        stateStructType=WALL_STATE_SCHEMA,
+        stateStructType=state_schema(len(_split(ttl)[1])),
         outputMode="append",
         timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
     )
-
-
-# --- composite multi-binding kernels (shared drains, r14) ----------------
-#
-# The shared drains (streaming/queries.py) run several TTL bindings over
-# the SAME op stream. Through r13 they did it by exploding every op row
-# into one binding-tagged copy per binding and dispatching each
-# ('<binding>|<key>') group to its binding's solo kernel — semantically
-# clean, but it multiplied the shuffle volume AND the per-group Python
-# call count by the binding count purely to reuse the solo kernel object
-# (guide §4: the JVM↔Python boundary crossings, not the fold itself, are
-# the cost). The composite kernels below process each BARE key once per
-# micro-batch and run every binding's unchanged replay fold
-# (replay_virtual / replay_wallclock — the single sources of truth) over
-# the same rows against one composite state row holding each binding's
-# (value, last_access, have) slot. Emitted rows carry the same
-# '<binding>|'-prefixed keys as the exploded design, so the sink contents
-# are identical row-for-row.
-#
-# Sweep equivalence: a binding whose solo kernel would remove its state is
-# recorded as have=False in the composite row (value slots zeroed); its
-# next replay starts from have=False exactly as a removed store row would,
-# and the composite row itself is removed once EVERY binding is dead — so
-# fold inputs, and therefore outcomes, are unchanged for any chunking.
-
-
-def composite_state_schema(n_bindings: int) -> T.StructType:
-    """State schema for a composite kernel: per binding a (value,
-    last_access, have) slot. ``last_access`` is virtual seconds for the
-    virtual-clock kernel and wall ms for the wall-clock kernel."""
-    fields = []
-    for i in range(n_bindings):
-        fields += [
-            T.StructField(f"v{i}", T.LongType()),
-            T.StructField(f"a{i}", T.LongType()),
-            T.StructField(f"h{i}", T.BooleanType()),
-        ]
-    return T.StructType(fields)
-
-
-def _binding_slot(st, i: int):
-    """Decode slot ``i`` of a composite state tuple → (value, last, have)."""
-    if st is None or not st[3 * i + 2]:
-        return None, None, False
-    return st[3 * i], st[3 * i + 1], True
-
-
-def make_composite_virtual_kernel(bindings: dict[str, TtlConfig]):
-    """One applyInPandasWithState kernel folding EVERY virtual-clock
-    binding over the same bare-key op rows (see the block comment above).
-    Binding order is the sorted name order; output keys are
-    '<binding>|<key>'."""
-    names = sorted(bindings)
-    ttls = [bindings[b] for b in names]
-    prefixes = [b + "|" for b in names]
-    n_b = len(names)
-
-    def kernel(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        st = state.get if state.exists else None
-        frames = list(pdfs)
-        rows = frames[0] if len(frames) == 1 else pd.concat(frames)
-        merged: list[tuple[str, int, bool, int | None]] = []
-        new_st: list = []
-        any_alive = False
-        for i in range(n_b):
-            value, last, have = _binding_slot(st, i)
-            out, survived = replay_virtual(rows, ttls[i], value, last, have)
-            p = prefixes[i]
-            merged.extend((p + k, t, f, v) for (k, t, f, v) in out)
-            if survived is None:
-                new_st += [0, 0, False]
-            else:
-                new_st += [survived[0], survived[1], True]
-                any_alive = True
-        if any_alive:
-            state.update(tuple(new_st))
-        else:
-            state.remove()
-        if merged:
-            yield outcomes_frame(merged)
-
-    return kernel
-
-
-def make_composite_wallclock_kernel(bindings: dict[str, TtlConfig]):
-    """One applyInPandasWithState kernel folding EVERY wall-clock binding
-    over the same bare-key op rows, with ProcessingTimeTimeout handling:
-
-    - data path: every binding replays via replay_wallclock; if any FINITE
-      binding survives, the timeout re-arms with the minimum finite ttl
-      (each surviving finite binding's last access was refreshed in this
-      batch, so this equals the solo kernels' per-binding re-arm);
-    - timeout path (no ops for the key for the armed duration): each
-      finite binding whose wall elapsed ≥ its ttl is dropped — exactly the
-      solo kernel's unconditional remove-on-fire, since the engine fires
-      only after the armed (minimum-ttl) duration passes; a finite binding
-      with a longer ttl that has not yet elapsed is kept and the timeout
-      re-arms with its remaining time. Infinite bindings never expire
-      (their solo kernels never arm a timeout)."""
-    names = sorted(bindings)
-    ttls = [bindings[b] for b in names]
-    prefixes = [b + "|" for b in names]
-    n_b = len(names)
-    finite_ms = [
-        (t.ttl_secs * 1000 if t.ttl_secs and t.ttl_secs > 0 else None)
-        for t in ttls
-    ]
-
-    def _rearm(state, new_st) -> None:
-        remaining = []
-        now_ms = int(time.time() * 1000)
-        for i in range(n_b):
-            if finite_ms[i] is None or not new_st[3 * i + 2]:
-                continue
-            remaining.append(
-                max(1, finite_ms[i] - (now_ms - new_st[3 * i + 1]))
-            )
-        if remaining:
-            state.setTimeoutDuration(min(remaining))
-
-    def kernel(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        st = state.get if state.exists else None
-
-        if state.hasTimedOut:
-            # The armed (minimum finite) duration elapsed with zero ops:
-            # drop every finite binding whose own ttl has elapsed.
-            now_ms = int(time.time() * 1000)
-            new_st: list = []
-            any_alive = False
-            for i in range(n_b):
-                value, last, have = _binding_slot(st, i)
-                if (
-                    have
-                    and finite_ms[i] is not None
-                    and now_ms - last >= finite_ms[i]
-                ):
-                    value, last, have = None, None, False
-                if have:
-                    new_st += [value, last, True]
-                    any_alive = True
-                else:
-                    new_st += [0, 0, False]
-            if any_alive:
-                state.update(tuple(new_st))
-                _rearm(state, new_st)
-            else:
-                state.remove()
-            return
-
-        frames = list(pdfs)
-        rows = frames[0] if len(frames) == 1 else pd.concat(frames)
-        merged: list[tuple[str, bool, int | None]] = []
-        new_st = []
-        any_alive = False
-        for i in range(n_b):
-            value, last, have = _binding_slot(st, i)
-            out, survived = replay_wallclock(rows, ttls[i], value, last, have)
-            p = prefixes[i]
-            merged.extend((p + k, f, v) for (k, f, v) in out)
-            if survived is None:
-                new_st += [0, 0, False]
-            else:
-                new_st += [survived[0], survived[1], True]
-                any_alive = True
-        if any_alive:
-            state.update(tuple(new_st))
-            _rearm(state, new_st)
-        elif state.exists:
-            state.remove()
-        if merged:
-            yield wall_outcomes_frame(merged)
-
-    return kernel

@@ -76,9 +76,11 @@ def test_bench_drain_groups_mark_carrier_and_sum():
     )
     assert groups["interval_fo"]["sum_s"] == 3.0
     # The virtual-clock drain's carrier is whichever participant runs
-    # first in headline order — lazy_bounds sits in the r05 block, before
-    # the r07 EXTENDED tail's per_query entry.
-    assert groups["virtual_kv"]["carrier"] == "keyed_state_ttl_lazy_bounds"
+    # first in headline order — the strict entry closes the CORE tier,
+    # before the r05 block's lazy_bounds and the r07 EXTENDED tail's
+    # per_query entry (infinite and stateless are catalog-only).
+    assert groups["virtual_kv"]["carrier"] == "keyed_state_ttl_strict"
+    assert groups["virtual_kv"]["sum_s"] == 3.0
     # The shared embedding-pair materialization (r14): the pair entry
     # runs first in headline order and carries the pipeline; keep_first
     # reads the memo.

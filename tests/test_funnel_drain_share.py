@@ -24,6 +24,25 @@ def _memo(spark, tag="funnel"):
     return lifetime.owned(spark, tag).memo
 
 
+def _count_drains(monkeypatch) -> list:
+    """Record every streaming drain the TTL entries start."""
+    from spark_states_spark.streaming import runner
+
+    started = []
+    for mod, name in [
+        (sq, "run_stream_to_table"),
+        (runner, "run_stream_drain_wallclock"),
+    ]:
+        real = getattr(mod, name)
+
+        def wrapped(*a, _real=real, **kw):
+            started.append(_real.__name__)
+            return _real(*a, **kw)
+
+        monkeypatch.setattr(mod, name, wrapped)
+    return started
+
+
 def test_drain_memoized_within_session(spark, sf_dir_small):
     sink1, ckpt1 = sq._funnel_drained(spark, sf_dir_small)
     sink2, ckpt2 = sq._funnel_drained(spark, sf_dir_small)
@@ -80,31 +99,28 @@ def test_memo_cleanup_drops_sink_views(spark, sf_dir_small):
     assert not os.path.exists(ckpt)
 
 
-def test_wallclock_entries_share_one_drain(spark, sf_dir_small):
+def test_wallclock_entries_share_one_drain(spark, sf_dir_small, monkeypatch):
     """VERDICT r06 #7: the two wall-clock TTL entries run on ONE dual-
-    binding drain; each binding's production kernel is unchanged, so with
+    binding drain; each binding's production fold is unchanged, so with
     ttl >> drain wall time both bindings' per-key outcomes equal the
     infinite fold — and each other."""
     lifetime.release(spark, "wallclock_kv")
     try:
+        started = _count_drains(monkeypatch)
         fin = sq.keyed_state_wallclock_finite_bounds(
             spark, sf_dir_small
         ).collect()
         sq.keyed_state_wallclock_infinite(spark, sf_dir_small).collect()
+        assert started == ["run_stream_drain_wallclock"], started
         assert len(_memo(spark, "wallclock_kv")) == 1, (
             "entries must share a drain"
         )
         assert fin[0]["n_violation_keys"] == 0
         # collected compare (exceptAll on two filters of the same memory
         # sink view trips a Spark self-reference analyzer conflict)
-        a = sorted(
-            map(tuple, sq._wallclock_binding_outcomes(
-                spark, sf_dir_small, "inf").collect())
-        )
-        b = sorted(
-            map(tuple, sq._wallclock_binding_outcomes(
-                spark, sf_dir_small, "fin").collect())
-        )
+        drained = sq._wallclock_kv_drained(spark, sf_dir_small)
+        a = sorted(map(tuple, sq._binding_outcomes(drained, "inf").collect()))
+        b = sorted(map(tuple, sq._binding_outcomes(drained, "fin").collect()))
         assert a == b and a, "bindings must agree (ttl >> drain wall time)"
         assert SHARED_MEMOS["wallclock_kv"] == {
             "keyed_state_wallclock_infinite",
@@ -114,46 +130,56 @@ def test_wallclock_entries_share_one_drain(spark, sf_dir_small):
         lifetime.release(spark, "wallclock_kv")
 
 
-def test_virtual_drain_bindings_equal_solo_drains(spark, sf_dir_small):
-    """VERDICT r07 #4: the shared triple-binding virtual-clock drain must
-    reproduce each binding's SOLO drain outcomes exactly — the strict
-    kernels despite the chunked replay (the documented invariance argument)
-    and the lazy kernel's whole bounds row. Solo references run the same
-    production kernels through the pre-share _run_ttl_summary path."""
+def test_virtual_drain_bindings_equal_solo_drains(
+    spark, sf_dir_small, monkeypatch
+):
+    """VERDICT r07 #4: the five virtual-clock TTL entries run on ONE shared
+    drain, which must reproduce each strict, infinite and stateless
+    binding's SOLO single-batch drain exactly — despite the chunked replay
+    (the documented invariance argument) — and the lazy binding's whole
+    bounds row. Solo references run the same ttl_kv_ops stage with one
+    binding through _run_ttl_summary."""
+    from spark_states_spark.streaming.ttl import ttl_kv_ops
+
+    entries = sorted(SHARED_MEMOS["virtual_kv"])
+    assert entries == [
+        "keyed_state_ttl_infinite",
+        "keyed_state_ttl_lazy_bounds",
+        "keyed_state_ttl_per_query",
+        "keyed_state_ttl_stateless",
+        "keyed_state_ttl_strict",
+    ]
     lifetime.release(spark, "virtual_kv")
     try:
-        # Shared-drain outcomes, per strict binding.
-        shared = {
-            name: sorted(
-                map(
-                    tuple,
-                    sq._get_outcome_summary(
-                        sq._virtual_binding_outcomes(spark, sf_dir_small, name)
-                    ).collect(),
-                )
-            )
-            for name in sq._PER_QUERY_TTLS
+        started = _count_drains(monkeypatch)
+        rows = {
+            name: getattr(sq, name)(spark, sf_dir_small).collect()
+            for name in entries
         }
+        assert started == ["run_stream_to_table"], started
         assert len(_memo(spark, "virtual_kv")) == 1, (
             "bindings must share a drain"
         )
-        # Solo single-batch drains with the same resolved TTLs.
-        for name, ttl_s in sq._PER_QUERY_TTLS.items():
-            conf = {
-                "spark.sql.streaming.stateStore.strictExpire": "true",
-                f"spark.sql.streaming.stateStore.stateExpirySecs.{name}": str(ttl_s),
-            }
-            solo = sorted(
-                map(tuple, sq._run_ttl_summary(spark, sf_dir_small, conf, name).collect())
-            )
-            assert shared[name] == solo and solo, name
         # The lazy binding's bounds sandwich must hold on the shared drain.
-        row = sq.keyed_state_ttl_lazy_bounds(spark, sf_dir_small).collect()[0]
-        assert row["n_violation_keys"] == 0
-        assert SHARED_MEMOS["virtual_kv"] == {
-            "keyed_state_ttl_per_query",
-            "keyed_state_ttl_lazy_bounds",
-        }
+        assert rows["keyed_state_ttl_lazy_bounds"][0]["n_violation_keys"] == 0
+        confs = sq._virtual_ttl_confs()
+        for binding in ["inf", "strict", "stateless", *sq._PER_QUERY_TTLS]:
+            shared = sorted(
+                map(
+                    tuple,
+                    sq._virtual_summary(spark, sf_dir_small, binding).collect(),
+                )
+            )
+            conf, query = confs[binding]
+            solo = sorted(
+                map(
+                    tuple,
+                    sq._run_ttl_summary(
+                        spark, sf_dir_small, conf, query, ttl_kv_ops
+                    ).collect(),
+                )
+            )
+            assert shared == solo and solo, binding
     finally:
         lifetime.release(spark, "virtual_kv")
 

@@ -7,6 +7,8 @@ artifact — it is now generated at artifact-write time and pinned here)."""
 import json
 import os
 
+import pytest
+
 import harness
 import scalecheck
 
@@ -135,8 +137,9 @@ def test_forced_sink_entry_is_a_kv_drain_oracle():
 
 
 def test_kv_sink_env_override(monkeypatch):
-    """The size gate yields to the explicit override in BOTH directions and
-    ignores junk values."""
+    """The size gate yields to the explicit override in BOTH directions; an
+    empty value is unset, and any other value fails fast naming the
+    variable."""
     from spark_states_spark.streaming.queries import _KV_SCALE_ROWS, _kv_sink
 
     monkeypatch.delenv("SPARK_GRAFT_KV_SINK", raising=False)
@@ -146,8 +149,12 @@ def test_kv_sink_env_override(monkeypatch):
     assert _kv_sink(10) == "parquet"
     monkeypatch.setenv("SPARK_GRAFT_KV_SINK", "memory")
     assert _kv_sink(_KV_SCALE_ROWS + 1) == "memory"
-    monkeypatch.setenv("SPARK_GRAFT_KV_SINK", "bogus")
+    monkeypatch.setenv("SPARK_GRAFT_KV_SINK", "")
     assert _kv_sink(10) == "memory"
+    for junk in ("bogus", "Parquet", "parquet "):
+        monkeypatch.setenv("SPARK_GRAFT_KV_SINK", junk)
+        with pytest.raises(ValueError, match="SPARK_GRAFT_KV_SINK"):
+            _kv_sink(10)
 
 
 class FakeDF:

@@ -18,7 +18,12 @@ import pandas as pd
 import pytest
 
 from spark_states_spark.config import TtlConfig, expiration_by_query, resolve_ttl
-from spark_states_spark.streaming.ttl import OPS_SCHEMA, ttl_kv_ops
+from spark_states_spark.streaming.ttl import (
+    OPS_SCHEMA,
+    _virtual_kernel,
+    _wallclock_kernel,
+    ttl_kv_ops,
+)
 
 
 def _write_batches(tmp_path, batches) -> str:
@@ -220,24 +225,107 @@ class _FakeGroupState:
         self.timeout_set_ms = ms
 
 
+def _fake_clock(monkeypatch) -> dict:
+    """Pin the kernels' wall clock to ``clock["now"]`` seconds."""
+    import spark_states_spark.streaming.ttl as ttl_mod
+
+    clock = {"now": 1_000.0}
+    monkeypatch.setattr(ttl_mod.time, "time", lambda: clock["now"])
+    return clock
+
+
+def _run_wall_batch(kernel, state, ops):
+    """One data batch of (key, op, value) ops through a wall-clock kernel."""
+    pdf = pd.DataFrame(
+        [{"key": k, "op": op, "value": v, "seq": i} for i, (k, op, v) in enumerate(ops)]
+    )
+    return [r for out in kernel(("a",), iter([pdf]), state) for r in out.itertuples()]
+
+
+def _fire(kernel, state) -> None:
+    """One engine timeout: no data, ``hasTimedOut`` set."""
+    state.hasTimedOut, state.timeout_set_ms = True, None
+    assert list(kernel(("a",), iter([]), state)) == []
+    state.hasTimedOut = False
+
+
+def test_wallclock_timeout_drops_only_elapsed_bindings(monkeypatch):
+    """Timeout path of the wall-clock kernel: a fire drops each finite
+    binding whose own elapsed time reached its ttl, keeps the others, and
+    re-arms the least remaining time; an early fire (elapsed < ttl) keeps
+    the key — also in the one-binding case — and re-arms the remainder."""
+    clock = _fake_clock(monkeypatch)
+    kernel = _wallclock_kernel(
+        {
+            "fast": TtlConfig("fast", 2, strict=True),
+            "slow": TtlConfig("slow", 5, strict=True),
+            "inf": TtlConfig("inf", -1, strict=True),
+        }
+    )
+    live, dead = (7, 1_000_000, True), (None, None, False)
+    state = _FakeGroupState()
+    _run_wall_batch(kernel, state, [("a", "put", 7)])
+    assert state.timeout_set_ms == 2000
+
+    clock["now"] = 1_001.5  # early fire: nothing elapsed yet
+    _fire(kernel, state)
+    assert state.get == live * 3  # slots in name order: fast, inf, slow
+    assert state.timeout_set_ms == 500
+
+    clock["now"] = 1_002.0  # +2 s: the 2 s binding goes
+    _fire(kernel, state)
+    assert state.get == dead + live + live
+    assert state.timeout_set_ms == 3000
+
+    clock["now"] = 1_005.0  # +5 s: the 5 s binding goes, inf never arms
+    _fire(kernel, state)
+    assert state.get == dead + live + dead
+    assert state.timeout_set_ms is None
+
+    rows = _run_wall_batch(kernel, state, [("a", "get", None)])
+    assert {r.key: r.found for r in rows} == {
+        "fast|a": False, "slow|a": False, "inf|a": True,
+    }
+
+    solo = _wallclock_kernel(TtlConfig("q", 5, strict=False))
+    state, clock["now"] = _FakeGroupState(), 1_000.0
+    _run_wall_batch(solo, state, [("a", "put", 7)])
+    clock["now"] = 1_004.0
+    _fire(solo, state)
+    assert state.get == live and state.timeout_set_ms == 1000
+    clock["now"] = 1_005.0
+    _fire(solo, state)
+    assert not state.exists
+
+
+def test_old_two_field_state_row_fails_loudly(monkeypatch):
+    """A (value, last_access) row — the state layout of checkpoints from
+    before the (value, last_access, have) slots — must raise, not be
+    misread as a slot, on every path of both kernels."""
+    _fake_clock(monkeypatch)
+    ttl = TtlConfig("q", 2, strict=True)
+    pdf = pd.DataFrame(
+        [{"key": "a", "op": "get", "value": None, "ts_s": 0, "seq": 0}]
+    )
+    for kernel in (_virtual_kernel(ttl), _wallclock_kernel(ttl)):
+        with pytest.raises(ValueError, match="2 fields"):
+            list(kernel(("a",), iter([pdf]), _FakeGroupState((7, 1))))
+    state = _FakeGroupState((7, 1))
+    state.hasTimedOut = True
+    with pytest.raises(ValueError, match="2 fields"):
+        list(_wallclock_kernel(ttl)(("a",), iter([]), state))
+
+
 def test_wallclock_strict_get_checks_elapsed_before_serving(monkeypatch):
     """Strict wall-clock TTL must not serve a stale value when data beats
     the engine timeout into the same micro-batch (ProcessingTimeTimeout
     only fires for batches with NO data for the key): the kernel stores
     last-access wall time and checks elapsed >= ttl on each get."""
-    import spark_states_spark.streaming.ttl as ttl_mod
-    from spark_states_spark.streaming.ttl import _make_wallclock_kernel
-
-    clock = {"now": 1_000.0}
-    monkeypatch.setattr(ttl_mod.time, "time", lambda: clock["now"])
-
-    kernel = _make_wallclock_kernel(TtlConfig("q", 2, strict=True))
+    clock = _fake_clock(monkeypatch)
+    kernel = _wallclock_kernel(TtlConfig("q", 2, strict=True))
 
     def run_batch(state, ops):
-        pdf = pd.DataFrame(
-            [{"key": k, "op": op, "value": v, "seq": i} for i, (k, op, v) in enumerate(ops)]
-        )
-        return [r for out in kernel(("a",), iter([pdf]), state) for r in out.itertuples()]
+        return _run_wall_batch(kernel, state, ops)
 
     # Batch 1: put + get at t=1000 — served live.
     state = _FakeGroupState()
@@ -255,7 +343,7 @@ def test_wallclock_strict_get_checks_elapsed_before_serving(monkeypatch):
 
     # Non-strict: same sequence serves the physically-present value
     # (keys live >= ttl until the engine sweeps them).
-    kernel = _make_wallclock_kernel(TtlConfig("q", 2, strict=False))
+    kernel = _wallclock_kernel(TtlConfig("q", 2, strict=False))
     state = _FakeGroupState()
     clock["now"] = 1_000.0
     run_batch(state, [("a", "put", 7)])

@@ -3,11 +3,12 @@
 The reference pins its TTL semantics with a handful of hand-written
 sequences (RocksDbStateTimeoutSuite); this goes further (SURVEY.md §5's
 "richer than the reference" requirement): hypothesis drives random
-op-sequences, batch splits, and TTL configs through the *actual* kernel
-(`_make_kernel`, exercised with a fake GroupState — no Spark needed, so
-hundreds of examples run in seconds) and compares every get-outcome and
-the surviving state against an independently written model of the
-documented contract:
+op-sequences, batch splits, and 1-3 TTL bindings through the *actual*
+virtual-clock kernel (`_virtual_kernel`, exercised with a fake GroupState —
+no Spark needed, so hundreds of examples run in seconds) and compares each
+binding's get-outcomes and surviving state slot against an independently
+written model of the documented contract for that binding alone — so
+bindings folded into one stage cannot interact:
 
 - ttl=-1: alive while present; ttl=0: never alive; ttl=n: alive iff
   now - last_access < n, where put always touches, get touches only in
@@ -27,7 +28,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from spark_states_spark.config import TtlConfig
-from spark_states_spark.streaming.ttl import _make_kernel
+from spark_states_spark.streaming.ttl import _virtual_kernel
 
 
 class FakeGroupState:
@@ -49,9 +50,11 @@ class FakeGroupState:
         self._row = None
 
 
-def run_kernel(ttl: TtlConfig, batches):
+def run_kernel(bindings, batches):
+    """Drive the kernel over ``batches``; return the outcome rows and the
+    surviving state row."""
     state, outs = FakeGroupState(), []
-    kernel = _make_kernel(ttl)
+    kernel = _virtual_kernel(bindings)
     for batch in batches:
         pdf = pd.DataFrame(batch, columns=["key", "op", "value", "ts_s", "seq"])
         for out in kernel(("k",), iter([pdf]), state):
@@ -113,10 +116,20 @@ split_strategy = st.lists(st.integers(1, 8), min_size=1, max_size=5)
 ttl_strategy = st.tuples(st.sampled_from([-1, 0, 1, 3, 10]), st.booleans())
 
 
-@given(ops=ops_strategy, splits=split_strategy, cfg=ttl_strategy)
+@given(
+    ops=ops_strategy,
+    splits=split_strategy,
+    cfgs=st.lists(ttl_strategy, min_size=1, max_size=3),
+    bare=st.booleans(),
+)
 @settings(max_examples=300, deadline=None)
-def test_kernel_matches_model(ops, splits, cfg):
-    ttl = TtlConfig(query_name="prop", ttl_secs=cfg[0], strict=cfg[1])
+def test_kernel_matches_model(ops, splits, cfgs, bare):
+    bindings = {
+        f"b{i}": TtlConfig(query_name="prop", ttl_secs=ttl, strict=strict)
+        for i, (ttl, strict) in enumerate(cfgs)
+    }
+    # One binding may also be passed bare: no key prefix, same slot layout.
+    bare = bare and len(bindings) == 1
     rows = [("k", op, v, ts, seq) for seq, (op, v, ts) in enumerate(ops)]
     # Batches must be non-decreasing in virtual time to be a valid stream
     # (watermark-ordered micro-batches): sort globally, then split.
@@ -130,10 +143,18 @@ def test_kernel_matches_model(ops, splits, cfg):
     if i < len(rows):
         batches.append(rows[i:])
 
-    got_out, got_state = run_kernel(ttl, batches)
-    want_out, want_state = model(ttl, batches)
-    assert got_out == want_out
-    assert got_state == want_state
+    got_out, row = run_kernel(bindings["b0"] if bare else bindings, batches)
+    for i, name in enumerate(sorted(bindings)):
+        prefix = "" if bare else name + "|"
+        got = [
+            (key[len(prefix):], ts, found, value)
+            for key, ts, found, value in got_out
+            if key.startswith(prefix)
+        ]
+        slot = None if row is None or not row[3 * i + 2] else row[3 * i : 3 * i + 2]
+        want_out, want_state = model(bindings[name], batches)
+        assert got == want_out, name
+        assert slot == want_state, name
 
 
 @pytest.mark.parametrize("strict", [True, False])
