@@ -313,7 +313,7 @@ _STRATEGY_NODES = frozenset({
 # documented adaptive tiers, not Catalyst strategy churn. Their 1x-vs-10x
 # plan deltas are recorded and labeled, never counted structural.
 _KV_SINK_TIER_NOTE = (
-    "size-gated drain sink (streaming/queries.py::_kv_sink): past "
+    "size-gated drain sink (streaming/runner.py::scaled_sink): past "
     "_KV_SCALE_ROWS the per-get output sinks to a distributed exactly-once "
     "parquet dir instead of a driver-side memory view (65-80% of entry "
     "time at 100x, BASELINE.md r09), so the post-drain read flips "
@@ -351,20 +351,20 @@ ADAPTIVE_PLAN_ENTRIES = {
     "keyed_state_ttl_lazy_bounds": _KV_SINK_TIER_NOTE,
     "keyed_state_wallclock_finite_bounds": _KV_SINK_TIER_NOTE,
     "streaming_interval_join_full_outer": (
-        "size-gated join sink (streaming/queries.py::_kv_sink, r10): the "
+        "size-gated join sink (streaming/runner.py::scaled_sink, r10): the "
         "interval joins' output is O(input rows), so past _KV_SCALE_ROWS "
         "the drain sinks to a distributed exactly-once parquet dir instead "
         "of a driver-side memory view (the same tier as the KV drains, same "
         "LocalTableScan -> FileScan flip in the post-drain read); state "
-        "partitions scale with input via _kv_state_parts"
+        "partitions scale with input via runner.state_parts"
     ),
     "streaming_session_window_append": (
         "size-gated sink (one row per closed session = O(input); same "
-        "_kv_sink tier and FileScan flip as the interval joins, r10)"
+        "scaled_sink tier and FileScan flip as the interval joins, r10)"
     ),
     "streaming_dedup_within_watermark": (
         "size-gated sink (pre-aggregation output is one row per distinct "
-        "(type, user, day) = grows with input; same _kv_sink tier, r10)"
+        "(type, user, day) = grows with input; same scaled_sink tier, r10)"
     ),
     "dedup_embedding_cosine": (
         "triangle-block salting (functions/skew.py::with_triangle_blocks): "

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import SHARED_MEMOS, register
 from ..lifetime import checkpoint, shared, unpin
+from ..session import shuffle_partitions
 from ..sources import load_table, load_table_fanned
 from ..sources.tables import fixture_key
 from .hashes import (
@@ -608,9 +609,7 @@ def connected_components(pairs: DataFrame, max_iters: int = _CC_MAX_ITERS) -> Da
     )
     n_edges = edges.count()  # materialize at corpus-scale parallelism
     loop_parts = max(2, min(32, n_edges // 50_000 + 2))
-    saved_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    try:
+    with shuffle_partitions(spark, loop_parts):
         # Each round's labels are checkpoint-materialized; the PREVIOUS
         # round's blocks are dead the moment the new frame exists, so they
         # are unpinned eagerly instead of waiting for their scope's release
@@ -670,8 +669,6 @@ def connected_components(pairs: DataFrame, max_iters: int = _CC_MAX_ITERS) -> Da
             raise RuntimeError(
                 f"connected components did not converge in {max_iters} rounds"
             )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved_parts)
     edges.unpersist()
     return labels
 

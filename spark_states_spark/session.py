@@ -17,6 +17,8 @@ from __future__ import annotations
 
 import os
 import site
+from contextlib import contextmanager
+from typing import Iterator
 
 from pyspark.sql import SparkSession
 
@@ -80,6 +82,13 @@ def shm_scratch_root() -> str | None:
     shuffle/spill scratch scales with input. A static build-time check is
     necessarily a heuristic — the override and the fallback keep it safe
     in both directions."""
+    floor = os.environ.get("SPARK_GRAFT_SHM_MIN_FREE_GIB", _SHM_MIN_FREE_GIB)
+    try:
+        min_free = float(floor) * (1 << 30)
+    except ValueError:
+        raise ValueError(
+            f"SPARK_GRAFT_SHM_MIN_FREE_GIB={floor!r} is not a number"
+        ) from None
     shm = "/dev/shm"
     if not (os.path.isdir(shm) and os.access(shm, os.W_OK)):
         return None
@@ -88,13 +97,31 @@ def shm_scratch_root() -> str | None:
         free = st.f_bavail * st.f_frsize
     except OSError:
         return None
-    min_free = float(
-        os.environ.get("SPARK_GRAFT_SHM_MIN_FREE_GIB", _SHM_MIN_FREE_GIB)
-    ) * (1 << 30)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR")
     if sf_dir and os.path.isdir(sf_dir):
         min_free = max(min_free, _SHM_SF_MULTIPLE * _dir_size_bytes(sf_dir))
     return shm if free >= min_free else None
+
+
+@contextmanager
+def shuffle_partitions(spark: SparkSession, n: int) -> Iterator[None]:
+    """Pin ``spark.sql.shuffle.partitions`` to ``n`` for the block and
+    restore the saved value on exit, also when the block raises.
+
+    A stateful query takes its state-partition count from this conf when
+    it first starts and freezes it into the checkpoint, so this is the
+    per-query state-partition knob, sized by ``runner.state_parts``; it
+    also sizes a batch phase's shuffles."""
+
+    def pin(value: str) -> None:
+        spark.conf.set("spark.sql.shuffle.partitions", value)
+
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
+    pin(str(n))
+    try:
+        yield
+    finally:
+        pin(saved)
 
 
 WORKER_DAEMON_MODULE = "spark_states_spark.worker_daemon"
@@ -160,9 +187,18 @@ def build_session(
     rocksdb_state: bool = True,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build the engine's SparkSession with scale-appropriate defaults."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    builder = SparkSession.builder.appName(app_name).master(master or f"local[{cpus}]")
+    """Build the engine's SparkSession with scale-appropriate defaults.
+    Without ``master``, runs on ``local[$SPARK_GRAFT_CPUS]``: ``*`` (the
+    default) or a positive integer; any other value fails fast naming the
+    variable instead of reaching Spark's master-URL parser."""
+    if not master:
+        cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+        if cpus != "*" and not (cpus.isascii() and cpus.isdigit() and int(cpus) > 0):
+            raise ValueError(
+                f"SPARK_GRAFT_CPUS={cpus!r} is not '*' or a positive integer"
+            )
+        master = f"local[{cpus}]"
+    builder = SparkSession.builder.appName(app_name).master(master)
     for k, v in _LOCAL_DEFAULTS.items():
         builder = builder.config(k, v)
     # Local mode runs every task in the driver JVM: 32 concurrent tasks on

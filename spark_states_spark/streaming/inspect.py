@@ -14,19 +14,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import register
+from ..session import shuffle_partitions
 from ..sources import read_stream
 from .runner import auto_checkpoint_dir, run_stream_to_table
 from .state_reader import read_state, state_metadata
 
 
-def _run_user_agg(spark: SparkSession, sf_dir: str, n_parts: int = 8) -> str:
+def _run_user_agg(spark: SparkSession, sf_dir: str) -> str:
     """Drain a streaming per-user aggregation over ``events`` into a fresh
     checkpoint and return its location. 8 state partitions: one store
     instance per partition is the dominant fixed cost at fixture scale
     (same sizing note as streaming_interval_join)."""
-    from .queries import _with_state_parts
-
-    def run() -> str:
+    with shuffle_partitions(spark, 8):
         agg = (
             read_stream(spark, sf_dir, "events")
             .groupBy("user_id")
@@ -38,9 +37,7 @@ def _run_user_agg(spark: SparkSession, sf_dir: str, n_parts: int = 8) -> str:
         )
         ckpt = auto_checkpoint_dir("statescan")
         run_stream_to_table(agg, output_mode="complete", checkpoint_location=ckpt)
-        return ckpt
-
-    return _with_state_parts(spark, n_parts, run)
+    return ckpt
 
 
 @register(

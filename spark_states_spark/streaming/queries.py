@@ -12,7 +12,6 @@ rows-only checks.
 from __future__ import annotations
 
 import functools
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -21,9 +20,10 @@ from ..catalog import SHARED_MEMOS, STAGING_MEMO_TAGS, register
 from ..config import STATE_EXPIRY_SECS, STATE_STRICT_EXPIRE, resolve_ttl
 from ..functions.hashes import DUCK_TOKS, SPARK_TOKS, duck_minhash_cte
 from ..lifetime import own_dir, release, shared
+from ..session import shuffle_partitions
 from ..sources import load_table, read_stream
 from ..sources.tables import fixture_key, parquet_row_count, table_path
-from .runner import run_stream_to_table
+from .runner import STATE_PARTS, run_stream_to_table, scaled_sink, state_parts
 from .ttl import ttl_kv_ops, ttl_kv_ops_wallclock
 from .windows import streaming_hourly_agg
 
@@ -224,17 +224,16 @@ def streaming_hourly_agg_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     pays one state-store open+commit PER PARTITION, and an 8-batch chunked
     replay at 32 partitions spends ~2× the query's wall time on that fixed
     cost alone at fixture scale (sizing measurements at the STATE_PARTS
-    definition). A 100 TB deployment raises the count with volume — state
-    stays per-key partitioned; nothing assumes the constant.
+    definition, streaming/runner.py). A 100 TB deployment raises the count
+    with volume — state stays per-key partitioned; nothing assumes the
+    constant.
     """
     from ..sources import chunked_stream
     from .windows import windowed_counts
 
-    def run() -> DataFrame:
+    with shuffle_partitions(spark, state_parts(spark, STATE_PARTS)):
         agg = windowed_counts(chunked_stream(spark, sf_dir, "events"), "1 hour")
-        return run_stream_to_table(agg, output_mode="update")
-
-    out = _with_state_parts(spark, _fixture_state_parts(spark, STATE_PARTS), run)
+        out = run_stream_to_table(agg, output_mode="update")
     return (
         out.groupBy("window_start", "event_type")
         .agg(F.max(F.struct("n_events", "sum_value")).alias("fin"))
@@ -308,16 +307,14 @@ def streaming_late_arrival_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources import chunked_stream
     from .windows import windowed_counts
 
-    def run() -> DataFrame:
+    with shuffle_partitions(spark, state_parts(spark, STATE_PARTS)):
         ev = chunked_stream(
             spark, sf_dir, "events", n_chunks=3, arrival_order=(0, 2, 1)
         )
-        return run_stream_to_table(
+        out, progress = run_stream_to_table(
             windowed_counts(ev, "1 hour"), output_mode="append",
             with_progress=True,
         )
-
-    out, progress = _with_state_parts(spark, _fixture_state_parts(spark, STATE_PARTS), run)
     dropped = sum(
         op.get("numRowsDroppedByWatermark", 0)
         for p in progress
@@ -450,9 +447,9 @@ def streaming_restart_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
         # staged chunk sequence across both phases.
         for f in parts[:2]:
             _shutil.copy2(_os.path.join(chunks, f), _os.path.join(src, f))
-        _with_state_parts(
-            spark, STATE_PARTS, lambda: run(src, ckpt, sink)
-        )  # phase 1: drain chunks 0-1, commit, stop
+        # Phase 1: drain chunks 0-1, commit, stop.
+        with shuffle_partitions(spark, STATE_PARTS):
+            run(src, ckpt, sink)
         for tag in ("ckpt", "sink"):
             _shutil.copytree(
                 _os.path.join(run_dir, tag),
@@ -487,9 +484,9 @@ def streaming_restart_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
         dst = _os.path.join(src, f)
         if not _os.path.exists(dst):
             _shutil.copy2(_os.path.join(chunks, f), dst)
-    _with_state_parts(
-        spark, STATE_PARTS, lambda: run(src, ckpt, sink)
-    )  # phase 2: restart on the same checkpoint, drain chunks 2-3
+    # Phase 2: restart on the same checkpoint, drain chunks 2-3.
+    with shuffle_partitions(spark, STATE_PARTS):
+        run(src, ckpt, sink)
     return spark.read.parquet(sink)
 
 
@@ -537,7 +534,13 @@ def streaming_chained_agg_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..sources import chunked_stream
 
-    def run() -> DataFrame:
+    # Output is bounded (live days × event types) so the memory sink
+    # stays at every scale; state parallelism scales with input like the
+    # joins' (two stateful operators' buffered windows grow with the
+    # fixture's time span).
+    with shuffle_partitions(
+        spark, state_parts(spark, STATE_PARTS, _event_rows(sf_dir))
+    ):
         # 4 chunks, not the 8-chunk default: TWO stateful operators double
         # the per-batch store open/commit cost (2 ops x STATE_PARTS stores
         # x n_batches), and 4 time-ordered batches over the ~30-day fixture
@@ -568,14 +571,6 @@ def streaming_chained_agg_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return run_stream_to_table(daily, output_mode="append")
 
-    # Output is bounded (live days × event types) so the memory sink
-    # stays at every scale; state parallelism scales with input like the
-    # joins' (two stateful operators' buffered windows grow with the
-    # fixture's time span).
-    return _with_state_parts(
-        spark, _kv_state_parts(spark, _event_rows(sf_dir), STATE_PARTS), run
-    )
-
 
 @register(
     "streaming_sliding_window_update",
@@ -602,7 +597,7 @@ def streaming_sliding_window_update(spark: SparkSession, sf_dir: str) -> DataFra
     from ..sources import chunked_stream
     from .windows import windowed_counts
 
-    def run() -> DataFrame:
+    with shuffle_partitions(spark, state_parts(spark, STATE_PARTS)):
         # 4 chunks (r07, the r06 halve-batches pattern): per-batch fixed
         # cost dominates at fixture scale; the update-mode result is
         # chunk-count-independent (the final max-per-window collapse below
@@ -613,9 +608,7 @@ def streaming_sliding_window_update(spark: SparkSession, sf_dir: str) -> DataFra
             "1 hour",
             slide="30 minutes",
         )
-        return run_stream_to_table(agg, output_mode="update")
-
-    out = _with_state_parts(spark, _fixture_state_parts(spark, STATE_PARTS), run)
+        out = run_stream_to_table(agg, output_mode="update")
     return (
         out.groupBy("window_start", "event_type")
         .agg(F.max("n_events").alias("n_events"))
@@ -672,7 +665,11 @@ def streaming_session_window_append(spark: SparkSession, sf_dir: str) -> DataFra
     """
     from ..sources import chunked_stream
 
-    def run() -> DataFrame:
+    n_rows = _event_rows(sf_dir)
+    # STATE_PARTS state partitions at fixture scale (see
+    # streaming_hourly_agg_update: per-batch per-partition store commits
+    # dominate chunked replays there), one per core past the size gate.
+    with shuffle_partitions(spark, state_parts(spark, STATE_PARTS, n_rows)):
         # 4 time-ordered chunks (halve-batches pattern, VERDICT r05 #4):
         # the emitted set is determined by the FINAL watermark (append mode
         # + in-order chunks: nothing is ever late, availableNow's closing
@@ -700,15 +697,8 @@ def streaming_session_window_append(spark: SparkSession, sf_dir: str) -> DataFra
         # so past the KV size gate it must not collect to the driver
         # (same tier as the interval joins; r10).
         return run_stream_to_table(
-            sess, output_mode="append", sink=_kv_sink(_event_rows(sf_dir))
+            sess, output_mode="append", sink=scaled_sink(n_rows)
         )
-
-    # STATE_PARTS state partitions at fixture scale (see
-    # streaming_hourly_agg_update: per-batch per-partition store commits
-    # dominate chunked replays there), one per core past the size gate.
-    return _with_state_parts(
-        spark, _kv_state_parts(spark, _event_rows(sf_dir), STATE_PARTS), run
-    )
 
 
 @register(
@@ -735,7 +725,9 @@ def streaming_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFr
     """
     from ..sources import chunked_stream
 
-    def run() -> DataFrame:
+    n_rows = _event_rows(sf_dir)
+    # STATE_PARTS at fixture scale, one per core past the size gate.
+    with shuffle_partitions(spark, state_parts(spark, STATE_PARTS, n_rows)):
         # 4 chunks (r07): the determinism argument below is chunk-count-
         # independent (fewer boundaries only strengthen the 25 h in-state
         # guarantee), and 4 batches keep real cross-batch seen-set state.
@@ -749,14 +741,9 @@ def streaming_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFr
         # Pre-aggregation output is one row per distinct (type, user, day)
         # — grows with input (the replicas scale users AND the time span),
         # so the sink follows the KV size gate (r10).
-        return run_stream_to_table(
-            dd, output_mode="append", sink=_kv_sink(_event_rows(sf_dir))
+        out = run_stream_to_table(
+            dd, output_mode="append", sink=scaled_sink(n_rows)
         )
-
-    # STATE_PARTS at fixture scale, one per core past the size gate.
-    out = _with_state_parts(
-        spark, _kv_state_parts(spark, _event_rows(sf_dir), STATE_PARTS), run
-    )
     return out.groupBy("event_type").agg(F.count("*").alias("n_user_days"))
 
 
@@ -833,11 +820,15 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     purely on instance overhead. A 100 TB deployment raises it with volume
     (state stays per-key partitioned; nothing here assumes 8).
     """
-    return _with_state_parts(
-        spark,
-        _kv_state_parts(spark, _event_rows(sf_dir), 8),
-        lambda: _interval_join_run(spark, sf_dir),
-    )
+    n_rows = _event_rows(sf_dir)
+    with shuffle_partitions(spark, state_parts(spark, 8, n_rows)):
+        p, x, cond = _interval_join_sides(spark, sf_dir)
+        joined = p.join(x, cond).select(
+            "purchase_id", "error_id", F.col("p_user").alias("user_id")
+        )
+        return run_stream_to_table(
+            joined, output_mode="append", sink=scaled_sink(n_rows)
+        )
 
 
 def _interval_join_sides(spark: SparkSession, sf_dir: str):
@@ -872,16 +863,6 @@ def _interval_join_sides(spark: SparkSession, sf_dir: str):
     return p, x, cond
 
 
-def _interval_join_run(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p, x, cond = _interval_join_sides(spark, sf_dir)
-    joined = p.join(x, cond).select(
-        "purchase_id", "error_id", F.col("p_user").alias("user_id")
-    )
-    return run_stream_to_table(
-        joined, output_mode="append", sink=_kv_sink(_event_rows(sf_dir))
-    )
-
-
 # One full-outer drain serving every derivable interval-join shape (r14,
 # guide §1.2 "don't compute things you throw away": four solo stream-stream
 # drains re-buffered the same two sides to emit subsets of one result).
@@ -910,25 +891,20 @@ def _interval_join_fo_drained(spark: SparkSession, sf_dir: str) -> DataFrame:
     generation); the derivable shapes filter its sink (see the block
     comment above)."""
 
-    def run() -> DataFrame:
-        p, x, cond = _interval_join_sides(spark, sf_dir)
-        joined = p.join(x, cond, "fullOuter").select(
-            "purchase_id",
-            "error_id",
-            F.coalesce(F.col("p_user"), F.col("x_user")).alias("user_id"),
-        )
-        return run_stream_to_table(
-            joined, output_mode="append", sink=_kv_sink(_event_rows(sf_dir))
-        )
+    def drain() -> DataFrame:
+        n_rows = _event_rows(sf_dir)
+        with shuffle_partitions(spark, state_parts(spark, STATE_PARTS, n_rows)):
+            p, x, cond = _interval_join_sides(spark, sf_dir)
+            joined = p.join(x, cond, "fullOuter").select(
+                "purchase_id",
+                "error_id",
+                F.coalesce(F.col("p_user"), F.col("x_user")).alias("user_id"),
+            )
+            return run_stream_to_table(
+                joined, output_mode="append", sink=scaled_sink(n_rows)
+            )
 
-    return shared(
-        spark,
-        "interval_fo",
-        fixture_key(sf_dir, "events"),
-        lambda: _with_state_parts(
-            spark, _kv_state_parts(spark, _event_rows(sf_dir), STATE_PARTS), run
-        ),
-    )
+    return shared(spark, "interval_fo", fixture_key(sf_dir, "events"), drain)
 
 
 def _interval_join_solo(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
@@ -937,8 +913,8 @@ def _interval_join_solo(spark: SparkSession, sf_dir: str, how: str) -> DataFrame
     derive-from-full-outer equivalences stay executable claims
     (test_interval_join_derived_shapes_equal_solo), not prose."""
     user_side = "x_user" if how == "rightOuter" else "p_user"
-
-    def run() -> DataFrame:
+    n_rows = _event_rows(sf_dir)
+    with shuffle_partitions(spark, state_parts(spark, STATE_PARTS, n_rows)):
         p, x, cond = _interval_join_sides(spark, sf_dir)
         joined = p.join(x, cond, how)
         if how == "leftSemi":
@@ -950,121 +926,13 @@ def _interval_join_solo(spark: SparkSession, sf_dir: str, how: str) -> DataFrame
                 "purchase_id", "error_id", F.col(user_side).alias("user_id")
             )
         return run_stream_to_table(
-            joined, output_mode="append", sink=_kv_sink(_event_rows(sf_dir))
+            joined, output_mode="append", sink=scaled_sink(n_rows)
         )
-
-    return _with_state_parts(
-        spark, _kv_state_parts(spark, _event_rows(sf_dir), STATE_PARTS), run
-    )
-
-
-# Pinned state-partition count for every chunked-replay entry — the
-# per-query deployment knob (see streaming_interval_join's sizing note).
-# Each micro-batch pays a fixed state-store open+commit PER PARTITION, so an
-# 8-batch replay at fixture scale is dominated by partitions x batches:
-# measured on the update-mode hourly aggregation at sf0.1, 8 partitions =
-# ~8.6 s, 4 = ~5.6 s, 2 = ~4.3 s steady-state. 4 balances that fixed cost
-# against exercising real multi-partition state; a 100 TB deployment raises
-# it with volume - state stays per-key partitioned, nothing assumes 4.
-STATE_PARTS = 4
-
-
-def _fixture_state_parts(spark: SparkSession, tuned: int) -> int:
-    """Fixture-tier state-partition count, derived from the session's core
-    count instead of a bare constant (r15, VERDICT r14 #4): each
-    micro-batch pays a fixed store open+commit PER PARTITION, so partitions
-    beyond the core count buy no parallelism and still pay that fixed cost
-    in serial waves — the r14 8-core companion artifact measured the
-    16-partition KV drains WORSE at 8 cores (wallclock 5.21 s) than at 32
-    (4.49 s). ``tuned`` is the fixture-scale sizing measured on the 32-core
-    harness (16 for the KV drains, STATE_PARTS=4 for the chunked replays);
-    the cap makes small boxes stop over-paying while leaving every >=16-
-    resp. >=4-core session byte-identical. r15 matrix re-measurement
-    (4/8/16 parts at 8 and 32 cores) is in OPTIMIZATION_r15.md.
-    ``SPARK_GRAFT_FIXTURE_STATE_PARTS`` overrides for deployment tuning
-    and for the matrix measurements themselves: an unparsable value fails
-    fast, a value below 1 is clamped to 1 (ADVICE r15 #3)."""
-    forced = os.environ.get("SPARK_GRAFT_FIXTURE_STATE_PARTS")
-    if forced:
-        try:
-            return max(1, int(forced))
-        except ValueError:
-            raise ValueError(
-                f"SPARK_GRAFT_FIXTURE_STATE_PARTS={forced!r} is not an integer"
-            ) from None
-    return max(1, min(tuned, int(spark.sparkContext.defaultParallelism)))
-
-
-def _with_state_parts(spark: SparkSession, n: int, fn):
-    """Run ``fn()`` with the state-partition count pinned to ``n`` (the
-    per-query deployment knob documented on streaming_interval_join)."""
-    saved = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        return fn()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved)
-
-
-_KV_SCALE_ROWS = 400_000
 
 
 def _event_rows(sf_dir: str) -> int:
     """The events table's row count — footer metadata, not a scan."""
     return parquet_row_count(table_path(sf_dir, "events"))
-
-
-def _kv_state_parts(spark: SparkSession, n_rows: int, tuned: int = 16) -> int:
-    """State-partition count for a stateful drain whose state scales with
-    its ``n_rows`` input rows: the fixture-tuned count ``tuned`` at or below
-    the size gate, one per core (at least ``tuned``) above it.
-
-    ``tuned`` defaults to the keyed-state TTL drains' 16 (VERDICT r08 #3):
-    their cost is per-key Python kernel invocations, not bytes. At fixture
-    scale (sf0.1 = 100K events, 1.5K keys) 16 parts beat both 4 (group-skew
-    serialization) and 32 (per-batch partition setup overhead — VERDICT
-    r05 #4); past ~4× that, kernel calls dominate setup and every core
-    should host a state partition (measured at the 100× decade, r09:
-    see BASELINE.md). The interval joins and other chunked replays pass
-    their own fixture count (per-batch store open/commit cost dominates an
-    8-batch replay at fixture scale; buffered-both-sides join state at a
-    decade needs the parallelism more than the low fixed cost). On a real
-    cluster this knob is ``spark.sql.shuffle.partitions`` sized to executor
-    cores, exactly as here. The fixture tier is additionally capped at the
-    core count (r15, see :func:`_fixture_state_parts`)."""
-    if n_rows <= _KV_SCALE_ROWS:
-        return _fixture_state_parts(spark, tuned)
-    return max(tuned, int(spark.sparkContext.defaultParallelism))
-
-
-def _kv_sink(n_rows: int) -> str:
-    """Sink choice for a drain whose output scales with its ``n_rows``
-    input rows, same threshold as :func:`_kv_state_parts` (r09, VERDICT
-    r08 #3): the keyed-state TTL drains emit one row per get op, the
-    interval joins one per match or null-extended side. At fixture scale the
-    memory sink's driver-side buffer is bounded (≤ ~180 K rows across
-    bindings) and ~0.7 s cheaper than a file-sink round trip; past the
-    threshold the memory sink collects tens of millions of rows to the
-    driver — at the 100× decade it was 65-80% of the measured entry time
-    (lazy 271 s → 63 s, wallclock 210 s → 51 s after the switch) and its
-    32-writer append contention scaled WORSE with more state partitions.
-    The parquet path is the production shape (distributed exactly-once
-    file sink) and is value-pinned by tests/test_streaming_modes.py's
-    sink-equivalence test at sf0.001.
-
-    ``SPARK_GRAFT_KV_SINK`` overrides the size gate (VERDICT r09 #3: every
-    sf0.01/sf0.1 gate run sits below the threshold, so the production
-    parquet path was continuously UNverified at the scales the driver
-    grades — scalecheck now forces one TTL oracle through it per round);
-    any other non-empty value fails fast."""
-    forced = os.environ.get("SPARK_GRAFT_KV_SINK")
-    if forced:
-        if forced not in ("memory", "parquet"):
-            raise ValueError(
-                f"SPARK_GRAFT_KV_SINK={forced!r} is not 'memory' or 'parquet'"
-            )
-        return forced
-    return "memory" if n_rows <= _KV_SCALE_ROWS else "parquet"
 
 
 # Shared CTE prefix: both outer/semi oracles reason about the final global
@@ -1522,17 +1390,14 @@ def _virtual_kv_drained(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         n_rows = _event_rows(sf_dir)
-        return _with_state_parts(
-            spark,
-            _kv_state_parts(spark, n_rows),
-            # Sink scales with input (see _kv_sink): past fixture scale the
-            # drain's per-get output must not collect to the driver.
-            lambda: run_stream_to_table(
+        with shuffle_partitions(spark, state_parts(spark, 16, n_rows)):
+            # Sink scales with input (see scaled_sink): past fixture scale
+            # the drain's per-get output must not collect to the driver.
+            return run_stream_to_table(
                 ttl_kv_ops(ops, bindings),
                 output_mode="append",
-                sink=_kv_sink(n_rows),
-            ),
-        )
+                sink=scaled_sink(n_rows),
+            )
 
     return shared(spark, "virtual_kv", fixture_key(sf_dir, "events"), drain)
 
@@ -1711,16 +1576,13 @@ def _wallclock_kv_drained(spark: SparkSession, sf_dir: str) -> DataFrame:
         # fails fast relative to the workload size (r08; the 100x probe
         # needs this).
         timeout_s = max(180.0, n_rows / 2000.0)
-        return _with_state_parts(
-            spark,
-            _kv_state_parts(spark, n_rows),
-            # Sink scales with input (see _kv_sink): past fixture scale the
-            # drain's per-get output must not collect to the driver.
-            lambda: run_stream_drain_wallclock(
+        with shuffle_partitions(spark, state_parts(spark, 16, n_rows)):
+            # Sink scales with input (see scaled_sink): past fixture scale
+            # the drain's per-get output must not collect to the driver.
+            return run_stream_drain_wallclock(
                 stream, n_input_rows=n_rows, output_mode="append",
-                timeout_s=timeout_s, sink=_kv_sink(n_rows),
-            ),
-        )
+                timeout_s=timeout_s, sink=scaled_sink(n_rows),
+            )
 
     return shared(spark, "wallclock_kv", fixture_key(sf_dir, "events"), drain)
 
@@ -1780,7 +1642,7 @@ _LAZY_BOUNDS_TTL_SECS = 21600
 # mid-stream sweep boundary already makes lazily-expired keys genuinely
 # drop mid-stream (r05 sweep: 8 chunks 7.9 s, 3 chunks ~3.0 s kernel; r06
 # drops to 2 = the chained-agg halve-batches pattern, VERDICT r05 #4).
-# State partitions scale with input size via _kv_state_parts (r09): 16 at
+# State partitions scale with input size via runner.state_parts: 16 at
 # fixture scale — beat both 4 (group-skew serialization, 20.9 s) and 32
 # (setup overhead) for this key cardinality — and one per core past the
 # threshold where kernel invocations dominate.
@@ -1952,7 +1814,7 @@ def keyed_state_wallclock_finite_bounds(
     — ``setTimeoutDuration`` armed at 1 day on every access, strict
     read-side elapsed check, ``ProcessingTimeTimeout`` conf — exactly the
     lifecycle a solo drain runs; only the drain's fixed micro-batch
-    infrastructure is shared. State partitions via ``_kv_state_parts``
+    infrastructure is shared. State partitions via ``runner.state_parts``
     (VERDICT r05 #4 / r08 #3): this drain's cost is per-key Python kernel
     invocations, not data — 16 parts at fixture scale, one per core once
     kernel calls dominate.
@@ -2101,7 +1963,7 @@ def streaming_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..sources import chunked_stream
 
-    def run() -> DataFrame:
+    with shuffle_partitions(spark, state_parts(spark, STATE_PARTS)):
         # 4 chunks (halve-batches, VERDICT r05 #4): the running max per key
         # is associative and chunk-count independent; 4 batches keep real
         # multi-batch incremental upserts at half the fixed commit cost.
@@ -2116,9 +1978,7 @@ def streaming_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("m")
         )
-        return run_stream_to_table(agg, output_mode="update")
-
-    out = _with_state_parts(spark, _fixture_state_parts(spark, STATE_PARTS), run)
+        out = run_stream_to_table(agg, output_mode="update")
     fin = out.groupBy("user_id").agg(F.max("m").alias("m"))
     return fin.select(
         "user_id",
@@ -2163,16 +2023,14 @@ def streaming_topk_per_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources import chunked_stream
     from .windows import windowed_counts
 
-    def run() -> DataFrame:
+    with shuffle_partitions(spark, state_parts(spark, STATE_PARTS)):
         # 4 chunks (halve-batches, VERDICT r05 #4): update-mode daily
         # counts canonicalize by max-per-window, chunk-count independent;
         # 3 watermark advances keep real closed-day eviction.
         agg = windowed_counts(
             chunked_stream(spark, sf_dir, "events", n_chunks=4), "1 day"
         )
-        return run_stream_to_table(agg, output_mode="update")
-
-    out = _with_state_parts(spark, _fixture_state_parts(spark, STATE_PARTS), run)
+        out = run_stream_to_table(agg, output_mode="update")
     fin = out.groupBy("window_start", "event_type").agg(
         F.max("n_events").alias("n_events")
     )
@@ -2220,7 +2078,7 @@ def streaming_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..sources import chunked_stream
 
-    def run() -> DataFrame:
+    with shuffle_partitions(spark, state_parts(spark, STATE_PARTS)):
         # 4 chunks (r07): counters are monotone and the drained value is
         # max-over-updates, so the result is chunk-count-independent.
         ev = chunked_stream(spark, sf_dir, "events", n_chunks=4)
@@ -2250,9 +2108,7 @@ def streaming_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "stack(4, 'value_negative', c0, 'user_id_null', c1, "
             "'event_type_invalid', c2, 'rows_seen', c3) AS (check_name, n)"
         )
-        return run_stream_to_table(long, output_mode="update")
-
-    out = _with_state_parts(spark, _fixture_state_parts(spark, STATE_PARTS), run)
+        out = run_stream_to_table(long, output_mode="update")
     return out.groupBy("check_name").agg(F.max("n").alias("n"))
 
 
@@ -2357,21 +2213,17 @@ def _funnel_drained(spark: SparkSession, sf_dir: str):
 
     def drain():
         ckpt = auto_checkpoint_dir("funnel_drain")
-
-        def run() -> DataFrame:
-            return run_stream_to_table(
+        # 16 state partitions at fixture scale, one per core past the KV
+        # size gate (100x sf0.1 profile: with the int-stage kernel, 32
+        # parts cut the entry 25.9 s -> 18.0 s).
+        with shuffle_partitions(
+            spark, state_parts(spark, 16, _event_rows(sf_dir))
+        ):
+            sink = run_stream_to_table(
                 _funnel_transitions(spark, sf_dir),
                 output_mode="append",
                 checkpoint_location=ckpt,
             )
-
-        # 16 state partitions at fixture scale, one per core past the KV
-        # size gate (r10 100x profile: with the int-stage kernel, 32 parts
-        # cut the entry 25.9 s -> 18.0 s; with the old string kernel more
-        # partitions only added setup cost).
-        sink = _with_state_parts(
-            spark, _kv_state_parts(spark, _event_rows(sf_dir)), run
-        )
         return sink, ckpt
 
     return shared(spark, "funnel", fixture_key(sf_dir, "events"), drain)
@@ -2695,7 +2547,7 @@ def streaming_ohlc_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..sources import chunked_stream
 
-    def run() -> DataFrame:
+    with shuffle_partitions(spark, state_parts(spark, STATE_PARTS)):
         ev = (
             chunked_stream(spark, sf_dir, "events", n_chunks=4)
             .where(F.col("event_type") == "purchase")
@@ -2714,12 +2566,10 @@ def streaming_ohlc_update(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_trades"),
         )
         day = (F.unix_timestamp(F.col("w.start")) / 86400).cast("long")
-        return run_stream_to_table(
+        out = run_stream_to_table(
             agg.select(day.alias("day"), "open", "high", "low", "close", "n_trades"),
             output_mode="update",
         )
-
-    out = _with_state_parts(spark, _fixture_state_parts(spark, STATE_PARTS), run)
     return (
         out.groupBy("day")
         .agg(F.max(F.struct("n_trades", "open", "high", "low", "close")).alias("fin"))

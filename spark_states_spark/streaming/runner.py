@@ -19,7 +19,7 @@ import tempfile
 import time
 import uuid
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 from ..lifetime import own_dir, own_view
 
@@ -171,16 +171,17 @@ def sweep_stale_dirs(
             pass
 
 
-def auto_checkpoint_dir(name: str) -> str:
-    """A throwaway checkpoint dir, owned by the active lifetime scope and
-    removed at its release, or at interpreter exit."""
+def auto_checkpoint_dir(name: str, kind: str = "ckpt") -> str:
+    """A throwaway checkpoint dir (or, with ``kind="sink"``, file-sink
+    output dir), owned by the active lifetime scope and removed at its
+    release, or at interpreter exit."""
     os.makedirs(_AUTO_CKPT_PARENT, exist_ok=True)
     if not _auto_ckpts:
         sweep_stale_dirs(_AUTO_CKPT_PARENT)
         for parent in _OTHER_CKPT_PARENTS:
             sweep_stale_dirs(parent)
     d = tempfile.mkdtemp(
-        prefix=f"ckpt_{name}_pid{os.getpid()}_", dir=_AUTO_CKPT_PARENT
+        prefix=f"{kind}_{name}_pid{os.getpid()}_", dir=_AUTO_CKPT_PARENT
     )
     _auto_ckpts.append(d)
     return own_dir(d)
@@ -192,16 +193,102 @@ def _cleanup_auto_ckpts() -> None:
         shutil.rmtree(d, ignore_errors=True)
 
 
-def auto_sink_dir(name: str) -> str:
-    """A throwaway file-sink output dir with the same lifecycle management
-    as auto checkpoints (lifetime scope, PID-owned stale sweep + atexit
-    removal)."""
-    os.makedirs(_AUTO_CKPT_PARENT, exist_ok=True)
-    d = tempfile.mkdtemp(
-        prefix=f"sink_{name}_pid{os.getpid()}_", dir=_AUTO_CKPT_PARENT
-    )
-    _auto_ckpts.append(d)
-    return own_dir(d)
+# Every stateful micro-batch pays a fixed state-store open + commit PER
+# STATE PARTITION, so a chunked replay at fixture scale is dominated by
+# partitions x batches: on the update-mode hourly aggregation at sf0.1,
+# 8 partitions ran ~8.6 s, 4 ~5.6 s, 2 ~4.3 s steady-state. STATE_PARTS = 4
+# balances that fixed cost against exercising real multi-partition state;
+# nothing assumes 4 — state stays per-key partitioned.
+STATE_PARTS = 4
+
+# Input size past which a drain's state and output outgrow fixture-scale
+# tuning (about 4x the sf0.1 events table).
+_KV_SCALE_ROWS = 400_000
+
+
+def state_parts(
+    spark: SparkSession, tuned: int, input_rows: int | None = None
+) -> int:
+    """State-partition count for one drain: ``tuned`` capped at the core
+    count when ``input_rows`` is None or at most ``_KV_SCALE_ROWS``, at
+    least one per core above it. Run the drain under
+    ``session.shuffle_partitions(spark, state_parts(...))``.
+
+    ``tuned`` is the fixture-scale count measured on a 32-core box:
+    STATE_PARTS for chunked replays, 8 for the inner interval join (four
+    stores per partition per side), 16 for the keyed-state TTL and funnel
+    drains, whose cost is per-key Python kernel calls: at sf0.1 (100 K
+    events, 1.5 K keys) 16 beat both 4 (group-skew serialization) and 32
+    (per-batch partition setup). The core cap: partitions beyond the core
+    count add no parallelism and still pay the fixed cost in serial waves
+    (the 16-partition KV drains ran slower on 8 cores, wallclock 5.21 s,
+    than on 32, 4.49 s). Past the gate kernel calls and buffered state
+    dominate setup, so every core hosts a state partition (measured at
+    100x sf0.1). On a cluster this is ``spark.sql.shuffle.partitions``
+    sized to executor cores, exactly as here."""
+    cores = int(spark.sparkContext.defaultParallelism)
+    if input_rows is None or input_rows <= _KV_SCALE_ROWS:
+        return min(tuned, cores)
+    return max(tuned, cores)
+
+
+def scaled_sink(input_rows: int) -> str:
+    """Sink for a drain whose output scales with its ``input_rows``, same
+    gate as :func:`state_parts`: "memory" at or below ``_KV_SCALE_ROWS``,
+    "parquet" above it. The TTL drains emit one row per get op, the
+    interval joins one per match or null-extended side. At fixture scale
+    the memory sink's driver-side buffer is bounded (at most ~180 K rows)
+    and ~0.7 s cheaper than a file-sink round trip; at 100x sf0.1 it
+    collected tens of millions of rows to the driver, 65-80% of the entry
+    time (lazy 271 s -> 63 s, wallclock 210 s -> 51 s after the switch),
+    and its 32-writer append contention scaled worse with more state
+    partitions. The parquet path is the production shape (distributed
+    exactly-once file sink), value-pinned against the memory sink by
+    tests/test_streaming_modes.py.
+
+    ``SPARK_GRAFT_KV_SINK`` ("memory" or "parquet") overrides the gate, so
+    the parquet path is verifiable at the scales that sit below it; an
+    empty value is unset and any other value fails fast."""
+    forced = os.environ.get("SPARK_GRAFT_KV_SINK")
+    if forced:
+        if forced not in ("memory", "parquet"):
+            raise ValueError(
+                f"SPARK_GRAFT_KV_SINK={forced!r} is not 'memory' or 'parquet'"
+            )
+        return forced
+    return "memory" if input_rows <= _KV_SCALE_ROWS else "parquet"
+
+
+def _start(
+    stream_df: DataFrame,
+    name: str,
+    output_mode: str,
+    sink: str,
+    checkpoint_location: str | None,
+    **trigger,
+):
+    """Start ``stream_df`` into ``sink`` under ``name``; returns the running
+    query and a zero-argument reader of the sink's result (call it once
+    the query has stopped)."""
+    spark = stream_df.sparkSession
+    ckpt = checkpoint_location or auto_checkpoint_dir(name)
+    writer = stream_df.writeStream.outputMode(output_mode)
+    if sink == "parquet":
+        if output_mode != "append":
+            raise ValueError("parquet sink supports append mode only")
+        out_dir = auto_checkpoint_dir(name, kind="sink")
+        writer = writer.format("parquet").option("path", out_dir)
+    else:
+        writer = writer.format("memory").queryName(name)
+    query = writer.option("checkpointLocation", ckpt).trigger(**trigger).start()
+    if sink == "parquet":
+        # Explicit schema: a drained stream that committed ZERO output rows
+        # leaves an empty dir, and schema inference would raise
+        # AnalysisException where the memory sink returns an empty,
+        # correctly-typed frame — the runner API must not differ by sink.
+        return query, lambda: spark.read.schema(stream_df.schema).parquet(out_dir)
+    own_view(spark, name)
+    return query, lambda: spark.table(name)
 
 
 def run_stream_to_table(
@@ -229,49 +316,18 @@ def run_stream_to_table(
 
     ``sink="parquet"`` (append mode only — the file sink's contract) writes
     output distributed to an exactly-once parquet dir and reads it back —
-    the production shape for drains whose OUTPUT scales with the input (the
-    TTL op-stream drains emit one row per get: at the 100× probe decade the
-    memory sink was collecting ~18 M rows to the driver per drain, pure
-    harness cost the engine was being graded on — r09, VERDICT r08 #3).
+    the production shape for drains whose OUTPUT scales with the input
+    (see :func:`scaled_sink`).
     """
-    spark = stream_df.sparkSession
     name = query_name or f"sss_{uuid.uuid4().hex[:12]}"
-    ckpt = checkpoint_location or auto_checkpoint_dir(name)
-    if sink == "parquet":
-        if output_mode != "append":
-            raise ValueError("parquet sink supports append mode only")
-        out_dir = auto_sink_dir(name)
-        query = (
-            stream_df.writeStream.outputMode(output_mode)
-            .format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-        # Explicit schema (ADVICE r09): a drained stream that committed
-        # ZERO output rows leaves an empty dir, and schema inference would
-        # raise AnalysisException where the memory sink returned an empty,
-        # correctly-typed frame — the runner API must not differ by sink.
-        out = spark.read.schema(stream_df.schema).parquet(out_dir)
-        if with_progress:
-            return out, list(query.recentProgress)
-        return out
-    query = (
-        stream_df.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    query, result = _start(
+        stream_df, name, output_mode, sink, checkpoint_location,
+        availableNow=True,
     )
-    own_view(spark, name)
     query.awaitTermination()
-    out = spark.table(name)
     if with_progress:
-        return out, list(query.recentProgress)
-    return out
+        return result(), list(query.recentProgress)
+    return result()
 
 
 def run_stream_drain_wallclock(
@@ -296,39 +352,22 @@ def run_stream_drain_wallclock(
     scales-with-input output off the driver (the drain progress poll reads
     ``recentProgress``, not the sink, so the two are independent).
     """
-    import time as _time
-
-    spark = stream_df.sparkSession
-    name = f"sss_{uuid.uuid4().hex[:12]}"
-    ckpt = auto_checkpoint_dir(name)
-    writer = stream_df.writeStream.outputMode(output_mode)
-    out_dir = None
-    if sink == "parquet":
-        if output_mode != "append":
-            raise ValueError("parquet sink supports append mode only")
-        out_dir = auto_sink_dir(name)
-        writer = writer.format("parquet").option("path", out_dir)
-    else:
-        writer = writer.format("memory").queryName(name)
-    query = (
-        writer.option("checkpointLocation", ckpt)
-        # 100 ms: the drain's floor is (data batches + one trailing empty
-        # batch + polling latency), so trigger cadence is pure dead time on
-        # the tail — an empty batch is a near-free state commit.
-        .trigger(processingTime="100 milliseconds")
-        .start()
+    # 100 ms: the drain's floor is (data batches + one trailing empty
+    # batch + polling latency), so trigger cadence is pure dead time on
+    # the tail — an empty batch is a near-free state commit.
+    query, result = _start(
+        stream_df, f"sss_{uuid.uuid4().hex[:12]}", output_mode, sink, None,
+        processingTime="100 milliseconds",
     )
-    if out_dir is None:
-        own_view(spark, name)
     try:
-        deadline = _time.time() + timeout_s
+        deadline = time.time() + timeout_s
         # Accumulate rows per batchId across polls: recentProgress is a
         # ring buffer capped at ~100 entries, and the 100 ms trigger
         # rotates it every ~10 s — summing only the current buffer would
         # lose the data batches' counts once empty batches rotate them
         # out, spinning a fully-drained stream into a spurious timeout.
         rows_by_batch: dict[int, int] = {}
-        while _time.time() < deadline:
+        while time.time() < deadline:
             if not query.isActive:
                 # Surface the real failure instead of spinning to a
                 # misleading drain timeout.
@@ -346,7 +385,7 @@ def run_stream_drain_wallclock(
                 and progress[-1]["numInputRows"] == 0
             ):
                 break
-            _time.sleep(0.1)
+            time.sleep(0.1)
         else:
             raise TimeoutError(
                 f"wall-clock stream did not drain {n_input_rows} rows "
@@ -354,8 +393,4 @@ def run_stream_drain_wallclock(
             )
     finally:
         query.stop()
-    if out_dir is not None:
-        # Explicit schema: zero-output drains must return an empty typed
-        # frame, not an inference AnalysisException (see run_stream_to_table).
-        return spark.read.schema(stream_df.schema).parquet(out_dir)
-    return spark.table(name)
+    return result()

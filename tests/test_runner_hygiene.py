@@ -3,6 +3,7 @@ still-running process's live checkpoint / restart-run dir, however old,
 while reclaiming dead owners' dirs promptly."""
 
 import os
+import re
 import time
 
 from spark_states_spark.streaming import runner
@@ -80,11 +81,15 @@ def test_shm_scratch_root_capacity_gate(monkeypatch):
     must be gated on free space — a 64 MiB Docker /dev/shm (or any tmpfs
     below the floor) falls back to the disk tempdir instead of ENOSPCing
     shuffle files and RocksDB changelogs mid-run."""
+    import pytest
+
     from spark_states_spark import session as sess
 
+    # A junk floor fails fast naming the variable, on every platform.
+    monkeypatch.setenv("SPARK_GRAFT_SHM_MIN_FREE_GIB", "eight")
+    with pytest.raises(ValueError, match="SPARK_GRAFT_SHM_MIN_FREE_GIB"):
+        sess.shm_scratch_root()
     if not (os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK)):
-        import pytest
-
         pytest.skip("no writable /dev/shm on this platform")
     # A floor far above any real box forces the fallback...
     monkeypatch.setenv("SPARK_GRAFT_SHM_MIN_FREE_GIB", "1000000")
@@ -148,19 +153,27 @@ def test_dir_size_bytes_walks_nested_layouts(tmp_path):
     assert _dir_size_bytes(str(tmp_path / "missing")) == 0
 
 
-def test_fixture_state_parts_env_validated(spark, monkeypatch):
-    """ADVICE r15 #3: a junk override fails fast naming the variable; a
-    value below 1 is clamped to 1 instead of reaching Spark as a zero or
-    negative shuffle-partition count."""
+def test_build_session_rejects_junk_cpus(monkeypatch):
+    """SPARK_GRAFT_CPUS is '*' or a positive integer; anything else fails
+    fast naming the variable, before any session is built."""
     import pytest
 
-    from spark_states_spark.streaming.queries import _fixture_state_parts
+    from pyspark.sql import SparkSession
 
-    monkeypatch.setenv("SPARK_GRAFT_FIXTURE_STATE_PARTS", "four")
-    with pytest.raises(ValueError, match="SPARK_GRAFT_FIXTURE_STATE_PARTS"):
-        _fixture_state_parts(spark, 16)
-    for v in ("0", "-3"):
-        monkeypatch.setenv("SPARK_GRAFT_FIXTURE_STATE_PARTS", v)
-        assert _fixture_state_parts(spark, 16) == 1
-    monkeypatch.setenv("SPARK_GRAFT_FIXTURE_STATE_PARTS", "6")
-    assert _fixture_state_parts(spark, 16) == 6
+    from spark_states_spark import session as sess
+
+    class Stop(Exception):
+        pass
+
+    def no_session(builder):
+        raise Stop(builder._options["spark.master"])
+
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", no_session)
+    for ok in ("*", "4", "32"):
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", ok)
+        with pytest.raises(Stop, match=rf"^local\[{re.escape(ok)}\]$"):
+            sess.build_session()
+    for junk in ("", "0", "-2", "four", "2.5", " 4", "4]", "²"):
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", junk)
+        with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
+            sess.build_session()

@@ -136,27 +136,6 @@ def test_forced_sink_entry_is_a_kv_drain_oracle():
     assert any(entry in members for members in SHARED_MEMOS.values())
 
 
-def test_kv_sink_env_override(monkeypatch):
-    """The size gate yields to the explicit override in BOTH directions; an
-    empty value is unset, and any other value fails fast naming the
-    variable."""
-    from spark_states_spark.streaming.queries import _KV_SCALE_ROWS, _kv_sink
-
-    monkeypatch.delenv("SPARK_GRAFT_KV_SINK", raising=False)
-    assert _kv_sink(10) == "memory"
-    assert _kv_sink(_KV_SCALE_ROWS + 1) == "parquet"
-    monkeypatch.setenv("SPARK_GRAFT_KV_SINK", "parquet")
-    assert _kv_sink(10) == "parquet"
-    monkeypatch.setenv("SPARK_GRAFT_KV_SINK", "memory")
-    assert _kv_sink(_KV_SCALE_ROWS + 1) == "memory"
-    monkeypatch.setenv("SPARK_GRAFT_KV_SINK", "")
-    assert _kv_sink(10) == "memory"
-    for junk in ("bogus", "Parquet", "parquet "):
-        monkeypatch.setenv("SPARK_GRAFT_KV_SINK", junk)
-        with pytest.raises(ValueError, match="SPARK_GRAFT_KV_SINK"):
-            _kv_sink(10)
-
-
 class FakeDF:
     """Minimal spark_df stand-in for compare(): one bigint column 'v'
     returning a single row (5,). Subclass collect() for wrong/raising

@@ -151,42 +151,6 @@ def test_parquet_metadata_handles_nested_layouts(tmp_path):
         parquet_row_count(str(empty))
 
 
-def test_interval_join_knobs_follow_the_kv_size_gate(
-    sf_dir_small, monkeypatch
-):
-    """The interval-join family's scale knobs (r10) are the KV size gate
-    with their own fixture-tuned count: memory sink and the tuned count
-    (capped at the core count) at fixture scale, parquet and at least one
-    state partition per core above the gate; the env override reaches the
-    joins' sink through _kv_sink."""
-    from types import SimpleNamespace
-
-    from spark_states_spark.streaming.queries import (
-        _KV_SCALE_ROWS,
-        STATE_PARTS,
-        _event_rows,
-        _kv_sink,
-        _kv_state_parts,
-    )
-
-    monkeypatch.delenv("SPARK_GRAFT_KV_SINK", raising=False)
-    monkeypatch.delenv("SPARK_GRAFT_FIXTURE_STATE_PARTS", raising=False)
-    n = _event_rows(sf_dir_small)
-    assert 0 < n <= _KV_SCALE_ROWS  # fixtures sit below the gate
-    assert _kv_sink(n) == "memory"
-    for cores in (2, 32):
-        spark = SimpleNamespace(
-            sparkContext=SimpleNamespace(defaultParallelism=cores)
-        )
-        for tuned in (STATE_PARTS, 8, 16):
-            assert _kv_state_parts(spark, n, tuned) == min(tuned, cores)
-            assert _kv_state_parts(spark, _KV_SCALE_ROWS + 1, tuned) == max(
-                tuned, cores
-            )
-    monkeypatch.setenv("SPARK_GRAFT_KV_SINK", "parquet")
-    assert _kv_sink(n) == "parquet"
-
-
 def test_staged_chunks_purge_by_source(tmp_path):
     """purge_staged_chunks removes exactly the cache entries staged from
     a given (deleted) source tree — the scale-probe teardown contract —

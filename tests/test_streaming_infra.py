@@ -1,6 +1,7 @@
 """Streaming infrastructure tests: metrics façade, state_timeout writer
 helper, RocksDB provider wiring."""
 
+import os
 import uuid
 
 import pytest
@@ -136,22 +137,73 @@ def test_state_provider_unload_between_drains(spark, sf_dir_small, tmp_path):
     assert drain(str(tmp_path / "ckpt2")) == before
 
 
-def test_kv_scale_knobs_thresholds(spark, monkeypatch):
-    """The TTL drains' deployment knobs switch together at _KV_SCALE_ROWS
-    (r09, VERDICT r08 #3): at or below it, the fixture tier's 16 state
-    partitions capped at the core count (r15, _fixture_state_parts) and the
-    memory sink; past it, at least one state partition per core and the
-    distributed parquet sink."""
-    from spark_states_spark.streaming.queries import (
+@pytest.mark.parametrize("tuned", [4, 8, 16])
+def test_state_parts_and_scaled_sink(tuned, sf_dir_small, monkeypatch):
+    """One size gate sizes every drain: with no input size or at most
+    _KV_SCALE_ROWS input rows, the tuned state-partition count capped at
+    the core count and the memory sink; past it, at least one state
+    partition per core and the distributed parquet sink. The fixtures sit
+    below the gate. SPARK_GRAFT_KV_SINK overrides the sink in both
+    directions, an empty value is unset, and any other value fails fast
+    naming the variable."""
+    from types import SimpleNamespace
+
+    from spark_states_spark.sources.tables import parquet_row_count, table_path
+    from spark_states_spark.streaming.runner import (
         _KV_SCALE_ROWS,
-        _kv_sink,
-        _kv_state_parts,
+        STATE_PARTS,
+        scaled_sink,
+        state_parts,
     )
 
-    monkeypatch.delenv("SPARK_GRAFT_FIXTURE_STATE_PARTS", raising=False)
-    cores = spark.sparkContext.defaultParallelism
-    for n_rows in (100_000, _KV_SCALE_ROWS):
-        assert _kv_state_parts(spark, n_rows) == min(16, cores)
-        assert _kv_sink(n_rows) == "memory"
-    assert _kv_state_parts(spark, _KV_SCALE_ROWS + 1) == max(16, cores)
-    assert _kv_sink(_KV_SCALE_ROWS + 1) == "parquet"
+    assert STATE_PARTS == 4
+    fixture_rows = parquet_row_count(table_path(sf_dir_small, "events"))
+    assert 0 < fixture_rows <= _KV_SCALE_ROWS
+    monkeypatch.delenv("SPARK_GRAFT_KV_SINK", raising=False)
+    for cores in (2, 4, 8, 32):
+        spark = SimpleNamespace(
+            sparkContext=SimpleNamespace(defaultParallelism=cores)
+        )
+        for rows in (None, fixture_rows, _KV_SCALE_ROWS):
+            assert state_parts(spark, tuned, rows) == min(tuned, cores)
+        assert state_parts(spark, tuned) == min(tuned, cores)
+        assert state_parts(spark, tuned, _KV_SCALE_ROWS + 1) == max(tuned, cores)
+    assert scaled_sink(fixture_rows) == "memory"
+    assert scaled_sink(_KV_SCALE_ROWS) == "memory"
+    assert scaled_sink(_KV_SCALE_ROWS + 1) == "parquet"
+    for forced in ("memory", "parquet"):
+        monkeypatch.setenv("SPARK_GRAFT_KV_SINK", forced)
+        assert scaled_sink(_KV_SCALE_ROWS) == forced
+        assert scaled_sink(_KV_SCALE_ROWS + 1) == forced
+    monkeypatch.setenv("SPARK_GRAFT_KV_SINK", "")
+    assert scaled_sink(_KV_SCALE_ROWS) == "memory"
+    assert scaled_sink(_KV_SCALE_ROWS + 1) == "parquet"
+    for junk in ("bogus", "Parquet", "parquet "):
+        monkeypatch.setenv("SPARK_GRAFT_KV_SINK", junk)
+        with pytest.raises(ValueError, match="SPARK_GRAFT_KV_SINK"):
+            scaled_sink(_KV_SCALE_ROWS)
+
+
+def test_shuffle_partitions_pin(spark, sf_dir_small, tmp_path):
+    """The pin restores the session's shuffle-partition count when its
+    block raises, and a stateful drain started inside it keeps exactly
+    that many state partitions in its checkpoint."""
+    from spark_states_spark.session import shuffle_partitions
+    from spark_states_spark.streaming.runner import run_stream_to_table
+
+    conf = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(conf)
+    with pytest.raises(RuntimeError, match="inside the pin"):
+        with shuffle_partitions(spark, 5):
+            assert spark.conf.get(conf) == "5"
+            raise RuntimeError("inside the pin")
+    assert spark.conf.get(conf) == saved
+
+    ckpt = str(tmp_path / "ckpt")
+    with shuffle_partitions(spark, 3):
+        agg = read_stream(spark, sf_dir_small, "events").groupBy("event_type").count()
+        out = run_stream_to_table(agg, checkpoint_location=ckpt)
+    assert spark.conf.get(conf) == saved
+    assert out.count() > 0
+    parts = [d for d in os.listdir(os.path.join(ckpt, "state", "0")) if d.isdigit()]
+    assert sorted(parts) == ["0", "1", "2"]

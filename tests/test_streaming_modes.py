@@ -253,7 +253,7 @@ def test_chained_agg_runs_two_stateful_operators(spark, sf_dir):
 def test_parquet_sink_matches_memory_sink(spark, sf_dir_small):
     """Sink equivalence for the KV drains' scale path (r09): past
     _KV_SCALE_ROWS the TTL drains switch from the memory sink to a
-    distributed exactly-once parquet sink (_kv_sink) — the rows read back
+    distributed exactly-once parquet sink (runner.scaled_sink) — the rows read back
     from the file sink must be exactly the memory sink's, so the switch can
     never change an oracle verdict at scale."""
     from spark_states_spark.config import resolve_ttl

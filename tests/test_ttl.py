@@ -471,6 +471,7 @@ def test_wallclock_drain_surfaces_kernel_failure(spark, tmp_path):
     real failure promptly — not spin to a misleading drain TimeoutError.
     A put with a NULL value makes the kernel's int() conversion throw on
     the executor, terminating the query."""
+    from spark_states_spark.session import shuffle_partitions
     from spark_states_spark.streaming.runner import run_stream_drain_wallclock
     from spark_states_spark.streaming.ttl import ttl_kv_ops_wallclock
 
@@ -481,8 +482,12 @@ def test_wallclock_drain_surfaces_kernel_failure(spark, tmp_path):
         .parquet(src)
     )
     out = ttl_kv_ops_wallclock(stream, TtlConfig("q", -1, strict=False))
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
     t0 = time.time()
     with pytest.raises(RuntimeError, match="terminated before draining"):
-        run_stream_drain_wallclock(out, n_input_rows=2, timeout_s=120.0)
+        with shuffle_partitions(spark, 3):
+            run_stream_drain_wallclock(out, n_input_rows=2, timeout_s=120.0)
     # Fail-fast: the failure surfaced long before the drain deadline.
     assert time.time() - t0 < 60
+    # The dead drain's pinned state-partition count does not leak out.
+    assert spark.conf.get("spark.sql.shuffle.partitions") == saved
