@@ -509,9 +509,8 @@ def streaming_hll_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     The exact baseline column is computed batch-side (it exists only to
     let the oracle verify the estimate).
     """
-    from ..session import shuffle_partitions
     from ..sources import chunked_stream
-    from ..streaming.runner import STATE_PARTS, run_stream_to_table, state_parts
+    from ..streaming.runner import STATE_PARTS, run_stream_to_table
     from .hashes import spark_h32
 
     pair = (
@@ -519,18 +518,19 @@ def streaming_hll_update(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cast(unix_timestamp(ts) div 86400 as string))"
     )
 
-    # 4 chunks × STATE_PARTS partitions: per-batch store open/commit is the
-    # whole cost here (the state is ≤4096 register rows); 4 batches still
-    # prove the cross-batch register fold.
-    with shuffle_partitions(spark, state_parts(spark, STATE_PARTS)):
-        events = chunked_stream(spark, sf_dir, "events", n_chunks=4)
-        h = events.selectExpr(f"{spark_h32(pair)} AS h32")
-        reg_stream = h.groupBy((F.col("h32") % _HLL_M).alias("bucket")).agg(
-            F.expr(
-                f"max({_rho_case(f'(h32 - (h32 % {_HLL_M})) / {_HLL_M}')})"
-            ).alias("rho")
-        )
-        drained = run_stream_to_table(reg_stream, output_mode="update")
+    # 4 chunks: per-batch store open/commit is the whole cost here (the
+    # state is ≤4096 register rows); 4 batches still prove the cross-batch
+    # register fold.
+    events = chunked_stream(spark, sf_dir, "events", n_chunks=4)
+    h = events.selectExpr(f"{spark_h32(pair)} AS h32")
+    reg_stream = h.groupBy((F.col("h32") % _HLL_M).alias("bucket")).agg(
+        F.expr(
+            f"max({_rho_case(f'(h32 - (h32 % {_HLL_M})) / {_HLL_M}')})"
+        ).alias("rho")
+    )
+    drained = run_stream_to_table(
+        reg_stream, output_mode="update", parts=STATE_PARTS
+    )
     reg = drained.groupBy("bucket").agg(F.max("rho").alias("rho"))
     s = reg.agg(
         F.count("*").alias("n_occupied"),

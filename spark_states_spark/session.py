@@ -26,8 +26,10 @@ ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
 
-# Defaults sized for the local[32] test harness; on a real cluster these are
-# overridden per-deployment. Shuffle partitions should be ~2-3× total cores.
+# Local-mode defaults; on a real cluster these are overridden
+# per-deployment. The 32 shuffle partitions are the batch shuffle width only
+# (~2-3× total cores); streaming drains get their state-partition count
+# from the runner at query start (streaming/runner.py::state_parts).
 _LOCAL_DEFAULTS = {
     "spark.sql.shuffle.partitions": "32",
     "spark.sql.adaptive.enabled": "true",
@@ -109,9 +111,9 @@ def shuffle_partitions(spark: SparkSession, n: int) -> Iterator[None]:
     restore the saved value on exit, also when the block raises.
 
     A stateful query takes its state-partition count from this conf when
-    it first starts and freezes it into the checkpoint, so this is the
-    per-query state-partition knob, sized by ``runner.state_parts``; it
-    also sizes a batch phase's shuffles."""
+    it first starts and freezes it into the checkpoint; the runner pins it
+    around ``start()`` for drains that pass ``parts=``. It also sizes a
+    batch phase's shuffles."""
 
     def pin(value: str) -> None:
         spark.conf.set("spark.sql.shuffle.partitions", value)

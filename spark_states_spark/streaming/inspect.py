@@ -22,9 +22,10 @@ from .state_reader import read_state, state_metadata
 
 def _run_user_agg(spark: SparkSession, sf_dir: str) -> str:
     """Drain a streaming per-user aggregation over ``events`` into a fresh
-    checkpoint and return its location. 8 state partitions: one store
-    instance per partition is the dominant fixed cost at fixture scale
-    (same sizing note as streaming_interval_join)."""
+    checkpoint and return its location. Exactly 8 state partitions, a
+    literal pin rather than the runner's ``parts=`` rule:
+    ``state_metadata_inventory``'s oracle pins ``num_partitions = 8``, and
+    the rule's core cap would make it vary with the machine."""
     with shuffle_partitions(spark, 8):
         agg = (
             read_stream(spark, sf_dir, "events")

@@ -23,7 +23,7 @@ from ..lifetime import own_dir, release, shared
 from ..session import shuffle_partitions
 from ..sources import load_table, read_stream
 from ..sources.tables import fixture_key, parquet_row_count, table_path
-from .runner import STATE_PARTS, run_stream_to_table, scaled_sink, state_parts
+from .runner import STATE_PARTS, run_stream_to_table
 from .ttl import ttl_kv_ops, ttl_kv_ops_wallclock
 from .windows import streaming_hourly_agg
 
@@ -69,7 +69,7 @@ def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = events.select("event_type", "user_id").dropDuplicates(
         ["event_type", "user_id"]
     )
-    out = run_stream_to_table(deduped, output_mode="append")
+    out = run_stream_to_table(deduped, output_mode="append", parts=STATE_PARTS)
     return out.groupBy("event_type").agg(F.count("*").alias("n_unique_users"))
 
 
@@ -93,7 +93,7 @@ def streaming_doc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     dd = docs.select(F.md5("text").alias("fingerprint"), "doc_id").dropDuplicates(
         ["fingerprint"]
     )
-    out = run_stream_to_table(dd, output_mode="append")
+    out = run_stream_to_table(dd, output_mode="append", parts=STATE_PARTS)
     # Arrival order decides which doc_id survives dropDuplicates; join back
     # to the digest's min doc_id for an order-independent result.
     return (
@@ -162,7 +162,7 @@ def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    return run_stream_to_table(sess, output_mode="complete")
+    return run_stream_to_table(sess, output_mode="complete", parts=STATE_PARTS)
 
 
 @register(
@@ -201,7 +201,7 @@ def streaming_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    return run_stream_to_table(agg, output_mode="complete")
+    return run_stream_to_table(agg, output_mode="complete", parts=STATE_PARTS)
 
 
 @register("streaming_hourly_agg_update", oracle=_HOURLY_ORACLE)
@@ -218,22 +218,12 @@ def streaming_hourly_agg_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     final state of every window = its max-by-n_events row — which is what
     the batch GROUP BY oracle checks. In-order chunk arrival means no event
     is ever late, so no update is lost to eviction.
-
-    State partitions are pinned to STATE_PARTS (the per-query deployment
-    knob, same rationale as streaming_interval_join): every micro-batch
-    pays one state-store open+commit PER PARTITION, and an 8-batch chunked
-    replay at 32 partitions spends ~2× the query's wall time on that fixed
-    cost alone at fixture scale (sizing measurements at the STATE_PARTS
-    definition, streaming/runner.py). A 100 TB deployment raises the count
-    with volume — state stays per-key partitioned; nothing assumes the
-    constant.
     """
     from ..sources import chunked_stream
     from .windows import windowed_counts
 
-    with shuffle_partitions(spark, state_parts(spark, STATE_PARTS)):
-        agg = windowed_counts(chunked_stream(spark, sf_dir, "events"), "1 hour")
-        out = run_stream_to_table(agg, output_mode="update")
+    agg = windowed_counts(chunked_stream(spark, sf_dir, "events"), "1 hour")
+    out = run_stream_to_table(agg, output_mode="update", parts=STATE_PARTS)
     return (
         out.groupBy("window_start", "event_type")
         .agg(F.max(F.struct("n_events", "sum_value")).alias("fin"))
@@ -307,14 +297,11 @@ def streaming_late_arrival_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources import chunked_stream
     from .windows import windowed_counts
 
-    with shuffle_partitions(spark, state_parts(spark, STATE_PARTS)):
-        ev = chunked_stream(
-            spark, sf_dir, "events", n_chunks=3, arrival_order=(0, 2, 1)
-        )
-        out, progress = run_stream_to_table(
-            windowed_counts(ev, "1 hour"), output_mode="append",
-            with_progress=True,
-        )
+    ev = chunked_stream(spark, sf_dir, "events", n_chunks=3, arrival_order=(0, 2, 1))
+    out, progress = run_stream_to_table(
+        windowed_counts(ev, "1 hour"), output_mode="append",
+        with_progress=True, parts=STATE_PARTS,
+    )
     dropped = sum(
         op.get("numRowsDroppedByWatermark", 0)
         for p in progress
@@ -403,7 +390,7 @@ def streaming_restart_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources import staged_chunks
     from ..sources.tables import _stream_from_chunk_dir
-    from .runner import ephemeral_root, sweep_stale_dirs
+    from .runner import ephemeral_root, state_parts, sweep_stale_dirs
     from .windows import windowed_counts
 
     chunks = staged_chunks(sf_dir, "events", n_chunks=4)
@@ -447,8 +434,10 @@ def streaming_restart_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
         # staged chunk sequence across both phases.
         for f in parts[:2]:
             _shutil.copy2(_os.path.join(chunks, f), _os.path.join(src, f))
-        # Phase 1: drain chunks 0-1, commit, stop.
-        with shuffle_partitions(spark, STATE_PARTS):
+        # Phase 1: drain chunks 0-1, commit, stop. The query freezes its
+        # state-partition count into the checkpoint here; phase 2 restores
+        # it from the offset log whatever the session's value.
+        with shuffle_partitions(spark, state_parts(spark, STATE_PARTS)):
             run(src, ckpt, sink)
         for tag in ("ckpt", "sink"):
             _shutil.copytree(
@@ -485,8 +474,7 @@ def streaming_restart_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
         if not _os.path.exists(dst):
             _shutil.copy2(_os.path.join(chunks, f), dst)
     # Phase 2: restart on the same checkpoint, drain chunks 2-3.
-    with shuffle_partitions(spark, STATE_PARTS):
-        run(src, ckpt, sink)
+    run(src, ckpt, sink)
     return spark.read.parquet(sink)
 
 
@@ -534,42 +522,39 @@ def streaming_chained_agg_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..sources import chunked_stream
 
-    # Output is bounded (live days × event types) so the memory sink
-    # stays at every scale; state parallelism scales with input like the
-    # joins' (two stateful operators' buffered windows grow with the
-    # fixture's time span).
-    with shuffle_partitions(
-        spark, state_parts(spark, STATE_PARTS, _event_rows(sf_dir))
-    ):
-        # 4 chunks, not the 8-chunk default: TWO stateful operators double
-        # the per-batch store open/commit cost (2 ops x STATE_PARTS stores
-        # x n_batches), and 4 time-ordered batches over the ~30-day fixture
-        # still finalize hourly windows at every batch boundary — the
-        # multi-batch eviction lifecycle the entry exists to exercise. The
-        # emitted set is chunk-count-invariant (both stages evict against
-        # the final frontier by drain end; oracle uses only that frontier).
-        ev = chunked_stream(spark, sf_dir, "events", n_chunks=4)
-        hourly = (
-            ev.withWatermark("ts", "10 minutes")
-            .groupBy(F.window("ts", "1 hour"), "event_type")
-            .agg(F.count("*").alias("n_events"))
+    # 4 chunks, not the 8-chunk default: TWO stateful operators double
+    # the per-batch store open/commit cost (2 ops x state partitions x
+    # n_batches), and 4 time-ordered batches over the ~30-day fixture
+    # still finalize hourly windows at every batch boundary — the
+    # multi-batch eviction lifecycle the entry exists to exercise. The
+    # emitted set is chunk-count-invariant (both stages evict against
+    # the final frontier by drain end; oracle uses only that frontier).
+    ev = chunked_stream(spark, sf_dir, "events", n_chunks=4)
+    hourly = (
+        ev.withWatermark("ts", "10 minutes")
+        .groupBy(F.window("ts", "1 hour"), "event_type")
+        .agg(F.count("*").alias("n_events"))
+    )
+    daily = (
+        hourly.groupBy(F.window(F.window_time("window"), "1 day"), "event_type")
+        .agg(
+            F.sum("n_events").alias("n_events"),
+            F.count("*").alias("n_hours"),
         )
-        daily = (
-            hourly.groupBy(
-                F.window(F.window_time("window"), "1 day"), "event_type"
-            )
-            .agg(
-                F.sum("n_events").alias("n_events"),
-                F.count("*").alias("n_hours"),
-            )
-            .select(
-                F.date_format("window.start", "yyyy-MM-dd").alias("day"),
-                "event_type",
-                "n_events",
-                "n_hours",
-            )
+        .select(
+            F.date_format("window.start", "yyyy-MM-dd").alias("day"),
+            "event_type",
+            "n_events",
+            "n_hours",
         )
-        return run_stream_to_table(daily, output_mode="append")
+    )
+    # Output is bounded (live days × event types), so the memory sink
+    # stays at every scale; the two operators' buffered windows grow with
+    # the fixture's time span, so state is sized by input.
+    return run_stream_to_table(
+        daily, output_mode="append", parts=STATE_PARTS,
+        input_rows=_event_rows(sf_dir),
+    )
 
 
 @register(
@@ -597,18 +582,17 @@ def streaming_sliding_window_update(spark: SparkSession, sf_dir: str) -> DataFra
     from ..sources import chunked_stream
     from .windows import windowed_counts
 
-    with shuffle_partitions(spark, state_parts(spark, STATE_PARTS)):
-        # 4 chunks (r07, the r06 halve-batches pattern): per-batch fixed
-        # cost dominates at fixture scale; the update-mode result is
-        # chunk-count-independent (the final max-per-window collapse below
-        # absorbs any update cadence) and 4 batches keep ≥3 real mid-stream
-        # watermark advances / state evictions.
-        agg = windowed_counts(
-            chunked_stream(spark, sf_dir, "events", n_chunks=4),
-            "1 hour",
-            slide="30 minutes",
-        )
-        out = run_stream_to_table(agg, output_mode="update")
+    # 4 chunks (r07, the r06 halve-batches pattern): per-batch fixed
+    # cost dominates at fixture scale; the update-mode result is
+    # chunk-count-independent (the final max-per-window collapse below
+    # absorbs any update cadence) and 4 batches keep ≥3 real mid-stream
+    # watermark advances / state evictions.
+    agg = windowed_counts(
+        chunked_stream(spark, sf_dir, "events", n_chunks=4),
+        "1 hour",
+        slide="30 minutes",
+    )
+    out = run_stream_to_table(agg, output_mode="update", parts=STATE_PARTS)
     return (
         out.groupBy("window_start", "event_type")
         .agg(F.max("n_events").alias("n_events"))
@@ -665,40 +649,36 @@ def streaming_session_window_append(spark: SparkSession, sf_dir: str) -> DataFra
     """
     from ..sources import chunked_stream
 
-    n_rows = _event_rows(sf_dir)
-    # STATE_PARTS state partitions at fixture scale (see
-    # streaming_hourly_agg_update: per-batch per-partition store commits
-    # dominate chunked replays there), one per core past the size gate.
-    with shuffle_partitions(spark, state_parts(spark, STATE_PARTS, n_rows)):
-        # 4 time-ordered chunks (halve-batches pattern, VERDICT r05 #4):
-        # the emitted set is determined by the FINAL watermark (append mode
-        # + in-order chunks: nothing is ever late, availableNow's closing
-        # no-data batch finalizes the frontier), so it is chunk-count
-        # independent; 3 mid-stream watermark advances keep real
-        # session-close/eviction lifecycle at half the fixed batch cost.
-        events = chunked_stream(spark, sf_dir, "events", n_chunks=4)
-        sess = (
-            events.withWatermark("ts", "10 minutes")
-            .groupBy(F.session_window("ts", "30 minutes"), "user_id")
-            .agg(
-                F.count("*").alias("n_events"),
-                F.sum(F.col("value").cast("decimal(12,2)")).cast("double").alias(
-                    "sum_value"
-                ),
-            )
-            .select(
-                "user_id",
-                F.unix_timestamp("session_window.start").alias("session_start_s"),
-                "n_events",
-                "sum_value",
-            )
+    # 4 time-ordered chunks (halve-batches pattern, VERDICT r05 #4):
+    # the emitted set is determined by the FINAL watermark (append mode
+    # + in-order chunks: nothing is ever late, availableNow's closing
+    # no-data batch finalizes the frontier), so it is chunk-count
+    # independent; 3 mid-stream watermark advances keep real
+    # session-close/eviction lifecycle at half the fixed batch cost.
+    events = chunked_stream(spark, sf_dir, "events", n_chunks=4)
+    sess = (
+        events.withWatermark("ts", "10 minutes")
+        .groupBy(F.session_window("ts", "30 minutes"), "user_id")
+        .agg(
+            F.count("*").alias("n_events"),
+            F.sum(F.col("value").cast("decimal(12,2)")).cast("double").alias(
+                "sum_value"
+            ),
         )
-        # Output is one row per CLOSED session — O(input/session length),
-        # so past the KV size gate it must not collect to the driver
-        # (same tier as the interval joins; r10).
-        return run_stream_to_table(
-            sess, output_mode="append", sink=scaled_sink(n_rows)
+        .select(
+            "user_id",
+            F.unix_timestamp("session_window.start").alias("session_start_s"),
+            "n_events",
+            "sum_value",
         )
+    )
+    # Output is one row per CLOSED session — O(input/session length),
+    # so past the KV size gate it must not collect to the driver
+    # (same tier as the interval joins; r10).
+    return run_stream_to_table(
+        sess, output_mode="append", sink="scaled", parts=STATE_PARTS,
+        input_rows=_event_rows(sf_dir),
+    )
 
 
 @register(
@@ -725,25 +705,21 @@ def streaming_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFr
     """
     from ..sources import chunked_stream
 
-    n_rows = _event_rows(sf_dir)
-    # STATE_PARTS at fixture scale, one per core past the size gate.
-    with shuffle_partitions(spark, state_parts(spark, STATE_PARTS, n_rows)):
-        # 4 chunks (r07): the determinism argument below is chunk-count-
-        # independent (fewer boundaries only strengthen the 25 h in-state
-        # guarantee), and 4 batches keep real cross-batch seen-set state.
-        events = chunked_stream(spark, sf_dir, "events", n_chunks=4)
-        keyed = events.select(
-            "event_type", "user_id", "ts", F.to_date("ts").alias("day")
-        )
-        dd = keyed.withWatermark("ts", "25 hours").dropDuplicatesWithinWatermark(
-            ["event_type", "user_id", "day"]
-        )
-        # Pre-aggregation output is one row per distinct (type, user, day)
-        # — grows with input (the replicas scale users AND the time span),
-        # so the sink follows the KV size gate (r10).
-        out = run_stream_to_table(
-            dd, output_mode="append", sink=scaled_sink(n_rows)
-        )
+    # 4 chunks (r07): the determinism argument above is chunk-count-
+    # independent (fewer boundaries only strengthen the 25 h in-state
+    # guarantee), and 4 batches keep real cross-batch seen-set state.
+    events = chunked_stream(spark, sf_dir, "events", n_chunks=4)
+    keyed = events.select("event_type", "user_id", "ts", F.to_date("ts").alias("day"))
+    dd = keyed.withWatermark("ts", "25 hours").dropDuplicatesWithinWatermark(
+        ["event_type", "user_id", "day"]
+    )
+    # Pre-aggregation output is one row per distinct (type, user, day)
+    # — grows with input (the replicas scale users AND the time span),
+    # so the sink follows the KV size gate (r10).
+    out = run_stream_to_table(
+        dd, output_mode="append", sink="scaled", parts=STATE_PARTS,
+        input_rows=_event_rows(sf_dir),
+    )
     return out.groupBy("event_type").agg(F.count("*").alias("n_user_days"))
 
 
@@ -789,7 +765,7 @@ def streaming_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     dd = quality.select("lang", F.md5("text").alias("fp")).dropDuplicates(
         ["lang", "fp"]
     )
-    out = run_stream_to_table(dd, output_mode="append")
+    out = run_stream_to_table(dd, output_mode="append", parts=STATE_PARTS)
     return out.groupBy("lang").agg(F.count("*").alias("n_unique_quality_docs"))
 
 
@@ -820,15 +796,14 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     purely on instance overhead. A 100 TB deployment raises it with volume
     (state stays per-key partitioned; nothing here assumes 8).
     """
-    n_rows = _event_rows(sf_dir)
-    with shuffle_partitions(spark, state_parts(spark, 8, n_rows)):
-        p, x, cond = _interval_join_sides(spark, sf_dir)
-        joined = p.join(x, cond).select(
-            "purchase_id", "error_id", F.col("p_user").alias("user_id")
-        )
-        return run_stream_to_table(
-            joined, output_mode="append", sink=scaled_sink(n_rows)
-        )
+    p, x, cond = _interval_join_sides(spark, sf_dir)
+    joined = p.join(x, cond).select(
+        "purchase_id", "error_id", F.col("p_user").alias("user_id")
+    )
+    return run_stream_to_table(
+        joined, output_mode="append", sink="scaled", parts=8,
+        input_rows=_event_rows(sf_dir),
+    )
 
 
 def _interval_join_sides(spark: SparkSession, sf_dir: str):
@@ -892,17 +867,16 @@ def _interval_join_fo_drained(spark: SparkSession, sf_dir: str) -> DataFrame:
     comment above)."""
 
     def drain() -> DataFrame:
-        n_rows = _event_rows(sf_dir)
-        with shuffle_partitions(spark, state_parts(spark, STATE_PARTS, n_rows)):
-            p, x, cond = _interval_join_sides(spark, sf_dir)
-            joined = p.join(x, cond, "fullOuter").select(
-                "purchase_id",
-                "error_id",
-                F.coalesce(F.col("p_user"), F.col("x_user")).alias("user_id"),
-            )
-            return run_stream_to_table(
-                joined, output_mode="append", sink=scaled_sink(n_rows)
-            )
+        p, x, cond = _interval_join_sides(spark, sf_dir)
+        joined = p.join(x, cond, "fullOuter").select(
+            "purchase_id",
+            "error_id",
+            F.coalesce(F.col("p_user"), F.col("x_user")).alias("user_id"),
+        )
+        return run_stream_to_table(
+            joined, output_mode="append", sink="scaled", parts=STATE_PARTS,
+            input_rows=_event_rows(sf_dir),
+        )
 
     return shared(spark, "interval_fo", fixture_key(sf_dir, "events"), drain)
 
@@ -913,21 +887,18 @@ def _interval_join_solo(spark: SparkSession, sf_dir: str, how: str) -> DataFrame
     derive-from-full-outer equivalences stay executable claims
     (test_interval_join_derived_shapes_equal_solo), not prose."""
     user_side = "x_user" if how == "rightOuter" else "p_user"
-    n_rows = _event_rows(sf_dir)
-    with shuffle_partitions(spark, state_parts(spark, STATE_PARTS, n_rows)):
-        p, x, cond = _interval_join_sides(spark, sf_dir)
-        joined = p.join(x, cond, how)
-        if how == "leftSemi":
-            joined = joined.select(
-                "purchase_id", F.col("p_user").alias("user_id")
-            )
-        else:
-            joined = joined.select(
-                "purchase_id", "error_id", F.col(user_side).alias("user_id")
-            )
-        return run_stream_to_table(
-            joined, output_mode="append", sink=scaled_sink(n_rows)
+    p, x, cond = _interval_join_sides(spark, sf_dir)
+    joined = p.join(x, cond, how)
+    if how == "leftSemi":
+        joined = joined.select("purchase_id", F.col("p_user").alias("user_id"))
+    else:
+        joined = joined.select(
+            "purchase_id", "error_id", F.col(user_side).alias("user_id")
         )
+    return run_stream_to_table(
+        joined, output_mode="append", sink="scaled", parts=STATE_PARTS,
+        input_rows=_event_rows(sf_dir),
+    )
 
 
 def _event_rows(sf_dir: str) -> int:
@@ -1389,15 +1360,15 @@ def _virtual_kv_drained(spark: SparkSession, sf_dir: str) -> DataFrame:
                 spark, sf_dir, "events", n_chunks=_LAZY_BOUNDS_CHUNKS
             )
         )
-        n_rows = _event_rows(sf_dir)
-        with shuffle_partitions(spark, state_parts(spark, 16, n_rows)):
-            # Sink scales with input (see scaled_sink): past fixture scale
-            # the drain's per-get output must not collect to the driver.
-            return run_stream_to_table(
-                ttl_kv_ops(ops, bindings),
-                output_mode="append",
-                sink=scaled_sink(n_rows),
-            )
+        # 16 state partitions (see _LAZY_BOUNDS_CHUNKS); the per-get
+        # output scales with input.
+        return run_stream_to_table(
+            ttl_kv_ops(ops, bindings),
+            output_mode="append",
+            sink="scaled",
+            parts=16,
+            input_rows=_event_rows(sf_dir),
+        )
 
     return shared(spark, "virtual_kv", fixture_key(sf_dir, "events"), drain)
 
@@ -1530,7 +1501,7 @@ def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("c_custkey").alias("user_id"), F.col("n_name").alias("nation"))
     )
     enriched = ev.join(dim, "user_id")
-    out = run_stream_to_table(enriched, output_mode="append")
+    out = run_stream_to_table(enriched, output_mode="append", parts=STATE_PARTS)
     return out.groupBy("nation").agg(
         F.count("*").alias("n_purchases"),
         F.sum(F.col("value").cast("decimal(12,2)")).cast("double").alias("revenue"),
@@ -1576,13 +1547,11 @@ def _wallclock_kv_drained(spark: SparkSession, sf_dir: str) -> DataFrame:
         # fails fast relative to the workload size (r08; the 100x probe
         # needs this).
         timeout_s = max(180.0, n_rows / 2000.0)
-        with shuffle_partitions(spark, state_parts(spark, 16, n_rows)):
-            # Sink scales with input (see scaled_sink): past fixture scale
-            # the drain's per-get output must not collect to the driver.
-            return run_stream_drain_wallclock(
-                stream, n_input_rows=n_rows, output_mode="append",
-                timeout_s=timeout_s, sink=scaled_sink(n_rows),
-            )
+        # 16 state partitions and a scaled sink, as the virtual-clock drain.
+        return run_stream_drain_wallclock(
+            stream, n_input_rows=n_rows, output_mode="append",
+            timeout_s=timeout_s, sink="scaled", parts=16,
+        )
 
     return shared(spark, "wallclock_kv", fixture_key(sf_dir, "events"), drain)
 
@@ -1642,10 +1611,8 @@ _LAZY_BOUNDS_TTL_SECS = 21600
 # mid-stream sweep boundary already makes lazily-expired keys genuinely
 # drop mid-stream (r05 sweep: 8 chunks 7.9 s, 3 chunks ~3.0 s kernel; r06
 # drops to 2 = the chained-agg halve-batches pattern, VERDICT r05 #4).
-# State partitions scale with input size via runner.state_parts: 16 at
-# fixture scale — beat both 4 (group-skew serialization, 20.9 s) and 32
-# (setup overhead) for this key cardinality — and one per core past the
-# threshold where kernel invocations dominate.
+# The KV drains' tuned 16 state partitions beat both 4 (group-skew
+# serialization, 20.9 s) and 32 (setup overhead) for this key cardinality.
 _LAZY_BOUNDS_CHUNKS = 2
 
 
@@ -1814,10 +1781,9 @@ def keyed_state_wallclock_finite_bounds(
     — ``setTimeoutDuration`` armed at 1 day on every access, strict
     read-side elapsed check, ``ProcessingTimeTimeout`` conf — exactly the
     lifecycle a solo drain runs; only the drain's fixed micro-batch
-    infrastructure is shared. State partitions via ``runner.state_parts``
-    (VERDICT r05 #4 / r08 #3): this drain's cost is per-key Python kernel
-    invocations, not data — 16 parts at fixture scale, one per core once
-    kernel calls dominate.
+    infrastructure is shared. 16 tuned state partitions (VERDICT r05 #4 /
+    r08 #3): this drain's cost is per-key Python kernel invocations, not
+    data.
     """
     _assert_event_id_ts_monotone(spark, sf_dir, scope="global")
     wall = _get_outcome_summary(
@@ -1852,7 +1818,7 @@ def streaming_global_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     count — and the oracle checks least(n, total)."""
     events = read_stream(spark, sf_dir, "events")
     limited = events.limit(1000)
-    out = run_stream_to_table(limited, output_mode="append")
+    out = run_stream_to_table(limited, output_mode="append", parts=STATE_PARTS)
     return out.agg(F.count("*").alias("n_rows"))
 
 
@@ -1905,8 +1871,10 @@ def streaming_minhash_band_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     sig = spark_minhash_fold(shh, 16)
     docs = read_stream(spark, sf_dir, "documents")
     bands = (
-        docs.selectExpr(f"{toks} AS toks")
-        .repartition(int(spark.conf.get("spark.sql.shuffle.partitions")))
+        docs.selectExpr("doc_id", f"{toks} AS toks")
+        # By expression, so Spark sizes the Exchange from the query's own
+        # shuffle-partition conf when it plans each micro-batch.
+        .repartition("doc_id")
         # < 3 tokens → no 3-gram shingles; the oracle's len(sh) > 0 filter.
         .filter(F.expr("size(toks) >= 3"))
         .selectExpr(f"{sig} AS sig")
@@ -1918,7 +1886,7 @@ def streaming_minhash_band_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     dd = bands.dropDuplicates(["band_hash"])
-    return run_stream_to_table(dd, output_mode="append")
+    return run_stream_to_table(dd, output_mode="append", parts=STATE_PARTS)
 
 
 # --- streaming materialized views: CDC upsert + windowed top-k --------------
@@ -1957,28 +1925,24 @@ def streaming_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     the TTL kernels (streaming/ttl.py) bound it instead. The running
     ``max(struct(ts, event_id, ...))`` is nondecreasing per key, so the
     memory sink's final row per user = max over all its emitted updates.
-
-    State partitions pinned to STATE_PARTS — the per-query deployment
-    knob (see streaming_interval_join's sizing rationale).
     """
     from ..sources import chunked_stream
 
-    with shuffle_partitions(spark, state_parts(spark, STATE_PARTS)):
-        # 4 chunks (halve-batches, VERDICT r05 #4): the running max per key
-        # is associative and chunk-count independent; 4 batches keep real
-        # multi-batch incremental upserts at half the fixed commit cost.
-        ev = chunked_stream(spark, sf_dir, "events", n_chunks=4)
-        agg = ev.groupBy("user_id").agg(
-            F.max(
-                F.struct(
-                    F.unix_micros("ts").alias("ts"),
-                    "event_id",
-                    "event_type",
-                    "value",
-                )
-            ).alias("m")
-        )
-        out = run_stream_to_table(agg, output_mode="update")
+    # 4 chunks (halve-batches, VERDICT r05 #4): the running max per key
+    # is associative and chunk-count independent; 4 batches keep real
+    # multi-batch incremental upserts at half the fixed commit cost.
+    ev = chunked_stream(spark, sf_dir, "events", n_chunks=4)
+    agg = ev.groupBy("user_id").agg(
+        F.max(
+            F.struct(
+                F.unix_micros("ts").alias("ts"),
+                "event_id",
+                "event_type",
+                "value",
+            )
+        ).alias("m")
+    )
+    out = run_stream_to_table(agg, output_mode="update", parts=STATE_PARTS)
     fin = out.groupBy("user_id").agg(F.max("m").alias("m"))
     return fin.select(
         "user_id",
@@ -2023,14 +1987,13 @@ def streaming_topk_per_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources import chunked_stream
     from .windows import windowed_counts
 
-    with shuffle_partitions(spark, state_parts(spark, STATE_PARTS)):
-        # 4 chunks (halve-batches, VERDICT r05 #4): update-mode daily
-        # counts canonicalize by max-per-window, chunk-count independent;
-        # 3 watermark advances keep real closed-day eviction.
-        agg = windowed_counts(
-            chunked_stream(spark, sf_dir, "events", n_chunks=4), "1 day"
-        )
-        out = run_stream_to_table(agg, output_mode="update")
+    # 4 chunks (halve-batches, VERDICT r05 #4): update-mode daily
+    # counts canonicalize by max-per-window, chunk-count independent;
+    # 3 watermark advances keep real closed-day eviction.
+    agg = windowed_counts(
+        chunked_stream(spark, sf_dir, "events", n_chunks=4), "1 day"
+    )
+    out = run_stream_to_table(agg, output_mode="update", parts=STATE_PARTS)
     fin = out.groupBy("window_start", "event_type").agg(
         F.max("n_events").alias("n_events")
     )
@@ -2078,37 +2041,36 @@ def streaming_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..sources import chunked_stream
 
-    with shuffle_partitions(spark, state_parts(spark, STATE_PARTS)):
-        # 4 chunks (r07): counters are monotone and the drained value is
-        # max-over-updates, so the result is chunk-count-independent.
-        ev = chunked_stream(spark, sf_dir, "events", n_chunks=4)
-        checks = ev.select(
-            F.when(F.col("value") < 0, 1).otherwise(0).alias("value_negative"),
-            F.when(F.col("user_id").isNull(), 1).otherwise(0).alias("user_id_null"),
-            F.when(
-                # The fixture's real domain — 'signup', not 'login'
-                # (a stale list silently misclassified every signup as
-                # invalid while the oracle mirrored the same mistake).
-                ~F.col("event_type").isin(
-                    "click", "view", "purchase", "signup", "error"
-                ),
-                1,
-            )
-            .otherwise(0)
-            .alias("event_type_invalid"),
-            F.lit(1).alias("rows_seen"),
+    # 4 chunks (r07): counters are monotone and the drained value is
+    # max-over-updates, so the result is chunk-count-independent.
+    ev = chunked_stream(spark, sf_dir, "events", n_chunks=4)
+    checks = ev.select(
+        F.when(F.col("value") < 0, 1).otherwise(0).alias("value_negative"),
+        F.when(F.col("user_id").isNull(), 1).otherwise(0).alias("user_id_null"),
+        F.when(
+            # The fixture's real domain — 'signup', not 'login'
+            # (a stale list silently misclassified every signup as
+            # invalid while the oracle mirrored the same mistake).
+            ~F.col("event_type").isin(
+                "click", "view", "purchase", "signup", "error"
+            ),
+            1,
         )
-        counts = checks.agg(
-            F.sum("value_negative").cast("bigint").alias("c0"),
-            F.sum("user_id_null").cast("bigint").alias("c1"),
-            F.sum("event_type_invalid").cast("bigint").alias("c2"),
-            F.count("*").alias("c3"),
-        )
-        long = counts.selectExpr(
-            "stack(4, 'value_negative', c0, 'user_id_null', c1, "
-            "'event_type_invalid', c2, 'rows_seen', c3) AS (check_name, n)"
-        )
-        out = run_stream_to_table(long, output_mode="update")
+        .otherwise(0)
+        .alias("event_type_invalid"),
+        F.lit(1).alias("rows_seen"),
+    )
+    counts = checks.agg(
+        F.sum("value_negative").cast("bigint").alias("c0"),
+        F.sum("user_id_null").cast("bigint").alias("c1"),
+        F.sum("event_type_invalid").cast("bigint").alias("c2"),
+        F.count("*").alias("c3"),
+    )
+    long = counts.selectExpr(
+        "stack(4, 'value_negative', c0, 'user_id_null', c1, "
+        "'event_type_invalid', c2, 'rows_seen', c3) AS (check_name, n)"
+    )
+    out = run_stream_to_table(long, output_mode="update", parts=STATE_PARTS)
     return out.groupBy("check_name").agg(F.max("n").alias("n"))
 
 
@@ -2213,17 +2175,16 @@ def _funnel_drained(spark: SparkSession, sf_dir: str):
 
     def drain():
         ckpt = auto_checkpoint_dir("funnel_drain")
-        # 16 state partitions at fixture scale, one per core past the KV
-        # size gate (100x sf0.1 profile: with the int-stage kernel, 32
-        # parts cut the entry 25.9 s -> 18.0 s).
-        with shuffle_partitions(
-            spark, state_parts(spark, 16, _event_rows(sf_dir))
-        ):
-            sink = run_stream_to_table(
-                _funnel_transitions(spark, sf_dir),
-                output_mode="append",
-                checkpoint_location=ckpt,
-            )
+        # 16 state partitions at fixture scale (100x sf0.1 profile: with
+        # the int-stage kernel, one per core at 32 parts cut the entry
+        # 25.9 s -> 18.0 s).
+        sink = run_stream_to_table(
+            _funnel_transitions(spark, sf_dir),
+            output_mode="append",
+            checkpoint_location=ckpt,
+            parts=16,
+            input_rows=_event_rows(sf_dir),
+        )
         return sink, ckpt
 
     return shared(spark, "funnel", fixture_key(sf_dir, "events"), drain)
@@ -2547,29 +2508,29 @@ def streaming_ohlc_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..sources import chunked_stream
 
-    with shuffle_partitions(spark, state_parts(spark, STATE_PARTS)):
-        ev = (
-            chunked_stream(spark, sf_dir, "events", n_chunks=4)
-            .where(F.col("event_type") == "purchase")
-            .withWatermark("ts", "10 minutes")
-        )
-        seq = (
-            F.expr("(unix_micros(ts) % 86400000000) * 10000000")
-            + F.col("event_id")
-        ).alias("seq")
-        ev = ev.select("ts", seq, "value")
-        agg = ev.groupBy(F.window("ts", "1 day").alias("w")).agg(
-            F.min_by("value", "seq").alias("open"),
-            F.max("value").cast("double").alias("high"),
-            F.min("value").cast("double").alias("low"),
-            F.max_by("value", "seq").alias("close"),
-            F.count("*").alias("n_trades"),
-        )
-        day = (F.unix_timestamp(F.col("w.start")) / 86400).cast("long")
-        out = run_stream_to_table(
-            agg.select(day.alias("day"), "open", "high", "low", "close", "n_trades"),
-            output_mode="update",
-        )
+    ev = (
+        chunked_stream(spark, sf_dir, "events", n_chunks=4)
+        .where(F.col("event_type") == "purchase")
+        .withWatermark("ts", "10 minutes")
+    )
+    seq = (
+        F.expr("(unix_micros(ts) % 86400000000) * 10000000")
+        + F.col("event_id")
+    ).alias("seq")
+    ev = ev.select("ts", seq, "value")
+    agg = ev.groupBy(F.window("ts", "1 day").alias("w")).agg(
+        F.min_by("value", "seq").alias("open"),
+        F.max("value").cast("double").alias("high"),
+        F.min("value").cast("double").alias("low"),
+        F.max_by("value", "seq").alias("close"),
+        F.count("*").alias("n_trades"),
+    )
+    day = (F.unix_timestamp(F.col("w.start")) / 86400).cast("long")
+    out = run_stream_to_table(
+        agg.select(day.alias("day"), "open", "high", "low", "close", "n_trades"),
+        output_mode="update",
+        parts=STATE_PARTS,
+    )
     return (
         out.groupBy("day")
         .agg(F.max(F.struct("n_trades", "open", "high", "low", "close")).alias("fin"))

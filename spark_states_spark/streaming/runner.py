@@ -22,6 +22,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 from ..lifetime import own_dir, own_view
+from ..session import shuffle_partitions
 
 # Auto-created checkpoint dirs (callers that pass checkpoint_location manage
 # their own): grouped under one parent, registered for atexit removal, with
@@ -211,8 +212,9 @@ def state_parts(
 ) -> int:
     """State-partition count for one drain: ``tuned`` capped at the core
     count when ``input_rows`` is None or at most ``_KV_SCALE_ROWS``, at
-    least one per core above it. Run the drain under
-    ``session.shuffle_partitions(spark, state_parts(...))``.
+    least one per core above it. The runner starts a drain under it when
+    the drain passes ``parts=tuned`` (see :func:`_start`); drains with no
+    measured count of their own pass STATE_PARTS.
 
     ``tuned`` is the fixture-scale count measured on a 32-core box:
     STATE_PARTS for chunked replays, 8 for the inner interval join (four
@@ -265,12 +267,24 @@ def _start(
     output_mode: str,
     sink: str,
     checkpoint_location: str | None,
+    parts: int | None,
+    input_rows: int | None,
     **trigger,
 ):
     """Start ``stream_df`` into ``sink`` under ``name``; returns the running
     query and a zero-argument reader of the sink's result (call it once
-    the query has stopped)."""
+    the query has stopped).
+
+    With ``parts`` set, ``start()`` runs under
+    ``state_parts(spark, parts, input_rows)`` shuffle partitions: Spark
+    captures the conf when the query starts and freezes it into the
+    checkpoint as the state-partition count, so the session's value is
+    back in force as soon as ``start()`` returns or raises. ``parts=None``
+    starts under the session's value. ``sink="scaled"`` is
+    ``scaled_sink(input_rows)``."""
     spark = stream_df.sparkSession
+    if sink == "scaled":
+        sink = scaled_sink(input_rows)
     ckpt = checkpoint_location or auto_checkpoint_dir(name)
     writer = stream_df.writeStream.outputMode(output_mode)
     if sink == "parquet":
@@ -280,7 +294,12 @@ def _start(
         writer = writer.format("parquet").option("path", out_dir)
     else:
         writer = writer.format("memory").queryName(name)
-    query = writer.option("checkpointLocation", ckpt).trigger(**trigger).start()
+    writer = writer.option("checkpointLocation", ckpt).trigger(**trigger)
+    if parts is None:
+        query = writer.start()
+    else:
+        with shuffle_partitions(spark, state_parts(spark, parts, input_rows)):
+            query = writer.start()
     if sink == "parquet":
         # Explicit schema: a drained stream that committed ZERO output rows
         # leaves an empty dir, and schema inference would raise
@@ -298,6 +317,8 @@ def run_stream_to_table(
     checkpoint_location: str | None = None,
     with_progress: bool = False,
     sink: str = "memory",
+    parts: int | None = None,
+    input_rows: int | None = None,
 ) -> DataFrame:
     """Start ``stream_df`` with availableNow, await drain, return result DF.
 
@@ -316,13 +337,18 @@ def run_stream_to_table(
 
     ``sink="parquet"`` (append mode only — the file sink's contract) writes
     output distributed to an exactly-once parquet dir and reads it back —
-    the production shape for drains whose OUTPUT scales with the input
-    (see :func:`scaled_sink`).
+    the production shape for drains whose OUTPUT scales with the input;
+    ``sink="scaled"`` picks between the two by ``input_rows`` (see
+    :func:`scaled_sink`).
+
+    ``parts`` is the drain's tuned state-partition count: the query starts
+    under ``state_parts(spark, parts, input_rows)`` shuffle partitions
+    (see :func:`_start`). ``None`` keeps the session's value.
     """
     name = query_name or f"sss_{uuid.uuid4().hex[:12]}"
     query, result = _start(
         stream_df, name, output_mode, sink, checkpoint_location,
-        availableNow=True,
+        parts, input_rows, availableNow=True,
     )
     query.awaitTermination()
     if with_progress:
@@ -336,6 +362,7 @@ def run_stream_drain_wallclock(
     output_mode: str = "append",
     timeout_s: float = 180.0,
     sink: str = "memory",
+    parts: int | None = None,
 ) -> DataFrame:
     """Drain a ``ProcessingTimeTimeout`` stateful stream and return the sink.
 
@@ -348,7 +375,8 @@ def run_stream_drain_wallclock(
     then stop. Caller supplies ``n_input_rows`` (a cheap metadata count of
     the source) to make "drained" well-defined.
 
-    ``sink``: as in :func:`run_stream_to_table` — "parquet" keeps a
+    ``sink`` and ``parts``: as in :func:`run_stream_to_table`, with
+    ``n_input_rows`` as the input size — "parquet" keeps a
     scales-with-input output off the driver (the drain progress poll reads
     ``recentProgress``, not the sink, so the two are independent).
     """
@@ -357,7 +385,7 @@ def run_stream_drain_wallclock(
     # the tail — an empty batch is a near-free state commit.
     query, result = _start(
         stream_df, f"sss_{uuid.uuid4().hex[:12]}", output_mode, sink, None,
-        processingTime="100 milliseconds",
+        parts, n_input_rows, processingTime="100 milliseconds",
     )
     try:
         deadline = time.time() + timeout_s

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources import read_stream
-from .runner import run_stream_to_table
+from .runner import STATE_PARTS, run_stream_to_table
 
 
 def windowed_counts(
@@ -63,5 +63,6 @@ def streaming_hourly_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle checks.
     """
     return run_stream_to_table(
-        windowed_counts_stream(spark, sf_dir), output_mode="complete"
+        windowed_counts_stream(spark, sf_dir), output_mode="complete",
+        parts=STATE_PARTS,
     )

@@ -475,3 +475,34 @@ def test_restart_recovery_memo_survives_fixture_alternation(
     )
     assert rows_a1 == rows_a2
     clear_shared_memos("streaming_restart_recovery", include_staging=True)
+
+
+def test_restart_recovery_phase2_keeps_checkpoint_partitions(spark, sf_dir_small):
+    """Phase 2 restarts on phase 1's checkpoint, so Spark restores the
+    state-partition count from its offset log: run under a different
+    session value, it opens no new state partitions and gives the same
+    answer."""
+    from spark_states_spark import lifetime
+    from spark_states_spark.catalog import clear_shared_memos
+    from spark_states_spark.session import shuffle_partitions
+    from spark_states_spark.streaming import queries as sq
+    from spark_states_spark.streaming.runner import STATE_PARTS, state_parts
+
+    def partition_dirs():
+        (run_dir,) = lifetime.owned(spark, "restart_phase1").memo.values()
+        state = os.path.join(run_dir, "ckpt", "state", "0")
+        return sorted((d for d in os.listdir(state) if d.isdigit()), key=int)
+
+    clear_shared_memos("streaming_restart_recovery", include_staging=True)
+    want = [str(i) for i in range(state_parts(spark, STATE_PARTS))]
+    rows1 = sorted(
+        map(tuple, sq.streaming_restart_recovery(spark, sf_dir_small).collect())
+    )
+    assert partition_dirs() == want
+    with shuffle_partitions(spark, int(want[-1]) + 3):
+        rows2 = sorted(
+            map(tuple, sq.streaming_restart_recovery(spark, sf_dir_small).collect())
+        )
+    assert partition_dirs() == want
+    assert rows1 and rows1 == rows2
+    clear_shared_memos("streaming_restart_recovery", include_staging=True)

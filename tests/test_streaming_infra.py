@@ -184,26 +184,117 @@ def test_state_parts_and_scaled_sink(tuned, sf_dir_small, monkeypatch):
             scaled_sink(_KV_SCALE_ROWS)
 
 
+def _state_partition_dirs(ckpt):
+    return sorted(
+        (d for d in os.listdir(os.path.join(ckpt, "state", "0")) if d.isdigit()),
+        key=int,
+    )
+
+
 def test_shuffle_partitions_pin(spark, sf_dir_small, tmp_path):
-    """The pin restores the session's shuffle-partition count when its
-    block raises, and a stateful drain started inside it keeps exactly
-    that many state partitions in its checkpoint."""
+    """A drain given ``parts=3`` starts with exactly that many state
+    partitions in its checkpoint (3 <= the test session's cores) and
+    leaves the session's shuffle-partition count as it found it, also when
+    ``start()`` raises; ``parts=None`` starts under the session's value."""
     from spark_states_spark.session import shuffle_partitions
     from spark_states_spark.streaming.runner import run_stream_to_table
 
     conf = "spark.sql.shuffle.partitions"
     saved = spark.conf.get(conf)
-    with pytest.raises(RuntimeError, match="inside the pin"):
-        with shuffle_partitions(spark, 5):
-            assert spark.conf.get(conf) == "5"
-            raise RuntimeError("inside the pin")
+    assert spark.sparkContext.defaultParallelism >= 3
+    agg = read_stream(spark, sf_dir_small, "events").groupBy("event_type").count()
+
+    ckpt = str(tmp_path / "pinned")
+    out = run_stream_to_table(agg, checkpoint_location=ckpt, parts=3)
+    assert spark.conf.get(conf) == saved != "3"
+    assert out.count() > 0
+    assert _state_partition_dirs(ckpt) == ["0", "1", "2"]
+
+    # Append mode on an aggregation without a watermark: start() raises.
+    with pytest.raises(Exception, match="(?i)append"):
+        run_stream_to_table(agg, output_mode="append", parts=3)
     assert spark.conf.get(conf) == saved
 
-    ckpt = str(tmp_path / "ckpt")
-    with shuffle_partitions(spark, 3):
-        agg = read_stream(spark, sf_dir_small, "events").groupBy("event_type").count()
-        out = run_stream_to_table(agg, checkpoint_location=ckpt)
+    ckpt = str(tmp_path / "session")
+    with shuffle_partitions(spark, 5):
+        run_stream_to_table(agg, checkpoint_location=ckpt)
+        assert spark.conf.get(conf) == "5"
+    assert _state_partition_dirs(ckpt) == ["0", "1", "2", "3", "4"]
+
+
+# Stateful catalog entries that had no state-partition sizing and started
+# at the session's shuffle width; they now pass parts=STATE_PARTS.
+_STATE_PARTS_ENTRIES = [
+    "streaming_dedup",
+    "streaming_doc_dedup",
+    "streaming_curation_pipeline",
+    "streaming_hourly_agg",
+    "streaming_session_window",
+    "streaming_sliding_window",
+    "streaming_static_enrich",
+    "streaming_global_limit",
+    "streaming_minhash_band_dedup",
+]
+
+
+def _record_starts(monkeypatch):
+    """Record (session shuffle partitions, query) at every stream start."""
+    from pyspark.sql.streaming import DataStreamWriter
+
+    real = DataStreamWriter.start
+    starts = []
+
+    def start(self, *a, **kw):
+        value = self._spark.conf.get("spark.sql.shuffle.partitions")
+        query = real(self, *a, **kw)
+        starts.append((value, query))
+        return query
+
+    monkeypatch.setattr(DataStreamWriter, "start", start)
+    return starts
+
+
+@pytest.mark.parametrize("name", _STATE_PARTS_ENTRIES)
+def test_entry_starts_at_state_parts(name, spark, sf_dir_small, monkeypatch):
+    """Each entry's drain starts under state_parts(spark, STATE_PARTS)
+    shuffle partitions, its stateful operators run with that many state
+    partitions, and the session's value is unchanged after the entry."""
+    from spark_states_spark.catalog import QUERIES
+    from spark_states_spark.streaming.runner import STATE_PARTS, state_parts
+
+    conf = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(conf)
+    want = state_parts(spark, STATE_PARTS)
+    assert str(want) != saved
+    starts = _record_starts(monkeypatch)
+    assert QUERIES[name](spark, sf_dir_small).count() > 0
     assert spark.conf.get(conf) == saved
-    assert out.count() > 0
-    parts = [d for d in os.listdir(os.path.join(ckpt, "state", "0")) if d.isdigit()]
-    assert sorted(parts) == ["0", "1", "2"]
+    assert [value for value, _ in starts] == [str(want)]
+    ((_, query),) = starts
+    ops = query.lastProgress["stateOperators"]  # none for static_enrich
+    assert all(op["numShufflePartitions"] == want for op in ops), ops
+
+
+def test_minhash_barrier_exchange_sized_at_state_parts(
+    spark, sf_dir_small, monkeypatch, capsys
+):
+    """streaming_minhash_band_dedup keeps its tokenize -> shingle Exchange,
+    and Spark sizes it from the query's pinned count, not the session's:
+    both hash Exchanges (the doc_id barrier and the dedup's band_hash
+    shuffle) have state_parts(spark, STATE_PARTS) partitions."""
+    import re
+
+    from spark_states_spark.catalog import QUERIES
+    from spark_states_spark.streaming.runner import STATE_PARTS, state_parts
+
+    starts = _record_starts(monkeypatch)
+    QUERIES["streaming_minhash_band_dedup"](spark, sf_dir_small).collect()
+    ((_, query),) = starts
+    capsys.readouterr()
+    query.explain()
+    plan = capsys.readouterr().out
+    exchanges = dict(
+        re.findall(r"Exchange hashpartitioning\((\w+)#\d+L?, (\d+)\)", plan)
+    )
+    want = str(state_parts(spark, STATE_PARTS))
+    assert exchanges == {"doc_id": want, "band_hash": want}, plan

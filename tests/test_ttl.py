@@ -471,7 +471,6 @@ def test_wallclock_drain_surfaces_kernel_failure(spark, tmp_path):
     real failure promptly — not spin to a misleading drain TimeoutError.
     A put with a NULL value makes the kernel's int() conversion throw on
     the executor, terminating the query."""
-    from spark_states_spark.session import shuffle_partitions
     from spark_states_spark.streaming.runner import run_stream_drain_wallclock
     from spark_states_spark.streaming.ttl import ttl_kv_ops_wallclock
 
@@ -485,8 +484,7 @@ def test_wallclock_drain_surfaces_kernel_failure(spark, tmp_path):
     saved = spark.conf.get("spark.sql.shuffle.partitions")
     t0 = time.time()
     with pytest.raises(RuntimeError, match="terminated before draining"):
-        with shuffle_partitions(spark, 3):
-            run_stream_drain_wallclock(out, n_input_rows=2, timeout_s=120.0)
+        run_stream_drain_wallclock(out, n_input_rows=2, timeout_s=120.0, parts=3)
     # Fail-fast: the failure surfaced long before the drain deadline.
     assert time.time() - t0 < 60
     # The dead drain's pinned state-partition count does not leak out.
