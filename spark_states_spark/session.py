@@ -156,7 +156,10 @@ def use_rocksdb_state_store(builder: SparkSession.Builder) -> SparkSession.Build
     ``spark.sql.streaming.stateStore.providerClass``). Additionally enables
     changelog checkpointing — the modern replacement for the reference's
     full-snapshot-per-commit durability (Provider.scala:448-462) — and write
-    buffer tuning in the spirit of Provider.scala:101-107.
+    buffer tuning in the spirit of Provider.scala:101-107. Snapshots are
+    uploaded by the maintenance thread, the newest queued one on each pass,
+    so on-disk retention is ``minBatchesToRetain`` plus the gap between
+    uploaded snapshots.
     """
     return (
         builder.config("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)

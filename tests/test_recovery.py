@@ -205,24 +205,41 @@ def test_task_retry_aborts_and_recommits_state(tmp_path):
 def test_old_state_versions_cleaned_up(spark, tmp_path):
     """Maintenance GC (PARITY row 12, Provider.doMaintenance
     Provider.scala:411-418 + cleanup :573-592): with
-    ``minBatchesToRetain=2`` and frequent snapshots, state files of old
-    versions are deleted by the maintenance thread — the 'Cleaning up'
+    ``minBatchesToRetain=2``, state files of old versions are deleted by
+    the maintenance thread and retention stays bounded — the 'Cleaning up'
     suite (RocksDbStateStoreProviderSuite.scala:85-104) re-expressed on
-    Spark's provider."""
+    Spark's provider.
+
+    Premise: every version's snapshot is uploaded before the next commit,
+    as the reference's full snapshot per commit gives. Under changelog
+    checkpointing ``minDeltasForSnapshot=1`` only queues a snapshot per
+    commit; ``RocksDB.doMaintenance`` uploads the newest queued snapshot
+    on each pass and drops the older ones, and ``deleteOldVersions`` keeps
+    everything from the newest uploaded snapshot that is
+    <= maxSnapshot - minBatchesToRetain + 1. A free-running trigger that
+    commits several versions per maintenance pass leaves gaps between the
+    uploaded snapshots (e.g. zips {3, 6} keep {3, 4, 5, 6}), so the case
+    paces its batches: one source file at a time, and the next one only
+    after ``<v>.zip`` is present in every store partition. Snapshots 1..6
+    are then all uploaded, the cut is 5, and {5, 6} is kept ({4, 5, 6} if
+    the last deletion pass runs one upload behind).
+
+    The 300 ms ``maintenanceInterval`` below takes effect only when this
+    is the JVM's first stateful query (tests/conftest.py pins 1 s before
+    any test runs); the paced loop does not depend on it."""
     import glob as _glob
     import uuid as _uuid
 
     src = str(tmp_path / "src")
     ckpt = str(tmp_path / "ckpt")
+    os.makedirs(src)
     base = time.time() - 100
     n_batches = 6
-    for i in range(n_batches):
-        _write_batch(src, [("a", "put", i, i)], base + i)
 
     confs = {
         "spark.sql.streaming.minBatchesToRetain": "2",
         "spark.sql.streaming.stateStore.maintenanceInterval": "300ms",
-        # snapshot every version so old changelogs become GC-eligible.
+        # queue a snapshot at every commit so each version can be uploaded.
         # NOTE: the RocksDB provider reads the generic key below (its
         # RocksDBConf entry is SQLConf-backed); the rocksdb.-prefixed
         # spelling is NOT consulted for this setting.
@@ -262,16 +279,34 @@ def test_old_state_versions_cleaned_up(spark, tmp_path):
                             out.add(int(stem))
                 return out
 
-            # all batches processed → newest version present
-            while time.time() < deadline and (
-                not version_files() or max(version_files(), default=0) < n_batches
-            ):
-                time.sleep(0.3)
+            def snapshot_count(v):
+                # (store partitions holding <v>.zip, store partitions)
+                parts = [
+                    d
+                    for d in _glob.glob(os.path.join(ckpt, "state", "0", "*"))
+                    if os.path.basename(d).isdigit()
+                ]
+                zips = [os.path.join(d, f"{v}.zip") for d in parts]
+                return sum(map(os.path.exists, zips)), len(parts)
+
+            # Batch i commits version i + 1. A partition's <v>.zip is only
+            # deleted once a later zip exists, so each wait below ends.
+            for i in range(n_batches):
+                _write_batch(src, [("a", "put", i, i)], base + i)
+                q.processAllAvailable()
+                v = i + 1
+                done, parts = snapshot_count(v)
+                while time.time() < deadline and not (parts and done == parts):
+                    time.sleep(0.3)
+                    done, parts = snapshot_count(v)
+                assert parts and done == parts, (
+                    f"snapshot of version {v} uploaded in {done} of {parts} "
+                    "store partitions before the deadline"
+                )
             # GC: old versions disappear. Deletion passes ride on snapshot
             # uploads, so the final pass may run one version behind the
-            # last commit — the property pinned is BOUNDED retention
-            # (storage does not grow with stream length), not an exact
-            # cutoff (provider-internal).
+            # last upload — the property pinned is BOUNDED retention
+            # (storage does not grow with stream length).
             while time.time() < deadline and (
                 not version_files() or min(version_files()) < n_batches - 2
             ):
