@@ -34,13 +34,6 @@ from spark_states_spark.catalog import ORACLES, QUERIES  # noqa: E402
 from tests.oracle_utils import compare, duckdb_con  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SCALECHECK_DIR", "/root/testdata/sf0.1")
-# Forced production-sink verification (VERDICT r09 #3): the KV drains'
-# size-gated sink means every sf0.01/sf0.1 gate run exercises the memory
-# sink, leaving the parquet path — the shape BASELINE.md calls production —
-# pinned only by one sf0.001 test and a one-off 100× A/B. Each scalecheck
-# round re-runs ONE TTL-drain oracle with SPARK_GRAFT_KV_SINK=parquet
-# (memo cleared both sides) and hash-verifies it at sf0.1.
-FORCED_SINK_ENTRY = "keyed_state_ttl_lazy_bounds"
 PARITY_MARK = ("<!-- scalecheck:begin -->", "<!-- scalecheck:end -->")
 
 
@@ -109,27 +102,15 @@ def main() -> int:
             )
         except OSError as exc:
             print(f"WARN: oracle cache disabled ({exc})")
-    # Every COMPLETED compare, forced-sink re-run included (an entry whose
-    # compare raised counts neither): the reader of elapsed_s needs to know
-    # whether the DuckDB side was recomputed or served from the cache.
+    # Every COMPLETED compare (an entry whose compare raised counts
+    # neither): the reader of elapsed_s needs to know whether the DuckDB
+    # side was recomputed or served from the cache.
     cache = {"hits": 0, "misses": 0}
     failures: dict[str, str] = {}
     t0 = time.time()
     # Without the warm-up, session/codegen start-up lands on whichever
     # entry sorts FIRST, corrupting the per-entry series.
     harness.warm_up(spark, SF_DIR)
-
-    def verify(name: str, tm: dict) -> list[str]:
-        # Build timed separately from compare's collect, which compare()
-        # ADDS to spark_s: iterative entries (connected components' pointer
-        # jumping) execute eagerly inside the build via localCheckpoint.
-        te = time.perf_counter()
-        df = QUERIES[name](spark, SF_DIR)
-        tm["spark_s"] = time.perf_counter() - te
-        problems = compare(df, con, ORACLES[name], timings=tm,
-                           oracle_cache=oracle_cache, overlap=True)
-        cache["hits" if tm.get("oracle_cached") else "misses"] += 1
-        return problems
 
     entry_s: dict[str, float] = {}
     entry_spark_s: dict[str, float] = {}
@@ -138,7 +119,16 @@ def main() -> int:
         te = time.perf_counter()
         tm: dict = {}
         try:
-            if problems := verify(name, tm):
+            # Build timed separately from compare's collect, which compare()
+            # ADDS to spark_s: iterative entries (connected components'
+            # pointer jumping) execute eagerly inside the build via
+            # localCheckpoint.
+            df = QUERIES[name](spark, SF_DIR)
+            tm["spark_s"] = time.perf_counter() - te
+            problems = compare(df, con, ORACLES[name], timings=tm,
+                               oracle_cache=oracle_cache, overlap=True)
+            cache["hits" if tm.get("oracle_cached") else "misses"] += 1
+            if problems:
                 failures[name] = "; ".join(problems)
         except Exception as exc:  # noqa: BLE001 — record, keep sweeping
             failures[name] = f"error: {exc}"
@@ -150,30 +140,6 @@ def main() -> int:
             entry_spark_s[name] = round(tm["spark_s"], 2)
         status = "FAIL" if name in failures else "ok"
         print(f"[{i}/{len(ORACLES)}] {name}: {status} {entry_s[name]}s", flush=True)
-    forced_sink = None
-    if FORCED_SINK_ENTRY in ORACLES:
-        forced_sink = {"entry": FORCED_SINK_ENTRY, "sink": "parquet"}
-        os.environ["SPARK_GRAFT_KV_SINK"] = "parquet"
-        tm = {}
-        try:
-            harness.clear_entry_memos(FORCED_SINK_ENTRY)  # re-drain, forced sink
-            harness.unload_state_providers(spark)
-            problems = verify(FORCED_SINK_ENTRY, tm)
-        except Exception as exc:  # noqa: BLE001 — record, don't crash
-            problems = [f"error: {exc}"]
-        finally:
-            os.environ.pop("SPARK_GRAFT_KV_SINK", None)
-            # Don't leave a forced-sink drain memoized for later readers.
-            harness.clear_entry_memos(FORCED_SINK_ENTRY)
-        forced_sink["pass"] = not problems
-        if "spark_s" in tm:
-            forced_sink["spark_s"] = round(tm["spark_s"], 2)
-        if problems:
-            forced_sink["problems"] = "; ".join(problems)
-            failures[f"forced_sink:{FORCED_SINK_ENTRY}"] = forced_sink["problems"]
-        print(f"[forced-sink] {FORCED_SINK_ENTRY} (parquet): "
-              f"{'ok' if not problems else 'FAIL'} {forced_sink.get('spark_s', '?')}s",
-              flush=True)
     found = harness.newest_artifact("SCALECHECK", rnd)
     prev_s = found[1].get("entry_spark_s", {}) if found else {}
     rows = harness.adjudicate(entry_spark_s, prev_s, lambda q: {
@@ -186,7 +152,6 @@ def main() -> int:
         "n_adjudicated": sum(1 for r in rows if "note" not in r),
         "ambient_ratio": harness.median_ratio(entry_spark_s, prev_s),
         "cpus": harness.cpus(spark),
-        "forced_sink": forced_sink,
         "oracle_cache": cache,
         "prev_round": found[0] if found else None,
         "elapsed_s": round(time.time() - t0, 1),

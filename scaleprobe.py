@@ -312,14 +312,6 @@ _STRATEGY_NODES = frozenset({
 # Entries whose OPERATOR code itself switches plan shape on data size — the
 # documented adaptive tiers, not Catalyst strategy churn. Their 1x-vs-10x
 # plan deltas are recorded and labeled, never counted structural.
-_KV_SINK_TIER_NOTE = (
-    "size-gated drain sink (streaming/runner.py::scaled_sink): past "
-    "_KV_SCALE_ROWS the per-get output sinks to a distributed exactly-once "
-    "parquet dir instead of a driver-side memory view (65-80% of entry "
-    "time at 100x, BASELINE.md r09), so the post-drain read flips "
-    "LocalTableScan -> FileScan — the documented scale tier activating; "
-    "sink equivalence is value-pinned in test_streaming_modes"
-)
 _FANOUT_TIER_NOTE = (
     "scale-adaptive scan fan-out (sources/tables.py::load_table_fanned, "
     "r14): when the source's native split count (parquet row groups) is "
@@ -343,29 +335,6 @@ ADAPTIVE_PLAN_ENTRIES = {
     "dedup_cluster_connected_components": _FANOUT_TIER_NOTE,
     "similarity_cosine_topk": _FANOUT_TIER_NOTE,
     "similarity_lsh_ann": _FANOUT_TIER_NOTE,
-    # (the non-probed drain siblings — keyed_state_ttl_per_query, _strict,
-    # _infinite, _stateless and keyed_state_wallclock_infinite — share the
-    # same tier via the shared drains; only probed entries are listed
-    # here — test_scaleprobe_infra pins ADAPTIVE_PLAN_ENTRIES ⊆
-    # PROBE_ENTRIES)
-    "keyed_state_ttl_lazy_bounds": _KV_SINK_TIER_NOTE,
-    "keyed_state_wallclock_finite_bounds": _KV_SINK_TIER_NOTE,
-    "streaming_interval_join_full_outer": (
-        "size-gated join sink (streaming/runner.py::scaled_sink, r10): the "
-        "interval joins' output is O(input rows), so past _KV_SCALE_ROWS "
-        "the drain sinks to a distributed exactly-once parquet dir instead "
-        "of a driver-side memory view (the same tier as the KV drains, same "
-        "LocalTableScan -> FileScan flip in the post-drain read); state "
-        "partitions scale with input via runner.state_parts"
-    ),
-    "streaming_session_window_append": (
-        "size-gated sink (one row per closed session = O(input); same "
-        "scaled_sink tier and FileScan flip as the interval joins, r10)"
-    ),
-    "streaming_dedup_within_watermark": (
-        "size-gated sink (pre-aggregation output is one row per distinct "
-        "(type, user, day) = grows with input; same scaled_sink tier, r10)"
-    ),
     "dedup_embedding_cosine": (
         "triangle-block salting (functions/skew.py::with_triangle_blocks): "
         "past _GEMM_BUCKET_CAP the hot-cell count pre-pass + salted block "

@@ -19,7 +19,7 @@ Re-expresses the capabilities of chermenin/spark-states (a RocksDB-backed
                   analysis, multimodal column plumbing.
 - ``plans``     — plan-inspection helpers (pushdown / broadcast assertions).
 - ``lifetime``  — the one registry owning every pinned resource (checkpoint
-                  blocks, sink views, sink/checkpoint dirs) per
+                  blocks, sink slots, temp views, checkpoint dirs) per
                   (applicationId, tag) until an explicit release.
 """
 

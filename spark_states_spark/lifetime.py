@@ -1,18 +1,21 @@
 """Resource lifetimes: the one registry for everything the engine pins.
 
 Catalog entries and their shared materializations pin resources that
-outlive the call creating them: localCheckpoint blocks, memory-sink temp
-views, and streaming sink and checkpoint dirs. Each one is owned by an
-``(sparkContext.applicationId, tag)`` pair — the engine's analogue of the
-reference's ``StateStoreId(checkpointLocation, operatorId, partitionId)``
-(PAPER.md §1.1) — and is freed only by an explicit :func:`release`, never
-by a later call.
+outlive the call creating them: localCheckpoint blocks (among them the
+streaming runner's per-batch sink slots), temp views, and streaming
+checkpoint dirs. Each one is owned by an ``(sparkContext.applicationId,
+tag)`` pair — the engine's analogue of the reference's
+``StateStoreId(checkpointLocation, operatorId, partitionId)`` (PAPER.md
+§1.1) — and is freed only by an explicit :func:`release`, never by a later
+call.
 
 - :func:`scope` opens an ownership scope; resources acquired inside it
   belong to its tag (``catalog.register`` runs every entry under
   ``scope(entry_name)``). Outside any scope nothing is tracked: blocks are
   left to Spark's ContextCleaner, dirs to the runner's exit sweep.
-- :func:`checkpoint` is an eager localCheckpoint owned by the active scope.
+- :func:`checkpoint` is an eager localCheckpoint owned by the active scope;
+  :func:`active` names that scope, so a callback Spark runs on another
+  thread can reopen it.
 - :func:`shared` memoizes one value per (tag, key), built under
   ``scope(tag)`` so the resources it pins are released with the tag.
 - :func:`release` frees a tag: unpersists its blocks, drops its views,
@@ -43,6 +46,9 @@ class Owned:
     views: dict[str, SparkSession] = field(default_factory=dict)
     dirs: list[str] = field(default_factory=list)
     memo: dict = field(default_factory=dict)
+    # The streaming runner's sink slots: checkpoint path -> batchId ->
+    # checkpoint frame (its blocks are in rdd_ids).
+    sinks: dict[str, dict[int, DataFrame]] = field(default_factory=dict)
 
 
 _OWNED: dict[tuple[str, str], Owned] = {}
@@ -53,14 +59,19 @@ _SCOPE: contextvars.ContextVar[str | None] = contextvars.ContextVar(
 
 
 @contextlib.contextmanager
-def scope(tag: str):
+def scope(tag: str | None):
     """Resources acquired inside the block belong to ``tag`` (innermost
-    scope wins)."""
+    scope wins; ``None`` tracks nothing)."""
     token = _SCOPE.set(tag)
     try:
         yield tag
     finally:
         _SCOPE.reset(token)
+
+
+def active() -> str | None:
+    """The innermost open scope's tag, or None outside any scope."""
+    return _SCOPE.get()
 
 
 def _app(sc: SparkContext) -> str:
@@ -126,17 +137,12 @@ def unpin(df: DataFrame) -> None:
         _entry(sc, tag).rdd_ids.discard(rid)
 
 
-def own_view(spark: SparkSession, name: str) -> None:
-    """Record temp view ``name`` as owned by the active scope, if any."""
-    tag = _SCOPE.get()
-    if tag is not None:
-        _entry(spark.sparkContext, tag).views[name] = spark
-
-
 def temp_view(df: DataFrame, name: str) -> None:
     """``df.createOrReplaceTempView(name)``, owned by the active scope."""
     df.createOrReplaceTempView(name)
-    own_view(df.sparkSession, name)
+    tag = _SCOPE.get()
+    if tag is not None:
+        _entry(df.sparkSession.sparkContext, tag).views[name] = df.sparkSession
 
 
 def own_dir(path: str) -> str:

@@ -16,17 +16,17 @@ from pyspark.sql import functions as F
 from ..catalog import register
 from ..session import shuffle_partitions
 from ..sources import read_stream
-from .runner import auto_checkpoint_dir, run_stream_to_table
+from .runner import STATE_PARTS, auto_checkpoint_dir, run_stream_to_table
 from .state_reader import read_state, state_metadata
 
 
 def _run_user_agg(spark: SparkSession, sf_dir: str) -> str:
     """Drain a streaming per-user aggregation over ``events`` into a fresh
-    checkpoint and return its location. Exactly 8 state partitions, a
-    literal pin rather than the runner's ``parts=`` rule:
-    ``state_metadata_inventory``'s oracle pins ``num_partitions = 8``, and
-    the rule's core cap would make it vary with the machine."""
-    with shuffle_partitions(spark, 8):
+    checkpoint and return its location. Exactly STATE_PARTS state
+    partitions, a pin rather than the runner's ``parts=`` rule:
+    ``state_metadata_inventory``'s oracle reads the same constant, and the
+    rule's core cap would make it vary with the machine."""
+    with shuffle_partitions(spark, STATE_PARTS):
         agg = (
             read_stream(spark, sf_dir, "events")
             .groupBy("user_id")
@@ -74,11 +74,11 @@ def state_store_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "state_metadata_inventory",
-    oracle="""
+    oracle=f"""
     SELECT CAST(0 AS BIGINT) AS operator_id,
            'stateStoreSave' AS operator_name,
            'default' AS store_name,
-           CAST(8 AS INT) AS num_partitions
+           CAST({STATE_PARTS} AS INT) AS num_partitions
     """,
 )
 def state_metadata_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1,7 +1,7 @@
 """Streaming stateful queries exposed through the catalog.
 
 Each runs a real Structured Streaming query (file micro-batches → stateful
-operator on the RocksDB state store → memory sink, drained via
+operator on the RocksDB state store → the runner's keyed sink, drained via
 Trigger.AvailableNow) and returns the batch result. Where streaming
 semantics coincide with a batch equivalent (complete-mode aggregation,
 inner stream-stream join over a fully-drained bounded input), a DuckDB
@@ -213,7 +213,7 @@ def streaming_hourly_agg_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     (README.md:11-13) — unlike the complete-mode oracle harness
     (``streaming_hourly_agg``) which retains and re-emits every window.
 
-    The memory sink accumulates one row per (window, type) per batch it
+    The sink accumulates one row per (window, type) per batch it
     changed in; a window's count grows strictly across its updates, so the
     final state of every window = its max-by-n_events row — which is what
     the batch GROUP BY oracle checks. In-order chunk arrival means no event
@@ -346,11 +346,11 @@ def streaming_restart_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     Harness: the events fixture staged as 4 time-ordered chunk files. A
     first append-mode hourly aggregation drains chunks 0-1 (availableNow)
     into an EXACTLY-ONCE parquet file sink (``_spark_metadata`` commit log
-    — the memory sink refuses checkpoint recovery) and stops; the remaining
-    2 chunks are then added to the source dir and a SECOND query starts on
-    the SAME checkpoint — replaying the offset log, reloading the committed
-    RocksDB version (changelog checkpointing on), restoring the watermark,
-    and draining only the new files. The result is the sink directory read
+    — durable across processes, which the runner's keyed sink is not) and
+    stops; the remaining 2 chunks are then added to the source dir and a
+    SECOND query starts on the SAME checkpoint — replaying the offset log,
+    reloading the committed RocksDB version (changelog checkpointing on),
+    restoring the watermark, and draining only the new files. The result is the sink directory read
     back as a batch table (the file-sink metadata guarantees each finalized
     window appears exactly once across both runs).
 
@@ -548,9 +548,8 @@ def streaming_chained_agg_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_hours",
         )
     )
-    # Output is bounded (live days × event types), so the memory sink
-    # stays at every scale; the two operators' buffered windows grow with
-    # the fixture's time span, so state is sized by input.
+    # The two operators' buffered windows grow with the fixture's time
+    # span, so state is sized by input.
     return run_stream_to_table(
         daily, output_mode="append", parts=STATE_PARTS,
         input_rows=_event_rows(sf_dir),
@@ -672,11 +671,8 @@ def streaming_session_window_append(spark: SparkSession, sf_dir: str) -> DataFra
             "sum_value",
         )
     )
-    # Output is one row per CLOSED session — O(input/session length),
-    # so past the KV size gate it must not collect to the driver
-    # (same tier as the interval joins; r10).
     return run_stream_to_table(
-        sess, output_mode="append", sink="scaled", parts=STATE_PARTS,
+        sess, output_mode="append", parts=STATE_PARTS,
         input_rows=_event_rows(sf_dir),
     )
 
@@ -713,11 +709,8 @@ def streaming_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFr
     dd = keyed.withWatermark("ts", "25 hours").dropDuplicatesWithinWatermark(
         ["event_type", "user_id", "day"]
     )
-    # Pre-aggregation output is one row per distinct (type, user, day)
-    # — grows with input (the replicas scale users AND the time span),
-    # so the sink follows the KV size gate (r10).
     out = run_stream_to_table(
-        dd, output_mode="append", sink="scaled", parts=STATE_PARTS,
+        dd, output_mode="append", parts=STATE_PARTS,
         input_rows=_event_rows(sf_dir),
     )
     return out.groupBy("event_type").agg(F.count("*").alias("n_user_days"))
@@ -801,7 +794,7 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "purchase_id", "error_id", F.col("p_user").alias("user_id")
     )
     return run_stream_to_table(
-        joined, output_mode="append", sink="scaled", parts=8,
+        joined, output_mode="append", parts=8,
         input_rows=_event_rows(sf_dir),
     )
 
@@ -874,7 +867,7 @@ def _interval_join_fo_drained(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce(F.col("p_user"), F.col("x_user")).alias("user_id"),
         )
         return run_stream_to_table(
-            joined, output_mode="append", sink="scaled", parts=STATE_PARTS,
+            joined, output_mode="append", parts=STATE_PARTS,
             input_rows=_event_rows(sf_dir),
         )
 
@@ -896,7 +889,7 @@ def _interval_join_solo(spark: SparkSession, sf_dir: str, how: str) -> DataFrame
             "purchase_id", "error_id", F.col(user_side).alias("user_id")
         )
     return run_stream_to_table(
-        joined, output_mode="append", sink="scaled", parts=STATE_PARTS,
+        joined, output_mode="append", parts=STATE_PARTS,
         input_rows=_event_rows(sf_dir),
     )
 
@@ -1360,12 +1353,10 @@ def _virtual_kv_drained(spark: SparkSession, sf_dir: str) -> DataFrame:
                 spark, sf_dir, "events", n_chunks=_LAZY_BOUNDS_CHUNKS
             )
         )
-        # 16 state partitions (see _LAZY_BOUNDS_CHUNKS); the per-get
-        # output scales with input.
+        # 16 state partitions (see _LAZY_BOUNDS_CHUNKS).
         return run_stream_to_table(
             ttl_kv_ops(ops, bindings),
             output_mode="append",
-            sink="scaled",
             parts=16,
             input_rows=_event_rows(sf_dir),
         )
@@ -1547,10 +1538,10 @@ def _wallclock_kv_drained(spark: SparkSession, sf_dir: str) -> DataFrame:
         # fails fast relative to the workload size (r08; the 100x probe
         # needs this).
         timeout_s = max(180.0, n_rows / 2000.0)
-        # 16 state partitions and a scaled sink, as the virtual-clock drain.
+        # 16 state partitions, as the virtual-clock drain.
         return run_stream_drain_wallclock(
             stream, n_input_rows=n_rows, output_mode="append",
-            timeout_s=timeout_s, sink="scaled", parts=16,
+            timeout_s=timeout_s, parts=16,
         )
 
     return shared(spark, "wallclock_kv", fixture_key(sf_dir, "events"), drain)
@@ -1924,7 +1915,7 @@ def streaming_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     length) — the acceptable-state-growth case. For unbounded key spaces
     the TTL kernels (streaming/ttl.py) bound it instead. The running
     ``max(struct(ts, event_id, ...))`` is nondecreasing per key, so the
-    memory sink's final row per user = max over all its emitted updates.
+    sink's final row per user = max over all its emitted updates.
     """
     from ..sources import chunked_stream
 
@@ -2165,7 +2156,7 @@ def _funnel_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 # per entry was pure duplicate micro-batch infrastructure. Shared under the
 # "funnel" lifetime tag per (application, fixture dir, fixture content
 # identity), so a new session or a regenerated fixture re-drains; the
-# memory sink and checkpoint both live until the tag's release.
+# sink's blocks and the checkpoint both live until the tag's release.
 
 
 def _funnel_drained(spark: SparkSession, sf_dir: str):

@@ -3,10 +3,13 @@
 The driver's contract wants every ``queries()`` entry to return a plain
 DataFrame, so streaming operators are exercised end-to-end here: file-source
 micro-batches → stateful operator (backed by the configured RocksDB state
-store) → memory sink, with ``Trigger.AvailableNow`` so the query drains all
-input and stops. Each trigger is one versioned state commit — the same
+store) → the keyed sink, with ``Trigger.AvailableNow`` so the query drains
+all input and stops. Each trigger is one versioned state commit — the same
 micro-batch lifecycle the reference participates in
-(``RocksDbStateStoreProvider.scala:49-59``).
+(``RocksDbStateStoreProvider.scala:49-59``) — and the sink keeps one block
+per committed batch, keyed by ``batchId`` (:func:`_keyed_sink`): nothing is
+collected to the driver, and a replayed batch overwrites its own slot, the
+idempotent-sink half of Structured Streaming's exactly-once design.
 """
 
 from __future__ import annotations
@@ -18,10 +21,11 @@ import shutil
 import tempfile
 import time
 import uuid
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..lifetime import own_dir, own_view
+from ..lifetime import active, checkpoint, own_dir, owned, scope, unpin
 from ..session import shuffle_partitions
 
 # Auto-created checkpoint dirs (callers that pass checkpoint_location manage
@@ -38,7 +42,7 @@ from ..session import shuffle_partitions
 
 
 def ephemeral_root() -> str:
-    """Root for the harness's THROWAWAY streaming checkpoints and sinks.
+    """Root for the harness's THROWAWAY streaming checkpoints.
 
     These dirs have a process-lifetime contract by construction: the
     harness itself deletes them at interpreter exit (atexit below), and
@@ -172,17 +176,16 @@ def sweep_stale_dirs(
             pass
 
 
-def auto_checkpoint_dir(name: str, kind: str = "ckpt") -> str:
-    """A throwaway checkpoint dir (or, with ``kind="sink"``, file-sink
-    output dir), owned by the active lifetime scope and removed at its
-    release, or at interpreter exit."""
+def auto_checkpoint_dir(name: str) -> str:
+    """A throwaway checkpoint dir, owned by the active lifetime scope and
+    removed at its release, or at interpreter exit."""
     os.makedirs(_AUTO_CKPT_PARENT, exist_ok=True)
     if not _auto_ckpts:
         sweep_stale_dirs(_AUTO_CKPT_PARENT)
         for parent in _OTHER_CKPT_PARENTS:
             sweep_stale_dirs(parent)
     d = tempfile.mkdtemp(
-        prefix=f"{kind}_{name}_pid{os.getpid()}_", dir=_AUTO_CKPT_PARENT
+        prefix=f"ckpt_{name}_pid{os.getpid()}_", dir=_AUTO_CKPT_PARENT
     )
     _auto_ckpts.append(d)
     return own_dir(d)
@@ -202,8 +205,8 @@ def _cleanup_auto_ckpts() -> None:
 # nothing assumes 4 — state stays per-key partitioned.
 STATE_PARTS = 4
 
-# Input size past which a drain's state and output outgrow fixture-scale
-# tuning (about 4x the sf0.1 events table).
+# Input size past which a drain's state outgrows fixture-scale tuning
+# (about 4x the sf0.1 events table).
 _KV_SCALE_ROWS = 400_000
 
 
@@ -234,80 +237,97 @@ def state_parts(
     return max(tuned, cores)
 
 
-def scaled_sink(input_rows: int) -> str:
-    """Sink for a drain whose output scales with its ``input_rows``, same
-    gate as :func:`state_parts`: "memory" at or below ``_KV_SCALE_ROWS``,
-    "parquet" above it. The TTL drains emit one row per get op, the
-    interval joins one per match or null-extended side. At fixture scale
-    the memory sink's driver-side buffer is bounded (at most ~180 K rows)
-    and ~0.7 s cheaper than a file-sink round trip; at 100x sf0.1 it
-    collected tens of millions of rows to the driver, 65-80% of the entry
-    time (lazy 271 s -> 63 s, wallclock 210 s -> 51 s after the switch),
-    and its 32-writer append contention scaled worse with more state
-    partitions. The parquet path is the production shape (distributed
-    exactly-once file sink), value-pinned against the memory sink by
-    tests/test_streaming_modes.py.
+def _has_commits(spark: SparkSession, ckpt: str) -> bool:
+    """True iff checkpoint ``ckpt`` holds a committed batch."""
+    sc = spark.sparkContext
+    path = sc._jvm.org.apache.hadoop.fs.Path(ckpt, "commits")
+    fs = path.getFileSystem(sc._jsc.hadoopConfiguration())
+    return fs.exists(path) and any(
+        st.getPath().getName().isdigit() for st in fs.listStatus(path)
+    )
 
-    ``SPARK_GRAFT_KV_SINK`` ("memory" or "parquet") overrides the gate, so
-    the parquet path is verifiable at the scales that sit below it; an
-    empty value is unset and any other value fails fast."""
-    forced = os.environ.get("SPARK_GRAFT_KV_SINK")
-    if forced:
-        if forced not in ("memory", "parquet"):
-            raise ValueError(
-                f"SPARK_GRAFT_KV_SINK={forced!r} is not 'memory' or 'parquet'"
-            )
-        return forced
-    return "memory" if input_rows <= _KV_SCALE_ROWS else "parquet"
+
+def _keyed_sink(spark: SparkSession, ckpt: str, output_mode: str, schema):
+    """The runner's one sink for the query checkpointed at ``ckpt``: a
+    ``foreachBatch`` callback and a zero-argument reader.
+
+    The callback pins each batch's output as a :func:`lifetime.checkpoint`
+    block in a slot keyed by its ``batchId``; a replayed batch replaces its
+    own slot. Append and update mode keep one slot per batch that wrote
+    rows and read their union in ``batchId`` order; complete mode keeps
+    only the newest batch's slot, empty or not.
+
+    Slots live in the active lifetime scope, keyed by ``ckpt``, so a
+    restart on the same checkpoint in the same scope continues them, and a
+    checkpoint with no committed batch starts with none (a deleted and
+    reused path returns no stale rows). With no scope open only the
+    reader's frame holds them. They do not outlive the process: recovery
+    across processes needs a durable sink, as ``streaming_restart_recovery``
+    writes. Spark runs the callback on another thread, where no scope is
+    open, so it reopens the caller's."""
+    tag = active()
+    slots: dict[int, DataFrame] = (
+        {} if tag is None else owned(spark, tag).sinks.setdefault(ckpt, {})
+    )
+    if slots and not _has_commits(spark, ckpt):
+        for b in list(slots):
+            unpin(slots.pop(b))
+
+    def write(batch: DataFrame, batch_id: int) -> None:
+        with scope(tag):
+            block = checkpoint(batch)
+            replaced = list(slots) if output_mode == "complete" else [batch_id]
+            for b in replaced:
+                if b in slots:
+                    unpin(slots.pop(b))
+            if output_mode == "complete" or not block.isEmpty():
+                slots[batch_id] = block
+            else:
+                unpin(block)
+
+    def read() -> DataFrame:
+        if not slots:
+            return spark.createDataFrame([], schema)
+        return reduce(DataFrame.union, (slots[b] for b in sorted(slots)))
+
+    return write, read
 
 
 def _start(
     stream_df: DataFrame,
     name: str,
     output_mode: str,
-    sink: str,
     checkpoint_location: str | None,
     parts: int | None,
     input_rows: int | None,
     **trigger,
 ):
-    """Start ``stream_df`` into ``sink`` under ``name``; returns the running
-    query and a zero-argument reader of the sink's result (call it once
-    the query has stopped).
+    """Start ``stream_df`` into the keyed sink under ``name``; returns the
+    running query and a zero-argument reader of the sink's result (call it
+    once the query has stopped).
 
     With ``parts`` set, ``start()`` runs under
     ``state_parts(spark, parts, input_rows)`` shuffle partitions: Spark
     captures the conf when the query starts and freezes it into the
     checkpoint as the state-partition count, so the session's value is
     back in force as soon as ``start()`` returns or raises. ``parts=None``
-    starts under the session's value. ``sink="scaled"`` is
-    ``scaled_sink(input_rows)``."""
+    starts under the session's value."""
     spark = stream_df.sparkSession
-    if sink == "scaled":
-        sink = scaled_sink(input_rows)
     ckpt = checkpoint_location or auto_checkpoint_dir(name)
-    writer = stream_df.writeStream.outputMode(output_mode)
-    if sink == "parquet":
-        if output_mode != "append":
-            raise ValueError("parquet sink supports append mode only")
-        out_dir = auto_checkpoint_dir(name, kind="sink")
-        writer = writer.format("parquet").option("path", out_dir)
-    else:
-        writer = writer.format("memory").queryName(name)
-    writer = writer.option("checkpointLocation", ckpt).trigger(**trigger)
+    write, read = _keyed_sink(spark, ckpt, output_mode, stream_df.schema)
+    writer = (
+        stream_df.writeStream.outputMode(output_mode)
+        .foreachBatch(write)
+        .queryName(name)
+        .option("checkpointLocation", ckpt)
+        .trigger(**trigger)
+    )
     if parts is None:
         query = writer.start()
     else:
         with shuffle_partitions(spark, state_parts(spark, parts, input_rows)):
             query = writer.start()
-    if sink == "parquet":
-        # Explicit schema: a drained stream that committed ZERO output rows
-        # leaves an empty dir, and schema inference would raise
-        # AnalysisException where the memory sink returns an empty,
-        # correctly-typed frame — the runner API must not differ by sink.
-        return query, lambda: spark.read.schema(stream_df.schema).parquet(out_dir)
-    own_view(spark, name)
-    return query, lambda: spark.table(name)
+    return query, read
 
 
 def run_stream_to_table(
@@ -316,7 +336,6 @@ def run_stream_to_table(
     query_name: str | None = None,
     checkpoint_location: str | None = None,
     with_progress: bool = False,
-    sink: str = "memory",
     parts: int | None = None,
     input_rows: int | None = None,
 ) -> DataFrame:
@@ -327,19 +346,14 @@ def run_stream_to_table(
     tests to assert on state-store metrics (numRowsTotal / numRowsRemoved),
     the PySpark face of ``StateStore.metrics`` (Provider.scala:282-283).
 
-    ``sink="memory"`` (default) collects output to a driver-side temp view —
-    fine for bounded results. The returned DataFrame reads the sink lazily,
-    so the view, the sink dir and an auto-created checkpoint dir live until
-    ``lifetime.release`` of the scope active at this call (a catalog
-    entry's own tag, or a shared drain's); with no scope open they live for
-    the session (dirs until interpreter exit), and a caller embedding the
-    runner long-term drops the view once it has consumed the results.
-
-    ``sink="parquet"`` (append mode only — the file sink's contract) writes
-    output distributed to an exactly-once parquet dir and reads it back —
-    the production shape for drains whose OUTPUT scales with the input;
-    ``sink="scaled"`` picks between the two by ``input_rows`` (see
-    :func:`scaled_sink`).
+    The result is the keyed sink's (:func:`_keyed_sink`). Its blocks and
+    an auto-created checkpoint dir live until ``lifetime.release`` of the
+    scope active at this call (a catalog entry's own tag, or a shared
+    drain's); with no scope open the blocks live as long as the returned
+    frame and the dir until interpreter exit. Called again in the same
+    scope with the same ``checkpoint_location``, the drain resumes and
+    returns all output committed on that checkpoint. ``query_name`` names
+    the query; it creates no table.
 
     ``parts`` is the drain's tuned state-partition count: the query starts
     under ``state_parts(spark, parts, input_rows)`` shuffle partitions
@@ -347,7 +361,7 @@ def run_stream_to_table(
     """
     name = query_name or f"sss_{uuid.uuid4().hex[:12]}"
     query, result = _start(
-        stream_df, name, output_mode, sink, checkpoint_location,
+        stream_df, name, output_mode, checkpoint_location,
         parts, input_rows, availableNow=True,
     )
     query.awaitTermination()
@@ -361,7 +375,6 @@ def run_stream_drain_wallclock(
     n_input_rows: int,
     output_mode: str = "append",
     timeout_s: float = 180.0,
-    sink: str = "memory",
     parts: int | None = None,
 ) -> DataFrame:
     """Drain a ``ProcessingTimeTimeout`` stateful stream and return the sink.
@@ -375,16 +388,15 @@ def run_stream_drain_wallclock(
     then stop. Caller supplies ``n_input_rows`` (a cheap metadata count of
     the source) to make "drained" well-defined.
 
-    ``sink`` and ``parts``: as in :func:`run_stream_to_table`, with
-    ``n_input_rows`` as the input size — "parquet" keeps a
-    scales-with-input output off the driver (the drain progress poll reads
-    ``recentProgress``, not the sink, so the two are independent).
+    ``parts``: as in :func:`run_stream_to_table`, with ``n_input_rows``
+    as the input size. The sink is the same keyed sink; the drain progress
+    poll reads ``recentProgress``, not the sink.
     """
     # 100 ms: the drain's floor is (data batches + one trailing empty
     # batch + polling latency), so trigger cadence is pure dead time on
     # the tail — an empty batch is a near-free state commit.
     query, result = _start(
-        stream_df, f"sss_{uuid.uuid4().hex[:12]}", output_mode, sink, None,
+        stream_df, f"sss_{uuid.uuid4().hex[:12]}", output_mode, None,
         parts, n_input_rows, processingTime="100 milliseconds",
     )
     try:

@@ -83,19 +83,19 @@ def test_registry_lists_both_funnel_entries():
     ]
 
 
-def test_memo_cleanup_drops_sink_views(spark, sf_dir_small):
-    """ADVICE r07: clearing a drain memo must also drop the memory-sink
-    temp view so the driver-side buffer is collectable, and remove the
-    drain's checkpoint dir — both owned by the "funnel" lifetime tag."""
+def test_memo_cleanup_unpins_sink_blocks(spark, sf_dir_small):
+    """ADVICE r07: clearing a drain memo must also unpersist the drain's
+    sink blocks and remove its checkpoint dir, both owned by the "funnel"
+    lifetime tag."""
     from spark_states_spark.catalog import clear_shared_memos
 
     _sink, ckpt = sq._funnel_drained(spark, sf_dir_small)
-    (name,) = lifetime.owned(spark, "funnel").views
-    assert any(t.name == name for t in spark.catalog.listTables())
+    blocks = set(lifetime.owned(spark, "funnel").rdd_ids)
+    assert blocks and blocks <= lifetime.pinned_rdd_ids(spark)
     assert ckpt in lifetime.owned(spark, "funnel").dirs
     clear_shared_memos("funnel_state_scan")
     assert not _memo(spark)
-    assert not any(t.name == name for t in spark.catalog.listTables())
+    assert not blocks & lifetime.pinned_rdd_ids(spark)
     assert not os.path.exists(ckpt)
 
 
@@ -116,8 +116,8 @@ def test_wallclock_entries_share_one_drain(spark, sf_dir_small, monkeypatch):
             "entries must share a drain"
         )
         assert fin[0]["n_violation_keys"] == 0
-        # collected compare (exceptAll on two filters of the same memory
-        # sink view trips a Spark self-reference analyzer conflict)
+        # collected compare (exceptAll on two filters of the same sink
+        # frame can trip a Spark self-reference analyzer conflict)
         drained = sq._wallclock_kv_drained(spark, sf_dir_small)
         a = sorted(map(tuple, sq._binding_outcomes(drained, "inf").collect()))
         b = sorted(map(tuple, sq._binding_outcomes(drained, "fin").collect()))

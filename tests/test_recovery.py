@@ -23,6 +23,8 @@ from pyspark.errors.exceptions.captured import StreamingQueryException
 
 from spark_states_spark.streaming.ttl import OPS_SCHEMA
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def _write_batch(src_dir, rows, mtime):
     os.makedirs(src_dir, exist_ok=True)
@@ -197,7 +199,7 @@ def test_task_retry_aborts_and_recommits_state(tmp_path):
         capture_output=True,
         text=True,
         timeout=300,
-        cwd="/root/repo",
+        cwd=ROOT,
     )
     assert "TASK_RETRY_OK" in res.stdout, res.stderr[-3000:]
 

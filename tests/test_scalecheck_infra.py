@@ -124,18 +124,6 @@ def test_repo_parity_note_cites_newest_artifact_on_disk():
     assert int(cited.group(1)) == newest[0]
 
 
-def test_forced_sink_entry_is_a_kv_drain_oracle():
-    """VERDICT r09 #3: the forced-parquet-sink check must target an entry
-    that (a) has an oracle (so the forced run is hash-verified, not
-    rows-only) and (b) actually participates in a KV drain memo (so the
-    SPARK_GRAFT_KV_SINK override reaches a real sink decision)."""
-    from spark_states_spark.catalog import ORACLES, SHARED_MEMOS
-
-    entry = scalecheck.FORCED_SINK_ENTRY
-    assert entry in ORACLES
-    assert any(entry in members for members in SHARED_MEMOS.values())
-
-
 class FakeDF:
     """Minimal spark_df stand-in for compare(): one bigint column 'v'
     returning a single row (5,). Subclass collect() for wrong/raising

@@ -138,28 +138,23 @@ def test_state_provider_unload_between_drains(spark, sf_dir_small, tmp_path):
 
 
 @pytest.mark.parametrize("tuned", [4, 8, 16])
-def test_state_parts_and_scaled_sink(tuned, sf_dir_small, monkeypatch):
+def test_state_parts(tuned, sf_dir_small):
     """One size gate sizes every drain: with no input size or at most
     _KV_SCALE_ROWS input rows, the tuned state-partition count capped at
-    the core count and the memory sink; past it, at least one state
-    partition per core and the distributed parquet sink. The fixtures sit
-    below the gate. SPARK_GRAFT_KV_SINK overrides the sink in both
-    directions, an empty value is unset, and any other value fails fast
-    naming the variable."""
+    the core count; past it, at least one state partition per core. The
+    fixtures sit below the gate."""
     from types import SimpleNamespace
 
     from spark_states_spark.sources.tables import parquet_row_count, table_path
     from spark_states_spark.streaming.runner import (
         _KV_SCALE_ROWS,
         STATE_PARTS,
-        scaled_sink,
         state_parts,
     )
 
     assert STATE_PARTS == 4
     fixture_rows = parquet_row_count(table_path(sf_dir_small, "events"))
     assert 0 < fixture_rows <= _KV_SCALE_ROWS
-    monkeypatch.delenv("SPARK_GRAFT_KV_SINK", raising=False)
     for cores in (2, 4, 8, 32):
         spark = SimpleNamespace(
             sparkContext=SimpleNamespace(defaultParallelism=cores)
@@ -168,20 +163,6 @@ def test_state_parts_and_scaled_sink(tuned, sf_dir_small, monkeypatch):
             assert state_parts(spark, tuned, rows) == min(tuned, cores)
         assert state_parts(spark, tuned) == min(tuned, cores)
         assert state_parts(spark, tuned, _KV_SCALE_ROWS + 1) == max(tuned, cores)
-    assert scaled_sink(fixture_rows) == "memory"
-    assert scaled_sink(_KV_SCALE_ROWS) == "memory"
-    assert scaled_sink(_KV_SCALE_ROWS + 1) == "parquet"
-    for forced in ("memory", "parquet"):
-        monkeypatch.setenv("SPARK_GRAFT_KV_SINK", forced)
-        assert scaled_sink(_KV_SCALE_ROWS) == forced
-        assert scaled_sink(_KV_SCALE_ROWS + 1) == forced
-    monkeypatch.setenv("SPARK_GRAFT_KV_SINK", "")
-    assert scaled_sink(_KV_SCALE_ROWS) == "memory"
-    assert scaled_sink(_KV_SCALE_ROWS + 1) == "parquet"
-    for junk in ("bogus", "Parquet", "parquet "):
-        monkeypatch.setenv("SPARK_GRAFT_KV_SINK", junk)
-        with pytest.raises(ValueError, match="SPARK_GRAFT_KV_SINK"):
-            scaled_sink(_KV_SCALE_ROWS)
 
 
 def _state_partition_dirs(ckpt):

@@ -250,29 +250,6 @@ def test_chained_agg_runs_two_stateful_operators(spark, sf_dir):
         assert per_op_removed[i] > 0, f"operator {i} never evicted state"
 
 
-def test_parquet_sink_matches_memory_sink(spark, sf_dir_small):
-    """Sink equivalence for the KV drains' scale path (r09): past
-    _KV_SCALE_ROWS the TTL drains switch from the memory sink to a
-    distributed exactly-once parquet sink (runner.scaled_sink) — the rows read back
-    from the file sink must be exactly the memory sink's, so the switch can
-    never change an oracle verdict at scale."""
-    from spark_states_spark.config import resolve_ttl
-    from spark_states_spark.streaming.queries import _kv_op_select
-    from spark_states_spark.sources import chunked_stream
-    from spark_states_spark.streaming.ttl import ttl_kv_ops
-
-    ttl = resolve_ttl(
-        {"spark.sql.streaming.stateStore.stateExpirySecs": "21600"}, "q"
-    )
-    outs = {}
-    for sink in ("memory", "parquet"):
-        ops = _kv_op_select(chunked_stream(spark, sf_dir_small, "events", n_chunks=2))
-        out = run_stream_to_table(ttl_kv_ops(ops, ttl), "append", sink=sink)
-        outs[sink] = sorted(tuple(r) for r in out.collect())
-    assert outs["memory"] == outs["parquet"]
-    assert len(outs["memory"]) > 0
-
-
 def test_interval_join_derived_shapes_equal_solo(spark, sf_dir):
     """r14 shared full-outer interval-join drain: the derived left-outer /
     right-outer / semi entries must equal their solo-operator drains

@@ -48,7 +48,7 @@ def _write_batches(tmp_path, batches) -> str:
     return str(d)
 
 
-def _run(spark, src_dir: str, ttl: TtlConfig, checkpoint: str | None = None):
+def _run(spark, src_dir: str, ttl: TtlConfig, checkpoint: str):
     stream = (
         spark.readStream.schema(OPS_SCHEMA)
         .option("maxFilesPerTrigger", "1")
@@ -67,7 +67,7 @@ def _run(spark, src_dir: str, ttl: TtlConfig, checkpoint: str | None = None):
         out.writeStream.outputMode("append")
         .foreachBatch(sink)
         .queryName(name)
-        .option("checkpointLocation", checkpoint or f"/tmp/ckpt_{name}")
+        .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
     )
@@ -84,7 +84,9 @@ def test_no_timeout_keeps_state_forever(spark, tmp_path):
             [("a", "get", None, 1_000_000)],
         ],
     )
-    res = _run(spark, src, TtlConfig("q", -1, strict=True))
+    res = _run(
+        spark, src, TtlConfig("q", -1, strict=True), str(tmp_path / "ckpt")
+    )
     assert res[("a", 1_000_000)] == (True, 1)
 
 
@@ -97,7 +99,9 @@ def test_stateless_mode(spark, tmp_path):
             [("a", "get", None, 1)],
         ],
     )
-    res = _run(spark, src, TtlConfig("q", 0, strict=True))
+    res = _run(
+        spark, src, TtlConfig("q", 0, strict=True), str(tmp_path / "ckpt")
+    )
     assert res[("a", 0)] == (False, None)
     assert res[("a", 1)] == (False, None)
 
@@ -113,7 +117,9 @@ def test_processing_timeout_expires(spark, tmp_path):
             [("k1", "get", None, 10)],  # 8s since last access → expired
         ],
     )
-    res = _run(spark, src, TtlConfig("q", 3, strict=True))
+    res = _run(
+        spark, src, TtlConfig("q", 3, strict=True), str(tmp_path / "ckpt")
+    )
     assert res[("k1", 2)] == (True, 7)
     assert res[("k1", 10)] == (False, None)
 
@@ -132,7 +138,9 @@ def test_ttl_resets_on_get_set_update_strict(spark, tmp_path):
             [("k", "get", None, 20)],  # 12s gap → expired
         ],
     )
-    res = _run(spark, src, TtlConfig("q", 3, strict=True))
+    res = _run(
+        spark, src, TtlConfig("q", 3, strict=True), str(tmp_path / "ckpt")
+    )
     assert res[("k", 2)] == (True, 1)
     assert res[("k", 4)] == (True, 1)
     assert res[("k", 8)] == (True, 2)
@@ -152,7 +160,9 @@ def test_non_strict_lazy_expiry_serves_until_sweep(spark, tmp_path):
             [("k", "get", None, 11)],
         ],
     )
-    res = _run(spark, src, TtlConfig("q", 3, strict=False))
+    res = _run(
+        spark, src, TtlConfig("q", 3, strict=False), str(tmp_path / "ckpt")
+    )
     assert res[("k", 10)] == (True, 5)
     assert res[("k", 11)] == (False, None)
 
@@ -164,7 +174,9 @@ def test_strict_expiry_exact_within_batch(spark, tmp_path):
         tmp_path,
         [[("k", "put", 5, 0), ("k", "get", None, 10)]],
     )
-    res = _run(spark, src, TtlConfig("q", 3, strict=True))
+    res = _run(
+        spark, src, TtlConfig("q", 3, strict=True), str(tmp_path / "ckpt")
+    )
     assert res[("k", 10)] == (False, None)
 
 
@@ -177,7 +189,9 @@ def test_remove_drops_key(spark, tmp_path):
             [("k", "get", None, 2)],
         ],
     )
-    res = _run(spark, src, TtlConfig("q", -1, strict=True))
+    res = _run(
+        spark, src, TtlConfig("q", -1, strict=True), str(tmp_path / "ckpt")
+    )
     assert res[("k", 2)] == (False, None)
 
 
