@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from spark_states_spark.catalog import ORACLES, ordered_queries  # noqa: E402
+from spark_states_spark.session import ROCKSDB_PROVIDER  # noqa: E402
 
 
 def _ensure_conf(spark: SparkSession) -> None:
@@ -27,8 +28,7 @@ def _ensure_conf(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     try:
         spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+            "spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER
         )
         spark.conf.set(
             "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",

@@ -141,16 +141,6 @@ def unload_state_providers(spark) -> None:
         pass
 
 
-def clear_entry_memos(name: str) -> None:
-    """Release ``name``'s own lifetime tag and each shared memo it reads
-    (catalog.clear_shared_memos), so its next run re-pays its own
-    materialization. Only the entry's own memos: clearing every memo on
-    every re-run made a shared pair's series order-dependent."""
-    from spark_states_spark.catalog import clear_shared_memos
-
-    clear_shared_memos(name)
-
-
 def best_of(
     spark, name: str, sf_dir: str, action: str = "noop", runs: int = RUNS,
     keep_first_memos: bool = False,
@@ -158,19 +148,21 @@ def best_of(
     """Best-of-``runs`` seconds for one catalog entry: build plus one
     ``action`` — ``"noop"`` (JVM-side noop sink write), ``"collect"`` or
     ``"count"``. Before every run the cache is cleared, state-store
-    providers are unloaded and the entry's memos are released, so a
-    shared-drain carrier is timed as first touch rather than a memo read;
+    providers are unloaded and the entry's own memos are released
+    (``catalog.clear_shared_memos``; clearing every memo made a shared
+    pair's series order-dependent), so a shared-drain carrier is timed as
+    first touch rather than a memo read;
     ``keep_first_memos`` keeps run 1's memo state (a sweep measures the
     intended cross-entry sharing). Returns ``(seconds, df, result)`` of the
     last run."""
-    from spark_states_spark.catalog import QUERIES
+    from spark_states_spark.catalog import QUERIES, clear_shared_memos
 
     best = math.inf
     for i in range(runs):
         spark.catalog.clearCache()
         unload_state_providers(spark)
         if i or not keep_first_memos:
-            clear_entry_memos(name)
+            clear_shared_memos(name)
         t0 = time.perf_counter()
         df = QUERIES[name](spark, sf_dir)
         if action == "noop":

@@ -58,32 +58,17 @@ def register(name: str, oracle: str | None = None):
 # (harness.best_of, used by bench.py, scalecheck.py and scaleprobe.py)
 # release a tag only for a PARTICIPATING entry, so a shared-result entry
 # re-pays its own materialization without other entries' re-runs wiping
-# the share.
+# the share. A tag left out of this map (the restart entry's phase-1
+# staging, ``restart_phase1``) is never released by a per-entry clear.
 SHARED_MEMOS: dict[str, set[str]] = {}
 
-# Tags whose value is deterministic INPUT STAGING (a pure function of
-# (session, fixture) whose product the entry then operates ON — e.g. the
-# restart entry's phase-1 checkpoint snapshot), as opposed to a shared
-# RESULT materialization (the funnel/KV drains, where the entry's own
-# output reads the memo). The harness's best-of-N re-run clearing exists to
-# stop result memos from degenerating a re-run into timing a memo read;
-# staging memos have the opposite contract — the measured operation
-# re-executes in full against the staged input every run, exactly like
-# sources.staged_chunks (also per-session, also never cleared by bench)
-# — so clear_shared_memos skips them unless asked (VERDICT r12 #1).
-STAGING_MEMO_TAGS: set[str] = set()
 
-
-def clear_shared_memos(entry: str, include_staging: bool = False) -> None:
+def clear_shared_memos(entry: str) -> None:
     """Release ``entry``'s own lifetime tag, then each shared tag it
-    participates in, so the next call re-materializes. Staging tags
-    (STAGING_MEMO_TAGS) are skipped unless ``include_staging`` — see the
-    note above."""
+    participates in, so the next call re-materializes."""
     lifetime.release(None, entry)
     for tag, entries in SHARED_MEMOS.items():
-        if entry in entries and (
-            include_staging or tag not in STAGING_MEMO_TAGS
-        ):
+        if entry in entries:
             lifetime.release(None, tag)
 
 

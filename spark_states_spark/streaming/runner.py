@@ -237,14 +237,15 @@ def state_parts(
     return max(tuned, cores)
 
 
-def _has_commits(spark: SparkSession, ckpt: str) -> bool:
-    """True iff checkpoint ``ckpt`` holds a committed batch."""
+def _last_commit(spark: SparkSession, ckpt: str) -> int:
+    """Newest batch id committed on checkpoint ``ckpt``, -1 if none."""
     sc = spark.sparkContext
     path = sc._jvm.org.apache.hadoop.fs.Path(ckpt, "commits")
     fs = path.getFileSystem(sc._jsc.hadoopConfiguration())
-    return fs.exists(path) and any(
-        st.getPath().getName().isdigit() for st in fs.listStatus(path)
-    )
+    if not fs.exists(path):
+        return -1
+    names = (st.getPath().getName() for st in fs.listStatus(path))
+    return max((int(n) for n in names if n.isdigit()), default=-1)
 
 
 def _keyed_sink(spark: SparkSession, ckpt: str, output_mode: str, schema):
@@ -257,21 +258,22 @@ def _keyed_sink(spark: SparkSession, ckpt: str, output_mode: str, schema):
     rows and read their union in ``batchId`` order; complete mode keeps
     only the newest batch's slot, empty or not.
 
+    The sink holds exactly the batches committed on ``ckpt``: the reader
+    drops every slot above the newest entry of ``commits/``. That covers a
+    deleted, reused or rolled-back checkpoint (each batch id up to its
+    newest commit is re-run and replaces its slot) and an append-mode
+    batch that ``query.stop()`` interrupted after its write.
+
     Slots live in the active lifetime scope, keyed by ``ckpt``, so a
-    restart on the same checkpoint in the same scope continues them, and a
-    checkpoint with no committed batch starts with none (a deleted and
-    reused path returns no stale rows). With no scope open only the
-    reader's frame holds them. They do not outlive the process: recovery
-    across processes needs a durable sink, as ``streaming_restart_recovery``
-    writes. Spark runs the callback on another thread, where no scope is
-    open, so it reopens the caller's."""
+    restart on the same checkpoint in the same scope continues them. With
+    no scope open only the reader's frame holds them. They do not outlive
+    the process, so recovery across processes needs a durable sink. Spark
+    runs the callback on another thread, where no scope is open, so it
+    reopens the caller's."""
     tag = active()
     slots: dict[int, DataFrame] = (
         {} if tag is None else owned(spark, tag).sinks.setdefault(ckpt, {})
     )
-    if slots and not _has_commits(spark, ckpt):
-        for b in list(slots):
-            unpin(slots.pop(b))
 
     def write(batch: DataFrame, batch_id: int) -> None:
         with scope(tag):
@@ -286,6 +288,9 @@ def _keyed_sink(spark: SparkSession, ckpt: str, output_mode: str, schema):
                 unpin(block)
 
     def read() -> DataFrame:
+        last = _last_commit(spark, ckpt)
+        for b in [b for b in slots if b > last]:
+            unpin(slots.pop(b))
         if not slots:
             return spark.createDataFrame([], schema)
         return reduce(DataFrame.union, (slots[b] for b in sorted(slots)))
@@ -390,7 +395,9 @@ def run_stream_drain_wallclock(
 
     ``parts``: as in :func:`run_stream_to_table`, with ``n_input_rows``
     as the input size. The sink is the same keyed sink; the drain progress
-    poll reads ``recentProgress``, not the sink.
+    poll reads ``recentProgress``, not the sink. ``query.stop()`` may
+    interrupt the next batch after its sink write; that batch never
+    commits, so the reader leaves it out.
     """
     # 100 ms: the drain's floor is (data batches + one trailing empty
     # batch + polling latency), so trigger cadence is pure dead time on

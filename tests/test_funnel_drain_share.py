@@ -68,12 +68,12 @@ def test_bench_memo_clear_scoped_to_participating_entries(spark):
     the funnel memo made the pair's series order-dependent (the second
     reader re-paid a full drain instead of the documented checkpoint
     read)."""
-    import harness
+    from spark_states_spark.catalog import clear_shared_memos
 
     lifetime.shared(spark, "funnel", "sentinel", lambda: ("sink", "ckpt"))
-    harness.clear_entry_memos("q1_pricing_summary")  # non-participant
+    clear_shared_memos("q1_pricing_summary")  # non-participant
     assert _memo(spark), "non-participant re-run wiped the memo"
-    harness.clear_entry_memos("funnel_state_scan")  # participant
+    clear_shared_memos("funnel_state_scan")  # participant
     assert not _memo(spark)
 
 

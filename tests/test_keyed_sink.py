@@ -4,6 +4,7 @@ A drain restarted on its checkpoint in the same lifetime scope must return
 what one uninterrupted drain returns, in update and complete mode alike,
 and the scope must own exactly the blocks the sink keeps: one per batch
 that wrote rows in append mode, the newest batch's alone in complete mode.
+The sink holds only batches committed on its checkpoint.
 """
 
 from __future__ import annotations
@@ -19,7 +20,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from spark_states_spark import lifetime
-from spark_states_spark.streaming.runner import run_stream_to_table
+from spark_states_spark.streaming.runner import _keyed_sink, run_stream_to_table
 
 SCHEMA = "k STRING, v LONG"
 CHUNKS = [
@@ -138,3 +139,43 @@ def test_reused_checkpoint_path_starts_empty(spark, tmp_path, tag):
         )
     assert out.count() == 0
     assert not lifetime.owned(spark, tag).rdd_ids
+
+
+def test_reader_drops_uncommitted_batch(spark, tmp_path, tag):
+    """A batch whose sink write ran but which never committed (a batch
+    ``query.stop()`` interrupts) is not in the reader's result."""
+    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
+    _stage(src, CHUNKS[:2])
+    df = _counts(spark, src)
+    with lifetime.scope(tag):
+        first = _rows(run_stream_to_table(df, "update", checkpoint_location=ckpt))
+        write, read = _keyed_sink(spark, ckpt, "update", df.schema)
+        write(spark.createDataFrame([("z", 1, 9)], df.schema), 2)
+        out = read()
+    assert _rows(out) == first
+
+
+def test_rolled_back_checkpoint_drops_later_slots(spark, tmp_path, tag):
+    """Restoring an early copy of the checkpoint rolls the sink back with
+    it: a drain on the restored copy with no new input returns only the
+    batches the copy committed, and the later slots are unpinned."""
+    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
+    snap = str(tmp_path / "snap")
+    _stage(src, CHUNKS[:2])
+    with lifetime.scope(tag):
+        first = _rows(
+            run_stream_to_table(_counts(spark, src), "update", checkpoint_location=ckpt)
+        )
+        kept = set(lifetime.owned(spark, tag).rdd_ids)
+        shutil.copytree(ckpt, snap)
+        _stage(src, CHUNKS[2:], first=2)
+        run_stream_to_table(_counts(spark, src), "update", checkpoint_location=ckpt)
+        shutil.rmtree(ckpt)
+        shutil.copytree(snap, ckpt)
+        for i in (2, 3):
+            os.remove(os.path.join(src, f"chunk_{i:03d}.parquet"))
+        out = _rows(
+            run_stream_to_table(_counts(spark, src), "update", checkpoint_location=ckpt)
+        )
+        assert out == first
+        assert lifetime.owned(spark, tag).rdd_ids == kept

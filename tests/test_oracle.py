@@ -7,7 +7,7 @@ import pytest
 
 from spark_states_spark import lifetime
 from spark_states_spark.catalog import ORACLES, QUERIES, clear_shared_memos
-from spark_states_spark.streaming.runner import _AUTO_CKPT_PARENT, ephemeral_root
+from spark_states_spark.streaming.runner import _AUTO_CKPT_PARENT
 
 from .oracle_utils import compare, duckdb_con
 
@@ -20,17 +20,16 @@ def con(sf_dir):
 
 
 def _own_dirs() -> set[str]:
-    """This process's sink/checkpoint/run dirs under the parents the
-    runner and the restart entry hand out."""
+    """This process's checkpoint and run dirs under the parent the runner
+    hands out."""
     mine = f"_pid{os.getpid()}_"
-    out = set()
-    restart_runs = os.path.join(ephemeral_root(), "sss_restart_runs")
-    for parent in (_AUTO_CKPT_PARENT, restart_runs):
-        if os.path.isdir(parent):
-            out |= {
-                os.path.join(parent, d) for d in os.listdir(parent) if mine in d
-            }
-    return out
+    if not os.path.isdir(_AUTO_CKPT_PARENT):
+        return set()
+    return {
+        os.path.join(_AUTO_CKPT_PARENT, d)
+        for d in os.listdir(_AUTO_CKPT_PARENT)
+        if mine in d
+    }
 
 
 def _resources(spark) -> dict:
@@ -44,13 +43,15 @@ def _resources(spark) -> dict:
 @pytest.fixture(scope="module", autouse=True)
 def leak_check(spark):
     """Teardown of the sweep: releasing every entry's lifetime tags (its
-    own and every shared one, staging included) and clearing the cache
+    own, every shared one and the restart entry's ``restart_phase1``)
+    and clearing the cache
     must bring persistent RDDs, temp views and the registry's dirs back
     to their pre-sweep baseline."""
     before = _resources(spark)
     yield
     for name in QUERIES:
-        clear_shared_memos(name, include_staging=True)
+        clear_shared_memos(name)
+    lifetime.release(spark, "restart_phase1")
     spark.catalog.clearCache()
     after = _resources(spark)
     leaks = {k: sorted(after[k] - before[k]) for k in after if after[k] - before[k]}

@@ -449,12 +449,21 @@ def test_funnel_state_survives_checkpoint_restart(spark, tmp_path):
     assert (7, 1) not in second
 
 
+def _release_restart(spark):
+    """Release the restart entry's own tag and its phase-1 staging."""
+    from spark_states_spark import lifetime
+    from spark_states_spark.catalog import clear_shared_memos
+
+    clear_shared_memos("streaming_restart_recovery")
+    lifetime.release(spark, "restart_phase1")
+
+
 def test_restart_recovery_phase1_staging_memo(spark, sf_dir_small):
     """VERDICT r12 #1: the restart entry's phase-1 drain is per-session
     input STAGING — a second invocation must hit the snapshot memo, re-run
-    only the recovery lifecycle against restored ckpt/sink state, and
+    only the recovery lifecycle against the restored checkpoint, and
     produce identical results; bench's per-entry memo clearing must leave
-    the staging memo alone, while an explicit include_staging clear
+    the staging memo alone, while releasing ``restart_phase1`` by name
     removes the run dirs and re-pays phase 1."""
     from spark_states_spark import lifetime
     from spark_states_spark.catalog import clear_shared_memos
@@ -463,12 +472,12 @@ def test_restart_recovery_phase1_staging_memo(spark, sf_dir_small):
     def memo():
         return lifetime.owned(spark, "restart_phase1").memo
 
-    clear_shared_memos("streaming_restart_recovery", include_staging=True)
+    _release_restart(spark)
     assert not memo()
     first = sq.streaming_restart_recovery(spark, sf_dir_small)
     rows1 = sorted(map(tuple, first.collect()))
     assert memo(), "phase-1 snapshot not memoized"
-    run_dir = next(iter(memo().values()))
+    run_dir, _ = next(iter(memo().values()))
     snap = os.path.join(run_dir, "snap_ckpt")
     assert os.path.isdir(snap)
 
@@ -479,10 +488,10 @@ def test_restart_recovery_phase1_staging_memo(spark, sf_dir_small):
     second = sq.streaming_restart_recovery(spark, sf_dir_small)
     rows2 = sorted(map(tuple, second.collect()))
     assert rows1 == rows2, "memo-hit recovery diverged from cold run"
-    assert next(iter(memo().values())) == run_dir
+    assert next(iter(memo().values()))[0] == run_dir
 
     # explicit staging clear releases the run dir and forces re-pay
-    clear_shared_memos("streaming_restart_recovery", include_staging=True)
+    _release_restart(spark)
     assert not memo()
     assert not os.path.exists(run_dir), "cleanup left the run dir behind"
 
@@ -495,14 +504,13 @@ def test_restart_recovery_memo_survives_fixture_alternation(
     A -> B -> A alternation then hits A's snapshot instead of restoring
     into a deleted path."""
     from spark_states_spark import lifetime
-    from spark_states_spark.catalog import clear_shared_memos
     from spark_states_spark.streaming import queries as sq
 
-    clear_shared_memos("streaming_restart_recovery", include_staging=True)
+    _release_restart(spark)
     rows_a1 = sorted(
         map(tuple, sq.streaming_restart_recovery(spark, sf_dir_small).collect())
     )
-    dir_a = next(iter(lifetime.owned(spark, "restart_phase1").memo.values()))
+    dir_a, _ = next(iter(lifetime.owned(spark, "restart_phase1").memo.values()))
     sq.streaming_restart_recovery(spark, sf_dir).collect()  # miss for B
     assert os.path.isdir(os.path.join(dir_a, "snap_ckpt")), (
         "fixture B's miss wiped fixture A's live snapshot dir"
@@ -511,7 +519,7 @@ def test_restart_recovery_memo_survives_fixture_alternation(
         map(tuple, sq.streaming_restart_recovery(spark, sf_dir_small).collect())
     )
     assert rows_a1 == rows_a2
-    clear_shared_memos("streaming_restart_recovery", include_staging=True)
+    _release_restart(spark)
 
 
 def test_restart_recovery_phase2_keeps_checkpoint_partitions(spark, sf_dir_small):
@@ -520,17 +528,16 @@ def test_restart_recovery_phase2_keeps_checkpoint_partitions(spark, sf_dir_small
     session value, it opens no new state partitions and gives the same
     answer."""
     from spark_states_spark import lifetime
-    from spark_states_spark.catalog import clear_shared_memos
     from spark_states_spark.session import shuffle_partitions
     from spark_states_spark.streaming import queries as sq
     from spark_states_spark.streaming.runner import STATE_PARTS, state_parts
 
     def partition_dirs():
-        (run_dir,) = lifetime.owned(spark, "restart_phase1").memo.values()
+        ((run_dir, _),) = lifetime.owned(spark, "restart_phase1").memo.values()
         state = os.path.join(run_dir, "ckpt", "state", "0")
         return sorted((d for d in os.listdir(state) if d.isdigit()), key=int)
 
-    clear_shared_memos("streaming_restart_recovery", include_staging=True)
+    _release_restart(spark)
     want = [str(i) for i in range(state_parts(spark, STATE_PARTS))]
     rows1 = sorted(
         map(tuple, sq.streaming_restart_recovery(spark, sf_dir_small).collect())
@@ -542,4 +549,4 @@ def test_restart_recovery_phase2_keeps_checkpoint_partitions(spark, sf_dir_small
         )
     assert partition_dirs() == want
     assert rows1 and rows1 == rows2
-    clear_shared_memos("streaming_restart_recovery", include_staging=True)
+    _release_restart(spark)
