@@ -1254,9 +1254,10 @@ _PER_QUERY_TTLS = {"kv_fast": 3600, "kv_slow": 86400}
 # #4, the wall-clock dual-drain pattern at r06 #7): the infinite, strict and
 # stateless entries, the per-query-TTL pair and the lazy-bounds entry are
 # six bindings of ONE ttl_kv_ops stage over the same op stream — one group
-# per bare key and batch, each binding's unchanged fold against its own
-# state slot (streaming/ttl.py) — so the sink holds '<binding>|'-prefixed
-# rows (differential-pinned against solo drains by
+# per hash bucket and batch, in which each key present runs every binding's
+# unchanged fold against that key's own slot of the bucket's state row
+# (streaming/ttl.py) — so the sink holds '<binding>|'-prefixed rows
+# (differential-pinned against solo drains by
 # tests/test_funnel_drain_share.py::test_virtual_drain_bindings_equal_solo_drains).
 #
 # Soundness of sharing one 2-chunk replay across the bindings:
@@ -1360,7 +1361,7 @@ def keyed_state_ttl_per_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both bindings execute on the shared virtual-clock drain (VERDICT r07
     #4 — see the soundness note on ``_virtual_kv_drained``): the unchanged
     strict production fold (``replay_virtual``) runs once per binding per
-    key group, each with its own resolved TTL; only the micro-batch
+    key and batch, each with its own resolved TTL; only the micro-batch
     infrastructure and the group-call boundary are shared.
     """
     parts = [
@@ -1556,8 +1557,9 @@ def keyed_state_wallclock_infinite(spark: SparkSession, sf_dir: str) -> DataFram
 
 _LAZY_BOUNDS_TTL_SECS = 21600
 # Chunk/partition choice measured at sf0.1 (the per-query deployment knob):
-# per-batch cost here is Python kernel invocations (batches × key-groups),
-# so fewer chunks win as long as a real between-batch sweep remains — the
+# per-batch cost here was Python kernel invocations (batches × key groups;
+# batches × hash buckets since streaming/ttl.py bucketed the stage), so
+# fewer chunks win as long as a real between-batch sweep remains — the
 # bounds sandwich is proved for ANY time-ordered chunking, and one
 # mid-stream sweep boundary already makes lazily-expired keys genuinely
 # drop mid-stream (r05 sweep: 8 chunks 7.9 s, 3 chunks ~3.0 s kernel; r06

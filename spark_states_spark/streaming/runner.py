@@ -222,10 +222,14 @@ def state_parts(
     ``tuned`` is the fixture-scale count measured on a 32-core box:
     STATE_PARTS for chunked replays, 8 for the inner interval join (four
     stores per partition per side), 16 for the keyed-state TTL and funnel
-    drains, whose cost is per-key Python kernel calls: at sf0.1 (100 K
-    events, 1.5 K keys) 16 beat both 4 (group-skew serialization) and 32
-    (per-batch partition setup). The core cap: partitions beyond the core
-    count add no parallelism and still pay the fixed cost in serial waves
+    drains. The funnel drain's cost is per-key Python kernel calls: at
+    sf0.1 (100 K events, 1.5 K keys) 16 beat both 4 (group-skew
+    serialization) and 32 (per-batch partition setup). The virtual-clock
+    TTL drain makes one call per hash bucket (``ttl.BUCKETS`` = 16), so 16
+    is also the most partitions that can each hold a bucket; the
+    wall-clock TTL drain still makes one per key. The core cap: partitions
+    beyond the core count add no parallelism and still pay the fixed cost
+    in serial waves
     (the 16-partition KV drains ran slower on 8 cores, wallclock 5.21 s,
     than on 32, 4.49 s). Past the gate kernel calls and buffered state
     dominate setup, so every core hosts a state partition (measured at

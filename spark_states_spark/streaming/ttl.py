@@ -33,22 +33,32 @@ in TWO clock bindings:
 Either stage takes one ``TtlConfig`` or a ``{name: TtlConfig}`` mapping of
 several bindings folded over the same op stream (see :func:`state_schema`).
 
-Scale shape: state lives in the configured RocksDB state store, keyed and
-partitioned by the group key — the Arrow batches stream per key-group, so
-memory is O(active keys per partition), not O(stream).
+Scale shape: state lives in the configured RocksDB state store. The
+wall-clock stage keeps one state row per key. The virtual-clock stage
+groups by hash bucket, ``pmod(xxhash64(key), BUCKETS)``: one Python call
+per bucket and batch in place of one per key, and one state row per bucket
+holding every live key of the bucket as an Arrow IPC table (see
+:func:`ttl_kv_ops`). Memory is O(live keys of the buckets a partition
+touches in one batch), not O(stream); :func:`read_ttl_state` decodes the
+bucket rows of a checkpoint back into one row per live key.
 """
 
 from __future__ import annotations
 
+import json
 import time
 from collections.abc import Iterator, Mapping
 from typing import Any
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..config import TtlConfig
@@ -112,20 +122,20 @@ def replay_virtual(
     batch-end sweep, the per-commit stand-in for RocksDB compaction-time
     expiry (``RocksDbStateStoreProvider.scala:80-85``).
 
-    Hot path: one kernel invocation per (key group, micro-batch). Measured
-    per ``kv_ttl`` drain (perfbench; 16 tasks, 1,502 groups; 4-core
-    2.1 GHz Xeon VM, CPython 3.11), the Python-worker CPU splits into
-    ~2.8 ms of PySpark framework per group (Arrow slice, serializer,
-    state round trip, per-task set-up) and ~0.2 ms of this kernel per
-    group; a further ~270 ms per task of ``pyspark.zip`` directory
-    re-reads is gone under the engine's worker daemon
-    (``spark_states_spark/worker_daemon.py``). So the kernel is under a
-    tenth of the per-group cost. The replay runs
-    on raw numpy column arrays (lexsort + scalar loop) instead of pandas
-    ``sort_values``/``itertuples``: identical control flow and outcomes,
-    ~5× less per-group overhead (measured 1.6 ms → ~0.3 ms on a 66-row
-    group). The property differential (tests/test_ttl_properties.py)
-    drives this exact code against an independent model of the contract.
+    Hot path: one invocation per (key, micro-batch). PySpark charges ~2.8
+    ms of framework per applyInPandasWithState group (Arrow slice,
+    serializer, state round trip, per-task set-up) against ~0.2 ms of this
+    fold (``kv_ttl`` drain, 1,502 (key, batch) pairs; 4-core 2.1 GHz Xeon
+    VM, CPython 3.11), so the virtual-clock stage groups by hash bucket
+    and runs this fold for every key of a bucket inside one group call:
+    64 groups per ``kv_ttl`` drain in place of 1,502 (see
+    :func:`ttl_kv_ops`). The wall-clock stage still pays the framework
+    once per key. The replay runs on raw numpy column arrays (lexsort +
+    scalar loop) instead of pandas ``sort_values``/``itertuples``:
+    identical control flow and outcomes, ~5× less per-group overhead
+    (measured 1.6 ms → ~0.3 ms on a 66-row group). The property
+    differential (tests/test_ttl_properties.py) drives this exact code
+    against an independent model of the contract.
     """
     out: list[tuple[str, int, bool, int | None]] = []
 
@@ -384,22 +394,197 @@ def _virtual_kernel(bindings: Bindings):
     return kernel
 
 
+# --- the virtual-clock stage: one group per hash bucket --------------------
+#
+# PySpark pays a fixed cost per applyInPandasWithState group (Arrow slice,
+# serializer, state round trip), so ttl_kv_ops groups by bucket and runs
+# the per-key kernel above once per key the batch touches, each against a
+# _KeyState view of that key's slot row. Keys of the bucket that the batch
+# does not touch are carried over as they are and are not swept, exactly as
+# their own per-key group would not have run, so every key's fold inputs,
+# and therefore its outcomes, equal the per-key stage's for any chunking.
+#
+# The bucket's state row is one binary field: an Arrow IPC stream of one
+# table with a row per live key, (key, v0, a0, h0, ...) in state_schema(n)
+# slot order. The schema metadata carries the layout (format version,
+# BUCKETS, binding names); a blob of any other layout raises. A checkpoint
+# is data, so the encoding is never pickle, which would run code from it.
+
+# Chosen from 16/32/64 by measurement (DEPLOYMENT.md, "Bucketed TTL
+# state"). A constant, not a setting: it is part of the checkpoint layout.
+BUCKETS = 16
+_LAYOUT_VERSION = "1"
+
+BUCKET_STATE_SCHEMA = T.StructType([T.StructField("blob", T.BinaryType())])
+
+
+class _KeyState:
+    """One key's slot row inside a bucket, with the GroupState surface that
+    :func:`_virtual_kernel` uses."""
+
+    __slots__ = ("row",)
+
+    def __init__(self, row: tuple | None):
+        self.row = row
+
+    @property
+    def exists(self) -> bool:
+        return self.row is not None
+
+    @property
+    def get(self) -> tuple:
+        return self.row
+
+    def update(self, row) -> None:
+        self.row = tuple(row)
+
+    def remove(self) -> None:
+        self.row = None
+
+
+def _blob_schema(bindings: Bindings) -> pa.Schema:
+    """A stage's bucket blob schema: ``key`` and the ``state_schema(n)``
+    slots. The metadata is the layout; ``ttl.bindings`` is null for a bare
+    TtlConfig, else the sorted binding names."""
+    names = None if isinstance(bindings, TtlConfig) else sorted(bindings)
+    slots = to_arrow_schema(state_schema(len(_split(bindings)[1])))
+    layout = {
+        "ttl.layout": _LAYOUT_VERSION,
+        "ttl.buckets": str(BUCKETS),
+        "ttl.bindings": json.dumps(names),
+    }
+    return pa.schema([pa.field("key", pa.string()), *slots], metadata=layout)
+
+
+def _layout(schema: pa.Schema) -> dict[str, str]:
+    return {k.decode(): v.decode() for k, v in (schema.metadata or {}).items()}
+
+
+def _decode(blob: bytes) -> pa.Table:
+    return pa.ipc.open_stream(pa.py_buffer(blob)).read_all()
+
+
+def _encode(table: pa.Table) -> bytes:
+    sink = pa.BufferOutputStream()
+    with pa.ipc.new_stream(sink, table.schema) as writer:
+        writer.write_table(table.combine_chunks())
+    return sink.getvalue().to_pybytes()
+
+
+def _bucket_kernel(bindings: Bindings):
+    """The applyInPandasWithState kernel of :func:`ttl_kv_ops`."""
+    per_key = _virtual_kernel(bindings)
+    schema = _blob_schema(bindings)
+    slots = schema.names[1:]
+
+    def load(state: GroupState) -> pa.Table:
+        if not state.exists:
+            return schema.empty_table()
+        table = _decode(state.get[0])
+        if not table.schema.equals(schema, check_metadata=True):
+            raise ValueError(
+                f"TTL bucket state has layout {_layout(table.schema)} and "
+                f"columns {table.schema.names}, expected {_layout(schema)} "
+                f"and {schema.names}: checkpoint from another state layout"
+            )
+        return table
+
+    def kernel(
+        bucket: tuple[Any, ...],
+        pdfs: Iterator[pd.DataFrame],
+        state: GroupState,
+    ) -> Iterator[pd.DataFrame]:
+        table = load(state)
+        rows = _rows(pdfs)
+        groups = [g for _, g in rows.groupby("key", sort=False, dropna=False)]
+        keys = pa.array([g["key"].iat[0] for g in groups], pa.string())
+        at = pc.index_in(keys, value_set=table["key"], skip_nulls=False)
+        hits = at.is_valid().to_pylist()
+        old = zip(*(table[c].take(at).to_pylist() for c in slots))
+        frames, fresh = [], []
+        for key, g, hit, row in zip(keys.to_pylist(), groups, hits, old):
+            view = _KeyState(row if hit else None)
+            frames += per_key((key,), iter([g]), view)
+            if view.exists:
+                fresh.append((key, *view.row))
+        carried = table.filter(
+            pc.invert(pc.is_in(table["key"], value_set=keys, skip_nulls=False))
+        )
+        columns = list(zip(*fresh)) or [()] * len(schema)
+        merged = pa.concat_tables([
+            carried,
+            pa.Table.from_arrays(
+                [pa.array(col, f.type) for col, f in zip(columns, schema)],
+                schema=schema,
+            ),
+        ])
+        if merged.num_rows:
+            state.update((_encode(merged),))
+        elif state.exists:
+            state.remove()
+        if frames:
+            yield pd.concat(frames, ignore_index=True)
+
+    return kernel
+
+
 def ttl_kv_ops(ops_stream: DataFrame, ttl: Bindings) -> DataFrame:
     """Apply the TTL keyed-state kernel to a (key, op, value, ts_s, seq)
     stream; emits one row per ``get`` (and binding) with its outcome.
 
     Virtual-clock binding (``NoTimeout``): expiry is evaluated against the
-    rows' ``ts_s`` when ops arrive or at batch-end sweep — deterministic
-    and replayable, but an idle key in a live stream is only dropped once
-    something touches its group. For the reference's progress-independent
-    expiry use :func:`ttl_kv_ops_wallclock`.
+    rows' ``ts_s`` when ops arrive for a key or at its batch-end sweep —
+    deterministic and replayable, but an idle key in a live stream is only
+    dropped once an op for that key arrives. For the reference's
+    progress-independent expiry use :func:`ttl_kv_ops_wallclock`.
+
+    Groups by ``pmod(xxhash64(key), BUCKETS)``; each key's fold is the
+    per-key kernel's (see the bucket-layout note above).
     """
-    return ops_stream.groupBy("key").applyInPandasWithState(
-        _virtual_kernel(ttl),
+    bucket = F.pmod(F.xxhash64("key"), F.lit(BUCKETS))
+    grouped = ops_stream.withColumn("bucket", bucket).groupBy("bucket")
+    return grouped.applyInPandasWithState(
+        _bucket_kernel(ttl),
         outputStructType=OUTPUT_SCHEMA,
-        stateStructType=state_schema(len(_split(ttl)[1])),
+        stateStructType=BUCKET_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
+def read_ttl_state(
+    spark: SparkSession, checkpoint_location: str, *, batch_id: int | None = None
+) -> DataFrame:
+    """The live keys of a :func:`ttl_kv_ops` checkpoint, one row per
+    (binding, key): ``binding`` (null for a bare TtlConfig), ``key``,
+    ``value``, ``last_access``. Decodes the bucket rows that
+    ``state_reader.read_state`` returns, on the executors (``mapInArrow``);
+    ``batch_id`` as there."""
+    from .state_reader import read_state
+
+    def decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            for blob in batch.column("blob").to_pylist():
+                table = _decode(blob)
+                layout = _layout(table.schema)
+                if layout.get("ttl.layout") != _LAYOUT_VERSION:
+                    raise ValueError(f"not a TTL bucket state blob: {layout}")
+                names = json.loads(layout["ttl.bindings"]) or [None]
+                for i, name in enumerate(names):
+                    live = table.filter(table[f"h{i}"])
+                    cols = ("key", f"v{i}", f"a{i}")
+                    yield pa.RecordBatch.from_arrays(
+                        [
+                            pa.array([name] * live.num_rows, pa.string()),
+                            *(live[c].combine_chunks() for c in cols),
+                        ],
+                        names=["binding", "key", "value", "last_access"],
+                    )
+
+    return (
+        read_state(spark, checkpoint_location, batch_id=batch_id)
+        .select(F.col("value.groupState.blob").alias("blob"))
+        .mapInArrow(decode, "binding string, key string, value long, last_access long")
     )
 
 
