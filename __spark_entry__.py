@@ -19,7 +19,10 @@ from pyspark.sql import DataFrame, SparkSession
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from spark_states_spark.catalog import ORACLES, ordered_queries  # noqa: E402
-from spark_states_spark.session import ROCKSDB_PROVIDER  # noqa: E402
+from spark_states_spark.session import (  # noqa: E402
+    ROCKSDB_PROVIDER,
+    use_local_checkpoint_manager,
+)
 
 
 def _ensure_conf(spark: SparkSession) -> None:
@@ -41,6 +44,7 @@ def _ensure_conf(spark: SparkSession) -> None:
             "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows",
             "false",
         )
+        use_local_checkpoint_manager(spark)
     except Exception:
         pass  # non-modifiable at runtime in some harnesses; fine for batch
 

@@ -26,6 +26,15 @@ ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
 
+CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+# Hadoop's local filesystem: its rename is rename(2), which replaces an
+# existing target. PySpark's bundled hive-exec jar otherwise serves `file:`
+# with Hive's ProxyLocalFileSystem, whose rename refuses an existing target.
+LOCAL_FILE_SYSTEM = "org.apache.hadoop.fs.LocalFileSystem"
+
 # Local-mode defaults; on a real cluster these are overridden
 # per-deployment. The 32 shuffle partitions are the batch shuffle width only
 # (~2-3× total cores); streaming drains get their state-partition count
@@ -103,6 +112,37 @@ def shm_scratch_root() -> str | None:
     if sf_dir and os.path.isdir(sf_dir):
         min_free = max(min_free, _SHM_SF_MULTIPLE * _dir_size_bytes(sf_dir))
     return shm if free >= min_free else None
+
+
+def use_local_checkpoint_manager(spark: SparkSession) -> bool:
+    """Commit the session's checkpoints through Spark's FileSystem-based
+    manager when it runs in local mode and its default filesystem is
+    ``LOCAL_FILE_SYSTEM``; otherwise leave the manager as it is. Returns
+    whether it was set.
+
+    Checkpoint files (offset log, commit log, state changelogs) are written
+    to a temp file and renamed into place. Without native Hadoop libraries,
+    Spark's default FileContext manager forks a ``readlink`` shell command
+    for each side of every local rename, then overwrites by delete and
+    rename. The FileSystem manager makes one ``fs.rename`` call and keeps
+    the ``.crc`` files, but it overwrites only where that rename replaces an
+    existing file: a batch re-run after its commit was lost must replace the
+    state files its first attempt wrote. ``LocalFileSystem`` does; Hive's
+    ``ProxyLocalFileSystem``, HDFS and object stores do not, so sessions on
+    them keep Spark's default manager. Only the default filesystem is
+    checked: a local session that checkpoints to an explicit ``hdfs://`` or
+    object-store URI must set the manager back itself."""
+    if not spark.sparkContext.master.startswith("local"):
+        return False
+    jvm = spark._jvm
+    hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
+    fs = jvm.org.apache.hadoop.fs.FileSystem.get(hadoop_conf)
+    if fs.getClass().getName() != LOCAL_FILE_SYSTEM:
+        return False
+    spark.conf.set(
+        "spark.sql.streaming.checkpointFileManagerClass", CHECKPOINT_FILE_MANAGER
+    )
+    return True
 
 
 @contextmanager
@@ -236,10 +276,16 @@ def build_session(
         builder = builder.config("spark.local.dir", local_dir)
     if rocksdb_state:
         builder = use_rocksdb_state_store(builder)
+    # `file:` as Hadoop's LocalFileSystem, so local checkpoint overwrites
+    # replace (use_local_checkpoint_manager). Static: it takes effect only
+    # when this process launches the JVM.
+    if master.startswith("local"):
+        builder = builder.config("spark.hadoop.fs.file.impl", LOCAL_FILE_SYSTEM)
     # Python workers forked from the engine's daemon skip the per-task
     # re-read of pyspark.zip's directory (see worker_daemon).
     for k, v in {**_worker_daemon_conf(), **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    use_local_checkpoint_manager(spark)
     return spark

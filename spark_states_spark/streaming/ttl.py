@@ -336,6 +336,13 @@ def _split(bindings: Bindings) -> tuple[list[str], list[TtlConfig]]:
     return [b + "|" for b in names], [bindings[b] for b in names]
 
 
+def _prefixed(prefix: str, key: str | None) -> str | None:
+    """Output key ``prefix + key`` (prefix ``'<name>|'`` under a mapping,
+    empty for a bare TtlConfig); a null key stays null under either, as
+    SQL's ``concat('name|', NULL)`` is null."""
+    return None if key is None else prefix + key
+
+
 def _slots(state: GroupState, n: int) -> list[tuple]:
     """Decode the state row into ``n`` (value, last_access, have) slots. A
     row of any other width — e.g. the 2-field (value, last_access) row of
@@ -385,7 +392,7 @@ def _virtual_kernel(bindings: Bindings):
         new = []
         for p, ttl, (value, last, have) in zip(prefixes, ttls, slots):
             out, survived = replay_virtual(rows, ttl, value, last, have)
-            merged += [(p + k, t, f, v) for k, t, f, v in out] if p else out
+            merged += [(_prefixed(p, k), t, f, v) for k, t, f, v in out]
             new.append(_DEAD if survived is None else (*survived, True))
         _store(state, new)
         if merged:
@@ -628,7 +635,7 @@ def _wallclock_kernel(bindings: Bindings):
             new = []
             for p, ttl, (value, last, have) in zip(prefixes, ttls, slots):
                 out, survived = replay_wallclock(rows, ttl, value, last, have)
-                merged += [(p + k, f, v) for k, f, v in out] if p else out
+                merged += [(_prefixed(p, k), f, v) for k, f, v in out]
                 new.append(_DEAD if survived is None else (*survived, True))
             slots = new
         if _store(state, slots):

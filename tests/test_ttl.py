@@ -312,6 +312,23 @@ def test_wallclock_timeout_drops_only_elapsed_bindings(monkeypatch):
     assert not state.exists
 
 
+def test_null_key_get_keeps_a_null_key_under_named_bindings(monkeypatch):
+    """The wall-clock kernel emits a null key's get outcomes with a null
+    output key under a ``{name: TtlConfig}`` mapping, as under a bare
+    TtlConfig and as SQL's ``concat('name|', NULL)`` is."""
+    _fake_clock(monkeypatch)
+    fast = TtlConfig("fast", 2, strict=True)
+    ops = [(None, "get", None), (None, "put", 7), (None, "get", None)]
+    one = [(None, False, None), (None, True, 7)]
+    for bindings, want in [
+        ({"fast": fast, "inf": TtlConfig("inf", -1, strict=True)}, one * 2),
+        (fast, one),
+    ]:
+        rows = _run_wall_batch(_wallclock_kernel(bindings), _FakeGroupState(), ops)
+        got = [(r.key, r.found, None if pd.isna(r.value) else r.value) for r in rows]
+        assert got == want
+
+
 def test_old_two_field_state_row_fails_loudly(monkeypatch):
     """A (value, last_access) row — the state layout of checkpoints from
     before the (value, last_access, have) slots — must raise, not be

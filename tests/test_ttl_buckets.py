@@ -152,16 +152,6 @@ def test_bucket_kernel_matches_per_key_kernel(stream, cfgs, bare):
     }
     if bare and len(bindings) == 1:
         bindings = bindings["b0"]
-    null_get = any(r[0] is None and r[1] == "get" for b in batches for r in b)
-    if null_get and not isinstance(bindings, TtlConfig):
-        # The per-key kernel cannot prefix a null key's get outcome with a
-        # binding name; the bucket kernel must fail the same way. A bare
-        # binding carries null-key outcomes, so compare with that one.
-        with pytest.raises(TypeError):
-            per_key_run(bindings, batches)
-        with pytest.raises(TypeError):
-            bucket_run(bindings, batches, bucket_of)
-        bindings = bindings["b0"]
     assert bucket_run(bindings, batches, bucket_of) == per_key_run(bindings, batches)
 
 
